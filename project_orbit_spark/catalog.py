@@ -250,12 +250,54 @@ from project_orbit_spark.session import register_df_cache  # noqa: E402
 
 _PROBE_CACHE: dict[tuple[str, int, int], bool] = register_df_cache({})
 
+# (session token, plan semantic hash) -> row count a counted barrier
+# observed while materializing that plan. A checkpointed plan is a
+# leaf over its own RDD, so the key names exactly one materialization.
+_ROW_COUNTS: dict[tuple[str, int], int] = register_df_cache({})
+
+
+def _plan_key(df: DataFrame) -> tuple[str, int] | None:
+    from project_orbit_spark.session import cache_token
+
+    try:
+        return (
+            cache_token(df.sparkSession),
+            df._jdf.queryExecution().analyzed().semanticHash(),
+        )
+    except Exception:  # unexpected py4j surface change — no key
+        return None
+
+
+def checkpoint_counted(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
+    """Eagerly local-checkpoint ``df`` and return it with the aggregates
+    observed on the checkpoint job itself — no extra job. The result
+    always holds ``rows`` (the row count) plus one entry per keyword
+    aggregate (``name=Column``). Sums over zero rows are ``None``.
+
+    The row count is recorded against the returned frame, so
+    ``maybe_broadcast(..., probe=<returned frame>)`` answers from it
+    without a probe job."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation()
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *(col.alias(name) for name, col in aggs.items()),
+    ).localCheckpoint(eager=True)
+    got = obs.get
+    key = _plan_key(out)
+    if key is not None:
+        _ROW_COUNTS[key] = got["rows"]
+    return out, got
+
 
 def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -> DataFrame:
-    """Size-gated broadcast hint (VERDICT r10 ask #5): hint
-    ``broadcast(df)`` only when the build side provably fits a
-    documented row bound; otherwise return ``df`` unhinted and let
-    AQE pick the join strategy from the REAL runtime size.
+    """Size-gated broadcast hint: hint ``broadcast(df)`` only when the
+    build side provably fits a documented row bound; otherwise return
+    ``df`` unhinted and let AQE pick the join strategy from the REAL
+    runtime size.
 
     A forced ``F.broadcast`` on a dim-derived build encodes the probe
     corpus's "dims stay base-size" assumption; on a star where dims
@@ -265,7 +307,9 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     input partition, so the worst case reads up to bound+1 rows PER
     PARTITION (not O(bound) total); still far from a full aggregate
     scan, and SCALE.md's round-11 table carries the measured cost
-    (~1.5 s for the widest probe on the 100× corpus).
+    (~1.5 s for the widest probe on the 100× corpus). A probe that
+    ``checkpoint_counted`` returned costs no job: its row count was
+    observed when it was materialized.
 
     POLICY (which broadcasts get gated): raw members and cheap
     filters of ``BROADCAST_DIMS`` (region/nation/supplier/part —
@@ -274,9 +318,8 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     from tables that SCALE with the star (customer/orders/lineitem
     projections and per-key aggregates) go through this gate. q16's
     low-balance supplier set is gated despite supplier being a
-    BROADCAST_DIMS member because VERDICT r10 flagged it
-    specifically — gating a bounded build is harmless, forcing an
-    unbounded one is not.
+    BROADCAST_DIMS member — gating a bounded build is harmless,
+    forcing an unbounded one is not.
 
     ``probe`` (optional) is a CHEAPER upper bound on df's row count —
     e.g. gate a per-key aggregate by probing its key-domain dim, so
@@ -290,13 +333,13 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     reps, a pipeline invoked per batch) pay the probe job once per
     session, not once per call. Sound because the catalog's inputs
     are immutable within a session; a new session (new cache token)
-    re-probes. Corollary (ADVICE r11 #2): if a caller OVERWRITES the
-    files behind a probed plan within one session, the memoized
-    verdict is stale — callers that rewrite inputs must use a new
-    session (every test/bench/driver run does) or probe a fresh plan.
+    re-probes. Corollary: if a caller OVERWRITES the files behind a
+    probed plan within one session, the memoized verdict is stale —
+    callers that rewrite inputs must use a new session (every
+    test/bench/driver run does) or probe a fresh plan.
 
-    SIDE-EFFECT WARNING (ADVICE r11 #2): the probe is an EAGER Spark
-    job that fires during PLAN CONSTRUCTION — calling a query builder
+    SIDE-EFFECT WARNING: an uncounted probe is an EAGER Spark job
+    that fires during PLAN CONSTRUCTION — calling a query builder
     for ``.explain()`` or a plan-audit test runs it too. With a
     cheap ``probe`` the job is a dim limit-scan (negligible); at a
     probe-less call site it executes ``df``'s own plan up to the
@@ -304,25 +347,20 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     A probe-less call site must either carry a comment documenting
     this or — usually better — skip the hint entirely and let AQE
     choose from the runtime size (operators/corpus.py::
-    scrub_boilerplate did exactly that after measuring: identical
-    join strategy, no plan-build job, 2x faster per call).
+    scrub_boilerplate does exactly that: identical join strategy, no
+    plan-build job).
     """
     from pyspark.sql import functions as F
 
-    from project_orbit_spark.session import cache_token
-
     src = probe if probe is not None else df
-    try:
-        key = (
-            cache_token(src.sparkSession),
-            src._jdf.queryExecution().analyzed().semanticHash(),
-            bound,
-        )
-    except Exception:  # unexpected py4j surface change — probe uncached
-        key = None
-    if key is None or key not in _PROBE_CACHE:
+    key = _plan_key(src)
+    if key in _ROW_COUNTS:
+        fits = _ROW_COUNTS[key] <= bound
+    elif key is None:
         fits = src.limit(bound + 1).count() <= bound
-        if key is None:
-            return F.broadcast(df) if fits else df
-        _PROBE_CACHE[key] = fits
-    return F.broadcast(df) if _PROBE_CACHE[key] else df
+    else:
+        memo = key + (bound,)
+        if memo not in _PROBE_CACHE:
+            _PROBE_CACHE[memo] = src.limit(bound + 1).count() <= bound
+        fits = _PROBE_CACHE[memo]
+    return F.broadcast(df) if fits else df

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import barrier_width, load
+from project_orbit_spark.catalog import barrier_width, checkpoint_counted, load
 from project_orbit_spark.registry import register
 
 # Stopword markers per language — the n-gram/stopword-ratio heuristic
@@ -390,18 +390,43 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return bigram_scores(d)
+    return bigram_scores(load(spark, sf_dir, "documents"))
 
 
-def bigram_scores(d: DataFrame, ordered: bool = True) -> DataFrame:
+def bigram_scores(
+    d: DataFrame, total: Column | None = None, ordered: bool = True
+) -> DataFrame:
     """Library face of ``bigram_logprob_scores``: interpolated bigram
     LM scored over any (doc_id, text) corpus — curation pipelines
     score SCRUBBED text, not the raw crawl (curation_training_gold).
-    Docs with <2 tokens have no bigrams and drop out. ``ordered=False``
+    ``total`` is ``d``'s token count as a Column: a pipeline whose
+    counted barrier observed ``token_total`` passes it as a literal;
+    by default it is ``freq_total`` of the fitted unigram table. Docs
+    with <2 tokens have no bigrams and drop out. ``ordered=False``
     skips the output-contract doc_id sort for pipeline consumers that
-    checkpoint or re-aggregate the scores (guide §2.4)."""
-    return score_with_lm(doc_bigrams(d), *lm_count_tables(d), ordered=ordered)
+    checkpoint or re-aggregate the scores."""
+    c2, c1, freq = lm_count_tables(d)
+    if total is None:
+        total = freq_total(freq)
+    return score_with_lm(doc_bigrams(d), c2, c1, freq, total, ordered=ordered)
+
+
+def token_total() -> Column:
+    """Aggregate column over a (doc_id, text) corpus: its token count
+    as a double — the bigram LM's ``total``, equal to the sum of
+    ``lm_count_tables``' unigram counts (a NULL text has no tokens).
+    Attach it to a counted barrier (``catalog.checkpoint_counted``)
+    to read it at zero jobs."""
+    toks = F.coalesce(F.split(F.trim(F.lower("text")), r"\s+"), F.array())
+    return F.sum(F.size(toks)).cast("double")
+
+
+def freq_total(freq: DataFrame) -> Column:
+    """The LM's ``total`` for a scorer with no counted barrier
+    upstream: a scalar subquery summing ``freq``'s counts. It stays
+    lazy — building the plan runs no job — and the subquery reads the
+    same ``freq`` aggregate the scoring joins do."""
+    return freq.select(F.sum("cnt").cast("double")).scalar()
 
 
 def doc_bigrams(d: DataFrame) -> DataFrame:
@@ -421,18 +446,18 @@ def doc_bigrams(d: DataFrame) -> DataFrame:
 
 def lm_count_tables(d: DataFrame):
     """The interpolated bigram LM's count tables fitted on corpus
-    ``d``: (c2, c1, freq, total). At 100 TB these are the persisted
-    vocabulary artifacts the offline LM-fit job maintains; the
-    incremental face probes them instead of refitting
-    (operators/corpus.py::warm_curation_artifacts)."""
+    ``d``: (c2, c1, freq). The LM's fourth parameter, the token
+    ``total``, is a Column the caller supplies (``token_total``,
+    ``freq_total``). At 100 TB these are the persisted vocabulary
+    artifacts the offline LM-fit job maintains; the incremental face
+    probes them instead of refitting (operators/corpus.py::warm_curation_artifacts)."""
     ts = F.split(F.trim(F.lower("text")), r"\s+")
     big = doc_bigrams(d)
     tok = d.select("doc_id", F.explode(ts).alias("token"))
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    total = freq.agg(F.sum("cnt").cast("double").alias("total"))
     c2 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     c1 = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    return c2, c1, freq, total
+    return c2, c1, freq
 
 
 def score_with_lm(
@@ -440,7 +465,7 @@ def score_with_lm(
     c2: DataFrame,
     c1: DataFrame,
     freq: DataFrame,
-    total: DataFrame,
+    total: Column,
     pin_vocab: bool = True,
     ordered: bool = True,
 ) -> DataFrame:
@@ -450,40 +475,39 @@ def score_with_lm(
     comes from the fitted corpus itself, every bigram is known and
     this is exactly the full-fit scoring; the incremental face's
     'score what the model knows' contract falls out of the same
-    joins).
+    joins). ``total`` is the fitted corpus's token count as a double
+    Column (a literal from a counted barrier, or ``freq_total``), so
+    scoring plans no join for it.
 
-    ``pin_vocab`` (r16 broadcast burn-down, VERDICT r15 ask #1): the
-    three count tables are corpus-derived, corpus-GROWING, and
-    token-string-valued — exactly the compressible-build class whose
-    shuffle bytes AQE under-reads 5-20x (docs/SCALE.md, the
-    ngram_jaccard_pairs r14 OOM mechanism), so a "fits" verdict at
-    the stage boundary can still materialize a GB-plus driver
-    HashedRelation. Full-fit callers (bigram_logprob_scores,
-    ccnet_perplexity_bands, the curation golds) keep the default
-    True: the count tables get shuffle_hash pins, and the only
-    broadcast left is the 1-row total. The incremental face passes
-    False: its count tables are PERSISTED artifacts whose
-    InMemoryRelation stats are exact materialized sizes (not guessed,
-    not compressed — the self-correcting class), and its O(new)
-    batch side is the legitimate broadcast candidate."""
+    ``pin_vocab``: the three count tables are corpus-derived,
+    corpus-GROWING, and token-string-valued — exactly the
+    compressible-build class whose shuffle bytes AQE under-reads
+    5-20x (docs/SCALE.md, the ngram_jaccard_pairs OOM mechanism), so
+    a "fits" verdict at the stage boundary can still materialize a
+    GB-plus driver HashedRelation. Full-fit callers
+    (bigram_logprob_scores, ccnet_perplexity_bands, the curation
+    golds) keep the default True: the count tables get shuffle_hash
+    pins. The incremental face passes False: its count tables are
+    PERSISTED artifacts whose InMemoryRelation stats are exact
+    materialized sizes (not guessed, not compressed — the
+    self-correcting class), and its O(new) batch side is the
+    legitimate broadcast candidate."""
     lp = F.log(
         0.7 * (F.col("c2").cast("double") / F.col("c1"))
-        + 0.3 * (F.col("cnt").cast("double") / F.col("total"))
+        + 0.3 * (F.col("cnt").cast("double") / total.cast("double"))
     )
     if pin_vocab:
-        # r17 (guide §2.3/§3): pre-join the three count tables into ONE
-        # scored-vocab table keyed (w1, w2) — c2 is unique on (w1, w2),
-        # c1 on w1, freq on token, so the chain is row-preserving and
-        # big ⋈ vocab ≡ big ⋈ c2 ⋈ c1 ⋈ freq exactly. The occurrence
-        # stream (corpus-sized) now crosses ONE exchange instead of
-        # three; the c2⋈c1⋈freq joins are vocab-sized. All three joins
-        # keep the r16 shuffle_hash pin — every build side is still the
-        # corpus-growing token-string-valued class AQE misjudges
+        # ONE scored-vocab table keyed (w1, w2): c2 is unique on
+        # (w1, w2), c1 on w1, freq on token, so the chain is
+        # row-preserving and big ⋈ vocab ≡ big ⋈ c2 ⋈ c1 ⋈ freq
+        # exactly — the corpus-sized occurrence stream crosses ONE
+        # exchange, the c2⋈c1⋈freq joins are vocab-sized. Every build
+        # side is the corpus-growing token-string-valued class AQE
+        # misjudges, so all three joins are shuffle_hash-pinned
         # (test_lm_vocab_joins_are_never_static_broadcasts).
         vocab = (
             c2.join(c1.hint("shuffle_hash"), "w1")
             .join(freq.hint("shuffle_hash"), F.col("token") == F.col("w2"))
-            .crossJoin(F.broadcast(total))
             .select("w1", "w2", lp.alias("lp"))
         )
         scored = big.join(vocab.hint("shuffle_hash"), ["w1", "w2"]).select(
@@ -499,7 +523,6 @@ def score_with_lm(
             big.join(c2, ["w1", "w2"])
             .join(c1, "w1")
             .join(freq, F.col("token") == F.col("w2"))
-            .crossJoin(F.broadcast(total))
             .select("doc_id", lp.alias("lp"))
         )
     out = scored.groupBy("doc_id").agg(
@@ -508,7 +531,7 @@ def score_with_lm(
     )
     # the doc_id sort is the registered faces' OUTPUT contract, not a
     # semantic need — pipeline consumers that checkpoint/re-aggregate
-    # the scores skip it (r18, guide §2.4)
+    # the scores skip it
     return out.orderBy("doc_id") if ordered else out
 
 
@@ -589,22 +612,21 @@ def score_with_lm(
     """,
 )
 def ccnet_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r17 (guide §2.4/§5): perplexity_bands consumes scores TWICE
-    # (cutoff derivation + band assignment), and exchange reuse does
-    # NOT reliably dedup the duplicated LM subtree (initial plan: 15
-    # scans / 35 exchanges without the barrier). The narrow
-    # (doc_id, double) checkpoint is the same stage barrier the
-    # curation pipeline already places here; measured 2.02 -> 1.60 s
-    # at sf0.1 (interleaved A/B, min-of-medians).
-    return perplexity_bands(ccnet_scores(spark, sf_dir).localCheckpoint())
+    # perplexity_bands consumes scores twice (cutoff derivation + band
+    # assignment), and exchange reuse does not reliably dedup the
+    # duplicated LM subtree, so the narrow (doc_id, double) scores are
+    # a barrier — the same one the curation pipeline places here. Its
+    # observed row count is the cutoffs' n.
+    scores, seen = checkpoint_counted(ccnet_scores(spark, sf_dir))
+    return perplexity_bands(scores, seen["rows"])
 
 
 def ccnet_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact (doc_id, avg_logprob) frame ``ccnet_perplexity_bands``
     checkpoints — exposed UN-barriered so plan-pin tests can audit the
     LM-vocab join strategy the barrier otherwise truncates to a
-    ``Scan ExistingRDD`` (r18 guard convention: pin the plan of the
-    frame BEING checkpointed, not the consumer's). ordered=False: the
+    ``Scan ExistingRDD`` (guard convention: pin the plan of the frame
+    BEING checkpointed, not the consumer's). ordered=False: the
     banding re-aggregates the scores, so bigram_logprob_scores' output
     sort would be a wasted corpus-wide range exchange here."""
     return bigram_scores(load(spark, sf_dir, "documents"), ordered=False).select(
@@ -612,17 +634,19 @@ def ccnet_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def perplexity_bands(scores: DataFrame) -> DataFrame:
+def perplexity_bands(scores: DataFrame, n: int) -> DataFrame:
     """Library face of ``ccnet_perplexity_bands``: tercile-band any
-    (doc_id, avg_logprob) score table by VALUE cutoffs derived from
-    the bounded distinct-score domain (see the register() doc)."""
-    return band_with_cutoffs(scores, band_cutoffs(scores))
+    (doc_id, avg_logprob) score table of ``n`` rows by VALUE cutoffs
+    derived from the bounded distinct-score domain (see the
+    register() doc)."""
+    return band_with_cutoffs(scores, band_cutoffs(scores, n))
 
 
-def band_cutoffs(scores: DataFrame) -> DataFrame:
-    """The 1-row (cut1, cut2) tercile cutoffs of a score table — the
-    persisted banding artifact the incremental face probes instead of
-    re-deriving (operators/corpus.py::warm_curation_artifacts)."""
+def band_cutoffs(scores: DataFrame, n: int) -> DataFrame:
+    """The 1-row (cut1, cut2) tercile cutoffs of a score table of ``n``
+    rows (a counted barrier's ``rows``) — the persisted banding
+    artifact the incremental face probes instead of re-deriving
+    (operators/corpus.py::warm_curation_artifacts)."""
     dist = scores.groupBy("avg_logprob").agg(F.count(F.lit(1)).alias("cnt"))
     # the ONLY single-partition window: over the bounded distinct-
     # score table (4dp domain), never the corpus
@@ -630,23 +654,13 @@ def band_cutoffs(scores: DataFrame) -> DataFrame:
         Window.unboundedPreceding, 0
     )
     cum = dist.withColumn("cum", F.sum("cnt").over(w))
-    n = dist.agg(F.sum("cnt").cast("long").alias("n"))
-    return (
-        cum.crossJoin(F.broadcast(n))
-        .agg(
-            F.max(
-                F.when(
-                    F.col("cum") >= F.expr("(n + 2) div 3"),
-                    F.col("avg_logprob"),
-                )
-            ).alias("cut1"),
-            F.max(
-                F.when(
-                    F.col("cum") >= F.expr("(2 * n + 2) div 3"),
-                    F.col("avg_logprob"),
-                )
-            ).alias("cut2"),
-        )
+    return cum.agg(
+        F.max(
+            F.when(F.col("cum") >= (n + 2) // 3, F.col("avg_logprob"))
+        ).alias("cut1"),
+        F.max(
+            F.when(F.col("cum") >= (2 * n + 2) // 3, F.col("avg_logprob"))
+        ).alias("cut2"),
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import checkpoint_counted, load, maybe_broadcast
 from project_orbit_spark.operators.dedup import word_shingles
 from project_orbit_spark.registry import register
 from project_orbit_spark.similarity.lsh import _duck_auto_bucket as _lsh_duck_auto_bucket
@@ -1849,41 +1849,36 @@ def curation_pipeline(d: DataFrame) -> DataFrame:
     from project_orbit_spark.functions.textquality import (
         bigram_scores,
         perplexity_bands,
+        token_total,
     )
-    from project_orbit_spark.operators.dedup import minhash_pairs
-    from project_orbit_spark.operators.graph import (
-        cluster_representatives,
-        connected_components,
-    )
+    from project_orbit_spark.operators import dedup as dedup_ops
+    from project_orbit_spark.operators.graph import connected_components
 
-    # stage 1: scrub (MUST precede scoring and pair generation).
-    # localCheckpoint = the stage barrier a production pipeline has
-    # anyway (C4/CCNet materialize each stage to storage between
-    # steps): the scrubbed corpus feeds the LM scorer AND the gate
-    # join AND (through gated) three further consumers — without the
-    # barrier Spark re-executes the scrub aggregate once per consumer
-    # (measured: 8.3 s -> see SCALE.md round-12 after barriers).
-    scrubbed = (
-        scrub_boilerplate(d, ordered=False)
-        .select("doc_id", F.col("clean_text").alias("text"))
-        .localCheckpoint()
+    # Stage barriers — the materialization a production pipeline has
+    # anyway between steps (C4/CCNet write each stage out). Each one
+    # feeds several consumers, which would otherwise re-execute its
+    # upstream once per consumer; the totals the next stage needs are
+    # observed on the barrier's own job.
+    # stage 1: scrub (MUST precede scoring and pair generation). The
+    # scrubbed corpus feeds the LM fit, the scorer and the gate join;
+    # its token count is the LM's total.
+    scrubbed, seen = checkpoint_counted(
+        scrub_boilerplate(d, ordered=False).select(
+            "doc_id", F.col("clean_text").alias("text")
+        ),
+        tokens=token_total(),
     )
-    # stage 2: perplexity band gate on the scrubbed text. scores is
-    # consumed twice inside perplexity_bands (cutoff derivation +
-    # band assignment) — barrier it too (narrow: doc_id + a double).
-    # ordered=False on both stages (r18, guide §2.4): the registered
-    # faces' doc_id output sorts are wasted corpus-wide range
-    # exchanges immediately upstream of a checkpoint.
-    scores = (
-        bigram_scores(scrubbed, ordered=False)
-        .select("doc_id", "avg_logprob")
-        .localCheckpoint()
+    # stage 2: perplexity band gate on the scrubbed text. scores feeds
+    # the cutoff derivation and the band assignment; its row count is
+    # the cutoffs' n. Both stage faces skip their doc_id output sort.
+    scores, scored = checkpoint_counted(
+        bigram_scores(scrubbed, F.lit(seen["tokens"]), ordered=False).select(
+            "doc_id", "avg_logprob"
+        )
     )
-    banded = perplexity_bands(scores)
-    # r18 (guide §2.3, VERDICT r17 ask #3a): n_tokens rides the gated
-    # checkpoint (one extra long beside the text it already carries),
-    # so stage 4 reads it back instead of re-tokenizing the gated text
-    # in a fourth split() pass after the label join.
+    banded = perplexity_bands(scores, scored["rows"])
+    # n_tokens rides the gated checkpoint (one long beside the text it
+    # already carries), so stage 4 never re-tokenizes the gated text
     gated = (
         scrubbed.join(
             banded.filter(F.col("band") != "tail").select("doc_id", "band"),
@@ -1895,19 +1890,17 @@ def curation_pipeline(d: DataFrame) -> DataFrame:
         )
         .localCheckpoint()
     )
-    # stage 3: leakage-safe split over the gated corpus
-    pairs = minhash_pairs(gated.select("doc_id", "text"))
+    # stage 3: leakage-safe split over the gated corpus. The packer
+    # reads only (doc_id, cluster_id) of the cluster map, which is the
+    # cc labels renamed. Cluster membership scales with corpus
+    # redundancy, so the label join is size-gated, never forced; cc
+    # is a counted checkpoint, so the gate runs no job.
+    pairs = dedup_ops.minhash_pairs(gated.select("doc_id", "text"))
     edges = pairs.select(
         F.col("left_id").alias("src"), F.col("right_id").alias("dst")
     )
     cc = connected_components(edges, strategy="auto")
-    labels = cluster_representatives(cc).select("doc_id", "cluster_id")
-    # size-GATED label join (VERDICT r12 #1): cluster membership scales
-    # with corpus redundancy, never force-broadcast. Probe = the cc
-    # labels (row-for-row equal, already checkpointed by the loop).
-    from project_orbit_spark.catalog import maybe_broadcast
-    from project_orbit_spark.operators import dedup as dedup_ops
-
+    labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
     canon = gated.join(
         maybe_broadcast(labels, dedup_ops.LABEL_BROADCAST_BOUND, probe=cc),
         "doc_id",
@@ -1967,8 +1960,9 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     ``curation_training_gold``'s stages over the BASE corpus:
 
     - ``bp``: the boilerplate segment-hash set (scrub stage 1);
-    - ``c2``/``c1``/``freq``/``total``: the bigram-LM count tables
-      fitted on the SCRUBBED base corpus (stage 2's model);
+    - ``c2``/``c1``/``freq``: the bigram-LM count tables fitted on
+      the SCRUBBED base corpus, and ``total``, its token count
+      (stage 2's model);
     - ``cuts``: the 1-row tercile score cutoffs (stage 2's bands);
     - ``banded``: the MinHash band index of the GATED base corpus
       (stage 3's dedup index, (doc_id, sig, band_idx, band_sig));
@@ -1980,28 +1974,29 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     Lifecycle: the LM counts and band/canon tables are dt-partitionable
     rows with no cross-row state — merge/compact/expire transfers from
     refresh_segment_index + refresh_band_index (the banded artifact is
-    LITERALLY the refresh_band_index layout); cuts/total are 1-row
-    frames rebuilt per refresh, not merged.
+    LITERALLY the refresh_band_index layout); cuts is a 1-row frame
+    and total a number, both rebuilt per refresh, not merged.
     """
     from project_orbit_spark.functions.textquality import (
         band_cutoffs,
-        bigram_scores,
+        band_with_cutoffs,
+        doc_bigrams,
         lm_count_tables,
+        score_with_lm,
+        token_total,
     )
+    from project_orbit_spark.operators import dedup as dedup_ops
     from project_orbit_spark.operators.dedup import (
         _banded_signatures,
         minhash_pairs,
     )
-    from project_orbit_spark.operators.graph import (
-        cluster_representatives,
-        connected_components,
-    )
+    from project_orbit_spark.operators.graph import connected_components
 
     key = (cache_token(spark), sf_dir)
     if key not in _CURATION_ARTIFACTS_CACHE:
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        # one shared segment-stream checkpoint (r18): bp and the
-        # rebuild probe otherwise each derive doc_segments in full
+        # one shared segment-stream checkpoint: bp and the rebuild
+        # probe otherwise each derive doc_segments in full
         segs = doc_segments(d).localCheckpoint()
         bp = (
             segs.groupBy("seg_hash")
@@ -2010,25 +2005,24 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
             .select("seg_hash", F.lit(True).alias("is_bp"))
             .persist()
         )
-        # stage barriers, as in curation_pipeline: each derived
-        # artifact below re-reads scrubbed/scores/gated — without the
-        # checkpoints the scrub and LM chains re-execute once per
-        # artifact during the one-time warm
-        scrubbed = (
-            apply_boilerplate_scrub(segs, bp, ordered=False)
-            .select("doc_id", F.col("clean_text").alias("text"))
-            .localCheckpoint()
+        # the same stage barriers, with the same observed totals, as
+        # curation_pipeline: each derived artifact below re-reads
+        # scrubbed/scores/gated
+        scrubbed, seen = checkpoint_counted(
+            apply_boilerplate_scrub(segs, bp, ordered=False).select(
+                "doc_id", F.col("clean_text").alias("text")
+            ),
+            tokens=token_total(),
         )
-        c2, c1, freq, total = lm_count_tables(scrubbed)
-        c2, c1, freq, total = (t.persist() for t in (c2, c1, freq, total))
-        scores = (
-            bigram_scores(scrubbed, ordered=False)
+        total = seen["tokens"]
+        c2, c1, freq = (t.persist() for t in lm_count_tables(scrubbed))
+        scores, scored = checkpoint_counted(
+            score_with_lm(
+                doc_bigrams(scrubbed), c2, c1, freq, F.lit(total), ordered=False
+            )
             .select("doc_id", "avg_logprob")
-            .localCheckpoint()
         )
-        cuts = band_cutoffs(scores).persist()
-        from project_orbit_spark.functions.textquality import band_with_cutoffs
-
+        cuts = band_cutoffs(scores, scored["rows"]).persist()
         gated = scrubbed.join(
             band_with_cutoffs(scores, cuts)
             .filter(F.col("band") != "tail")
@@ -2041,12 +2035,10 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
             F.col("left_id").alias("src"), F.col("right_id").alias("dst")
         )
         cc = connected_components(edges, strategy="auto")
-        labels = cluster_representatives(cc).select("doc_id", "cluster_id")
-        from project_orbit_spark.catalog import maybe_broadcast
-        from project_orbit_spark.operators import dedup as dedup_ops
-
-        # size-GATED label join (VERDICT r12 #1) — see
-        # dedup.LABEL_BROADCAST_BOUND; probe = the checkpointed cc labels
+        labels = cc.select(
+            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
+        )
+        # size-gated label join, as in curation_pipeline
         canon = (
             gated.select("doc_id")
             .join(
@@ -2064,7 +2056,7 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
             )
             .persist()
         )
-        for t in (bp, c2, c1, freq, total, cuts, banded, canon):
+        for t in (bp, c2, c1, freq, cuts, banded, canon):
             t.count()
         _CURATION_ARTIFACTS_CACHE[key] = {
             "bp": bp, "c2": c2, "c1": c1, "freq": freq, "total": total,
@@ -2334,7 +2326,7 @@ def curate_batch(batch: DataFrame, art: dict) -> DataFrame:
         art["c2"],
         art["c1"],
         art["freq"],
-        art["total"],
+        F.lit(art["total"]),
         pin_vocab=False,
         ordered=False,
     ).select("doc_id", "avg_logprob")
@@ -2371,7 +2363,6 @@ def curate_batch(batch: DataFrame, art: dict) -> DataFrame:
     # broadcast goes through the same gate as the other batch sides
     # (round-13 audit); probe = the checkpointed gated batch, a strict
     # row upper bound that costs one in-memory count.
-    from project_orbit_spark.catalog import maybe_broadcast
     from project_orbit_spark.operators import dedup as dedup_ops
 
     gb = maybe_broadcast(bmatch, dedup_ops.INCREMENTAL_BATCH_BOUND, probe=gated)

@@ -10,12 +10,17 @@ engine adds (MinHash-LSH, SimHash) emit *edges*, so cluster collapse
 is a graph-connectivity step.
 
 Spark-first shape: iterative min-label propagation over a
-hash-partitioned symmetric edge list. Each round is one shuffle
-(join edges with current labels on dst, min-aggregate per src);
-rounds needed = graph diameter, and duplicate clusters are
-near-cliques, so 2-4 rounds in practice. ``localCheckpoint``
-truncates lineage every round — without it the plan doubles per
-iteration and the job dies on plan size long before data size.
+symmetric edge list, the superstep shape of Pregelix (VLDB'14): each
+round is ONE message exchange joined against vertex state —
+``labels ∪ (edges ⋈ labels on dst)`` then ``min(label)`` per node —
+so the only shuffle of a round is the grouped min. While the label
+table fits ``dedup.LABEL_BROADCAST_BOUND`` it is broadcast into the
+edge join and the edge list is never moved after its first
+materialization; past the bound the join is left to AQE. Rounds
+needed = graph diameter, and duplicate clusters are near-cliques, so
+2-4 rounds in practice. Every round ends in a checkpoint that
+truncates lineage — without it the plan doubles per iteration and
+the job dies on plan size long before data size.
 
 At 100 TB: the same loop holds (state per round = one (node,label)
 table, shuffled on node). If components with large diameter are
@@ -32,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from project_orbit_spark.catalog import checkpoint_counted, maybe_broadcast
 from project_orbit_spark.registry import register
 
 
@@ -49,7 +55,7 @@ def connected_components(
     row per distinct endpoint; nodes in the same component share a
     label (the component's minimum id).
 
-    ``strategy`` (VERDICT r12 #5 — one API, both round complexities):
+    ``strategy`` — one API, both round complexities:
     - ``"propagation"`` (default): min-label propagation, one shuffle
       per round, rounds = component diameter. Optimal for near-clique
       duplicate clusters (2-4 rounds); raises after ``max_iter``
@@ -58,14 +64,16 @@ def connected_components(
       al., SoCC'14), O(log n) rounds on ANY diameter — the scale path
       for chain-shaped graphs.
     - ``"auto"``: propagation first; if the round budget is exhausted
-      (a pathological high-diameter graph — exactly the case that
-      would otherwise kill a nightly dedup job at round ``max_iter``)
-      fall back to two_phase instead of raising. Both strategies
-      reach the same unique fixpoint (labels are component minima),
-      so the fallback changes round complexity, never results —
-      pinned by tests/test_graph.py and the union-find property test.
+      (a pathological high-diameter graph) fall back to two_phase
+      instead of raising. Both strategies reach the same unique
+      fixpoint (labels are component minima), so the fallback
+      changes round complexity, never results.
+
+    The returned frame is a counted checkpoint, so a size-gated join
+    of the labels (``maybe_broadcast(..., probe=<result>)``) costs no
+    probe job.
     """
-    from pyspark.sql import Observation
+    from project_orbit_spark.operators import dedup
 
     if strategy == "two_phase":
         return connected_components_two_phase(edges, src, dst, max_iter)
@@ -75,76 +83,60 @@ def connected_components(
     half = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
-    # materialize the edge list once — every round joins against it,
-    # and without the checkpoint each round would re-execute the full
-    # upstream lineage that produced the pairs (e.g. the MinHash
-    # pipeline), multiplying the dominant cost by the round count
+    # materialized once: every round joins against it, and without the
+    # checkpoint each round would re-execute the upstream lineage that
+    # produced the pairs (e.g. the MinHash pipeline)
     sym = (
         half.union(half.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # Convergence is detected from sum(label): min-label propagation
-    # only ever DECREASES a label, so the sum is strictly monotone
-    # until the fixpoint and equal sums ⟺ no label changed. The sum
-    # rides the checkpoint job via observe() — one job per round, no
-    # separate changed-count join (measured: the old join+limit+count
-    # job was ~40% of per-round wall time on a small graph, and at
-    # scale it was an extra shuffle of the full label table per round).
-    # decimal(38,0) keeps the sum exact far past long overflow.
-    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("label_sum")
-    # r18 (guide §2.4, VERDICT r17 ask #3b): label init is FUSED into
-    # propagation round 1. labels₀(node)=node makes round 1's result
-    # min(node, min-neighbor-id), computable straight off sym with one
-    # grouped aggregate — the separate distinct-nodes init frame (its
-    # own checkpoint job + shuffle every CC call) never needs to
-    # exist. Every node of sym appears as src (symmetrized), so the
-    # node set is identical. Fixpoint detection is unaffected: with
-    # ≥1 edge, round 1 always strictly decreases sum(label) vs init
-    # (each edge's larger endpoint takes the smaller label), so the
-    # skipped init-vs-round-1 comparison could never have been the
-    # converging one; the empty graph IS its own fixpoint (sum None)
-    # and returns before the loop.
-    obs0 = Observation()
-    labels = (
+    # Convergence: min-label propagation only ever DECREASES a label,
+    # so sum(label) is strictly monotone until the fixpoint, and equal
+    # sums ⟺ no label changed. decimal(38,0) keeps the sum exact far
+    # past long overflow. The sums ride each round's checkpoint job.
+    def exact_sum(c: str):
+        return F.sum(F.col(c).cast("decimal(38,0)"))
+
+    # Round 1 is fused with label init: labels₀(node) = node, so round
+    # 1 is min(node, min neighbor) straight off sym (every node of sym
+    # appears as src). Round 1 changed nothing ⟺ sum(label) equals
+    # sum(node): no edges at all (both None), or self-loops only.
+    labels, seen = checkpoint_counted(
         sym.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
-        .select(
-            F.col("src").alias("node"),
-            F.least("src", "nmin").alias("label"),
-        )
-        .observe(obs0, label_sum)
-        .localCheckpoint(eager=True)
+        .select(F.col("src").alias("node"), F.least("src", "nmin").alias("label")),
+        label_sum=exact_sum("label"),
+        node_sum=exact_sum("node"),
     )
-    prev_sum = obs0.get["label_sum"]
-    if prev_sum is None:  # no edges → no endpoints → empty labeling
+    prev_sum = seen["label_sum"]
+    if prev_sum == seen["node_sum"]:
         return labels
     for _ in range(max_iter - 1):
-        nbr = sym.join(
-            labels.select(F.col("node").alias("dst"), F.col("label").alias("nbr_label")),
-            "dst",
+        # labels₍ᵢ₊₁₎(v) = min(labels(v), min over neighbors u of
+        # labels(u)): one grouped min over the union of the current
+        # labels and the labels each edge carries to its src. Every
+        # round's label table has the same node set, so its counted
+        # size decides the broadcast at zero jobs; the bound is read
+        # at call time so a patched bound governs.
+        nbr = maybe_broadcast(
+            labels.select(F.col("node").alias("dst"), F.col("label").alias("nbr")),
+            dedup.LABEL_BROADCAST_BOUND,
+            probe=labels,
         )
-        nmin = nbr.groupBy("src").agg(F.min("nbr_label").alias("nmin"))
-        obs = Observation()
-        new_labels = (
-            labels.join(nmin.select(F.col("src").alias("node"), "nmin"), "node", "left")
-            .select(
-                "node",
-                F.least("label", F.coalesce("nmin", F.col("label"))).alias("label"),
-            )
-            .observe(obs, label_sum)
-            .localCheckpoint(eager=True)
+        msgs = sym.join(nbr, "dst").select(
+            F.col("src").alias("node"), F.col("nbr").alias("label")
         )
-        cur_sum = obs.get["label_sum"]
-        labels = new_labels
-        if cur_sum == prev_sum:
+        labels, seen = checkpoint_counted(
+            labels.unionByName(msgs).groupBy("node").agg(F.min("label").alias("label")),
+            label_sum=exact_sum("label"),
+        )
+        if seen["label_sum"] == prev_sum:
             return labels
-        prev_sum = cur_sum
+        prev_sum = seen["label_sum"]
     if strategy == "auto":
         # diameter outran the budget — restart on the O(log n) path.
-        # The propagation rounds so far are sunk cost, but this branch
-        # only fires on pathological graphs the default path would
-        # have KILLED the job on; same fixpoint, so results match.
+        # Same fixpoint, so results match.
         return connected_components_two_phase(edges, src, dst, max_iter)
     raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
 
@@ -182,31 +174,21 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
         ).union(g.select(F.col("u"), F.col("m").alias("v")))
         return out.filter(F.col("u") != F.col("v")).distinct()
 
-    from pyspark.sql import Observation
-
-    # the stability checksum rides each round's checkpoint job via
-    # observe() — same one-job-per-round discipline as
-    # connected_components' sum(label) convergence check
-    def checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
-        obs = Observation()
-        out = e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).localCheckpoint(eager=True)
-        got = obs.get
-        return out, (got["n"], got["h"])
-
-    e, prev = checkpoint_with_checksum(
+    # the stable-edge-set test rides each round's checkpoint job:
+    # (row count, xor of edge hashes) is unchanged ⟺ the set is
+    # (up to a 64-bit hash collision)
+    h = F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0))
+    e, prev = checkpoint_counted(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        h=h,
     )
     for _ in range(max_iter):
-        e, cur = checkpoint_with_checksum(small_star(large_star(e)))
-        if cur == prev:
+        e, seen = checkpoint_counted(small_star(large_star(e)), h=h)
+        if (seen["rows"], seen["h"]) == (prev["rows"], prev["h"]):
             return e
-        prev = cur
+        prev = seen
     raise RuntimeError(f"two-phase CC: no fixpoint after {max_iter} rounds")
 
 
@@ -307,6 +289,10 @@ def pagerank_link_graph(spark, sf_dir: str):
 
     d = load(spark, sf_dir, "documents").select("doc_id")
     n = d.count()
+    if n == 0:  # no pages: the ranking is empty (1/n is undefined)
+        return d.select(
+            F.col("doc_id").alias("node"), F.lit(0).cast("long").alias("rank_fp")
+        )
     nodes = d.select(F.col("doc_id").alias("node"))
     fan = F.explode(F.array(*[F.lit(j + 1) for j in range(PR_EDGE_FANOUT)])).alias("j")
     edges = (
@@ -316,13 +302,8 @@ def pagerank_link_graph(spark, sf_dir: str):
         .distinct()
         .localCheckpoint()
     )
-    # r18 (guide §2.4): out-degree rides the checkpointed edge list.
-    # The loop used to re-derive outdeg (a groupBy over the edges) and
-    # join it back EVERY power iteration — od is a static per-src
-    # property of the static graph, so it is joined on once here
-    # (reading the already-checkpointed edges, no recompute) and the
-    # per-round plan drops one aggregate + one join. Same integer
-    # arithmetic, bit-identical ranks.
+    # out-degree is a static per-src property of the static graph:
+    # joined onto the checkpointed edge list once, never per iteration
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     edges_od = edges.join(outdeg, "src").localCheckpoint()
     teleport = (PR_SCALE * 15) // (100 * n)

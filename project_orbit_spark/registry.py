@@ -195,113 +195,39 @@ def get_query(name: str) -> Query:
 
 # Per-round priority head: queries that erred last round, every query
 # whose code path changed this round, and this round's additions —
-# these MUST land in the driver's first-50 sample. SELF-EXPIRING
-# (VERDICT r10 ask #1): _driver_order ignores an entry whose latest
-# record already equals the newest round — it has served its purpose
-# the moment the driver writes that record, so the head never pins
-# stale slots at a round boundary and never needs a same-round
-# hand-trim when rotation demand + head size would exceed 50.
-_DRIVER_PRIORITY = (
-    # Round 17 head: EMPTY by design (fourth round running). The
-    # scheduled work is the r12 rotation cohort — 47 queries by the
-    # recomputed r01–r16 union (the r16 plan estimated ~46; the
-    # difference is one query whose r16 natural slot the burn-down
-    # re-pins displaced) — which the LRV sort fronts automatically,
-    # plus the two r16 case-2 flips refresh_band_index and
-    # simhash_match_audit (never-verified → round 0, ahead of the
-    # cohort; both hash-verified by the r16 judge). Slot arithmetic:
-    # 2 round-0 flips + 2 changed-path re-pins (below) + 46 of the
-    # 47 r12 rotations = 50; the one displaced r12 query (last in
-    # registration order among the cohort) carries to r18 where the
-    # LRV sort fronts it — the boundary simulation in
-    # tests/test_entry.py proves both guards stay green through that
-    # carry.
-)
+# these MUST land in the driver's first-50 sample. SELF-EXPIRING:
+# _driver_order ignores an entry whose latest record already equals
+# the newest round — it has served its purpose the moment the driver
+# writes that record, so the head never pins stale slots at a round
+# boundary and never needs a same-round hand-trim when rotation
+# demand + head size would exceed 50.
+_DRIVER_PRIORITY: tuple[str, ...] = ()
 
-# Changed-path re-pins, EXEMPT from the self-expiry filter (ADVICE r11
-# #3): a query listed here keeps its head slot even if its latest
-# record equals the newest round — use it when a query's plan builder
-# changes AGAIN after the round in which the driver last recorded it,
-# so the changed path cannot silently lose its guaranteed first-50
-# slot to the freshness filter. Empty most rounds; entries are removed
-# once the post-change record lands (one round of life, but expired by
-# HAND at the next round's head rewrite, never by the filter).
-#
-# Round 18 (r17's thirteen optimization-round entries hand-expired —
-# their post-change records all landed in CORRECTNESS_r17, 50/50
-# hash-green): this round's pins are the second optimization round's
-# plan changes, per the standing convention that a changed physical
-# plan gets a driver record NOW rather than waiting for LRV rotation.
-# Slot arithmetic at the r18 head rewrite: 12 rotating (records ≤r12)
-# + 2 never-verified flips (token_cosine_dups,
-# incremental_simhash_screen — round-0 LRV rank, no pin needed) = 14
-# occupied, leaving 36 pin slots; the entries below fit with room,
-# and the boundary/sustainability simulations in tests/test_entry.py
-# hold at HEAD.
-_DRIVER_PRIORITY_CHANGED: tuple[str, ...] = (
-    # r18 scan fan-out opt-ins: the html_* siblings of
-    # html_table_extract (same single-task mapInPandas shape; one
-    # adaptive exchange after the documents scan, values identical,
-    # 3-SF hash re-checked at the change commit).
-    "html_field_extraction",
-    "html_meta_inventory",
-    "html_job_cards",
-    "html_article_extract",
-    "html_main_text",
-    "html_class_pattern_jobs",
-    "nav_structure_extract",
-    "html_link_inventory",
-    "html_form_extract",
-    "html_image_inventory",
-    "html_text_structure",
-    "html_script_inventory",
-    "pricing_page_parse",
-    "customer_partner_mentions",
-    "team_page_extract",
-    # r18 ann-family restructure (similarity/cosine.py): map-side
-    # routing (packed-centroid array_min instead of the per-qid
-    # row_number window), recon as the bucket corpus side (no vec_id
-    # join-back), packed PQ codes artifact + map-only decode.
-    "ann_ivf_topk",
-    "ann_ivf_topk_warm",
-    "ann_ivf_nprobe2",
-    "ann_ivf_pq_topk",
-    "ann_ivf_pq_topk_warm",
-    # NOT pinned — checkpoint-identical final plans (the change is
-    # pre-barrier or job-set only), value-verified at 3 SFs this
-    # round (tools/check) plus isolated driver_sim, riding LRV: the
-    # CC fused-init consumers (dedup_canonical_corpus,
-    # dup_cluster_labels/size_histogram, dedup_quality_canonical,
-    # leakage_safe_split, corpus_curation_gold), pagerank_link_graph
-    # (out-degree fold), and ccnet_perplexity_bands (unordered scores
-    # INSIDE its checkpoint job — the consumer plan is byte-identical;
-    # the pre-barrier subtree is pinned by
-    # test_lm_vocab_joins_are_never_static_broadcasts and its dump is
-    # committed at plans/r18/ccnet_scores_pre_barrier_*.txt). Pinning
-    # them pushed r13-record queries (company_gold_profile,
-    # rag_index_and_search, ...) past the staleness bar at the r19
-    # boundary — the boundary simulation caught exactly that.
-    # r18 curation n_tokens-through-checkpoint (operators/corpus.py)
-    # + CC fused init + unordered internal stage faces (the registered
-    # faces' doc_id output sorts are skipped inside the pipelines).
-    "curation_training_gold",
-    "incremental_curation_gold",
-    # r18 segment-stream checkpoint in scrub_boilerplate and
-    # dedup_segments_first_wins (the frequency/first-occurrence
-    # aggregate and the rebuild probe each derived doc_segments).
-    "boilerplate_segment_scrub",
-    "segment_dedup_first_wins",
-    # r18 materialized quantized feature table in the Lloyd fit
-    # (operators/clustering.py::_qvec_materialized): one fan-out +
-    # checkpoint instead of 4+ scan re-derivations per fit.
-    "kmeans_embedding_clusters",
-    # NOT pinned, same checkpoint-identical-final-plan class as the
-    # unpinned CC consumers: pagerank_link_graph (out-degree fold —
-    # the loop's per-round jobs changed but ranks are checkpoint-fed;
-    # value-verified at 3 SFs this round, rides LRV). Pinning it put
-    # company_gold_profile (r13 record) past the staleness bar at the
-    # r19 boundary.
-)
+# Changed-path pins: query -> the driver round whose record must cover
+# its changed plan (the round after the newest record on disk when the
+# plan changed). A pin holds a head slot until the query's latest
+# record reaches that round, then expires by itself — it is exempt from
+# the head's newest-round filter, so a plan that changes again after
+# its newest-round record still gets a slot, and it never needs a hand
+# edit at a round boundary.
+_DRIVER_PRIORITY_CHANGED: dict[str, int] = {
+    # one-shuffle connected-components rounds and counted barriers in
+    # place of probe jobs (every CC consumer); the bigram LM's total
+    # and the band cutoffs' n read off barriers (LM and curation
+    # faces); the empty ranking on zero pages (pagerank)
+    "curation_training_gold": 19,
+    "incremental_curation_gold": 19,
+    "corpus_curation_gold": 19,
+    "ccnet_perplexity_bands": 19,
+    "bigram_logprob_scores": 19,
+    "dedup_canonical_corpus": 19,
+    "leakage_safe_split": 19,
+    "dedup_quality_canonical": 19,
+    "dup_cluster_labels": 19,
+    "dup_cluster_size_histogram": 19,
+    "pagerank_link_graph": 19,
+    "semantic_dedup_semdedup": 19,
+}
 
 
 def _driver_order(names: list[str]) -> list[str]:
@@ -311,12 +237,12 @@ def _driver_order(names: list[str]) -> list[str]:
     rotates the stalest records back onto the official record.
 
     Head entries SELF-EXPIRE: once a priority query's latest record
-    equals the newest round on disk, it stops pinning a head slot and
-    falls back into the LRV order (where its fresh record sorts it
-    last anyway). This is what keeps the rotation guards green AT the
-    round boundary — the moment the driver writes CORRECTNESS_r{N},
-    the freshly verified head frees exactly the slots the next
-    round's rotation needs."""
+    equals the newest round on disk (a changed-path pin: reaches its
+    round), it stops pinning a head slot and falls back into the LRV
+    order (where its fresh record sorts it last anyway). This is what
+    keeps the rotation guards green AT the round boundary — the
+    moment the driver writes CORRECTNESS_r{N}, the freshly verified
+    head frees exactly the slots the next round's rotation needs."""
     last = _last_verified()
     newest = max(last.values(), default=0)
     head = [
@@ -324,10 +250,11 @@ def _driver_order(names: list[str]) -> list[str]:
         for n in _DRIVER_PRIORITY
         if last.get(n, 0) < newest or newest == 0
     ]
-    # Changed-path re-pins bypass the freshness filter (ADVICE r11 #3):
-    # a plan that changed after its newest-round record still needs its
-    # guaranteed slot, which the self-expiry heuristic would deny it.
-    head.extend(n for n in _DRIVER_PRIORITY_CHANGED if n not in head)
+    head.extend(
+        n
+        for n, rnd in _DRIVER_PRIORITY_CHANGED.items()
+        if last.get(n, 0) < rnd and n not in head
+    )
     prio = {n: i for i, n in enumerate(head)}
     reg_idx = {n: i for i, n in enumerate(names)}
     return sorted(

@@ -112,3 +112,27 @@ def test_fused_init_round_one_labels_match_min_neighbor(spark):
     # fused round + 1 detection round; labels are component minima.
     got = _labels(spark, [(10, 4), (10, 7), (10, 9)])
     assert got == {4: 4, 7: 4, 9: 4, 10: 4}
+
+
+def test_self_loop_only_graph_is_its_own_fixpoint(spark):
+    # every node's only neighbor is itself, so round 1 changes no label
+    # (sum(label) == sum(node) on the init barrier) and the labeling
+    # returns before any round — at any max_iter, 1 included
+    df = spark.createDataFrame([(3, 3), (8, 8), (8, 8)], "src long, dst long")
+    got = {r["node"]: r["label"] for r in connected_components(df, max_iter=1).collect()}
+    assert got == {3: 3, 8: 8}
+
+
+def test_pagerank_on_zero_pages_is_empty(spark, tmp_path):
+    # 1/n is undefined with no pages: the ranking is empty, not a
+    # driver-side ZeroDivisionError
+    import pyarrow.parquet as pq
+
+    from project_orbit_spark.operators.graph import pagerank_link_graph
+    from tests.conftest import SF_DIR
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    pq.write_table(docs.slice(0, 0), tmp_path / "documents.parquet")
+    out = pagerank_link_graph(spark, str(tmp_path))
+    assert out.columns == ["node", "rank_fp"]
+    assert out.collect() == []

@@ -1,0 +1,88 @@
+"""Job budgets: the Spark jobs a call runs, counted in its own
+status-tracker job group. sf0.1 is bound by per-job latency, so these
+pin the job counts of the paths that were cut, not their timings."""
+
+import time
+import uuid
+
+from pyspark.sql import functions as F
+
+from tests.conftest import SF_DIR
+
+
+def jobs_of(spark, fn) -> int:
+    """Run ``fn`` under a fresh job group and return how many jobs it
+    ran. The status tracker is fed by the listener bus, so the count is
+    read once every job of the group has finished and the set has
+    stopped growing."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    prev = None
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        ids = sorted(st.getJobIdsForGroup(group))
+        done = all(
+            (info := st.getJobInfo(j)) is not None and info.status != "RUNNING"
+            for j in ids
+        )
+        if done and ids == prev:
+            return len(ids)
+        prev = ids
+        time.sleep(0.25)
+    raise AssertionError(f"jobs of {group} did not settle: {prev}")
+
+
+def test_curation_training_gold_job_budget(spark):
+    """The composed curation pipeline, build plus collect: one-shuffle
+    propagation rounds, counted barriers instead of probe jobs, the LM
+    total and the band n read off the barriers, and no cluster-size
+    join (48 jobs before these cuts)."""
+    from project_orbit_spark.operators.corpus import curation_training_gold
+
+    n = jobs_of(spark, lambda: curation_training_gold(spark, SF_DIR).toPandas())
+    assert 0 < n <= 36, n
+
+
+def test_propagation_round_job_budget(spark):
+    """One propagation round under the broadcast bound is the labels
+    broadcast, the grouped-min shuffle and the checkpoint: ≤3 jobs.
+    Two chains whose diameters differ by one need exactly one round
+    more, so the difference of their job counts is one round's jobs."""
+    from project_orbit_spark.operators.graph import connected_components
+
+    def chain(length):
+        df = spark.createDataFrame(
+            [(i, i + 1) for i in range(length)], "src long, dst long"
+        )
+        return jobs_of(spark, lambda: connected_components(df))
+
+    short, longer = chain(4), chain(5)
+    assert 0 < longer - short <= 3, (short, longer)
+
+
+def test_counted_frame_gates_broadcast_without_a_job(spark):
+    """A frame from checkpoint_counted carries its row count, so the
+    broadcast gate answers from it on both sides of the bound and runs
+    no probe job."""
+    from project_orbit_spark.catalog import checkpoint_counted, maybe_broadcast
+
+    side, seen = checkpoint_counted(spark.range(0, 40).select(F.col("id").alias("k")))
+    assert seen["rows"] == 40
+    got = {}
+    n = jobs_of(
+        spark,
+        lambda: got.update(
+            under=maybe_broadcast(side, 100, probe=side),
+            over=maybe_broadcast(side.select("k"), 10, probe=side),
+        ),
+    )
+    assert n == 0
+    assert "ResolvedHint" in got["under"]._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" not in got["over"]._jdf.queryExecution().analyzed().toString()

@@ -1000,6 +1000,7 @@ def test_score_with_lm_unpinned_face_keeps_batch_broadcastable(spark):
 
     from project_orbit_spark.functions.textquality import (
         doc_bigrams,
+        freq_total,
         lm_count_tables,
         score_with_lm,
     )
@@ -1008,7 +1009,8 @@ def test_score_with_lm_unpinned_face_keeps_batch_broadcastable(spark):
         [(1, "a b a c"), (2, "b a b d")], ["doc_id", "text"]
     )
     big = doc_bigrams(d)
-    tables = lm_count_tables(d)
+    c2, c1, freq = lm_count_tables(d)
+    tables = (c2, c1, freq, freq_total(freq))
     pinned = score_with_lm(big, *tables)
     free = score_with_lm(big, *tables, pin_vocab=False)
     pinned_plan = pinned._jdf.queryExecution().executedPlan().toString()

@@ -8,6 +8,7 @@ JVM round-trips off the hot path.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -227,6 +228,14 @@ def test_connected_components_matches_union_find(spark, edges):
     got_2p = {r["node"]: r["label"] for r in connected_components_two_phase(df).collect()}
     assert got_lp == want
     assert got_2p == want
+    # past the label broadcast bound the rounds' join is left to AQE:
+    # same labels
+    from project_orbit_spark.operators import dedup
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "LABEL_BROADCAST_BOUND", 0)
+        got_aqe = {r["node"]: r["label"] for r in connected_components(df).collect()}
+    assert got_aqe == want
 
 
 @settings(max_examples=5, deadline=None)
@@ -743,11 +752,10 @@ def test_curation_pipeline_stage_order_semantics(spark):
     scrubbed = scrub_boilerplate(d).select(
         "doc_id", F.col("clean_text").alias("text")
     )
+    scores = bigram_scores(scrubbed).select("doc_id", "avg_logprob")
     bands = {
         r["doc_id"]: r["band"]
-        for r in perplexity_bands(
-            bigram_scores(scrubbed).select("doc_id", "avg_logprob")
-        ).collect()
+        for r in perplexity_bands(scores, scores.count()).collect()
     }
     expected = {i for i, b in bands.items() if b != "tail"}
     assert set(out) == expected
@@ -779,7 +787,9 @@ def test_perplexity_band_ties_land_in_the_higher_band(spark):
             [(i, float(s)) for i, s in enumerate(scores)],
             "doc_id long, avg_logprob double",
         )
-        return {r["doc_id"]: r["band"] for r in perplexity_bands(df).collect()}
+        return {
+            r["doc_id"]: r["band"] for r in perplexity_bands(df, len(scores)).collect()
+        }
 
     # 5-way tie straddles the first boundary: ALL ties go head
     b = bands([5.0] * 5 + [1.0] * 4)

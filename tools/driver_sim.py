@@ -5,7 +5,8 @@ query). Catches per-process issues that a shared-session parity run
 masks: runtime-conf dependencies, closure pickling, cwd sensitivity.
 
 Usage: python tools/driver_sim.py [sf_dir] [query ...]
-Defaults: sf0.01, the _DRIVER_PRIORITY list (the first-50 sample head).
+Defaults: sf0.01, the _DRIVER_PRIORITY list and the changed-path pins
+(the first-50 sample head).
 """
 
 from __future__ import annotations
@@ -44,9 +45,12 @@ def main() -> None:
     if len(sys.argv) > 2:
         names = sys.argv[2:]
     else:
-        from project_orbit_spark.registry import _DRIVER_PRIORITY
+        from project_orbit_spark.registry import (
+            _DRIVER_PRIORITY,
+            _DRIVER_PRIORITY_CHANGED,
+        )
 
-        names = list(_DRIVER_PRIORITY)
+        names = [*_DRIVER_PRIORITY, *_DRIVER_PRIORITY_CHANGED]
     failed = []
     for name in names:
         code = _SNIPPET.format(repo=str(REPO), name=name, sf_dir=sf_dir)

@@ -55,20 +55,17 @@ BNLJ_BOUNDED = {
     # single global-stats or threshold rows joined back to the corpus
     "q15_top_supplier", "q22_lapsed_customer_balance",
     "weighted_poisson_sample",
-    "benchmark_contamination", "bigram_logprob_scores", "bloom_pruned_join",
+    "benchmark_contamination", "bloom_pruned_join",
     "corpus_mixture_sample", "events_value_histogram", "heavy_hitters_two_pass",
     "key_skew_profile", "tfidf_top_terms", "unigram_logprob_scores",
-    # round-12 audit additions (hand-audited): ccnet bands crossJoins
-    # two 1-row builds (the total-count row and the 2-cutoff row) on
-    # top of the bigram scorer's 1-row total; the composed curation
-    # pipeline inherits exactly those sites; the streaming assign
-    # twin broadcasts the single packed-centroid row (k=8 structs in
-    # one row, same bound as kmeans_embedding_clusters)
+    # ccnet bands crossJoins one 1-row build, the 2-cutoff ``cuts``
+    # row; the composed curation pipeline and its incremental face
+    # (persisted cuts, O(new) batch side) inherit exactly that site;
+    # the streaming assign twin broadcasts the single packed-centroid
+    # row (k=8 structs in one row, same bound as
+    # kmeans_embedding_clusters)
     "ccnet_perplexity_bands", "curation_training_gold",
-    "stream_cluster_assign_batch",
-    # the incremental curation face inherits the same 1-row builds
-    # (persisted total/cuts artifacts) on its O(new) batch side
-    "incremental_curation_gold",
+    "stream_cluster_assign_batch", "incremental_curation_gold",
     # round-13 additions (hand-audited): the Matryoshka funnel
     # broadcasts the 5-row query set (the cosine_topk_exact shape);
     # temperature sampling crossJoins the single (total_docs, z)
@@ -182,11 +179,12 @@ FACT_BUILD_KNOWN = {
     # PINNED (r16 burn-down executed, VERDICT r15 ask #1): the
     # text-valued corpus-growing LM vocab joins now carry shuffle_hash
     # pins (score_with_lm pin_vocab=True + the unigram freq join);
-    # the only derived-fact broadcasts left in their plans are 1-row
-    # total/cutoff frames — allowlisted for exactly that reason. Plan
-    # contract: tests/test_plans.py::
+    # the only derived-fact broadcast left in the unigram scorer's
+    # plan is its 1-row total frame — allowlisted for exactly that
+    # reason (the bigram scorer reads its total as a scalar subquery
+    # and broadcasts nothing). Plan contract: tests/test_plans.py::
     # test_lm_vocab_joins_are_never_static_broadcasts.
-    "unigram_logprob_scores", "bigram_logprob_scores",
+    "unigram_logprob_scores",
     # RE-ADJUDICATED BOUNDED (r16): vocab_coverage_oov's broadcast
     # build is the TakeOrdered top-K vocabulary — at most VOCAB_TOP_K
     # rows BY THE LIMIT OPERATOR at any corpus size, and explicitly
