@@ -11,6 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructType
+
+from project_orbit_spark.session import cache_token, register_df_cache
 
 TABLES = (
     "region",
@@ -35,9 +38,8 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
 def _size_to_bytes(s: str) -> int:
     """Parse a Spark byte-size conf value ('134217728b', '128m', '1g',
-    and the two-letter forms Spark also accepts: '128mb', '64kb' —
-    ADVICE r17 #5: the trailing 'b' must strip BEFORE the k/m/g match,
-    else '128mb' → '128m' → ValueError → silent 128MB fallback)."""
+    and the two-letter forms Spark also accepts: '128mb', '64kb'). The
+    trailing 'b' strips before the k/m/g match, so '128mb' is 128m."""
     s = s.strip().lower()
     if s.endswith("b"):
         s = s[:-1]
@@ -67,11 +69,10 @@ def _fan_out_scan(
     hash-repartition on them instead of round-robin — the one
     parallelism exchange then SATISFIES every downstream
     ClusteredDistribution whose keys contain the set (guide §2.4:
-    two operations keyed the same way share one exchange), measured
-    r17 on repetition_signals: 6 exchanges -> 3, 1.4 -> 0.96 s on
-    top of the round-robin fan-out. The explicit numPartitions pins
-    the width (an N-less keyed repartition would be AQE-coalesced
-    back to one partition on this tiny substrate)."""
+    two operations keyed the same way share one exchange). The
+    explicit numPartitions pins the width (an N-less keyed repartition
+    would be AQE-coalesced back to one partition on this tiny
+    substrate)."""
     if os.environ.get("SPARK_GRAFT_FAN_OUT", "1") == "0":
         return df
     try:
@@ -102,22 +103,70 @@ def _fan_out_scan(
 
 def barrier_width(df: DataFrame) -> int:
     """Partition width for explicit keyed repartition barriers
-    (CollapseProject barriers in the dedup/LSH/winnowing families).
-    r17: these were hard-coded ``repartition(32, keys)`` — harmless on
-    this 32-core substrate but a throttle at scale, where a
-    corpus-wide shuffle forced through 32 partitions is the exact
-    'constant tuned for local mode' anti-pattern. The width now
-    follows the deployment's own shuffle sizing:
-    max(defaultParallelism, spark.sql.shuffle.partitions) — locally
-    (both 32) the plans are byte-identical; a production session that
-    sizes shuffle.partitions for its data volume sizes these barriers
-    with it."""
+    (CollapseProject barriers in the dedup/LSH/winnowing families):
+    max(defaultParallelism, spark.sql.shuffle.partitions), never a
+    constant, so a session that sizes shuffle.partitions for its data
+    volume sizes these barriers with it."""
     sess = df.sparkSession
     try:
         sp = int(sess.conf.get("spark.sql.shuffle.partitions"))
     except (ValueError, TypeError):
         sp = 200
     return max(sess.sparkContext.defaultParallelism, sp)
+
+
+# (session token, table path, nanosAsLong conf) -> the table's raw file
+# schema. Catalog inputs are immutable within a session — the lake-table
+# contract, where a metastore table needs a REFRESH to see rewritten
+# files — so each table's footers are read once per session and every
+# later read plans the same relation from this schema with no inference
+# job. clear_df_caches() evicts it; a caller that rewrites a table's
+# files within one session must call it (or use a new session) first.
+# nanosAsLong is in the key because it decides how events.ts is inferred.
+_SCHEMAS: dict[tuple[str, str, str], StructType] = register_df_cache({})
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    if name not in TABLES:
+        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The raw file schema of one catalog table, resolved once per
+    session (see ``_SCHEMAS``). This is the package's only
+    schema-inferring read of a catalog table: parquet inference reads
+    footers in a Spark job (one footer by default, every file's under
+    mergeSchema)."""
+    path = _table_path(sf_dir, name)
+    key = (
+        cache_token(spark),
+        path,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
+
+
+def _events_session(spark: SparkSession) -> None:
+    """The confs both events faces read under: TIMESTAMP(NANOS) files
+    read as raw long nanos, and timestamps rendered in UTC so window
+    and date strings match the timezone-naive parquet values."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _normalize_ts(df: DataFrame, raw: StructType) -> DataFrame:
+    """Both ``events.ts`` vintages as one microsecond TIMESTAMP column.
+    Nanos-as-long truncates with INTEGER division: float division loses
+    ulp≈256ns at 1.7e18-scale epochs and can shave 1us off non-aligned
+    values against the oracle's exact truncation."""
+    from pyspark.sql import functions as F
+
+    if isinstance(raw["ts"].dataType, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def load(
@@ -127,13 +176,14 @@ def load(
     fan_out: bool = False,
     fan_out_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Load one testdata table as a DataFrame (lazy parquet scan).
+    """Load one testdata table as a DataFrame (lazy parquet scan over
+    the session-resolved ``table_schema``, so no inference job).
 
     ``events.ts`` has shipped in two physical vintages: TIMESTAMP(NANOS)
     (which Spark's parquet reader only reads as raw long nanos under the
     legacy conf) and plain ``timestamp[us]`` (read natively as
-    TIMESTAMP_NTZ). Branch on the dtype actually loaded so either
-    vintage yields the same microsecond TIMESTAMP column under UTC.
+    TIMESTAMP_NTZ). Branch on the resolved dtype so either vintage
+    yields the same microsecond TIMESTAMP column under UTC.
 
     ``fan_out=True`` opts a call site into the scale-adaptive scan
     fan-out (``_fan_out_scan``): the fixture parquet ships ONE row
@@ -141,113 +191,61 @@ def load(
     map stage before the first exchange runs on a single core. Call
     sites whose per-row map work is expensive (tokenization, n-gram
     explosion, signature computation, Python-boundary batches) opt in
-    and get a repartition to defaultParallelism — measured r17:
-    gopher_repetition_signals 3.0 s single-task vs 1.5 s fanned out
-    on local[32]. The guide's fix for unsplittable inputs
-    (optimization guide §2.5: "repartition immediately after the
-    read") — applied ADAPTIVELY: only when the file's own split count
-    (size / maxPartitionBytes) cannot feed the cores, so at 100 TB
-    the corpus scan has thousands of splits, the condition is false,
-    and load() is byte-for-byte the plain scan. Cheap map sides
-    (numeric codegen over facts, trivial projections) must NOT opt
-    in: the extra exchange is a measured net loss there (q1-shaped
-    agg: 0.17 s -> 0.61 s; chunk_documents: 0.54 s -> 0.65 s).
+    and get a repartition to defaultParallelism (optimization guide
+    §2.5: "repartition immediately after the read") — applied
+    ADAPTIVELY: only when the file's own split count (size /
+    maxPartitionBytes) cannot feed the cores, so at 100 TB the corpus
+    scan has thousands of splits, the condition is false, and load()
+    is byte-for-byte the plain scan. Cheap map sides (numeric codegen
+    over facts, trivial projections) must NOT opt in: the extra
+    exchange costs more than the single-task map it parallelizes.
     """
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = _table_path(sf_dir, name)
     if name == "events":
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # timestamp_micros yields an LTZ timestamp rendered through the
-        # session timezone; pin it to UTC so window/date strings match
-        # the (timezone-naive) parquet values in any driver session
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # nanos-as-long vintage: truncate to micros with INTEGER
-            # division — float division loses ulp≈256ns precision at
-            # 1.7e18-scale epochs (double's 53-bit mantissa), which can
-            # shave 1us off non-aligned values vs the oracle's exact
-            # integer truncation.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            # native timestamp / timestamp_ntz vintage: normalize to
-            # the session-TZ (UTC) timestamp type downstream ops expect
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        # ADVICE r17 #3: fan_out was silently ignored on this branch —
-        # honor it so an events call site opting in gets the same
-        # scale-adaptive gate as every other table.
-        if fan_out:
-            df = _fan_out_scan(spark, df, path, fan_out_cols)
-        return df
-    df = spark.read.parquet(path)
+        _events_session(spark)
+    raw = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(raw).parquet(path)
+    if name == "events":
+        df = _normalize_ts(df, raw)
     if fan_out:
         df = _fan_out_scan(spark, df, path, fan_out_cols)
     return df
 
 
+def read_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``readStream`` face of one catalog table, over its resolved
+    ``table_schema`` (streaming sources need an explicit schema; a
+    hand-written literal would drift silently, since parquet resolves
+    columns by name and streams nulls for a renamed column).
+
+    A table ships in two LAYOUTS: a single file (the testdata) and a
+    directory of part files (scale-probe / fixture synthesis). The
+    streaming file source requires a directory basePath, so the
+    directory layout streams the path itself, while the single-file
+    layout streams ``sf_dir`` with a basename pathGlobFilter (which
+    would list zero files in the directory layout — and a bare
+    directory glob would sweep in every other table's parquet)."""
+    path = _table_path(sf_dir, name)
+    reader = spark.readStream.schema(table_schema(spark, sf_dir, name)).format("parquet")
+    if os.path.isdir(path):
+        return reader.load(path)
+    return reader.option("pathGlobFilter", f"{name}.parquet").load(sf_dir)
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` face of the events table, normalized to the same
-    microsecond TIMESTAMP ``ts`` column ``load`` produces.
-
-    Streaming sources need an explicit schema, so the physical ``ts``
-    vintage (long nanos vs native timestamp) is sniffed from a batch
-    read of the same file and the raw stream schema branches on it.
-    ``events.parquet`` ships in two LAYOUTS too: a single file (the
-    testdata) and a directory of part files (scale-probe / fixture
-    synthesis). The streaming file source requires a directory
-    basePath, so the directory layout streams the path itself, while
-    the single-file layout streams ``sf_dir`` with a basename
-    pathGlobFilter (which would list zero files in the directory
-    layout — and a bare directory glob would sweep in every other
-    table's parquet).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    ts_type = spark.read.parquet(path).schema["ts"].dataType
-    nanos = isinstance(ts_type, T.LongType)
-    raw_schema = (
-        f"event_id long, ts {'long' if nanos else ts_type.simpleString()}, "
-        "user_id long, event_type string, value double, props string"
-    )
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(raw_schema).parquet(path)
-    else:
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    if nanos:
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table; handy for registering temp views."""
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for spark.sql usage."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    microsecond TIMESTAMP ``ts`` column ``load`` produces; the ``ts``
+    vintage comes from the resolved schema, so starting a stream runs
+    no inference job."""
+    _events_session(spark)
+    raw = table_schema(spark, sf_dir, "events")
+    return _normalize_ts(read_stream(spark, sf_dir, "events"), raw)
 
 
 # (session token, probe-plan semantic hash, bound) -> fits verdict.
 # Holds plain bools, no Spark resources, but registered with the
 # session cache registry so clear_df_caches() evicts dead sessions'
 # entries instead of growing without bound in a long-lived driver.
-from project_orbit_spark.session import register_df_cache  # noqa: E402
-
 _PROBE_CACHE: dict[tuple[str, int, int], bool] = register_df_cache({})
 
 # (session token, plan semantic hash) -> row count a counted barrier
@@ -257,8 +255,6 @@ _ROW_COUNTS: dict[tuple[str, int], int] = register_df_cache({})
 
 
 def _plan_key(df: DataFrame) -> tuple[str, int] | None:
-    from project_orbit_spark.session import cache_token
-
     try:
         return (
             cache_token(df.sparkSession),

@@ -331,7 +331,8 @@ def rag_dashboard_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("n_chars") >= _CTX_MIN_CHARS, F.col("doc_id")).alias("ctx_doc_id"),
         F.when(F.col("n_chars") >= _CTX_MIN_CHARS, F.col("score")).alias("ctx_score"),
         F.col("n_own_ctx"),
-        (F.col("n_own_ctx") > 0).cast("long").alias("company_verified"),
+        # 0, not NULL, for a company with no retrieved context (no rows)
+        F.when(F.col("n_own_ctx") > 0, 1).otherwise(0).cast("long").alias("company_verified"),
     ).orderBy("company", "section_idx")
 
 

@@ -227,6 +227,8 @@ _DRIVER_PRIORITY_CHANGED: dict[str, int] = {
     "dup_cluster_size_histogram": 19,
     "pagerank_link_graph": 19,
     "semantic_dedup_semdedup": 19,
+    # company_verified is 0, not NULL, when nothing is retrieved
+    "rag_dashboard_gold": 19,
 }
 
 

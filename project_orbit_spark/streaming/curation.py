@@ -34,28 +34,9 @@ batch face's exact rows, packing included).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` face of the documents table (explicit schema,
-    as streaming file sources require); handles both shipped layouts
-    the way inference.read_embeddings_stream does.
-
-    The schema comes from a batch read of the SAME files — never a
-    second hand-written literal (ADVICE r12 #4): parquet resolves
-    columns by name, so a drifted literal would silently stream nulls
-    for renamed/retyped columns instead of failing loudly."""
-    from project_orbit_spark.catalog import load
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = load(spark, sf_dir, "documents").schema
-    reader = spark.readStream.schema(schema).format("parquet")
-    if os.path.isdir(path):
-        return reader.load(path)
-    return reader.option("pathGlobFilter", "documents.parquet").load(sf_dir)
+from project_orbit_spark.catalog import read_stream
 
 
 def stream_curate_docs(spark: SparkSession, sf_dir: str, on_batch):
@@ -78,7 +59,7 @@ def stream_curate_docs(spark: SparkSession, sf_dir: str, on_batch):
     )
 
     art = warm_curation_artifacts(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = read_stream(spark, sf_dir, "documents").select("doc_id", "text")
 
     def run_batch(mb: DataFrame, _batch_id: int) -> None:
         on_batch(curate_batch(_incremental_batch(mb), art))
@@ -111,7 +92,7 @@ def stream_segment_dedup(spark: SparkSession, sf_dir: str, on_batch):
     )
 
     idx = warm_segment_index(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir).select("doc_id", "text")
+    stream = read_stream(spark, sf_dir, "documents").select("doc_id", "text")
 
     def run_batch(mb: DataFrame, _batch_id: int) -> None:
         on_batch(segment_dedup_batch(_segment_dedup_arm(mb), idx))
@@ -134,7 +115,7 @@ def stream_quality_filter(spark: SparkSession, sf_dir: str, on_batch):
     micro-batch boundaries cannot change any score."""
     from project_orbit_spark.functions.textquality import ensemble_scores
 
-    stream = read_documents_stream(spark, sf_dir).select(
+    stream = read_stream(spark, sf_dir, "documents").select(
         "doc_id", "text", "n_chars"
     )
 
@@ -166,7 +147,7 @@ def stream_dsir_filter(spark: SparkSession, sf_dir: str, on_batch):
     from pyspark.sql import functions as F
 
     lm, stats = warm_dsir_lm(spark, sf_dir)
-    stream = read_documents_stream(spark, sf_dir).select(
+    stream = read_stream(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("new_id"), "lang", "text"
     )
 

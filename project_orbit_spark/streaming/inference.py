@@ -21,31 +21,15 @@ restarts), the same contract as lsh.warm_embedding_index.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
+from project_orbit_spark.catalog import read_stream
 from project_orbit_spark.operators.clustering import (
     _DUCK_KMEANS,
     assign_batch,
     warm_kmeans_centroids,
 )
 from project_orbit_spark.registry import register
-
-
-def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` face of the embeddings table (explicit schema,
-    as streaming file sources require). Handles both shipped layouts
-    the way catalog.read_events_stream does: a single
-    ``embeddings.parquet`` file (testdata) streams ``sf_dir`` with a
-    basename glob; a directory of part files (synthesized corpora)
-    streams the directory itself."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = "vec_id long, embedding array<float>, label int"
-    reader = spark.readStream.schema(schema).format("parquet")
-    if os.path.isdir(path):
-        return reader.load(path)
-    return reader.option("pathGlobFilter", "embeddings.parquet").load(sf_dir)
 
 
 def stream_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,7 +43,7 @@ def stream_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain (centroids are means of round(x*1000) longs; feeding raw
     ~[-0.5,0.5] doubles would collapse every row onto the smallest-
     norm centroid — ADVICE r10 #1)."""
-    stream = read_embeddings_stream(spark, sf_dir).select("vec_id", "embedding")
+    stream = read_stream(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = warm_kmeans_centroids(spark, sf_dir)
     return assign_batch(stream, cents)
 

@@ -3,7 +3,8 @@ TIMESTAMP(NANOS) (readable by Spark only as raw longs under the legacy
 nanosAsLong conf) and plain timestamp[us] (read natively as
 TIMESTAMP_NTZ). catalog.load / catalog.read_events_stream must
 normalize BOTH to the same microsecond TIMESTAMP column — these tests
-synthesize each vintage with pyarrow and pin that contract."""
+synthesize each vintage with pyarrow and pin that contract, on a first
+load and on a later one served from the session's schema memo."""
 
 from __future__ import annotations
 
@@ -14,7 +15,10 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from project_orbit_spark.catalog import load, read_events_stream
+from project_orbit_spark import catalog
+from project_orbit_spark.catalog import load, read_events_stream, table_schema
+from tests.conftest import SF_DIR
+from tests.test_job_budget import jobs_of
 
 _ROWS = {
     "event_id": [0, 1, 2],
@@ -99,3 +103,77 @@ def test_read_events_stream_schema_both_vintages(spark, tmp_path, unit):
         for i, t in zip(_ROWS["event_id"], _ROWS["ts"])
     )
     assert got == want
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_memo_served_load_normalizes_both_ts_vintages(spark, tmp_path, unit):
+    sf_dir = _write_vintage(tmp_path, unit)
+
+    def ts_rows():
+        df = load(spark, sf_dir, "events")
+        assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+        return sorted(tuple(r) for r in df.select("event_id", "ts").collect())
+
+    first = ts_rows()
+    raw = table_schema(spark, sf_dir, "events")
+    assert isinstance(raw["ts"].dataType, T.LongType if unit == "ns" else T.TimestampNTZType)
+    assert jobs_of(spark, lambda: load(spark, sf_dir, "events")) == 0
+    assert ts_rows() == first
+    # the stream face takes the memoized schema: starting it runs no job
+    got = {}
+    assert jobs_of(spark, lambda: got.update(s=read_events_stream(spark, sf_dir))) == 0
+    assert table_schema(spark, sf_dir, "events") is raw
+    assert got["s"].schema == load(spark, sf_dir, "events").schema
+
+
+def test_clear_df_caches_empties_the_schema_memo(spark, monkeypatch):
+    from project_orbit_spark import session
+
+    table_schema(spark, SF_DIR, "region")
+    assert catalog._SCHEMAS
+    # clear only the schema memo, so other tests' warm caches survive;
+    # it must be one of the registered caches for that to be the same call
+    assert any(c is catalog._SCHEMAS for c in session._DF_CACHES)
+    monkeypatch.setattr(
+        session, "_DF_CACHES", [c for c in session._DF_CACHES if c is catalog._SCHEMAS]
+    )
+    session.clear_df_caches()
+    assert catalog._SCHEMAS == {}
+
+
+# the benchmark's rag_serve request mix (perfbench/workloads.py RAG_MIX)
+_RAG_MIX = (
+    "ann_ivf_topk_warm",
+    "cosine_topk_exact",
+    "hybrid_rrf_topk",
+    "rag_index_and_search",
+    "dashboard_report_table",
+    "risk_lexicon_scan",
+    "q1_pricing_summary",
+)
+
+
+def _normalized_plan(df) -> str:
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=", plan)
+    return re.sub(r"(lambda \w+?)_\d+", r"\1", plan)
+
+
+@pytest.mark.parametrize("name", _RAG_MIX)
+def test_memo_served_plan_equals_plain_read_plan(spark, monkeypatch, name):
+    """A read over the memoized schema plans the same relation as a
+    schema-inferring read: executed plans match, ids normalized."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from project_orbit_spark import registry
+
+    fn = registry.get_query(name).fn
+    memo = _normalized_plan(fn(spark, SF_DIR))
+    with monkeypatch.context() as m:
+        # drop the schema the loader passes: every read infers again
+        m.setattr(DataFrameReader, "schema", lambda self, schema: self)
+        plain = _normalized_plan(fn(spark, SF_DIR))
+    assert memo == plain

@@ -86,3 +86,28 @@ def test_counted_frame_gates_broadcast_without_a_job(spark):
     assert n == 0
     assert "ResolvedHint" in got["under"]._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in got["over"]._jdf.queryExecution().analyzed().toString()
+
+
+def test_second_load_of_a_table_runs_no_job(spark, tmp_path):
+    """A table's schema is inferred once per session: the first load of
+    a path runs the footer-reading job, every later load runs none."""
+    import shutil
+
+    from project_orbit_spark.catalog import load
+
+    shutil.copy(f"{SF_DIR}/documents.parquet", tmp_path / "documents.parquet")
+    first = jobs_of(spark, lambda: load(spark, str(tmp_path), "documents"))
+    second = jobs_of(spark, lambda: load(spark, str(tmp_path), "documents"))
+    assert first >= 1
+    assert second == 0
+
+
+def test_q1_after_a_warm_load_job_budget(spark):
+    """With lineitem's schema resolved, q1 (build plus collect) runs
+    only its own aggregation jobs, no inference job."""
+    from project_orbit_spark.catalog import load
+    from project_orbit_spark.operators.relational import q1_pricing_summary
+
+    load(spark, SF_DIR, "lineitem")
+    n = jobs_of(spark, lambda: q1_pricing_summary(spark, SF_DIR).toPandas())
+    assert 0 < n <= 4, n

@@ -34,3 +34,24 @@ def test_query_matches_oracle(name, q, spark, duck):
     }, "schema mismatch"
     a, b = canon(spark_pdf), canon(duck_pdf)
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_rag_dashboard_gold_on_zero_documents_matches_oracle(spark, tmp_path):
+    # with no documents nothing is retrieved: every section is patched
+    # and company_verified is 0 (the oracle's CASE), not NULL
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from tools.check import compare
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet")
+    pq.write_table(docs.slice(0, 0), tmp_path / "documents.parquet")
+    q = registry.get_query("rag_dashboard_gold")
+    got = q.fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = con.execute(q.oracle).fetchdf()
+    assert len(got) > 0
+    assert compare("rag_dashboard_gold", got, want) == []

@@ -576,7 +576,7 @@ def test_stream_merge_partitioned_matches_batch_merge(spark, tmp_path):
         merge_upsert_partitioned,
         stream_merge_partitioned_foreachbatch,
     )
-    from project_orbit_spark.streaming.curation import read_documents_stream
+    from project_orbit_spark.catalog import read_stream
 
     cols = ("doc_id", "lang", "n_chars")
     d = load(spark, SF_DIR, "documents").select(*cols)
@@ -588,7 +588,7 @@ def test_stream_merge_partitioned_matches_batch_merge(spark, tmp_path):
     for _ in range(2):  # second pass = replay; contents must not change
         q = stream_merge_partitioned_foreachbatch(
             spark,
-            read_documents_stream(spark, SF_DIR).select(*cols),
+            read_stream(spark, SF_DIR, "documents").select(*cols),
             stream_target,
             key="doc_id",
             part_col="lang",

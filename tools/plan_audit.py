@@ -146,8 +146,11 @@ BNLJ_BOUNDED = {
 #             joins, bm25/semantic corpus-derived frames).
 FACT_TABLES = ("documents", "embeddings", "events", "lineitem", "orders", "customer")
 FACT_BUILD_KNOWN = {
-    # GATED (documented bounds at the register/helper sites)
-    "incremental_minhash_dedup", "incremental_segment_dedup",
+    # GATED (documented bounds at the register/helper sites); the
+    # simhash screen's build is its exploded new-batch bands,
+    # maybe_broadcast(new_b, INCREMENTAL_BATCH_BOUND, probe=batch_ids)
+    "incremental_minhash_dedup", "incremental_simhash_screen",
+    "incremental_segment_dedup",
     "incremental_span_contamination", "incremental_vocab_oov",
     "boilerplate_segment_scrub", "segment_dedup_first_wins",
     "repeated_span_mining", "benchmark_contamination",
