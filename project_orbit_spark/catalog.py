@@ -52,6 +52,31 @@ def _size_to_bytes(s: str) -> int:
     return int(float(s) * mult)
 
 
+def _scan_bytes(df: DataFrame, path: str) -> int | None:
+    """Input size of ``path`` from the statistics of ``df``'s own scan
+    of it: the file index's total file length (Spark's sizeInBytes of
+    the leaf relation; hidden ``_SUCCESS``/``.crc`` files excluded),
+    so it needs no local filesystem and works on any path the scan can
+    read. None when no leaf of ``df`` scans ``path``."""
+    sess = df.sparkSession
+    try:
+        hp = sess._jvm.org.apache.hadoop.fs.Path(path)
+        want = hp.getFileSystem(sess._jsc.hadoopConfiguration()).makeQualified(hp).toString()
+        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    except Exception:  # no filesystem for the path's scheme
+        return None
+    sizes = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        try:
+            roots = leaf.relation().location().rootPaths()
+        except Exception:  # not a file-index relation
+            continue
+        if any(roots.apply(j).toString() == want for j in range(roots.size())):
+            sizes.append(int(leaf.stats().sizeInBytes()))
+    return sum(sizes) if sizes else None
+
+
 def _fan_out_scan(
     spark: SparkSession,
     df: DataFrame,
@@ -60,9 +85,11 @@ def _fan_out_scan(
 ) -> DataFrame:
     """Scale-adaptive scan fan-out: repartition to defaultParallelism
     ONLY when the input's own byte size cannot produce enough splits
-    to feed the cores. Derived from input size, never a constant — on
-    a real lake table the branch is dead code. ``SPARK_GRAFT_FAN_OUT=0``
-    disables it globally (A/B measurement + emergency off-switch).
+    to feed the cores. Derived from input size (``_scan_bytes``), never
+    a constant — on a real lake table the branch is dead code. A
+    ``path`` that ``df`` does not scan leaves ``df`` as it is.
+    ``SPARK_GRAFT_FAN_OUT=0`` disables it globally (A/B measurement +
+    emergency off-switch).
 
     ``cols``: when the consumer's shuffles are all keyed by a prefix
     of these columns (e.g. per-doc aggregate chains keyed doc_id),
@@ -75,16 +102,8 @@ def _fan_out_scan(
     substrate)."""
     if os.environ.get("SPARK_GRAFT_FAN_OUT", "1") == "0":
         return df
-    try:
-        if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-            )
-        else:
-            size = os.path.getsize(path)
-    except OSError:
+    size = _scan_bytes(df, path)
+    if size is None:
         return df
     try:
         max_pb = _size_to_bytes(
@@ -103,7 +122,7 @@ def _fan_out_scan(
 
 def barrier_width(df: DataFrame) -> int:
     """Partition width for explicit keyed repartition barriers
-    (CollapseProject barriers in the dedup/LSH/winnowing families):
+    (parallelism barriers in the dedup/LSH/winnowing families):
     max(defaultParallelism, spark.sql.shuffle.partitions), never a
     constant, so a session that sizes shuffle.partitions for its data
     volume sizes these barriers with it."""
@@ -113,6 +132,25 @@ def barrier_width(df: DataFrame) -> int:
     except (ValueError, TypeError):
         sp = 200
     return max(sess.sparkContext.defaultParallelism, sp)
+
+
+def sort_bounded(df: DataFrame, *cols) -> DataFrame:
+    """``orderBy(*cols)`` for a result whose rows are bounded whatever
+    the input size. A global sort over N partitions plans an
+    ``Exchange rangepartitioning``, which costs two jobs on the way
+    out: the RangePartitioner's sampling job and the range shuffle's
+    map job. One partition already satisfies the sort's ordering
+    requirement, so ``coalesce(1)`` first leaves a plain global
+    ``Sort`` and neither job.
+
+    Scale contract: ``coalesce(1)`` moves everything after the last
+    exchange into ONE task. Only results whose rows entering that last
+    stage are bounded independent of input size qualify — a final
+    aggregate over a bounded key domain, or a rank-filtered top-k
+    (Spark limits each partition to k rows per key below the window's
+    exchange). Each call site states its bound in a ``# bound:``
+    comment; corpus-scaled outputs keep ``orderBy``."""
+    return df.coalesce(1).orderBy(*cols)
 
 
 # (session token, table path, nanosAsLong conf) -> the table's raw file

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import load, sort_bounded
 from project_orbit_spark.registry import register
 
 
@@ -209,7 +209,7 @@ def dashboard_report_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars")
     )
-    return agg.select(
+    report = agg.select(
         "lang",
         F.concat(F.lit("## "), F.upper("source")).alias("section_header"),
         F.concat(
@@ -220,4 +220,7 @@ def dashboard_report_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("section_body"),
         "n_docs",
         "total_chars",
-    ).orderBy("lang", "section_header")
+    )
+    # bound: one row per (lang, source) group — the language and
+    # connector domains, not the corpus
+    return sort_bounded(report, "lang", "section_header")

@@ -934,22 +934,6 @@ def doc_segments(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
     )
 
 
-def boilerplate_hashes(
-    d: DataFrame, seg_w: int = _SEG_W, bp_df: int = _BP_DF
-) -> DataFrame:
-    """The corpus's boilerplate set (seg_hash, is_bp): segments whose
-    document frequency is >= ``bp_df``. Bounded by corpus redundancy;
-    at 100 TB this is the persisted scrub artifact the incremental
-    face probes (warm_curation_artifacts)."""
-    return (
-        doc_segments(d, seg_w)
-        .groupBy("seg_hash")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= bp_df)
-        .select("seg_hash", F.lit(True).alias("is_bp"))
-    )
-
-
 def apply_boilerplate_scrub(
     segs: DataFrame, bp: DataFrame, ordered: bool = True
 ) -> DataFrame:

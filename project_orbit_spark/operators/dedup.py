@@ -79,24 +79,6 @@ def word_shingles(text_col: str | Column, n: int = 3) -> Column:
     )
 
 
-def lsh_band_keys(sig: Column, bands: int, rows: int) -> Column:
-    """Band the signature for LSH: band key = md5 of the band index +
-    its signature rows. Two docs collide in a band iff that band's
-    rows match exactly — the classic b×r tradeoff. Returns
-    array<struct<band_idx int, band_key string>>."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.cast("int").alias("band_idx"),
-            F.md5(
-                F.concat_ws(
-                    "#", b.cast("string"), F.concat_ws("", F.slice(sig, b * rows + 1, rows))
-                )
-            ).alias("band_key"),
-        ),
-    )
-
-
 def minhash_signature(shingles: Column, k: int = 16) -> Column:
     """MinHash over a string hash family that is portable across
     engines: h_i(s) = md5(i || '|' || s), minimum taken in lexicographic
@@ -145,9 +127,12 @@ assert MINHASH_SIG_K <= len(MINHASH_PAIRS)
 
 
 def shingle_hashes(shingles: Column) -> Column:
-    """One 32-bit md5-prefix integer per shingle (array<long>).
-    Materialize behind a barrier before fanning out to the k affine
-    hashes, or CollapseProject re-inlines the md5 k times."""
+    """One 32-bit md5-prefix integer per shingle (array<long>). Select
+    it in a projection of its own: CollapseProject does not merge a
+    non-cheap expression into k lambdas that read it, so the k affine
+    hashes share one md5 per shingle, barrier or not (pinned in
+    tests/test_plans.py). Composed into one projection, the md5 is
+    inlined k times."""
     return F.transform(
         shingles,
         lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
@@ -595,11 +580,12 @@ def _banded_signatures(
     hash-once md5-prefix ints → k affine MinHash rows → ``bands``
     bands of ``rows`` (defaults = the tuned MINHASH_* geometry; the
     knob probe passes explicit values to measure alternatives on the
-    REAL code path). The two repartitions are shuffle barriers that
-    keep CollapseProject from re-inlining the heavy shingle/hash
-    projections into every downstream lambda (measured 72s → 8s at
-    sf0.1) and let their parallelism follow shuffle partitioning
-    instead of scan splits."""
+    REAL code path). The two repartitions are parallelism barriers:
+    the fixture scan is one row group, so without them shingling and
+    the k affine hashes run in one task; with them they follow shuffle
+    partitioning instead of scan splits. They are not what keeps the
+    md5 from re-inlining into the k hash lambdas — the optimizer keeps
+    one md5 per shingle without them (pinned in tests/test_plans.py)."""
     hashed = corpus.repartition(barrier_width(corpus), "doc_id").select(
         "doc_id", shingle_hashes(word_shingles("text", 3)).alias("hs")
     )
@@ -729,7 +715,6 @@ def minhash_pairs(
     _MINHASH_PAIRS_BODY). Geometry params exist for the knob probe
     (tools/minhash_knob_probe.py) — every production consumer uses
     the tuned defaults."""
-    # barrier rationale (72s → 8s CollapseProject fix): _banded_signatures
     banded = _banded_signatures(corpus, k=k, bands=bands, rows=rows)
 
     a = banded.select(
@@ -744,22 +729,26 @@ def minhash_pairs(
         "band_idx",
         "band_sig",
     )
-    cand = (
-        a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id", "sig_a", "sig_b")
-        .dropDuplicates(["left_id", "right_id"])
-    )
     matches = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         F.lit(0),
         lambda s, v: s + v,
     )
-    return cand.select(
-        "left_id",
-        "right_id",
-        F.round(matches.cast("double") / float(k), 4).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= 0.5)
+    # a pair colliding in several bands repeats with the same
+    # signatures, so its estimate is a function of (left_id, right_id):
+    # score and filter each candidate row, then dedup the fixed-width
+    # triples — the dedup shuffle never carries the signature arrays
+    return (
+        a.join(b, ["band_idx", "band_sig"])
+        .filter(F.col("left_id") < F.col("right_id"))
+        .select(
+            "left_id",
+            "right_id",
+            F.round(matches.cast("double") / float(k), 4).alias("est_jaccard"),
+        )
+        .filter(F.col("est_jaccard") >= 0.5)
+        .distinct()
+    )
 
 
 # (session token, sf_dir) -> persisted near-dup PAIR graph over the
@@ -1095,31 +1084,27 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(near)
 
 
-def simhash_bits(corpus: DataFrame, *, n_words: int) -> DataFrame:
-    """(doc_id, lang, text) → (doc_id, lang, bits array<int> of length
-    32·n_words): the simhash fingerprint derivation shared by the pair
-    builder and the banding-losslessness property test."""
+def simhash_word_hashes(n_words: int) -> list[Column]:
+    """Per-token 32-bit word hashes of ``text`` (md5 hex slices →
+    decimal), one ``th{w}`` array<double> column per word: each token
+    is md5'd once per word."""
     toks = F.array_distinct(F.split(F.trim(F.lower("text")), r"\s+"))
-    # per-token 32-bit word hashes (md5 hex slices → decimal) computed
-    # ONCE; the repartition is a CollapseProject barrier — without it
-    # the md5+conv expression re-inlines into all n_bits bit-vote
-    # lambdas (n_bits× the hash work, same hazard as the MinHash path)
+
     # NB: the per-word lambda must be built by a factory taking the hex
     # offset — a default-arg lambda (t, off=...) would be treated by
     # F.transform as its two-parameter (element, index) form
     def word_hash(off: int):
         return lambda t: F.conv(F.substring(F.md5(t), 1 + off, 8), 16, 10).cast("double")
 
-    word_cols = [
-        F.transform(toks, word_hash(8 * w)).alias(f"th{w}") for w in range(n_words)
-    ]
-    hashed = corpus.select("doc_id", "lang", *word_cols).repartition(
-        barrier_width(corpus), "doc_id"
-    )
+    return [F.transform(toks, word_hash(8 * w)).alias(f"th{w}") for w in range(n_words)]
 
-    # bit i of simhash: majority vote of bit i across token hashes.
-    # bit(i) via floor(h / 2^i) % 2 — the shift builtins require a
-    # literal shift amount, and 2^i stays exact in float64 for i < 53
+
+def simhash_vote_bits(n_words: int) -> Column:
+    """bits array<int> of length 32·n_words over the ``th{w}`` columns:
+    bit i of a word is the majority vote of bit i across token hashes,
+    read as floor(h / 2^i) % 2 — the shift builtins require a literal
+    shift amount, and 2^i stays exact in float64 for i < 53."""
+
     def word_votes(word: str) -> Column:
         return F.transform(
             F.sequence(F.lit(0), F.lit(31)),
@@ -1142,10 +1127,23 @@ def simhash_bits(corpus: DataFrame, *, n_words: int) -> DataFrame:
             .cast("int"),
         )
 
-    bits = word_votes("th0") if n_words == 1 else F.concat(
-        *[word_votes(f"th{w}") for w in range(n_words)]
+    if n_words == 1:
+        return word_votes("th0")
+    return F.concat(*[word_votes(f"th{w}") for w in range(n_words)])
+
+
+def simhash_bits(corpus: DataFrame, *, n_words: int) -> DataFrame:
+    """(doc_id, lang, text) → (doc_id, lang, bits array<int> of length
+    32·n_words): the simhash fingerprint derivation shared by the pair
+    builder and the banding-losslessness property test. The optimizer
+    keeps one md5 per token and word with or without the repartition
+    (pinned in tests/test_plans.py); the repartition is there for
+    parallelism — the fixture scan is one row group, so without it the
+    n_bits vote filters run in one task."""
+    hashed = corpus.select("doc_id", "lang", *simhash_word_hashes(n_words)).repartition(
+        barrier_width(corpus), "doc_id"
     )
-    return hashed.select("doc_id", "lang", bits.alias("bits"))
+    return hashed.select("doc_id", "lang", simhash_vote_bits(n_words).alias("bits"))
 
 
 def _packed_banded(
@@ -1270,24 +1268,18 @@ def _simhash_pairs(
         "band_val",
         *[F.col(f"w{w}").alias(f"wb{w}") for w in range(n_words)],
     )
-    cand = (
-        a.join(b, ["lang", "band_idx", "band_val"])
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select(
-            "left_id",
-            "right_id",
-            *[f"wa{w}" for w in range(n_words)],
-            *[f"wb{w}" for w in range(n_words)],
-        )
-        .dropDuplicates(["left_id", "right_id"])
-    )
     hamming = sum(
         F.bit_count(F.col(f"wa{w}").bitwiseXOR(F.col(f"wb{w}")))
         for w in range(n_words)
     )
+    # hamming is a function of (left_id, right_id): score and filter
+    # each band collision, then dedup the fixed-width triples
     return (
-        cand.select("left_id", "right_id", hamming.cast("long").alias("hamming"))
+        a.join(b, ["lang", "band_idx", "band_val"])
+        .filter(F.col("left_id") < F.col("right_id"))
+        .select("left_id", "right_id", hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
+        .distinct()
         .orderBy("left_id", "right_id")
     )
 

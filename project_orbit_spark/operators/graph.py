@@ -85,9 +85,17 @@ def connected_components(
     )
     # materialized once: every round joins against it, and without the
     # checkpoint each round would re-execute the upstream lineage that
-    # produced the pairs (e.g. the MinHash pipeline)
+    # produced the pairs (e.g. the MinHash pipeline). One explode emits
+    # both directions, so that lineage is read once, not once per side.
+    both = F.explode(
+        F.array(
+            F.struct("src", "dst"),
+            F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        )
+    ).alias("e")
     sym = (
-        half.union(half.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        half.select(both)
+        .select("e.src", "e.dst")
         .distinct()
         .localCheckpoint(eager=True)
     )

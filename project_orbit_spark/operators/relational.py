@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load, maybe_broadcast
+from project_orbit_spark.catalog import load, maybe_broadcast, sort_bounded
 from project_orbit_spark.registry import register
 
 
@@ -50,7 +50,7 @@ from project_orbit_spark.registry import register
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    agg = (
         li.filter(F.col("l_shipdate") <= F.lit("2000-12-01 00:00:00").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -66,8 +66,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.round(F.sum("l_discount"), 4) / F.count(F.lit(1)), 6).alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
+    # bound: one row per (returnflag, linestatus) group, ≤ 6
+    return sort_bounded(agg, "l_returnflag", "l_linestatus")
 
 
 @register(
@@ -155,7 +156,7 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims = F.broadcast(r.join(n, n.n_regionkey == r.r_regionkey).join(
         c, F.col("c_nationkey") == F.col("n_nationkey")
     ))
-    return (
+    agg = (
         dims.join(o, F.col("o_custkey") == F.col("c_custkey"))
         .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("n_name")
@@ -165,8 +166,9 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.count(F.lit(1)).alias("n_lineitems"),
         )
-        .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
+    # bound: one row per nation of the two regions (nation dim)
+    return sort_bounded(agg, F.desc("revenue"), F.asc("n_name"))
 
 
 @register(
@@ -821,7 +823,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast; past it, AQE decides from the runtime size. The probe
     # (filtered part dim) upper-bounds the agg's one-row-per-partkey
     # output without executing the aggregate twice.
-    return (
+    agg = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(maybe_broadcast(part_avg, 1_000_000, probe=pkeys), "l_partkey")
         .filter(F.col("l_quantity") < F.col("qty_cut"))
@@ -829,8 +831,9 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum(cents).cast("double") / 700.0, 2).alias("avg_yearly_revenue")
         )
-        .orderBy("p_brand")
     )
+    # bound: the 5 brands of the part filter
+    return sort_bounded(agg, "p_brand")
 
 
 @register(
@@ -900,7 +903,7 @@ def q7_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_extendedprice") * 100, 0).cast("long")
         * F.round((1 - F.col("l_discount")) * 100, 0).cast("long")
     )
-    return (
+    agg = (
         li.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .filter(
@@ -915,8 +918,9 @@ def q7_nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum(v4).cast("double") / 10000.0, 2).alias("revenue")
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
+    # bound: 2 nation pairs × the 2 ship years of the filter, ≤ 4 rows
+    return sort_bounded(agg, "supp_nation", "cust_nation", "l_year")
 
 
 @register(
@@ -1009,15 +1013,11 @@ def q8_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = F.sum(
         F.when(F.col("supp_nation") == "NATION_6", F.col("v4")).otherwise(F.lit(0))
     )
-    return (
-        vol.groupBy("o_year")
-        .agg(
-            F.round(
-                num.cast("double") / F.sum("v4").cast("double"), 6
-            ).alias("mkt_share")
-        )
-        .orderBy("o_year")
+    share = vol.groupBy("o_year").agg(
+        F.round(num.cast("double") / F.sum("v4").cast("double"), 6).alias("mkt_share")
     )
+    # bound: the 2 order years of the filter
+    return sort_bounded(share, "o_year")
 
 
 @register(
@@ -1183,14 +1183,15 @@ def q9_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.col("l_quantity").cast("long")
         * F.lit(100).cast("long")
     )
-    return (
+    agg = (
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .join(F.broadcast(sn), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("nation", "o_year")
         .agg((F.sum(profit4).cast("double") / 10000.0).alias("profit"))
-        .orderBy("nation", F.desc("o_year"))
     )
+    # bound: nations (nation dim) × order years (calendar), not facts
+    return sort_bounded(agg, "nation", F.desc("o_year"))
 
 
 @register(
@@ -1309,12 +1310,13 @@ def q12_delay_bucket_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(lag < 30, "fast").when(lag <= 60, "normal").otherwise("late")
     )
     is_crit = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
+    agg = (
         li.join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy(bucket.alias("delay_bucket"))
         .agg(
             F.sum(F.when(is_crit, 1).otherwise(0)).alias("critical_lines"),
             F.sum(F.when(is_crit, 0).otherwise(1)).alias("other_lines"),
         )
-        .orderBy("delay_bucket")
     )
+    # bound: 3 delay buckets
+    return sort_bounded(agg, "delay_bucket")

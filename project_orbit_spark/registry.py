@@ -229,6 +229,23 @@ _DRIVER_PRIORITY_CHANGED: dict[str, int] = {
     "semantic_dedup_semdedup": 19,
     # company_verified is 0, not NULL, when nothing is retrieved
     "rag_dashboard_gold": 19,
+    # bounded output sorts in one partition (catalog.sort_bounded);
+    # the minhash pair stage dedups fixed-width (l, r, score) triples
+    "q1_pricing_summary": 19,
+    "dashboard_report_table": 19,
+    "cosine_topk_exact": 19,
+    "ann_ivf_topk": 19,
+    "ann_ivf_topk_warm": 19,
+    "ann_ivf_pq_topk": 19,
+    "ann_ivf_pq_topk_warm": 19,
+    "q5_revenue_by_nation": 19,
+    "q7_nation_pair_volume": 19,
+    "q8_nation_market_share": 19,
+    "q9_nation_profit": 19,
+    "q12_delay_bucket_priority": 19,
+    "q17_small_quantity_revenue": 19,
+    "ann_ivf_nprobe2": 19,
+    "minhash_lsh_near_dups": 19,
 }
 
 

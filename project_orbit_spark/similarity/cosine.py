@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import load, sort_bounded
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import cache_token, register_df_cache
 
@@ -167,11 +167,11 @@ def cosine_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), F.col("emb").alias("qe"))
     c = e.select(F.col("vec_id").alias("cid"), F.col("emb").alias("ce"))
-    return (
-        brute_force_topk(q, c, k=5)
-        .select("qid", "cid", F.round("score", 6).alias("score"), "rank")
-        .orderBy("qid", "rank")
+    top = brute_force_topk(q, c, k=5).select(
+        "qid", "cid", F.round("score", 6).alias("score"), "rank"
     )
+    # bound: rank-filtered top-k, 5 queries × k=5
+    return sort_bounded(top, "qid", "rank")
 
 
 # Fail-fast bound for the exact face (VERDICT r14 ask #3): the
@@ -458,12 +458,13 @@ def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> D
         "qid", "bucket", F.col("vec_id").alias("cid"), cosine(F.col("qe"), F.col("tvec")).alias("score")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    return (
+    top = (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
         .select("qid", "bucket", "cid", F.round("score", 6).alias("score"), "rank")
-        .orderBy("qid", "rank")
     )
+    # bound: rank-filtered top-k, 5 queries × k=5
+    return sort_bounded(top, "qid", "rank")
 
 
 @register(
@@ -558,12 +559,13 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qid", "bucket", F.col("vec_id").alias("cid"), cosine(F.col("qe"), F.col("emb")).alias("score")
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
-    return (
+    top = (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= 5)
         .select("qid", "bucket", "cid", F.round("score", 6).alias("score"), "rank")
-        .orderBy("qid", "rank")
     )
+    # bound: rank-filtered top-k, 5 queries × k=5
+    return sort_bounded(top, "qid", "rank")
 
 
 @register(
@@ -694,21 +696,6 @@ def _pq_chosen(codebook: DataFrame):
         ),
     )
     return pack, chosen
-
-
-def pq_codes(e: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(vec_id, s, code): each vector's nearest codeword id per
-    subspace (euclidean, code_label tie-break). THIS is the stored
-    index artifact at 100 TB — _PQ_M small ints per vector instead of
-    the raw floats (64 dims × float32 → 4 bytes of codes: 64×
-    compression) — computed map-side under the broadcast codebook
-    (see _pq_chosen: zero shuffles in the encode since r17)."""
-    pack, chosen = _pq_chosen(codebook)
-    return (
-        e.crossJoin(F.broadcast(pack))
-        .select("vec_id", F.posexplode(chosen).alias("s", "ch"))
-        .select("vec_id", F.col("s").cast("int").alias("s"), F.col("ch.code").alias("code"))
-    )
 
 
 def pq_reconstructions(e: DataFrame, codebook: DataFrame | None = None, codes: DataFrame | None = None) -> DataFrame:

@@ -360,12 +360,6 @@ def bm25_scored(per_doc: DataFrame) -> DataFrame:
     )
 
 
-def bm25_topk(docs: DataFrame, terms: list[str], k: int = 20) -> DataFrame:
-    """BM25 keyword retrieval: scored postings → TakeOrdered top-k
-    (orderBy+limit — no single-partition window)."""
-    return bm25_scored(_tokenized_docs(docs, terms)).orderBy(F.desc("bm25"), "doc_id").limit(k)
-
-
 def _bm25_scored_cached(spark: SparkSession, sf_dir: str, terms: list[str]) -> DataFrame:
     """Scored postings over the session-cached tokenization — shared by
     bm25_keyword_topk and hybrid_rrf_topk so the two queries score the

@@ -111,3 +111,37 @@ def test_fixture_doc_ids_stay_below_inject_offset():
             "the id-range oracles in operators/dedup.py are no longer "
             "sound for this fixture"
         )
+
+
+def test_every_bounded_sort_states_its_bound():
+    """catalog.sort_bounded moves the last stage into one task, so each
+    call site must say why its rows are bounded: a ``# bound:`` comment
+    in the comment block right above the call."""
+    missing = []
+    for p in _py_sources():
+        lines = p.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "sort_bounded(" not in line or line.lstrip().startswith(("def ", "#")):
+                continue
+            j = i - 1
+            block = []
+            while j >= 0 and lines[j].lstrip().startswith("#"):
+                block.append(lines[j])
+                j -= 1
+            if not any("# bound:" in c for c in block):
+                missing.append(f"{p.relative_to(PKG)}:{i + 1}")
+    assert not missing, (
+        f"sort_bounded calls without a '# bound:' comment: {missing}"
+    )
+
+
+def test_single_partition_only_through_sort_bounded():
+    """``coalesce(1)`` funnels a stage into one task; the operator
+    surface reaches it only through catalog.sort_bounded, whose call
+    sites state their bound."""
+    hits = []
+    for p in _py_sources():
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if re.search(r"\.coalesce\(\s*1\s*\)", line):
+                hits.append(f"{p.relative_to(PKG)}:{i}")
+    assert len(hits) == 1 and hits[0].startswith("catalog.py:"), hits

@@ -5,6 +5,7 @@ pin the job counts of the paths that were cut, not their timings."""
 import time
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -104,10 +105,30 @@ def test_second_load_of_a_table_runs_no_job(spark, tmp_path):
 
 def test_q1_after_a_warm_load_job_budget(spark):
     """With lineitem's schema resolved, q1 (build plus collect) runs
-    only its own aggregation jobs, no inference job."""
+    only its aggregation's map job and the final stage: no inference
+    job, and its 6-group sort plans no range-sampling or range-shuffle
+    job (4 with them)."""
     from project_orbit_spark.catalog import load
     from project_orbit_spark.operators.relational import q1_pricing_summary
 
     load(spark, SF_DIR, "lineitem")
     n = jobs_of(spark, lambda: q1_pricing_summary(spark, SF_DIR).toPandas())
-    assert 0 < n <= 4, n
+    assert 0 < n <= 2, n
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [("ann_ivf_topk_warm", 5), ("cosine_topk_exact", 4), ("dashboard_report_table", 2)],
+)
+def test_bounded_sort_request_job_budget(spark, name, budget):
+    """A warm serving request (its prepare hook run and the query
+    served once) sorts its bounded result in one partition: two jobs
+    fewer than a range-partitioned sort (7, 6 and 4 with it)."""
+    from project_orbit_spark import registry
+
+    q = registry.get_query(name)
+    if q.prepare is not None:
+        q.prepare(spark, SF_DIR)
+    q.fn(spark, SF_DIR).toPandas()
+    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    assert 0 < n <= budget, n

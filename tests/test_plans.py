@@ -1123,3 +1123,95 @@ def test_simhash_banded_rows_are_packed_before_the_barrier(spark):
             "array-valued signature derivation regressed upstream of "
             "the checkpoint barrier"
         )
+
+
+# Registered faces whose output sort is catalog.sort_bounded: a final
+# aggregate over a bounded key domain or a rank-filtered top-k.
+SORT_BOUNDED_FACES = (
+    "q1_pricing_summary",
+    "q5_revenue_by_nation",
+    "q7_nation_pair_volume",
+    "q8_nation_market_share",
+    "q9_nation_profit",
+    "q12_delay_bucket_priority",
+    "q17_small_quantity_revenue",
+    "dashboard_report_table",
+    "cosine_topk_exact",
+    "ann_ivf_topk",
+    "ann_ivf_topk_warm",
+    "ann_ivf_pq_topk",
+    "ann_ivf_pq_topk_warm",
+    "ann_ivf_nprobe2",
+)
+
+
+def _under_coalesce_one(simple: str) -> list[tuple[str, str]]:
+    """(node name, plan line) of each operator below ``Coalesce 1``
+    down to the first exchange, Projects skipped."""
+    lines = [ln.lstrip(" :+-*()0123456789") for ln in simple.splitlines()]
+    start = next(i for i, ln in enumerate(lines) if ln.startswith("Coalesce 1"))
+    below = []
+    for ln in lines[start + 1 :]:
+        name = ln.split(" ")[0].split("(")[0]
+        if name == "Exchange":
+            break
+        if name != "Project":
+            below.append((name, ln))
+    return below
+
+
+@pytest.mark.parametrize("name", SORT_BOUNDED_FACES)
+def test_bounded_sort_is_one_partition_over_a_bounded_stage(spark, name):
+    # sort_bounded plans no range exchange (no sampling job, no range
+    # map job), and what coalesce(1) pulls into the one final task is
+    # a final aggregate or a rank filter over the last exchange
+    from project_orbit_spark.plans.audit import simple_plan
+
+    q = registry.get_query(name)
+    if q.prepare is not None:
+        q.prepare(spark, SF_DIR)
+    simple = simple_plan(q.fn(spark, SF_DIR))
+    assert "rangepartitioning" not in simple, name
+    below = _under_coalesce_one(simple)
+    names = [n for n, _ in below]
+    final_agg = names[0] == "HashAggregate" and "partial_" not in below[0][1]
+    rank_filter = names[:2] == ["Filter", "Window"]
+    assert final_agg or rank_filter, (name, names)
+
+
+def test_corpus_scaled_sort_keeps_its_range_exchange(spark):
+    # risk_lexicon_scan returns one row per matching document: its
+    # output grows with the corpus, so it keeps the distributed sort
+    f = facts("risk_lexicon_scan", spark)
+    assert "rangepartitioning" in f.text
+    assert "Coalesce 1" not in f.text
+
+
+def test_signature_hashes_md5_once_without_barriers(spark):
+    # With the barrier repartitions taken out, the optimizer keeps one
+    # md5 per shingle (minhash) and one per token and word (2-word
+    # simhash): CollapseProject does not merge the hash projection
+    # into the lambdas that read it. The barriers in
+    # _banded_signatures and simhash_bits are for parallelism on a
+    # one-row-group scan, not for this
+    from project_orbit_spark.catalog import load
+    from project_orbit_spark.operators.dedup import (
+        minhash_signature_int,
+        shingle_hashes,
+        simhash_vote_bits,
+        simhash_word_hashes,
+        word_shingles,
+    )
+
+    from pyspark.sql import functions as F
+
+    d = load(spark, SF_DIR, "documents").select("doc_id", "lang", "text")
+    sig = d.select(
+        "doc_id", shingle_hashes(word_shingles("text", 3)).alias("hs")
+    ).select("doc_id", minhash_signature_int(F.col("hs")).alias("sig"))
+    bits = d.select("doc_id", "lang", *simhash_word_hashes(2)).select(
+        "doc_id", "lang", simhash_vote_bits(2).alias("bits")
+    )
+    for frame, want in ((sig, 1), (bits, 2)):
+        optimized = frame._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("md5(") == want, optimized.count("md5(")
