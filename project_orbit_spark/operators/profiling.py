@@ -52,10 +52,12 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
 def value_histogram(df: DataFrame, col: str, nbins: int = 20) -> DataFrame:
     """Equi-width histogram with data-driven bounds: bounds are a
     1-row broadcast, binning is pure arithmetic (portable — no
-    width_bucket), top bin closed so max lands in bin nbins-1."""
+    width_bucket), top bin closed so max lands in bin nbins-1. When
+    min = max the zero-width quotient is NULL, which ``least`` skips,
+    so every value lands in bin nbins-1 (DuckDB's 0/0 is NULL too)."""
     bounds = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi"))
     bucket = F.least(
-        F.floor((F.col(col) - F.col("lo")) * nbins / (F.col("hi") - F.col("lo"))),
+        F.floor(F.try_divide((F.col(col) - F.col("lo")) * nbins, F.col("hi") - F.col("lo"))),
         F.lit(nbins - 1),
     ).cast("long")
     return (

@@ -290,85 +290,74 @@ def context_snippets_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Lexical retrieval — BM25 over an inverted-index-shaped plan.
+# Lexical retrieval — BM25 scored off a precomputed impact index.
 
 BM25_K1 = 1.2
 BM25_B = 0.75
 _BM25_TERMS = ["vector", "stream", "merge", "window", "filter"]
 
 
-# (session id, sf_dir, terms) -> persisted narrow tokenization
-# projection. The corpus text is regex-tokenized exactly ONCE per
-# session; everything BM25 needs afterwards — per-doc length for
-# avgdl/n_docs AND the query-term postings — derives from this tiny
-# cached frame (doc_id, dl, qt[]), so the second consumer is an
-# InMemoryTableScan, not a second parquet scan + split (the round-2
-# double-tokenization finding).
-_TOKDOC_CACHE: dict[tuple[str, str, tuple[str, ...]], DataFrame] = register_df_cache({})
+# (session id, sf_dir) -> persisted BM25 impact index.
+_BM25_INDEX: dict[tuple[str, str], DataFrame] = register_df_cache({})
 
 
-def _tokenized_docs(docs: DataFrame, terms: list[str], cache_key=None) -> DataFrame:
-    """One scan + one regex split over the corpus, reduced immediately
-    to (doc_id, dl, qt) where qt keeps only query-term occurrences —
-    at 100 TB this cache is O(docs × query terms), not O(corpus text),
-    the same 'materialize the probe projection' move as
-    cosine.warm_centroids."""
-    if cache_key is not None and cache_key in _TOKDOC_CACHE:
-        return _TOKDOC_CACHE[cache_key]
-    t = F.split(F.trim(F.lower("text")), r"\s+")
-    per_doc = docs.select(
-        "doc_id",
-        F.size(t).alias("dl"),
-        F.filter(t, lambda x: x.isin(*terms)).alias("qt"),
-    )
-    if cache_key is not None:
-        per_doc = per_doc.persist()
-        _TOKDOC_CACHE[cache_key] = per_doc
-    return per_doc
+def _bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The query-independent BM25 impact index (Anh & Moffat, SIGIR
+    2006), one per (session, sf_dir): rows ``(doc_id, imp)`` where
+    ``imp[t]`` is term t's BM25 contribution to the document, with the
+    +1-inside-ln IDF so it stays positive for terms in over half the
+    corpus. Impacts depend only on the corpus, so a request adds up
+    stored numbers (``_bm25_scored_cached``) and plans no exchange.
 
+    Footprint: O(postings), one map entry per distinct (doc, term). At
+    100 TB the same rows are the index artifact written at ingest.
 
-def bm25_scored(per_doc: DataFrame) -> DataFrame:
-    """BM25 scoring (Robertson/Sparck Jones; the +1-inside-ln IDF so
-    scores stay positive even for terms in >half the corpus) over the
-    tokenized projection from _tokenized_docs.
-
-    Scale shape: the term filter sat BELOW the explode (array filter in
-    the projection), so only query-term postings ever shuffle — the
-    moral equivalent of probing an inverted index instead of scanning
-    it. Document frequencies and corpus stats are tiny aggregates
-    broadcast to the scoring join. Complements embedding retrieval
-    (cosine_topk_exact / ann_ivf_topk): the reference retrieves by
-    embedding only (src/rag_pipeline.py:45-75), but any production RAG
-    stack pairs it with lexical BM25 for hybrid recall.
+    ``df`` is a window and ``n_docs``/``avgdl`` are driver literals: a
+    BroadcastHashJoin inside a persisted plan keeps its hashed
+    relation's on-heap page (one ``spark.buffer.pageSize`` page) live
+    for as long as the cache lives.
     """
-    tf = (
-        per_doc.filter(F.size("qt") > 0)
-        .select("doc_id", "dl", F.explode("qt").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = per_doc.agg(F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-    contrib = idf * F.col("tf") * (BM25_K1 + 1) / denom
-    return (
-        tf.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("bm25"))
-    )
+    from project_orbit_spark.catalog import load
+
+    key = (cache_token(spark), sf_dir)
+    if key not in _BM25_INDEX:
+        t = F.split(F.trim(F.lower("text")), r"\s+")
+        docs = load(spark, sf_dir, "documents")
+        toks = docs.select("doc_id", F.size(t).alias("dl"), t.alias("t"))
+        n_docs, avgdl = toks.agg(F.count(F.lit(1)), F.avg("dl")).first()
+        tf = (
+            toks.select("doc_id", "dl", F.explode("t").alias("term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.count(F.lit(1)).alias("tf"))
+        )
+        idf = F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+        denom = F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
+        imp = idf * F.col("tf") * (BM25_K1 + 1) / denom
+        _BM25_INDEX[key] = (
+            tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+            .select("doc_id", F.struct("term", imp.alias("imp")).alias("e"))
+            .groupBy("doc_id")
+            .agg(F.map_from_entries(F.collect_list("e")).alias("imp"))
+            .persist()
+        )
+    return _BM25_INDEX[key]
 
 
 def _bm25_scored_cached(spark: SparkSession, sf_dir: str, terms: list[str]) -> DataFrame:
-    """Scored postings over the session-cached tokenization — shared by
-    bm25_keyword_topk and hybrid_rrf_topk so the two queries score the
-    corpus from one materialized scan."""
-    from project_orbit_spark.catalog import load
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    return bm25_scored(
-        _tokenized_docs(docs, terms, cache_key=(cache_token(spark), sf_dir, tuple(terms)))
+    """``(doc_id, bm25)`` for every document holding a query term,
+    scored map-only off the impact index: the sum of the stored impacts
+    of the query terms present, rounded to 4 places. Shared by the BM25,
+    hybrid and rerank queries. Complements embedding retrieval
+    (cosine_topk_exact / ann_ivf_topk): the reference retrieves by
+    embedding only (src/rag_pipeline.py:45-75), but a production RAG
+    stack pairs it with lexical BM25 for hybrid recall."""
+    hits = F.filter(F.array(*[F.col("imp")[t] for t in terms]), lambda x: x.isNotNull())
+    bm25 = F.round(F.aggregate("hits", F.lit(0.0), lambda acc, x: acc + x), 4)
+    return (
+        _bm25_index(spark, sf_dir)
+        .select("doc_id", hits.alias("hits"))
+        .filter(F.size("hits") > 0)
+        .select("doc_id", bm25.alias("bm25"))
     )
 
 
@@ -408,9 +397,9 @@ _BM25_SCORED_CTE = f"""toks AS (
     "bm25_keyword_topk",
     tags=("retrieval", "text"),
     doc="BM25 lexical top-20 over documents for a fixed 5-term query "
-    "(k1=1.2, b=0.75, ln((N-df+0.5)/(df+0.5)+1) IDF). Inverted-index "
-    "plan shape: postings filtered to query terms before any shuffle; "
-    "df/corpus stats broadcast; TakeOrdered top-k.",
+    "(k1=1.2, b=0.75, ln((N-df+0.5)/(df+0.5)+1) IDF), scored off the "
+    "session's precomputed impact index: a request sums the stored "
+    "per-term impacts map-only, then a TakeOrdered top-k.",
     oracle=f"""
         WITH {_BM25_SCORED_CTE}
         SELECT doc_id, bm25 FROM scored
@@ -441,7 +430,8 @@ _HYBRID_DEPTH = 50
     "vec_id 0's embedding; fixture aligns vec_id 1:1 with doc_id) "
     "fused by reciprocal-rank fusion (k=60, Cormack/Clarke/Buettcher "
     "SIGIR'09), top-20 by fused score. Each candidate list is a "
-    "distributed TakeOrdered; ranks are assigned on the 50-row "
+    "distributed TakeOrdered (BM25 over the cached impact index); "
+    "ranks are assigned on the 50-row "
     "results (bounded by construction), so no global window ever "
     "sees the corpus. Ranks sort on round(score,6)/round(bm25,4) so "
     "both engines rank identical values.",
@@ -537,7 +527,7 @@ _RERANK_DEPTH = 50
     doc="Cross-encoder rerank stage over the BM25 candidate list "
     "(the standard two-stage retrieval stack the reference's "
     "single-stage vector search lacks, ref src/rag_pipeline.py:45-75): "
-    "first-stage BM25 top-50 from the shared cached postings, then a "
+    "first-stage BM25 top-50 from the shared impact index, then a "
     "pairwise (query, doc-text) scorer over just those 50 candidates, "
     "final top-10 by rerank score. The scorer is the deterministic "
     "md5-byte provider face (same duality as E1/E5: a real "

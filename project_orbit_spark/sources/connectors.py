@@ -533,6 +533,8 @@ def compact_parquet(
         return sum(1 for f in glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True))
 
     before = _count_files(path)
+    if before == 0 and os.path.isdir(path):  # an empty log: no schema to infer
+        return 0, 0
     df = spark.read.parquet(path)
     writer = df.repartition(F.col(partition_col)).write.mode("overwrite")
     if max_records_per_file is not None:

@@ -335,7 +335,7 @@ def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_dir(spark, "partitioned")
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars", "lang", "source")
     write_partitioned(d, stage, partition_cols=["lang", "source"])
-    back = spark.read.parquet(stage)
+    back = spark.read.schema(d.schema).parquet(stage)
     return (
         back.groupBy("lang", "source")
         .agg(
@@ -375,7 +375,7 @@ def append_log_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     write_append_log(errs, stage)
     write_append_log(errs, stage)
-    back = spark.read.parquet(stage)
+    back = spark.read.schema(errs.schema).parquet(stage)
     return (
         back.groupBy("dt")
         .agg(
@@ -421,7 +421,7 @@ def compaction_log_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_append_log(errs, stage)
     write_append_log(errs, stage)
     compact_parquet(spark, stage, partition_col="dt")
-    back = spark.read.parquet(stage)
+    back = spark.read.schema(errs.schema).parquet(stage)
     return (
         back.groupBy("dt")
         .agg(
@@ -486,7 +486,7 @@ def merge_upsert_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_upsert_partitioned(
         spark, stage, updates.unionByName(inserts), key="doc_id", part_col="lang"
     )
-    back = spark.read.parquet(stage)
+    back = spark.read.schema(d.schema).parquet(stage)
     return back.select(
         "doc_id", F.col("lang").cast("string").alias("lang"), "n_chars"
     ).orderBy("doc_id")

@@ -132,3 +132,21 @@ def test_bounded_sort_request_job_budget(spark, name, budget):
     q.fn(spark, SF_DIR).toPandas()
     n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
     assert 0 < n <= budget, n
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [("hybrid_rrf_topk", 2), ("bm25_keyword_topk", 1), ("rerank_crossencoder_topk", 2)],
+)
+def test_bm25_request_job_budget(spark, name, budget):
+    """After a warm call a BM25 request sums stored impacts off the
+    session's impact index: no term-statistics shuffles or broadcasts.
+    Hybrid keeps its query-vector broadcast and rerank its candidate
+    broadcast (9, 8 and 9 jobs when each request recomputed tf, df and
+    the corpus stats)."""
+    from project_orbit_spark import registry
+
+    q = registry.get_query(name)
+    q.fn(spark, SF_DIR).toPandas()
+    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    assert 0 < n <= budget, n

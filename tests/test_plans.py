@@ -100,38 +100,72 @@ def test_tfidf_vocab_join_is_never_a_static_broadcast(spark):
         assert "term" not in m.group(1), "vocab join static-broadcast regressed"
 
 
-def test_bm25_is_pushed_down_broadcast_take_ordered(spark):
-    # postings must be filtered to query terms BEFORE any exchange
-    # (inverted-index probe, not corpus scan-and-shuffle); df/stats
-    # joins broadcast; final top-k is a distributed TakeOrdered
-    f = facts("bm25_keyword_topk", spark)
-    assert "TakeOrderedAndProject" in f.text
-    assert f.n_broadcast_joins >= 1
-    assert "SortMergeJoin" not in f.text
-    first_exchange = f.text.find("Exchange")
-    assert "IN (vector" in f.text[first_exchange:], "term filter must be below the shuffle"
+def _subtree(tree: list[str], i: int) -> list[str]:
+    """The lines of the plan-tree header under node line ``i``."""
+    depth = len(tree[i]) - len(tree[i].lstrip(" :+-"))
+    out = []
+    for line in tree[i + 1 :]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        out.append(line)
+    return out
 
 
-def test_bm25_and_hybrid_tokenize_the_corpus_once(spark):
-    # round-2 finding: the corpus was regex-split twice (postings +
-    # avgdl stats) and again by the hybrid query. Both consumers must
-    # now read the session-cached (doc_id, dl, qt) projection, so the
-    # formatted plan defines exactly ONE documents scan node (inside
-    # the InMemoryRelation) for bm25, plus the embeddings scan for
-    # hybrid — a second distinct scan node means someone re-tokenized
+@pytest.mark.parametrize(
+    "name", ["bm25_keyword_topk", "hybrid_rrf_topk", "rerank_crossencoder_topk"]
+)
+def test_bm25_request_is_map_only_over_the_cached_index(spark, name):
+    # a request sums stored impacts: the BM25 top-k reads the
+    # persisted impact index and plans no exchange of its own — every
+    # Exchange of the BM25 side sits inside the InMemoryRelation
+    f = facts(name, spark)
+    tree = f.text.split("\n\n", 1)[0].splitlines()
+    top = [
+        i
+        for i, line in enumerate(tree)
+        if "TakeOrderedAndProject" in line
+        and any("InMemoryTableScan" in sub for sub in _subtree(tree, i))
+    ][-1]  # the innermost: the BM25 top-k itself
+    above_cache = []
+    for line in _subtree(tree, top):
+        if "InMemoryRelation" in line:
+            break
+        above_cache.append(line)
+    assert not any("Exchange" in line for line in above_cache), (name, above_cache)
+
+
+@pytest.mark.parametrize("name", ["bm25_keyword_topk", "hybrid_rrf_topk"])
+def test_bm25_scans_the_corpus_once_inside_the_index(spark, name):
+    # the corpus text is read by the index build only: the formatted
+    # plan has exactly ONE documents scan node, inside the
+    # InMemoryRelation (the embeddings scan of hybrid is not counted)
     import re
 
-    for name in ("bm25_keyword_topk", "hybrid_rrf_topk"):
-        f = facts(name, spark)
-        assert "InMemoryTableScan" in f.text, name
-        # detail blocks: "(N) Scan parquet\n...Location: ...<table>.parquet..."
-        doc_scans = [
-            b
-            for b in re.split(r"^(?=\(\d+\) )", f.text, flags=re.M)
-            if b.startswith("(") and "Scan parquet" in b.split("\n", 1)[0]
-            and "documents.parquet" in b
-        ]
-        assert len(doc_scans) == 1, (name, len(doc_scans))
+    f = facts(name, spark)
+    tree = f.text.split("\n\n", 1)[0].splitlines()
+    doc_scans = [
+        b.split(")", 1)[0] + ")"
+        for b in re.split(r"^(?=\(\d+\) )", f.text, flags=re.M)
+        if b.startswith("(") and "Scan parquet" in b.split("\n", 1)[0]
+        and "documents.parquet" in b
+    ]
+    assert len(doc_scans) == 1, (name, doc_scans)
+    rel = next(i for i, line in enumerate(tree) if "InMemoryRelation" in line)
+    assert any(line.endswith(doc_scans[0]) for line in _subtree(tree, rel)), name
+
+
+def test_bm25_index_plan_holds_no_broadcast(spark):
+    # A BroadcastHashJoin inside a persisted plan keeps the hashed
+    # relation's on-heap page (one spark.buffer.pageSize page, up to
+    # 64 MiB) live for as long as the cache lives. The index takes
+    # df from a window and n_docs/avgdl as literals, so its plan must
+    # hold no broadcast at all.
+    from project_orbit_spark.plans.audit import formatted_plan
+    from project_orbit_spark.similarity.retrieval import _bm25_index
+
+    text = formatted_plan(_bm25_index(spark, SF_DIR))
+    assert "InMemoryRelation" in text
+    assert "Broadcast" not in text
 
 
 def test_bloom_prune_sits_below_the_join(spark):
