@@ -347,14 +347,16 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "projection) so pairing needs no per-doc window shuffle and the "
     "derived split() stays O(len) per document, not O(len^2) — the "
     "CollapseProject discipline from operators/dedup.py. Plan at "
-    "100 TB: three count tables (bigram, context, unigram) are hash "
-    "aggregates with map-side partials; in production they are "
-    "persisted vocabulary artifacts. The probe joins carry "
-    "shuffle_hash pins for the full-fit face (r16 burn-down: "
-    "corpus-growing text-valued builds are the compressible class "
-    "AQE misjudges — score_with_lm's pin_vocab note); the "
-    "incremental face, probing honest-stat persisted artifacts, "
-    "keeps batch-side broadcast. Docs with <2 tokens have no "
+    "100 TB: two count tables, both hash aggregates with map-side "
+    "partials — bigram counts c2 and unigram counts; the context "
+    "count c1(w1) = sum of c2 over w1 is exact in integers, so it is "
+    "a window over c2's w1 exchange and the corpus-sized bigram "
+    "stream is aggregated once. In production they are persisted vocabulary "
+    "artifacts. The probe joins carry shuffle_hash pins for the "
+    "full-fit face (corpus-growing text-valued builds are the "
+    "compressible class AQE misjudges — score_with_lm's pin_vocab "
+    "note); the incremental face, probing honest-stat persisted "
+    "artifacts, keeps batch-side broadcast. Docs with <2 tokens have no "
     "bigrams and drop out, identically in both engines. avg rounded "
     "4dp per the registry's float-summation convention.",
     oracle="""
@@ -405,10 +407,10 @@ def bigram_scores(
     with <2 tokens have no bigrams and drop out. ``ordered=False``
     skips the output-contract doc_id sort for pipeline consumers that
     checkpoint or re-aggregate the scores."""
-    c2, c1, freq = lm_count_tables(d)
+    c2, freq = lm_count_tables(d)
     if total is None:
         total = freq_total(freq)
-    return score_with_lm(doc_bigrams(d), c2, c1, freq, total, ordered=ordered)
+    return score_with_lm(doc_bigrams(d), c2, freq, total, ordered=ordered)
 
 
 def token_total() -> Column:
@@ -444,50 +446,56 @@ def doc_bigrams(d: DataFrame) -> DataFrame:
     )
 
 
-def lm_count_tables(d: DataFrame):
-    """The interpolated bigram LM's count tables fitted on corpus
-    ``d``: (c2, c1, freq). The LM's fourth parameter, the token
-    ``total``, is a Column the caller supplies (``token_total``,
-    ``freq_total``). At 100 TB these are the persisted vocabulary
-    artifacts the offline LM-fit job maintains; the incremental face
-    probes them instead of refitting (operators/corpus.py::warm_curation_artifacts)."""
+def lm_count_tables(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The interpolated bigram LM's two count tables fitted on corpus
+    ``d``: ``c2`` (w1, w2, c2, c1) and ``freq`` (token, cnt). The
+    context count c1(w1) = Σ_w2 c2(w1, w2) is exact in integers, so
+    it is a window over c2's w1 exchange — the corpus-sized bigram
+    stream is aggregated once, and no join attaches c1. The LM's
+    fourth parameter, the token ``total``, is a Column the caller
+    supplies (``token_total``, ``freq_total``). At 100 TB these are
+    the persisted vocabulary artifacts the offline LM-fit job
+    maintains; the incremental face probes them instead of refitting
+    (operators/corpus.py::warm_curation_artifacts)."""
     ts = F.split(F.trim(F.lower("text")), r"\s+")
-    big = doc_bigrams(d)
     tok = d.select("doc_id", F.explode(ts).alias("token"))
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
-    c2 = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
-    c1 = big.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    return c2, c1, freq
+    c2 = (
+        doc_bigrams(d)
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c2"))
+        .withColumn("c1", F.sum("c2").over(Window.partitionBy("w1")))
+    )
+    return c2, freq
 
 
 def score_with_lm(
     big: DataFrame,
     c2: DataFrame,
-    c1: DataFrame,
     freq: DataFrame,
     total: Column,
     pin_vocab: bool = True,
     ordered: bool = True,
 ) -> DataFrame:
-    """Score a (doc_id, w1, w2) bigram stream against LM count
-    tables → (doc_id, n_bigrams, avg_logprob). INNER joins: bigrams
-    the LM has never seen drop out of the average (when the stream
-    comes from the fitted corpus itself, every bigram is known and
-    this is exactly the full-fit scoring; the incremental face's
-    'score what the model knows' contract falls out of the same
+    """Score a (doc_id, w1, w2) bigram stream against the LM count
+    tables of ``lm_count_tables`` → (doc_id, n_bigrams, avg_logprob).
+    INNER joins: bigrams the LM has never seen drop out of the average
+    (when the stream comes from the fitted corpus itself, every bigram
+    is known and this is exactly the full-fit scoring; the incremental
+    face's 'score what the model knows' contract falls out of the same
     joins). ``total`` is the fitted corpus's token count as a double
     Column (a literal from a counted barrier, or ``freq_total``), so
     scoring plans no join for it.
 
-    ``pin_vocab``: the three count tables are corpus-derived,
+    ``pin_vocab``: the count tables are corpus-derived,
     corpus-GROWING, and token-string-valued — exactly the
     compressible-build class whose shuffle bytes AQE under-reads
     5-20x (docs/SCALE.md, the ngram_jaccard_pairs OOM mechanism), so
     a "fits" verdict at the stage boundary can still materialize a
     GB-plus driver HashedRelation. Full-fit callers
     (bigram_logprob_scores, ccnet_perplexity_bands, the curation
-    golds) keep the default True: the count tables get shuffle_hash
-    pins. The incremental face passes False: its count tables are
+    golds) keep the default True: both joins get shuffle_hash pins.
+    The incremental face passes False: its count tables are
     PERSISTED artifacts whose InMemoryRelation stats are exact
     materialized sizes (not guessed, not compressed — the
     self-correcting class), and its O(new) batch side is the
@@ -498,17 +506,14 @@ def score_with_lm(
     )
     if pin_vocab:
         # ONE scored-vocab table keyed (w1, w2): c2 is unique on
-        # (w1, w2), c1 on w1, freq on token, so the chain is
-        # row-preserving and big ⋈ vocab ≡ big ⋈ c2 ⋈ c1 ⋈ freq
+        # (w1, w2) and freq on token, so big ⋈ vocab ≡ big ⋈ c2 ⋈ freq
         # exactly — the corpus-sized occurrence stream crosses ONE
-        # exchange, the c2⋈c1⋈freq joins are vocab-sized. Every build
-        # side is the corpus-growing token-string-valued class AQE
-        # misjudges, so all three joins are shuffle_hash-pinned
+        # exchange, the c2 ⋈ freq join is vocab-sized. Both build
+        # sides are the corpus-growing token-string-valued class AQE
+        # misjudges, so both joins are shuffle_hash-pinned
         # (test_lm_vocab_joins_are_never_static_broadcasts).
-        vocab = (
-            c2.join(c1.hint("shuffle_hash"), "w1")
-            .join(freq.hint("shuffle_hash"), F.col("token") == F.col("w2"))
-            .select("w1", "w2", lp.alias("lp"))
+        vocab = c2.join(freq.hint("shuffle_hash"), F.col("token") == F.col("w2")).select(
+            "w1", "w2", lp.alias("lp")
         )
         scored = big.join(vocab.hint("shuffle_hash"), ["w1", "w2"]).select(
             "doc_id", "lp"
@@ -521,7 +526,6 @@ def score_with_lm(
         # probe-per-table chain stays.
         scored = (
             big.join(c2, ["w1", "w2"])
-            .join(c1, "w1")
             .join(freq, F.col("token") == F.col("w2"))
             .select("doc_id", lp.alias("lp"))
         )
@@ -549,14 +553,13 @@ def score_with_lm(
     "bigram_logprob_scores, whose plan this REUSES verbatim). Band "
     "cutoffs are score VALUES, not per-doc ranks: the distinct-score "
     "table is BOUNDED (scores are rounded to 4dp over a few-nats "
-    "range, so at most ~10^5 rows at ANY corpus size), its "
-    "cumulative count runs on that bounded table (the one "
-    "single-partition window in the plan — bounded by the score "
-    "domain, never by the corpus), and the two (c1, c2) cutoffs "
-    "broadcast back as one row so per-doc assignment is MAP-ONLY. "
-    "Ties at a cutoff all land in the higher band, exactly like "
-    "CCNet's value-quantile buckets; ceil arithmetic is integer "
-    "((n+2) div 3), so both engines cut at identical counts.",
+    "range, so at most ~10^5 rows at ANY corpus size); it is "
+    "collected and its cumulative count runs on the driver, and the "
+    "two (cut1, cut2) cutoffs come back as double literals, so "
+    "per-doc assignment is MAP-ONLY — no single-partition window, no "
+    "cross join. Ties at a cutoff all land in the higher band, "
+    "exactly like CCNet's value-quantile buckets; ceil arithmetic is "
+    "integer ((n+2) div 3), so both engines cut at identical counts.",
     oracle="""
         WITH base AS (
           SELECT doc_id,
@@ -639,45 +642,58 @@ def perplexity_bands(scores: DataFrame, n: int) -> DataFrame:
     (doc_id, avg_logprob) score table of ``n`` rows by VALUE cutoffs
     derived from the bounded distinct-score domain (see the
     register() doc)."""
-    return band_with_cutoffs(scores, band_cutoffs(scores, n))
-
-
-def band_cutoffs(scores: DataFrame, n: int) -> DataFrame:
-    """The 1-row (cut1, cut2) tercile cutoffs of a score table of ``n``
-    rows (a counted barrier's ``rows``) — the persisted banding
-    artifact the incremental face probes instead of re-deriving
-    (operators/corpus.py::warm_curation_artifacts)."""
-    dist = scores.groupBy("avg_logprob").agg(F.count(F.lit(1)).alias("cnt"))
-    # the ONLY single-partition window: over the bounded distinct-
-    # score table (4dp domain), never the corpus
-    w = Window.orderBy(F.desc("avg_logprob")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = dist.withColumn("cum", F.sum("cnt").over(w))
-    return cum.agg(
-        F.max(
-            F.when(F.col("cum") >= (n + 2) // 3, F.col("avg_logprob"))
-        ).alias("cut1"),
-        F.max(
-            F.when(F.col("cum") >= (2 * n + 2) // 3, F.col("avg_logprob"))
-        ).alias("cut2"),
-    )
-
-
-def band_with_cutoffs(scores: DataFrame, cuts: DataFrame) -> DataFrame:
-    """Assign head/middle/tail to (doc_id, avg_logprob) rows from a
-    1-row broadcast (cut1, cut2) table — ties land in the higher
-    band (test-pinned)."""
-    band = (
-        F.when(F.col("avg_logprob") >= F.col("cut1"), "head")
-        .when(F.col("avg_logprob") >= F.col("cut2"), "middle")
-        .otherwise("tail")
-    )
     return (
-        scores.crossJoin(F.broadcast(cuts))
-        .select("doc_id", "avg_logprob", band.alias("band"))
+        band_with_cutoffs(scores, *tercile_cutoffs(scores, n))
+        .select("doc_id", "avg_logprob", "band")
         .orderBy("doc_id")
     )
+
+
+def tercile_cutoffs(scores: DataFrame, n: int) -> tuple[float | None, float | None]:
+    """The (cut1, cut2) tercile cutoffs of a (…, avg_logprob) score
+    table of ``n`` rows (a counted barrier's ``rows``): cut1 is the
+    highest score whose descending cumulative count reaches
+    (n+2) div 3, cut2 the same for (2n+2) div 3 — the oracle's
+    ``max(CASE WHEN cum >= … )``. Python floats round-trip doubles, so
+    the cutoffs are the exact score values. ``n == 0`` (or a cut no
+    score reaches) gives ``None``, which matches no score.
+
+    The rows collected are the distinct scores and their counts (two
+    jobs: the aggregate's map stage and the collect)."""
+    if n == 0:
+        return None, None
+    # bound: ≤10^5 rows — 4-dp scores over a few-nats range, at any
+    # corpus size
+    dist = scores.groupBy("avg_logprob").agg(F.count(F.lit(1)).alias("cnt"))
+    need1, need2 = (n + 2) // 3, (2 * n + 2) // 3
+    cut1 = cut2 = None
+    cum = 0
+    # NULL scores sort last (as in the oracle's DESC order) and can
+    # never be a cut, so skipping them leaves both cuts unchanged
+    for score, cnt in sorted((r for r in dist.collect() if r[0] is not None), reverse=True):
+        cum += cnt
+        if cut1 is None and cum >= need1:
+            cut1 = score
+        if cum >= need2:
+            cut2 = score
+            break
+    return cut1, cut2
+
+
+def band_with_cutoffs(
+    scores: DataFrame, cut1: float | None, cut2: float | None
+) -> DataFrame:
+    """``scores`` with a head/middle/tail ``band`` column from the two
+    tercile cutoffs, a map-only projection over double literals. Ties
+    land in the higher band (test-pinned); a ``None`` cutoff matches no
+    score, so ``(None, None)`` bands every row tail."""
+    score = F.col("avg_logprob")
+    band = (
+        F.when(score >= F.lit(cut1).cast("double"), "head")
+        .when(score >= F.lit(cut2).cast("double"), "middle")
+        .otherwise("tail")
+    )
+    return scores.withColumn("band", band)
 
 
 VOCAB_TOP_K = 16  # fixture-calibrated: the synthetic corpus has 31

@@ -909,44 +909,74 @@ def boilerplate_segment_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_boilerplate(d)
 
 
-def doc_segments(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
-    """(doc_id, text) → the fixed-width segment stream (doc_id,
-    seg_idx, seg, seg_hash): non-overlapping ``seg_w``-token segments
-    with their 60-bit md5-prefix hash (8-byte shuffle keys)."""
+def doc_segment_arrays(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
+    """(doc_id, text) → one row per document (doc_id, segs), ``segs``
+    an array<struct<seg_idx, seg, seg_hash>> of its non-overlapping
+    ``seg_w``-token segments in order, each with its 60-bit md5-prefix
+    hash (8-byte shuffle keys). A map-only projection; the md5 runs
+    once per segment."""
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     t = d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 1)
+    segs = F.transform(
+        F.sequence(F.lit(0), F.ceil(F.size("toks") / F.lit(seg_w)).cast("int") - 1),
+        lambda i: F.concat_ws(" ", F.slice("toks", i * seg_w + 1, seg_w)),
+    )
     return t.select(
         "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(
-                    F.lit(0),
-                    F.ceil(F.size("toks") / F.lit(seg_w)).cast("int") - 1,
-                ),
-                lambda i: F.concat_ws(
-                    " ", F.slice("toks", i * seg_w + 1, seg_w)
-                ),
-            )
-        ).alias("seg_idx", "seg"),
-    ).withColumn(
-        "seg_hash",
-        F.conv(F.substring(F.md5("seg"), 1, 15), 16, 10).cast("long"),
+        F.transform(
+            segs,
+            lambda seg, i: F.struct(
+                i.alias("seg_idx"),
+                seg.alias("seg"),
+                F.conv(F.substring(F.md5(seg), 1, 15), 16, 10)
+                .cast("long")
+                .alias("seg_hash"),
+            ),
+        ).alias("segs"),
+    )
+
+
+def doc_segments(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
+    """(doc_id, text) → the fixed-width segment stream (doc_id,
+    seg_idx, seg, seg_hash): ``doc_segment_arrays`` with one row per
+    segment."""
+    return doc_segment_arrays(d, seg_w).select("doc_id", F.inline("segs"))
+
+
+def boilerplate_set(segs: DataFrame, bp_df: int = _BP_DF) -> DataFrame:
+    """(seg_hash, is_bp) for every segment hash that occurs in >=
+    ``bp_df`` distinct documents of a ``doc_segment_arrays`` frame
+    (doc_id a key). Each document contributes its DISTINCT hashes
+    once, so the document frequency is a plain count: one exchange
+    with map-side partials, where a hot boilerplate segment collapses
+    to one partial row per map task."""
+    return (
+        segs.select(F.explode(F.array_distinct("segs.seg_hash")).alias("seg_hash"))
+        .groupBy("seg_hash")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= bp_df)
+        .select("seg_hash", F.lit(True).alias("is_bp"))
     )
 
 
 def apply_boilerplate_scrub(
     segs: DataFrame, bp: DataFrame, ordered: bool = True
 ) -> DataFrame:
-    """Rewrite docs from their segment stream with flagged segments
-    excised — the APPLY stage shared by the full-corpus scrub and the
-    incremental face (which passes the PERSISTED bp set).
+    """Rewrite docs from their ``doc_segment_arrays`` rows with every
+    segment in ``bp`` excised — the APPLY stage shared by the
+    full-corpus scrub and the incremental face (which passes the
+    PERSISTED bp set). The boilerplate set is the REPEATED tail,
+    bounded by corpus redundancy rather than corpus size, so the flag
+    join is left to AQE, which broadcasts it from its runtime size (a
+    ``maybe_broadcast`` probe would have to run the df aggregate at
+    plan build); a set past the threshold degrades to a shuffle join.
 
-    ``ordered=False`` (r18, guide §2.4): the global doc_id sort exists
-    for the REGISTERED query faces' output contract only — pipeline
-    consumers that immediately checkpoint / re-aggregate the scrubbed
-    rows skip it, saving a corpus-wide range exchange + sort whose
-    ordering no downstream operator reads."""
-    flagged = segs.join(bp, "seg_hash", "left")
+    ``ordered=False``: the global doc_id sort exists for the
+    REGISTERED query faces' output contract only — pipeline consumers
+    that immediately checkpoint / re-aggregate the scrubbed rows skip
+    it, saving a corpus-wide range exchange + sort whose ordering no
+    downstream operator reads."""
+    flagged = segs.select("doc_id", F.inline("segs")).join(bp, "seg_hash", "left")
     kept = F.when(~F.coalesce(F.col("is_bp"), F.lit(False)), F.struct("seg_idx", "seg"))
     clean = F.array_join(
         F.transform(
@@ -978,36 +1008,13 @@ def scrub_boilerplate(
     (doc_id, text) row with every ``seg_w``-token segment that occurs
     in >= ``bp_df`` distinct documents excised.
 
-    r18 (guide §2.4): the segment stream feeds BOTH the df-count
-    aggregate (bp) and the rebuild join's probe side, and because the
-    flag join is a broadcast there is no shared exchange to dedup the
-    two — the tokenize + posexplode + md5 derivation executed TWICE
-    per scrub. The localCheckpoint materializes it once (A/B at
-    sf0.1: 0.89 → 0.71 s min-of-medians, new arm won all 3 rounds);
-    at scale this is the standard one-pass-plus-spill trade a
-    C4-style stage materialization makes anyway. Pre-barrier plan
-    pinned by test_boilerplate_scrub_shuffles_hashes_not_strings
-    (doc_segments must stay a map-only, exchange-free derivation)."""
-    segs = doc_segments(d, seg_w).localCheckpoint()
-    bp = (
-        segs.groupBy("seg_hash")
-        .agg(F.countDistinct("doc_id").alias("df"))
-        .filter(F.col("df") >= bp_df)
-        .select("seg_hash", F.lit(True).alias("is_bp"))
-    )
-    # boilerplate set = segments REPEATED across >=3 docs; bounded by
-    # corpus redundancy, not corpus size. This is the AQE-ONLY path
-    # ADVICE r11 #2 asked to consider, adopted after measuring: with
-    # no cheaper probe available, maybe_broadcast's limit-probe had to
-    # run the segment-frequency aggregate itself AT PLAN-BUILD TIME
-    # (an eager job fired by explain/plan-audit too), and AQE picks
-    # the identical BroadcastHashJoin from the runtime size anyway —
-    # measured at sf0.1: gated best 1.68 s vs AQE-only 0.76 s, same
-    # join in both executed plans (tests/test_plans.py pins the
-    # non-cartesian shape). If the bp set ever outgrows the broadcast
-    # threshold at 100 TB, AQE degrades to a shuffle join — the same
-    # safe failure mode the gate's decline path had.
-    return apply_boilerplate_scrub(segs, bp, ordered=ordered)
+    The per-document segment arrays feed both the df count and the
+    rebuild, so they are a barrier: the tokenize + md5 derivation runs
+    once. The plan of the checkpointed frame is pinned by
+    test_boilerplate_scrub_shuffles_hashes_not_strings
+    (``doc_segment_arrays`` must stay a map-only derivation)."""
+    segs = doc_segment_arrays(d, seg_w).localCheckpoint()
+    return apply_boilerplate_scrub(segs, boilerplate_set(segs, bp_df), ordered=ordered)
 
 
 @register(
@@ -1458,7 +1465,8 @@ def refresh_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def verdicts(stage_name: str) -> DataFrame:
         idx = (
-            spark.read.parquet(stage)
+            spark.read.schema(seed.schema)
+            .parquet(stage)
             .select("seg_hash")
             .distinct()
             .select("seg_hash", F.lit(True).alias("seen"))
@@ -1749,9 +1757,10 @@ _CURATION_BASE_CTES = f"""stok AS (
     "doc_id order. Stage ORDER is the contract (scrub before pair "
     "generation, gate before packing) — pinned by tests/test_plans.py"
     "::test_curation_training_gold_stage_order. Scale shape is the "
-    "union of its stages': 8-byte segment-hash shuffle, bounded "
-    "distinct-score window, one band shuffle + O(diameter) label "
-    "rounds, then (split x shard)-parallel packing.",
+    "union of its stages': 8-byte segment-hash shuffle, tercile "
+    "cutoffs from the bounded distinct-score table, one band shuffle "
+    "+ O(diameter) label rounds, then (split x shard)-parallel "
+    "packing.",
     oracle=f"""
         WITH RECURSIVE {_CURATION_BASE_CTES},
         corpus AS MATERIALIZED (
@@ -1829,78 +1838,104 @@ def curation_pipeline(d: DataFrame) -> DataFrame:
     tests/test_properties.py::test_curation_pipeline_stage_order_semantics:
     docs near-dup only through BOILERPLATE do not merge (scrub runs
     before pair generation) and tail-band docs never reach packing
-    (gate runs before packing)."""
-    from project_orbit_spark.functions.textquality import (
-        bigram_scores,
-        perplexity_bands,
-        token_total,
-    )
-    from project_orbit_spark.operators import dedup as dedup_ops
-    from project_orbit_spark.operators.graph import connected_components
+    (gate runs before packing).
 
-    # Stage barriers — the materialization a production pipeline has
-    # anyway between steps (C4/CCNet write each stage out). Each one
-    # feeds several consumers, which would otherwise re-execute its
-    # upstream once per consumer; the totals the next stage needs are
-    # observed on the barrier's own job.
-    # stage 1: scrub (MUST precede scoring and pair generation). The
-    # scrubbed corpus feeds the LM fit, the scorer and the gate join;
-    # its token count is the LM's total.
+    Stage barriers — the materialization a production pipeline has
+    anyway between steps (C4/CCNet write each stage out) — are the
+    segment arrays, the scrubbed text and the scores; each feeds
+    several consumers, and the totals the next stage needs are
+    observed on the barrier's own job. ``warm_curation_artifacts``
+    runs the same stage functions over the base corpus."""
+    from project_orbit_spark.functions.textquality import lm_count_tables, tercile_cutoffs
+
+    segs = doc_segment_arrays(d).localCheckpoint()
+    scrubbed, total = scrub_stage(segs, boilerplate_set(segs))
+    scored, n = score_stage(scrubbed, *lm_count_tables(scrubbed), total)
+    gated = gate_stage(scored, *tercile_cutoffs(scored, n))
+    return _pack_curated(_canonical_stage(gated))
+
+
+def scrub_stage(segs: DataFrame, bp: DataFrame) -> tuple[DataFrame, float | None]:
+    """Stage 1 (MUST precede scoring and pair generation): the
+    scrubbed (doc_id, text) corpus as a counted barrier, and its token
+    count — the bigram LM's ``total`` — read off the barrier job."""
+    from project_orbit_spark.functions.textquality import token_total
+
     scrubbed, seen = checkpoint_counted(
-        scrub_boilerplate(d, ordered=False).select(
+        apply_boilerplate_scrub(segs, bp, ordered=False).select(
             "doc_id", F.col("clean_text").alias("text")
         ),
         tokens=token_total(),
     )
-    # stage 2: perplexity band gate on the scrubbed text. scores feeds
-    # the cutoff derivation and the band assignment; its row count is
-    # the cutoffs' n. Both stage faces skip their doc_id output sort.
-    scores, scored = checkpoint_counted(
-        bigram_scores(scrubbed, F.lit(seen["tokens"]), ordered=False).select(
-            "doc_id", "avg_logprob"
-        )
+    return scrubbed, seen["tokens"]
+
+
+def score_stage(
+    scrubbed: DataFrame,
+    c2: DataFrame,
+    freq: DataFrame,
+    total: float | None,
+    pin_vocab: bool = True,
+) -> tuple[DataFrame, int]:
+    """Stage 2's barrier: (doc_id, avg_logprob, text) for every
+    scoreable scrubbed doc, and its row count — the tercile cutoffs'
+    ``n``. The text joins on the doc_id exchange the scorer's
+    aggregate already has, so the gate after it is a map-only filter
+    over this checkpoint. ``pin_vocab`` as in ``score_with_lm``."""
+    from project_orbit_spark.functions.textquality import doc_bigrams, score_with_lm
+
+    scores = score_with_lm(
+        doc_bigrams(scrubbed), c2, freq, F.lit(total), pin_vocab=pin_vocab, ordered=False
+    ).select("doc_id", "avg_logprob")
+    scored, seen = checkpoint_counted(scores.join(scrubbed, "doc_id"))
+    return scored, seen["rows"]
+
+
+def gate_stage(scored: DataFrame, cut1: float | None, cut2: float | None) -> DataFrame:
+    """The perplexity gate: the head and middle docs of a stage-2 frame
+    (doc_id, text, band, n_tokens) — the tail tercile is dropped before
+    any pair generation. Map-only; n_tokens is what packing reads."""
+    from project_orbit_spark.functions.textquality import band_with_cutoffs
+
+    return band_with_cutoffs(
+        scored.filter(F.col("avg_logprob") >= F.lit(cut2).cast("double")), cut1, cut2
+    ).select(
+        "doc_id",
+        "text",
+        "band",
+        F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tokens"),
     )
-    banded = perplexity_bands(scores, scored["rows"])
-    # n_tokens rides the gated checkpoint (one long beside the text it
-    # already carries), so stage 4 never re-tokenizes the gated text
-    gated = (
-        scrubbed.join(
-            banded.filter(F.col("band") != "tail").select("doc_id", "band"),
-            "doc_id",
-        )
-        .withColumn(
-            "n_tokens",
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
-        )
-        .localCheckpoint()
-    )
-    # stage 3: leakage-safe split over the gated corpus. The packer
-    # reads only (doc_id, cluster_id) of the cluster map, which is the
-    # cc labels renamed. Cluster membership scales with corpus
-    # redundancy, so the label join is size-gated, never forced; cc
-    # is a counted checkpoint, so the gate runs no job.
+
+
+def _canonical_stage(gated: DataFrame) -> DataFrame:
+    """Stage 3 over the gated corpus: ``gated`` plus ``canonical_id``,
+    the min doc_id of its near-dup cluster (itself when it has none).
+    The packer reads only the cc labels renamed; cluster membership
+    scales with corpus redundancy, so the label join is size-gated,
+    never forced, and cc is a counted checkpoint, so the gate runs no
+    job."""
+    from project_orbit_spark.operators import dedup as dedup_ops
+    from project_orbit_spark.operators.graph import connected_components
+
     pairs = dedup_ops.minhash_pairs(gated.select("doc_id", "text"))
-    edges = pairs.select(
-        F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    )
+    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
     cc = connected_components(edges, strategy="auto")
     labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    canon = gated.join(
+    return gated.join(
         maybe_broadcast(labels, dedup_ops.LABEL_BROADCAST_BOUND, probe=cc),
         "doc_id",
         "left",
-    ).withColumn(
-        "canonical_id",
-        F.coalesce("cluster_id", F.col("doc_id")).cast("long"),
-    )
+    ).withColumn("canonical_id", F.coalesce("cluster_id", F.col("doc_id")).cast("long"))
+
+
+def _pack_curated(canon: DataFrame) -> DataFrame:
+    """Stage 4: the leakage-safe split — a pure function of
+    canonical_id, so a near-dup cluster never straddles
+    train/val/test — then next-fit packing per (split, shard)."""
     bucket = (
         F.conv(
             F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("leak|"), F.col("canonical_id").cast("string")
-                    )
-                ),
+                F.md5(F.concat(F.lit("leak|"), F.col("canonical_id").cast("string"))),
                 1,
                 8,
             ),
@@ -1909,10 +1944,7 @@ def curation_pipeline(d: DataFrame) -> DataFrame:
         ).cast("long")
         % 100
     )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    # stage 4: next-fit packing per (split, shard) of gated docs only
+    split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
     toks = canon.select(
         "doc_id",
         "band",
@@ -1940,14 +1972,14 @@ _CURATION_ARTIFACTS_CACHE: dict[tuple[str, str], dict] = register_df_cache({})
 
 def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     """The offline curation build's persisted artifacts, derived once
-    per (session, sf_dir) — exactly the intermediates of
-    ``curation_training_gold``'s stages over the BASE corpus:
+    per (session, sf_dir) by ``curation_pipeline``'s own stage
+    functions over the BASE corpus:
 
-    - ``bp``: the boilerplate segment-hash set (scrub stage 1);
-    - ``c2``/``c1``/``freq``: the bigram-LM count tables fitted on
-      the SCRUBBED base corpus, and ``total``, its token count
-      (stage 2's model);
-    - ``cuts``: the 1-row tercile score cutoffs (stage 2's bands);
+    - ``bp``: the boilerplate segment-hash set (stage 1);
+    - ``c2``/``freq``: the bigram-LM count tables fitted on the
+      SCRUBBED base corpus, and ``total``, its token count (stage 2's
+      model);
+    - ``cut1``/``cut2``: the tercile score cutoffs (stage 2's bands);
     - ``banded``: the MinHash band index of the GATED base corpus
       (stage 3's dedup index, (doc_id, sig, band_idx, band_sig));
     - ``canon``: the gated base corpus's canonical labels (stage 3's
@@ -1958,93 +1990,29 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     Lifecycle: the LM counts and band/canon tables are dt-partitionable
     rows with no cross-row state — merge/compact/expire transfers from
     refresh_segment_index + refresh_band_index (the banded artifact is
-    LITERALLY the refresh_band_index layout); cuts is a 1-row frame
-    and total a number, both rebuilt per refresh, not merged.
+    LITERALLY the refresh_band_index layout); the cutoffs and total
+    are numbers, rebuilt per refresh, not merged.
     """
-    from project_orbit_spark.functions.textquality import (
-        band_cutoffs,
-        band_with_cutoffs,
-        doc_bigrams,
-        lm_count_tables,
-        score_with_lm,
-        token_total,
-    )
-    from project_orbit_spark.operators import dedup as dedup_ops
-    from project_orbit_spark.operators.dedup import (
-        _banded_signatures,
-        minhash_pairs,
-    )
-    from project_orbit_spark.operators.graph import connected_components
+    from project_orbit_spark.functions.textquality import lm_count_tables, tercile_cutoffs
+    from project_orbit_spark.operators.dedup import _banded_signatures
 
     key = (cache_token(spark), sf_dir)
     if key not in _CURATION_ARTIFACTS_CACHE:
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        # one shared segment-stream checkpoint: bp and the rebuild
-        # probe otherwise each derive doc_segments in full
-        segs = doc_segments(d).localCheckpoint()
-        bp = (
-            segs.groupBy("seg_hash")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .filter(F.col("df") >= _BP_DF)
-            .select("seg_hash", F.lit(True).alias("is_bp"))
-            .persist()
-        )
-        # the same stage barriers, with the same observed totals, as
-        # curation_pipeline: each derived artifact below re-reads
-        # scrubbed/scores/gated
-        scrubbed, seen = checkpoint_counted(
-            apply_boilerplate_scrub(segs, bp, ordered=False).select(
-                "doc_id", F.col("clean_text").alias("text")
-            ),
-            tokens=token_total(),
-        )
-        total = seen["tokens"]
-        c2, c1, freq = (t.persist() for t in lm_count_tables(scrubbed))
-        scores, scored = checkpoint_counted(
-            score_with_lm(
-                doc_bigrams(scrubbed), c2, c1, freq, F.lit(total), ordered=False
-            )
-            .select("doc_id", "avg_logprob")
-        )
-        cuts = band_cutoffs(scores, scored["rows"]).persist()
-        gated = scrubbed.join(
-            band_with_cutoffs(scores, cuts)
-            .filter(F.col("band") != "tail")
-            .select("doc_id"),
-            "doc_id",
-        ).localCheckpoint()
+        segs = doc_segment_arrays(d).localCheckpoint()
+        bp = boilerplate_set(segs).persist()
+        scrubbed, total = scrub_stage(segs, bp)
+        c2, freq = (t.persist() for t in lm_count_tables(scrubbed))
+        scored, n = score_stage(scrubbed, c2, freq, total)
+        cut1, cut2 = tercile_cutoffs(scored, n)
+        gated = gate_stage(scored, cut1, cut2)
         banded = _banded_signatures(gated.select("doc_id", "text")).persist()
-        pairs = minhash_pairs(gated.select("doc_id", "text"))
-        edges = pairs.select(
-            F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-        )
-        cc = connected_components(edges, strategy="auto")
-        labels = cc.select(
-            F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
-        )
-        # size-gated label join, as in curation_pipeline
-        canon = (
-            gated.select("doc_id")
-            .join(
-                maybe_broadcast(
-                    labels, dedup_ops.LABEL_BROADCAST_BOUND, probe=cc
-                ),
-                "doc_id",
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.coalesce("cluster_id", F.col("doc_id"))
-                .cast("long")
-                .alias("canonical_id"),
-            )
-            .persist()
-        )
-        for t in (bp, c2, c1, freq, cuts, banded, canon):
+        canon = _canonical_stage(gated).select("doc_id", "canonical_id").persist()
+        for t in (bp, c2, freq, banded, canon):
             t.count()
         _CURATION_ARTIFACTS_CACHE[key] = {
-            "bp": bp, "c2": c2, "c1": c1, "freq": freq, "total": total,
-            "cuts": cuts, "banded": banded, "canon": canon,
+            "bp": bp, "c2": c2, "freq": freq, "total": total,
+            "cut1": cut1, "cut2": cut2, "banded": banded, "canon": canon,
         }
     return _CURATION_ARTIFACTS_CACHE[key]
 
@@ -2276,65 +2244,31 @@ def curate_batch(batch: DataFrame, art: dict) -> DataFrame:
     registers, factored out so the streaming twin
     (streaming/curation.py::stream_curate_docs) runs the IDENTICAL
     plan builder per micro-batch (the stream_cluster_assign
-    pattern)."""
-    from project_orbit_spark.functions.textquality import (
-        band_with_cutoffs,
-        doc_bigrams,
-        score_with_lm,
-    )
+    pattern). Every stage is the offline pipeline's stage function
+    fed the persisted artifact instead of a refit."""
+    from project_orbit_spark.operators import dedup as dedup_ops
     from project_orbit_spark.operators.dedup import (
         _banded_signatures,
         match_new_vs_index,
     )
 
     # stage 1 (O(new)): scrub against the persisted boilerplate set.
-    # localCheckpoint: the scrubbed batch feeds the LM scorer AND the
-    # gate join AND (through gated) three further consumers — without
-    # a barrier Spark replicates the whole scrub subtree per use
-    # (measured: 6x the stage's BNLJ sites in the executed plan). The
-    # batch is the O(new) side, so materializing it once is bounded
-    # by batch size at any corpus scale.
-    scrub = (
-        apply_boilerplate_scrub(doc_segments(batch), art["bp"], ordered=False)
-        .select("doc_id", F.col("clean_text").alias("text"))
-        .localCheckpoint()
-    )
+    # The scrubbed batch feeds the LM scorer and the text join, so it
+    # is a barrier, bounded by batch size at any corpus scale.
+    scrub, _ = scrub_stage(doc_segment_arrays(batch), art["bp"])
     # stage 2 (O(new)): score against the persisted LM, band by the
-    # persisted cutoffs, drop the tail. pin_vocab=False (r16): the
-    # count tables here are PERSISTED artifacts — InMemoryRelation
-    # stats are exact materialized sizes, not the guessed/compressed
-    # class the full-fit pin defends against — and the O(new) batch
-    # side is the legitimate broadcast candidate at 100 TB.
-    scores = score_with_lm(
-        doc_bigrams(scrub),
-        art["c2"],
-        art["c1"],
-        art["freq"],
-        F.lit(art["total"]),
-        pin_vocab=False,
-        ordered=False,
-    ).select("doc_id", "avg_logprob")
-    # n_tokens rides the gated checkpoint (same shave as the offline
-    # pipeline, r18): stage 4 reads it back instead of re-splitting.
-    gated = (
-        scrub.join(
-            band_with_cutoffs(scores, art["cuts"])
-            .filter(F.col("band") != "tail")
-            .select("doc_id", "band"),
-            "doc_id",
-        )
-        .withColumn(
-            "n_tokens",
-            F.size(F.split(F.trim("text"), r"\s+")).cast("long"),
-        )
-        .localCheckpoint()
-    )
+    # persisted cutoffs, drop the tail. pin_vocab=False: the count
+    # tables here are PERSISTED artifacts — InMemoryRelation stats are
+    # exact materialized sizes, not the guessed/compressed class the
+    # full-fit pin defends against — and the O(new) batch side is the
+    # legitimate broadcast candidate at 100 TB. The gate is a map-only
+    # filter over the counted scores barrier.
+    scored, _ = score_stage(scrub, art["c2"], art["freq"], art["total"], pin_vocab=False)
+    gated = gate_stage(scored, art["cut1"], art["cut2"])
     # stage 3 (O(new)): band the batch, match new-vs-INDEX only
-    # (dedup.match_new_vs_index — the SHARED helper, ADVICE r12 #3,
-    # so the signature length/threshold can never drift from the
-    # incremental minhash face), and inherit the matched cluster's
-    # EXISTING canonical id. probe=None: the batch side is already
-    # localCheckpointed, so AQE sees its exact size for free.
+    # (dedup.match_new_vs_index — the SHARED helper, so the signature
+    # length/threshold can never drift from the incremental minhash
+    # face), and inherit the matched cluster's EXISTING canonical id.
     m = match_new_vs_index(
         _banded_signatures(gated.select("doc_id", "text")), art["banded"]
     )
@@ -2344,47 +2278,18 @@ def curate_batch(batch: DataFrame, art: dict) -> DataFrame:
         .agg(F.min("canonical_id").alias("base_canon"))
     )
     # bmatch is BATCH-bounded (≤1 row per gated batch doc), so its
-    # broadcast goes through the same gate as the other batch sides
-    # (round-13 audit); probe = the checkpointed gated batch, a strict
-    # row upper bound that costs one in-memory count.
-    from project_orbit_spark.operators import dedup as dedup_ops
-
-    gb = maybe_broadcast(bmatch, dedup_ops.INCREMENTAL_BATCH_BOUND, probe=gated)
+    # broadcast goes through the same gate as the other batch sides;
+    # probe = the counted scores barrier, a row upper bound of the
+    # gated batch whose count was observed on its checkpoint job.
+    gb = maybe_broadcast(bmatch, dedup_ops.INCREMENTAL_BATCH_BOUND, probe=scored)
     canon = gated.join(
         gb, gated["doc_id"] == bmatch["new_id"], "left"
     ).withColumn(
         "canonical_id",
         F.coalesce("base_canon", F.col("doc_id")).cast("long"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("leak|"), F.col("canonical_id").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
     # stage 4 (O(new)): next-fit pack the batch into FRESH packs
-    toks = canon.select(
-        "doc_id",
-        "band",
-        "canonical_id",
-        split.alias("split"),
-        (F.col("doc_id") % PACK_SHARDS).alias("shard"),
-        "n_tokens",
-    )
-    return pack_next_fit(toks, group_cols=("split", "shard")).select(
+    return _pack_curated(canon).select(
         F.col("doc_id").alias("new_id"),
         "band",
         "canonical_id",

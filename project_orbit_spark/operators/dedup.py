@@ -990,7 +990,7 @@ def refresh_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_banded = _banded_signatures(probe).localCheckpoint(eager=True)
 
     def verdicts(stage_name: str) -> DataFrame:
-        idx = spark.read.parquet(stage_dir).select(
+        idx = spark.read.schema(seed.schema).parquet(stage_dir).select(
             "doc_id", "sig", "band_idx", "band_sig"
         )
         # materialize NOW: the next maintenance op rewrites/deletes

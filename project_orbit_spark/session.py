@@ -65,11 +65,14 @@ def cache_token(spark: SparkSession) -> str:
 
 def _unpersist_value(value) -> None:
     """Unpersist one cache value. Values are DataFrames, plain
-    verdicts (the broadcast-gate probe cache), or dicts of DataFrames
-    (the curation-artifact bundle) — recurse one level into dicts so
-    bundled artifacts release their blocks too (ADVICE r12 #1)."""
+    verdicts (the broadcast-gate probe cache), or bundles of
+    DataFrames: dicts (the curation artifacts) and tuples or lists
+    (the DSIR model's (lm, stats)) — recurse into bundles so bundled
+    artifacts release their blocks too."""
     if isinstance(value, dict):
-        for v in value.values():
+        value = list(value.values())
+    if isinstance(value, (tuple, list)):
+        for v in value:
             _unpersist_value(v)
         return
     try:

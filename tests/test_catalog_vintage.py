@@ -141,6 +141,24 @@ def test_clear_df_caches_empties_the_schema_memo(spark, monkeypatch):
     assert catalog._SCHEMAS == {}
 
 
+def test_clear_df_caches_releases_tuple_bundles(spark, monkeypatch):
+    """warm_dsir_lm keeps its model as an (lm, stats) tuple; clearing
+    the caches must unpersist both tables, not only drop the entry."""
+    from project_orbit_spark import session
+    from project_orbit_spark.functions import textquality
+
+    lm, stats = textquality.warm_dsir_lm(spark, SF_DIR)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached(df):
+        return cache_manager.lookupCachedData(df._jdf).isDefined()
+
+    assert cached(lm) and cached(stats)
+    monkeypatch.setattr(session, "_DF_CACHES", [textquality._DSIR_CACHE])
+    session.clear_df_caches()
+    assert not cached(lm) and not cached(stats)
+
+
 # the benchmark's rag_serve request mix (perfbench/workloads.py RAG_MIX)
 _RAG_MIX = (
     "ann_ivf_topk_warm",

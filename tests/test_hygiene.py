@@ -3,9 +3,10 @@ never regress on, pinned as greps so a future operator can't quietly
 reintroduce a driver-side loop or a row-at-a-time Python UDF.
 
 - No ``.collect()`` / ``.toPandas()`` in the operator surface. The
-  only allowed sites are the two 25-row nation-dim fixture-templating
-  reads in sources/roundtrip.py (bounded dimension, test-fixture
-  synthesis — not a data path).
+  only allowed sites are listed in ``COLLECT_ALLOWED``, each with its
+  bound: fixture templating, partition-value lists, one-row probes
+  and the bounded distinct-score table behind the tercile cutoffs —
+  never a data path.
 - No row-at-a-time ``@udf`` / ``F.udf`` anywhere: Python on the hot
   path is only ever Arrow-batched (mapInPandas / applyInPandas /
   applyInPandasWithState / pandas_udf).
@@ -37,6 +38,10 @@ COLLECT_ALLOWED = {
     # #5): one global agg over the O(new) batch → exactly ONE row
     # out; it gates a broadcast hint, it is not a data path
     "operators/dedup.py": 1,
+    # tercile_cutoffs' distinct-score table: 4-dp scores over a
+    # few-nats range, ≤10^5 rows at any corpus size (a '# bound:'
+    # comment at the site); its output is two numbers, not a data path
+    "functions/textquality.py": 1,
 }
 
 

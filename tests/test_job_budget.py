@@ -41,14 +41,44 @@ def jobs_of(spark, fn) -> int:
 
 
 def test_curation_training_gold_job_budget(spark):
-    """The composed curation pipeline, build plus collect: one-shuffle
-    propagation rounds, counted barriers instead of probe jobs, the LM
-    total and the band n read off the barriers, and no cluster-size
-    join (48 jobs before these cuts)."""
+    """The composed curation pipeline, build plus collect, with the
+    documents schema resolved: one-shuffle propagation rounds, counted
+    barriers instead of probe jobs, the LM total and the band n read
+    off the barriers, no cluster-size join, the boilerplate df in one
+    exchange, the LM context counts off the bigram table, the tercile
+    cutoffs collected to the driver and no gated barrier (48 jobs
+    before the first of these cuts, 34 before the last four)."""
+    from project_orbit_spark.catalog import load
     from project_orbit_spark.operators.corpus import curation_training_gold
 
+    load(spark, SF_DIR, "documents")
     n = jobs_of(spark, lambda: curation_training_gold(spark, SF_DIR).toPandas())
-    assert 0 < n <= 36, n
+    assert 0 < n <= 30, n
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("ccnet_perplexity_bands", 15),
+        ("bigram_logprob_scores", 12),
+        ("boilerplate_segment_scrub", 7),
+    ],
+)
+def test_curation_statistic_job_budget(spark, name, budget):
+    """Each curation statistic costs the one exchange it needs: the
+    boilerplate df is a plain count over each document's distinct
+    segment hashes (not a two-exchange countDistinct), the LM context
+    counts are a window over the bigram table's w1 exchange (not a
+    second aggregate of the bigram stream and a join), and the tercile
+    cutoffs are two driver-side numbers (not a single-partition window
+    and a cross join). 17, 13 and 8 jobs before."""
+    from project_orbit_spark import registry
+    from project_orbit_spark.catalog import load
+
+    load(spark, SF_DIR, "documents")
+    q = registry.get_query(name)
+    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    assert 0 < n <= budget, n
 
 
 def test_propagation_round_job_budget(spark):

@@ -67,6 +67,12 @@ def test_rag_dashboard_gold_on_zero_documents_matches_oracle(spark, tmp_path):
         (1, "events_value_histogram"),
         (0, "hybrid_rrf_topk"),
         (1, "hybrid_rrf_topk"),
+        (0, "refresh_band_index"),
+        (0, "refresh_segment_index"),
+        (0, "ccnet_perplexity_bands"),
+        (1, "ccnet_perplexity_bands"),
+        (0, "curation_training_gold"),
+        (1, "curation_training_gold"),
     ],
 )
 def test_query_matches_oracle_on_a_sliced_catalog(spark, tmp_path, rows, name):

@@ -804,6 +804,29 @@ def test_perplexity_band_ties_land_in_the_higher_band(spark):
     )
 
 
+def test_tercile_cutoffs_on_degenerate_score_tables(spark):
+    """The driver-side cutoffs on the inputs a fixture never produces:
+    zero scores give (None, None) without a job that could fail and
+    band nothing; one shared score is every tercile's cutoff, so all
+    rows land in head."""
+    from project_orbit_spark.functions.textquality import (
+        band_with_cutoffs,
+        perplexity_bands,
+        tercile_cutoffs,
+    )
+
+    schema = "doc_id long, avg_logprob double"
+    empty = spark.createDataFrame([], schema)
+    assert tercile_cutoffs(empty, 0) == (None, None)
+    assert perplexity_bands(empty, 0).collect() == []
+    one = spark.createDataFrame([(1, -2.5)], schema)
+    assert {r["band"] for r in band_with_cutoffs(one, None, None).collect()} == {"tail"}
+
+    same = spark.createDataFrame([(i, -2.5) for i in range(7)], schema)
+    assert tercile_cutoffs(same, 7) == (-2.5, -2.5)
+    assert {r["band"] for r in perplexity_bands(same, 7).collect()} == {"head"}
+
+
 def test_incremental_curation_recrawls_inherit_split(spark):
     """The incremental face's leakage guard: a re-crawl (verbatim
     copy of a base doc) must match the index, inherit the base

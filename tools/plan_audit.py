@@ -58,14 +58,10 @@ BNLJ_BOUNDED = {
     "benchmark_contamination", "bloom_pruned_join",
     "corpus_mixture_sample", "events_value_histogram", "heavy_hitters_two_pass",
     "key_skew_profile", "tfidf_top_terms", "unigram_logprob_scores",
-    # ccnet bands crossJoins one 1-row build, the 2-cutoff ``cuts``
-    # row; the composed curation pipeline and its incremental face
-    # (persisted cuts, O(new) batch side) inherit exactly that site;
     # the streaming assign twin broadcasts the single packed-centroid
     # row (k=8 structs in one row, same bound as
     # kmeans_embedding_clusters)
-    "ccnet_perplexity_bands", "curation_training_gold",
-    "stream_cluster_assign_batch", "incremental_curation_gold",
+    "stream_cluster_assign_batch",
     # round-13 additions (hand-audited): the Matryoshka funnel
     # broadcasts the 5-row query set (the cosine_topk_exact shape);
     # temperature sampling crossJoins the single (total_docs, z)
