@@ -11,6 +11,13 @@ HTML, so a deterministic page is templated from each document; the
 oracle re-derives the same fields with SQL regexes over the same
 template (possible only because the template is regular — the
 Python parser is what a production corpus would rely on).
+
+Every templated face goes through one helper, ``templated_extract``:
+it renders a page per row from the face's selected columns and feeds
+the batch to the face's extractor inside one mapInPandas closure.
+Extractors end in ``_typed_frame``, whose empty result is already the
+typed empty frame. Parsers read a valueless attribute (``<div class>``)
+as ``""``, as BeautifulSoup does; html.parser reports it as None.
 """
 
 from __future__ import annotations
@@ -29,6 +36,55 @@ EXTRACT_SCHEMA = (
     "doc_id long, page_title string, meta_desc string, n_links long, "
     "first_href string, n_headings long, main_text string"
 )
+
+
+def templated_extract(
+    d: DataFrame, page, extractor, schema: str, *, base_url: bool = False
+) -> DataFrame:
+    """``d.mapInPandas`` of ``extractor`` over ``doc_id`` + ``html``,
+    where ``html`` is ``page(*row)`` over ``d``'s columns in select
+    order; ``base_url`` adds the ``https://co{doc_id}.com/products/page``
+    column the urljoin faces resolve against.
+
+    Python workers started from a foreign cwd cannot import this
+    package, so everything the closure reaches must pickle by value:
+    the caller builds ``extractor`` on the driver (a ``<locals>``
+    function) and ``page`` is a ``<locals>`` function too, never a
+    module-level def, which cloudpickle would pickle by reference."""
+    cols = d.columns
+
+    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def paged():
+            import pandas as _pd
+
+            for pdf in batches:
+                out = {"doc_id": pdf["doc_id"]}
+                if base_url:
+                    out["base_url"] = pdf["doc_id"].map(
+                        lambda i: f"https://co{i}.com/products/page"
+                    )
+                out["html"] = [page(*row) for row in zip(*(pdf[c] for c in cols))]
+                yield _pd.DataFrame(out)
+
+        yield from extractor(paged())
+
+    return d.mapInPandas(template_then_parse, schema)
+
+
+def _make_typed_frame():
+    # a <locals> closure, so it pickles by value (see templated_extract)
+    def typed_frame(rows, cols: list[str], ints: dict[str, str]) -> pd.DataFrame:
+        """Rows as a frame with the integer columns cast; with no rows
+        the frame is empty with those dtypes, which Arrow converts to
+        the face's schema like a non-empty one."""
+        import pandas as _pd
+
+        return _pd.DataFrame(rows, columns=cols).astype(ints)
+
+    return typed_frame
+
+
+_typed_frame = _make_typed_frame()
 
 
 def html_page(doc_id: Column, text: Column, source: Column) -> Column:
@@ -67,7 +123,7 @@ def make_html_extractor():
                 self._in_body_text = False
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if tag == "title":
                     self._in_title = True
                 elif tag == "meta" and a.get("name") == "description":
@@ -157,10 +213,7 @@ def html_field_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _make_meta_page():
-    # factory so the template is a <locals> closure: cloudpickle
-    # serializes it BY VALUE into mapInPandas closures instead of
-    # an import reference that foreign-cwd Python workers can't
-    # resolve (caught by tools/driver_sim.py)
+    # a <locals> closure, so it pickles by value (see templated_extract)
     def _meta_page(doc_id: int, lang: str, source: str, text: str) -> str:
         """Deterministic metadata-rich page (ref src/scraper_v2.py:120-179
         OG loop, :353-410 meta walk): canonical link, og:*, twitter:*,
@@ -212,7 +265,7 @@ def make_meta_extractor():
                 self.lang = ""
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if tag == "html":
                     self.lang = a.get("lang", "") or self.lang
                 elif tag == "meta":
@@ -282,32 +335,7 @@ def make_meta_extractor():
 )
 def html_meta_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id", "lang", "source", "text")
-
-    # construct the extractor DRIVER-side: the pickled closure then
-    # captures the <locals> extract function by value instead of
-    # referencing the module-level factory by name (unimportable on
-    # foreign-cwd workers — tools/driver_sim.py regression)
-    inner = make_meta_extractor()
-
-    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _meta_page(r.doc_id, r.lang, r.source, r.text)
-                            for r in pdf.itertuples()
-                        ],
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, META_SCHEMA).orderBy("doc_id")
+    return templated_extract(d, _meta_page, make_meta_extractor(), META_SCHEMA).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -315,10 +343,7 @@ def html_meta_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _make_careers_page():
-    # factory so the template is a <locals> closure: cloudpickle
-    # serializes it BY VALUE into mapInPandas closures instead of
-    # an import reference that foreign-cwd Python workers can't
-    # resolve (caught by tools/driver_sim.py)
+    # a <locals> closure, so it pickles by value (see templated_extract)
     def _careers_page(doc_id: int) -> str:
         """Careers page: a job table (Title/Location/Department headers,
         doc_id%4 rows, per-row apply link) plus, for every 5th doc, a
@@ -404,7 +429,7 @@ def make_job_extractor():
                 self._row_has_th = False
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if tag == "table":
                     self._table_depth += 1
                     self._is_job_table = False
@@ -502,29 +527,9 @@ def make_job_extractor():
 )
 def html_job_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-
-    # construct the extractor DRIVER-side: the pickled closure then
-    # captures the <locals> extract function by value instead of
-    # referencing the module-level factory by name (unimportable on
-    # foreign-cwd workers — tools/driver_sim.py regression)
-    inner = make_job_extractor()
-
-    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": pdf["doc_id"].map(_careers_page),
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, JOBS_SCHEMA).orderBy("doc_id", "src", "href")
+    return templated_extract(d, _careers_page, make_job_extractor(), JOBS_SCHEMA).orderBy(
+        "doc_id", "src", "href"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -532,10 +537,7 @@ def html_job_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _make_article_page():
-    # factory so the template is a <locals> closure: cloudpickle
-    # serializes it BY VALUE into mapInPandas closures instead of
-    # an import reference that foreign-cwd Python workers can't
-    # resolve (caught by tools/driver_sim.py)
+    # a <locals> closure, so it pickles by value (see templated_extract)
     def _article_page(doc_id: int, text: str) -> str:
         """Article page exercising the extraction cascade by doc_id%3:
         0 → JSON-LD NewsArticle (headline/author/datePublished) present
@@ -609,7 +611,7 @@ def make_article_extractor():
                 self._article_depth = 0
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if tag == "title":
                     self._in_title = True
                 elif tag == "script" and a.get("type") == "application/ld+json":
@@ -730,31 +732,9 @@ def make_article_extractor():
 )
 def html_article_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id", "text")
-
-    # construct the extractor DRIVER-side: the pickled closure then
-    # captures the <locals> extract function by value instead of
-    # referencing the module-level factory by name (unimportable on
-    # foreign-cwd workers — tools/driver_sim.py regression)
-    inner = make_article_extractor()
-
-    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _article_page(r.doc_id, r.text) for r in pdf.itertuples()
-                        ],
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, ARTICLE_SCHEMA).orderBy("doc_id")
+    return templated_extract(d, _article_page, make_article_extractor(), ARTICLE_SCHEMA).orderBy(
+        "doc_id"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -762,10 +742,7 @@ def html_article_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _make_readability_page():
-    # factory so the template is a <locals> closure: cloudpickle
-    # serializes it BY VALUE into mapInPandas closures instead of
-    # an import reference that foreign-cwd Python workers can't
-    # resolve (caught by tools/driver_sim.py)
+    # a <locals> closure, so it pickles by value (see templated_extract)
     def _readability_page(doc_id: int, text: str) -> str:
         """Template a page with four top-level blocks of very different
         link densities (the shape trafilatura/readability must untangle,
@@ -822,7 +799,7 @@ def make_block_profiler():
                     if self._depth == 1:
                         self._cur = {
                             "block_id": len(self.blocks),
-                            "block": dict(attrs).get("class", ""),
+                            "block": dict(attrs).get("class") or "",
                             "text_len": 0,
                             "link_len": 0,
                         }
@@ -912,31 +889,7 @@ def html_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id", "text")
-
-    # construct the extractor DRIVER-side: the pickled closure then
-    # captures the <locals> extract function by value instead of
-    # referencing the module-level factory by name (unimportable on
-    # foreign-cwd workers — tools/driver_sim.py regression)
-    inner = make_block_profiler()
-
-    def template_then_profile(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": [
-                            _readability_page(r.doc_id, r.text) for r in pdf.itertuples()
-                        ],
-                    }
-                )
-
-        yield from inner(paged())
-
-    blocks = d.mapInPandas(template_then_profile, BLOCK_SCHEMA)
+    blocks = templated_extract(d, _readability_page, make_block_profiler(), BLOCK_SCHEMA)
     score = (F.col("text_len") - F.col("link_len")).cast("long")
     w = Window.partitionBy("doc_id").orderBy(F.desc("main_score"), F.asc("block_id"))
     return (
@@ -975,7 +928,6 @@ def make_class_pattern_job_extractor():
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import re as _re
 
-        import pandas as _pd
         from html.parser import HTMLParser
 
         job_class = _re.compile(r"job|position|opening|listing", _re.I)
@@ -992,7 +944,7 @@ def make_class_pattern_job_extractor():
                 self._loc: list[str] | None = None
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if self._job is None:
                     if tag in ("div", "li", "tr") and (
                         job_class.search(a.get("class", "")) or "data-job-id" in a
@@ -1033,30 +985,14 @@ def make_class_pattern_job_extractor():
                 elif self._loc is not None:
                     self._loc.append(data)
 
+        cols = ["doc_id", "job_id", "title", "location"]
         for pdf in batches:
             out = []
             for doc_id, html in zip(pdf["doc_id"], pdf["html"]):
                 p = ClassJobParser()
                 p.feed(html)
-                for j in p.jobs:
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "job_id": j["job_id"],
-                            "title": j["title"],
-                            "location": j["location"],
-                        }
-                    )
-            yield (
-                _pd.DataFrame(out)
-                if out
-                else _pd.DataFrame(
-                    {"doc_id": _pd.Series(dtype="int64"),
-                     "job_id": _pd.Series(dtype="object"),
-                     "title": _pd.Series(dtype="object"),
-                     "location": _pd.Series(dtype="object")}
-                )
-            )
+                out += [(doc_id, j["job_id"], j["title"], j["location"]) for j in p.jobs]
+            yield _typed_frame(out, cols, {"doc_id": "int64"})
 
     return extract
 
@@ -1084,38 +1020,26 @@ def make_class_pattern_job_extractor():
 )
 def html_class_pattern_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_class_pattern_job_extractor()
 
-    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def listing_page(doc_id: int) -> str:
-            blocks = ['<div class="nav-item"><h3>Decoy</h3></div>']
-            for j0 in range(doc_id % 3 + 1):
-                cls, with_id = [
-                    ("job-listing", True),   # matching class + id
-                    ("position-card", False),  # matching class only
-                    ("row", True),           # rescued by data-job-id
-                    ("opening-row", True),
-                ][j0 % 4]
-                idattr = f' data-job-id="J{doc_id}-{j0}"' if with_id else ""
-                blocks.append(
-                    f'<li class="{cls}"{idattr}><h3>Role {doc_id}-{j0}</h3>'
-                    f'<span class="location">City {(doc_id + j0) % 50}</span></li>'
-                )
-            return "<html><body><ul>" + "".join(blocks) + "</ul></body></html>"
+    def listing_page(doc_id: int) -> str:
+        blocks = ['<div class="nav-item"><h3>Decoy</h3></div>']
+        for j0 in range(doc_id % 3 + 1):
+            cls, with_id = [
+                ("job-listing", True),   # matching class + id
+                ("position-card", False),  # matching class only
+                ("row", True),           # rescued by data-job-id
+                ("opening-row", True),
+            ][j0 % 4]
+            idattr = f' data-job-id="J{doc_id}-{j0}"' if with_id else ""
+            blocks.append(
+                f'<li class="{cls}"{idattr}><h3>Role {doc_id}-{j0}</h3>'
+                f'<span class="location">City {(doc_id + j0) % 50}</span></li>'
+            )
+        return "<html><body><ul>" + "".join(blocks) + "</ul></body></html>"
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(listing_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, CLASS_JOBS_SCHEMA).orderBy(
-        "doc_id", "title"
-    )
+    return templated_extract(
+        d, listing_page, make_class_pattern_job_extractor(), CLASS_JOBS_SCHEMA
+    ).orderBy("doc_id", "title")
 
 
 NAV_SCHEMA = "doc_id long, region string, pos long, text string, href string, meta string"
@@ -1144,7 +1068,6 @@ def make_nav_extractor():
     each-card-once dedup deviation)."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
         from urllib.parse import urljoin
 
@@ -1169,7 +1092,7 @@ def make_nav_extractor():
             _REGION_TAGS = ("nav", "header", "footer", "ol", "ul")
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 cls = a.get("class", "")
                 if tag in self._REGION_TAGS:
                     region: str | None = None
@@ -1294,18 +1217,10 @@ def make_nav_extractor():
                 for _, row in pdf.iterrows()
                 for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
             ]
-            out = _pd.DataFrame(
-                rows, columns=["doc_id", "region", "pos", "text", "href", "meta"]
-            )
-            yield out.astype({"doc_id": "int64", "pos": "int64"}) if len(out) else _pd.DataFrame(
-                {
-                    "doc_id": _pd.Series(dtype="int64"),
-                    "region": _pd.Series(dtype="str"),
-                    "pos": _pd.Series(dtype="int64"),
-                    "text": _pd.Series(dtype="str"),
-                    "href": _pd.Series(dtype="str"),
-                    "meta": _pd.Series(dtype="str"),
-                }
+            yield _typed_frame(
+                rows,
+                ["doc_id", "region", "pos", "text", "href", "meta"],
+                {"doc_id": "int64", "pos": "int64"},
             )
 
     return extract
@@ -1325,8 +1240,9 @@ def make_nav_extractor():
     "scoping AND the urljoin semantics (page-relative 'news' must "
     "resolve to /products/news, not /news). Breadcrumbs rotate off "
     "every 4th page and carry a plain nested <ul> whose close must "
-    "not end the crumb region (r7 stack fix); HTML5/lxml ignore the "
-    "'/' on a non-void start tag, so the reference's BeautifulSoup"
+    "not end the crumb region (a region stack, not a counter); "
+    "HTML5/lxml ignore the '/' on a non-void start tag, so the "
+    "reference's BeautifulSoup"
     "(html, 'lxml') keeps that <nav/> OPEN and the anchor after it "
     "IS main_nav (pos 4) — the slash-ignored parity, driver-checked.",
     oracle="""
@@ -1360,57 +1276,38 @@ def make_nav_extractor():
 def nav_structure_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
 
-    inner = make_nav_extractor()
+    def nav_page(doc_id: int) -> str:
+        co = f"co{doc_id}"
+        # the plain nested <ul> inside the breadcrumb container is
+        # the stack-bookkeeping shape: its </ul> must NOT end
+        # the crumb region, so Docs AND the Products crumb after
+        # it stay breadcrumbs (ref scraper_v2.py:938-947 finds all
+        # container descendants)
+        crumb = (
+            f'<ol class="crumbs breadcrumb-path"><li><a href="/">Home</a></li>'
+            f'<li><ul class="sub"><li><a href="/products/docs">Docs</a></li></ul></li>'
+            f'<li><a href="/products">Products</a></li></ol>'
+            if doc_id % 4 != 0
+            else ""
+        )
+        return (
+            "<html><body>"
+            f'<nav><a href="/about">About</a>'
+            f'<a class="cta primary" href="https://{co}.com/jobs">Jobs</a></nav>'
+            f'<header><a href="news">News</a></header>'
+            f"{crumb}"
+            # self-closing region tag: HTML5/lxml ignore the "/"
+            # on a non-void start tag, so this nav stays OPEN and
+            # the anchor below is main_nav pos 4 (lxml parity —
+            # treating <nav/> as closed dropped the row)
+            "<nav/>"
+            f'<p>Visit <a href="/ignored">after nav</a>.</p>'
+            f'<footer><a href="/privacy">Privacy Policy</a>'
+            f'<a href="/terms">Terms</a></footer>'
+            "</body></html>"
+        )
 
-    def template_then_parse(batches):
-        def nav_page(doc_id: int) -> str:
-            co = f"co{doc_id}"
-            # the plain nested <ul> inside the breadcrumb container is
-            # the r7 stack-bookkeeping shape: its </ul> must NOT end
-            # the crumb region, so Docs AND the Products crumb after
-            # it stay breadcrumbs (ref scraper_v2.py:938-947 finds all
-            # container descendants)
-            crumb = (
-                f'<ol class="crumbs breadcrumb-path"><li><a href="/">Home</a></li>'
-                f'<li><ul class="sub"><li><a href="/products/docs">Docs</a></li></ul></li>'
-                f'<li><a href="/products">Products</a></li></ol>'
-                if doc_id % 4 != 0
-                else ""
-            )
-            return (
-                "<html><body>"
-                f'<nav><a href="/about">About</a>'
-                f'<a class="cta primary" href="https://{co}.com/jobs">Jobs</a></nav>'
-                f'<header><a href="news">News</a></header>'
-                f"{crumb}"
-                # self-closing region tag: HTML5/lxml ignore the "/"
-                # on a non-void start tag, so this nav stays OPEN and
-                # the anchor below is main_nav pos 4 (r8 parity fix —
-                # treating <nav/> as closed dropped the row)
-                "<nav/>"
-                f'<p>Visit <a href="/ignored">after nav</a>.</p>'
-                f'<footer><a href="/privacy">Privacy Policy</a>'
-                f'<a href="/terms">Terms</a></footer>'
-                "</body></html>"
-            )
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "base_url": pdf["doc_id"].map(
-                            lambda i: f"https://co{i}.com/products/page"
-                        ),
-                        "html": pdf["doc_id"].map(nav_page),
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, NAV_SCHEMA).orderBy(
+    return templated_extract(d, nav_page, make_nav_extractor(), NAV_SCHEMA, base_url=True).orderBy(
         "doc_id", "region", "pos"
     )
 
@@ -1442,7 +1339,6 @@ def make_link_inventory_extractor():
     cats = _LINK_CATEGORIES
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
         from urllib.parse import urljoin, urlparse
 
@@ -1454,7 +1350,7 @@ def make_link_inventory_extractor():
 
             def handle_starttag(self, tag, attrs):
                 if tag == "a":
-                    a = dict(attrs)
+                    a = {k: v or "" for k, v in attrs}
                     if "href" in a:
                         self.cur = {"href": a["href"], "title": a.get("title", ""), "text": []}
 
@@ -1495,21 +1391,14 @@ def make_link_inventory_extractor():
             "doc_id", "pos", "href", "full_url", "text", "title",
             "category", "is_external", "is_same_domain",
         ]
+        ints = dict.fromkeys(("doc_id", "pos", "is_external", "is_same_domain"), "int64")
         for pdf in batches:
             rows = [
                 r
                 for _, row in pdf.iterrows()
                 for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype(
-                {"doc_id": "int64", "pos": "int64", "is_external": "int64", "is_same_domain": "int64"}
-            ) if len(out) else _pd.DataFrame(
-                {
-                    c: _pd.Series(dtype="int64" if c in ("doc_id", "pos", "is_external", "is_same_domain") else "str")
-                    for c in cols
-                }
-            )
+            yield _typed_frame(rows, cols, ints)
 
     return extract
 
@@ -1557,39 +1446,23 @@ def make_link_inventory_extractor():
 )
 def html_link_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_link_inventory_extractor()
 
-    def template_then_parse(batches):
-        def link_page(doc_id: int) -> str:
-            extra = (
-                '<a href="/pricing/plans">Plans</a>' if doc_id % 2 == 0 else ""
-            )
-            return (
-                "<html><body>"
-                f'<a href="/careers/eng" title="Open roles">Jobs at Co</a>'
-                f'<a href="https://partner{doc_id}.org/about">Partner</a>'
-                f'<a href="docs/guide">Docs</a>'
-                f"{extra}"
-                "</body></html>"
-            )
+    def link_page(doc_id: int) -> str:
+        extra = (
+            '<a href="/pricing/plans">Plans</a>' if doc_id % 2 == 0 else ""
+        )
+        return (
+            "<html><body>"
+            f'<a href="/careers/eng" title="Open roles">Jobs at Co</a>'
+            f'<a href="https://partner{doc_id}.org/about">Partner</a>'
+            f'<a href="docs/guide">Docs</a>'
+            f"{extra}"
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "base_url": pdf["doc_id"].map(
-                            lambda i: f"https://co{i}.com/products/page"
-                        ),
-                        "html": pdf["doc_id"].map(link_page),
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, LINKS_SCHEMA).orderBy("doc_id", "pos")
+    return templated_extract(
+        d, link_page, make_link_inventory_extractor(), LINKS_SCHEMA, base_url=True
+    ).orderBy("doc_id", "pos")
 
 
 TABLES_SCHEMA = (
@@ -1608,7 +1481,6 @@ def make_table_extractor():
     cells (same shape rationale as label_centroids_udaf)."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
 
         class TableParser(HTMLParser):
@@ -1699,21 +1571,13 @@ def make_table_extractor():
         cols = ["doc_id", "tbl", "caption", "kind", "r", "c", "value"]
         for pdf in batches:
             # zip over the two columns, not iterrows() — a Series is
-            # materialized per row under iterrows (r17, guide §4.2)
+            # materialized per row under iterrows
             rows = [
                 r
                 for doc_id, html in zip(pdf["doc_id"], pdf["html"])
                 for r in walk(int(doc_id), html)
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype({"doc_id": "int64", "tbl": "int64", "r": "int64", "c": "int64"}) if len(
-                out
-            ) else _pd.DataFrame(
-                {
-                    c: _pd.Series(dtype="int64" if c in ("doc_id", "tbl", "r", "c") else "str")
-                    for c in cols
-                }
-            )
+            yield _typed_frame(rows, cols, dict.fromkeys(("doc_id", "tbl", "r", "c"), "int64"))
 
     return extract
 
@@ -1757,38 +1621,26 @@ def make_table_extractor():
 )
 def html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_table_extractor()
 
-    def template_then_parse(batches):
-        def table_page(doc_id: int) -> str:
-            second = (
-                "<table><tr><th>Region</th><th>Count</th></tr>"
-                f"<tr><td>EU</td><td>{doc_id % 7}</td></tr></table>"
-                if doc_id % 3 != 1
-                else ""
-            )
-            return (
-                "<html><body>"
-                f"<table><caption>Pricing {doc_id}</caption>"
-                "<thead><tr><th>Product</th><th>Price</th></tr></thead>"
-                f"<tbody><tr><td>Basic</td><td>${doc_id}</td></tr>"
-                f"<tr><td>Pro</td><td>${doc_id * 2}</td></tr></tbody></table>"
-                f"{second}"
-                '<table id="empty"><caption>decoy</caption></table>'
-                "</body></html>"
-            )
+    def table_page(doc_id: int) -> str:
+        second = (
+            "<table><tr><th>Region</th><th>Count</th></tr>"
+            f"<tr><td>EU</td><td>{doc_id % 7}</td></tr></table>"
+            if doc_id % 3 != 1
+            else ""
+        )
+        return (
+            "<html><body>"
+            f"<table><caption>Pricing {doc_id}</caption>"
+            "<thead><tr><th>Product</th><th>Price</th></tr></thead>"
+            f"<tbody><tr><td>Basic</td><td>${doc_id}</td></tr>"
+            f"<tr><td>Pro</td><td>${doc_id * 2}</td></tr></tbody></table>"
+            f"{second}"
+            '<table id="empty"><caption>decoy</caption></table>'
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(table_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, TABLES_SCHEMA).orderBy(
+    return templated_extract(d, table_page, make_table_extractor(), TABLES_SCHEMA).orderBy(
         "doc_id", "tbl", "kind", "r", "c"
     )
 
@@ -1811,7 +1663,6 @@ def make_form_extractor():
     unconditionally."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
 
         class FormParser(HTMLParser):
@@ -1824,7 +1675,7 @@ def make_form_extractor():
                 self.labels: dict[str, str] = {}
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 if tag == "form":
                     self.f = {
                         "action": a.get("action", ""),
@@ -1895,16 +1746,9 @@ def make_form_extractor():
                 for _, row in pdf.iterrows()
                 for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            ints = {"doc_id": "int64", "form_pos": "int64", "field_pos": "int64"}
-            yield out.astype(ints) if len(out) else _pd.DataFrame(
-                {
-                    c: _pd.Series(
-                        dtype="int64" if c in (*ints, "required") else "str"
-                    )
-                    for c in cols
-                }
-            )
+            # required stays object: a field-less form's row holds None
+            ints = dict.fromkeys(("doc_id", "form_pos", "field_pos"), "int64")
+            yield _typed_frame(rows, cols, ints)
 
     return extract
 
@@ -1946,35 +1790,23 @@ def make_form_extractor():
 )
 def html_form_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_form_extractor()
 
-    def template_then_parse(batches):
-        def form_page(doc_id: int) -> str:
-            method_attr = ' method="post"' if doc_id % 2 == 0 else ""
-            return (
-                "<html><body>"
-                f'<label for="fld{doc_id}">Email address</label>'
-                f'<form action="/subscribe{doc_id % 5}"{method_attr}>'
-                f'<input type="email" name="email" id="fld{doc_id}"'
-                ' placeholder="you@example.com"/>'
-                '<select name="topic"><option>a</option></select>'
-                '<textarea name="msg" required></textarea>'
-                "</form>"
-                "<form></form>"
-                "</body></html>"
-            )
+    def form_page(doc_id: int) -> str:
+        method_attr = ' method="post"' if doc_id % 2 == 0 else ""
+        return (
+            "<html><body>"
+            f'<label for="fld{doc_id}">Email address</label>'
+            f'<form action="/subscribe{doc_id % 5}"{method_attr}>'
+            f'<input type="email" name="email" id="fld{doc_id}"'
+            ' placeholder="you@example.com"/>'
+            '<select name="topic"><option>a</option></select>'
+            '<textarea name="msg" required></textarea>'
+            "</form>"
+            "<form></form>"
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(form_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, FORMS_SCHEMA).orderBy(
+    return templated_extract(d, form_page, make_form_extractor(), FORMS_SCHEMA).orderBy(
         "doc_id", "form_pos", "field_pos"
     )
 
@@ -1993,7 +1825,6 @@ def make_image_inventory_extractor():
     logo/brand/company."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
         from urllib.parse import urljoin
 
@@ -2004,7 +1835,7 @@ def make_image_inventory_extractor():
 
             def handle_starttag(self, tag, attrs):
                 if tag == "img":
-                    a = dict(attrs)
+                    a = {k: v or "" for k, v in attrs}
                     src = a.get("src") or a.get("data-src") or a.get("data-lazy-src")
                     if not src:
                         return
@@ -2042,11 +1873,7 @@ def make_image_inventory_extractor():
                 for _, row in pdf.iterrows()
                 for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            ints = {"doc_id": "int64", "pos": "int64", "is_logo": "int64"}
-            yield out.astype(ints) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype="int64" if c in ints else "str") for c in cols}
-            )
+            yield _typed_frame(rows, cols, dict.fromkeys(("doc_id", "pos", "is_logo"), "int64"))
 
     return extract
 
@@ -2087,42 +1914,26 @@ def make_image_inventory_extractor():
 )
 def html_image_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_image_inventory_extractor()
 
-    def template_then_parse(batches):
-        def image_page(doc_id: int) -> str:
-            both = (
-                f'<img src="/a{doc_id}.png" data-src="/b.png" alt="x"/>'
-                if doc_id % 2 == 0
-                else ""
-            )
-            return (
-                "<html><body>"
-                f'<img src="/img/hero{doc_id}.png" alt="Team at work"/>'
-                f'<img data-src="/cdn/logo{doc_id}.svg" alt="Acme logo"/>'
-                '<img data-lazy-src="assets/mark.png" class="brand-mark nav"/>'
-                '<img alt="no source"/>'
-                f"{both}"
-                "</body></html>"
-            )
+    def image_page(doc_id: int) -> str:
+        both = (
+            f'<img src="/a{doc_id}.png" data-src="/b.png" alt="x"/>'
+            if doc_id % 2 == 0
+            else ""
+        )
+        return (
+            "<html><body>"
+            f'<img src="/img/hero{doc_id}.png" alt="Team at work"/>'
+            f'<img data-src="/cdn/logo{doc_id}.svg" alt="Acme logo"/>'
+            '<img data-lazy-src="assets/mark.png" class="brand-mark nav"/>'
+            '<img alt="no source"/>'
+            f"{both}"
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "base_url": pdf["doc_id"].map(
-                            lambda i: f"https://co{i}.com/products/page"
-                        ),
-                        "html": pdf["doc_id"].map(image_page),
-                    }
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, IMAGES_SCHEMA).orderBy("doc_id", "pos")
+    return templated_extract(
+        d, image_page, make_image_inventory_extractor(), IMAGES_SCHEMA, base_url=True
+    ).orderBy("doc_id", "pos")
 
 
 TEXT_STRUCT_SCHEMA = "doc_id long, kind string, pos long, attr string, text string"
@@ -2141,7 +1952,6 @@ def make_text_structure_extractor():
     strip=True in the function)."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
 
         GRAB = {"p", "blockquote", "code", "pre", "li"}
@@ -2215,10 +2025,7 @@ def make_text_structure_extractor():
             rows = [
                 r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype({"doc_id": "int64", "pos": "int64"}) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype="int64" if c in ("doc_id", "pos") else "str") for c in cols}
-            )
+            yield _typed_frame(rows, cols, {"doc_id": "int64", "pos": "int64"})
 
     return extract
 
@@ -2255,37 +2062,25 @@ def make_text_structure_extractor():
 )
 def html_text_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_text_structure_extractor()
 
-    def template_then_parse(batches):
-        def text_page(doc_id: int) -> str:
-            ol = f"<ol><li>One</li></ol>" if doc_id % 3 == 0 else ""
-            return (
-                "<html><body>"
-                f'<h2 id="s1">Second level {doc_id}</h2>'
-                f"<h1>Top{doc_id}</h1>"
-                "<p>tiny</p>"
-                f"<p>This paragraph is long enough {doc_id}.</p>"
-                f"<ul><li>Alpha</li><li>Beta {doc_id % 5}</li></ul>"
-                f"{ol}"
-                f"<blockquote>Quoted wisdom {doc_id % 9}</blockquote>"
-                f"<pre>  raw {doc_id}  </pre>"
-                "</body></html>"
-            )
+    def text_page(doc_id: int) -> str:
+        ol = f"<ol><li>One</li></ol>" if doc_id % 3 == 0 else ""
+        return (
+            "<html><body>"
+            f'<h2 id="s1">Second level {doc_id}</h2>'
+            f"<h1>Top{doc_id}</h1>"
+            "<p>tiny</p>"
+            f"<p>This paragraph is long enough {doc_id}.</p>"
+            f"<ul><li>Alpha</li><li>Beta {doc_id % 5}</li></ul>"
+            f"{ol}"
+            f"<blockquote>Quoted wisdom {doc_id % 9}</blockquote>"
+            f"<pre>  raw {doc_id}  </pre>"
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(text_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, TEXT_STRUCT_SCHEMA).orderBy(
-        "doc_id", "kind", "pos"
-    )
+    return templated_extract(
+        d, text_page, make_text_structure_extractor(), TEXT_STRUCT_SCHEMA
+    ).orderBy("doc_id", "kind", "pos")
 
 
 SCRIPTS_SCHEMA = (
@@ -2306,7 +2101,6 @@ def make_script_inventory_extractor():
     def extract(batches):
         import json as _json
 
-        import pandas as _pd
         from html.parser import HTMLParser
 
         KEYWORDS = ("jobs", "products", "team", "funding", "customers")
@@ -2319,7 +2113,7 @@ def make_script_inventory_extractor():
 
             def handle_starttag(self, tag, attrs):
                 if tag == "script":
-                    a = dict(attrs)
+                    a = {k: v or "" for k, v in attrs}
                     self.cur = {
                         "src": a.get("src", ""),
                         "stype": a.get("type", ""),
@@ -2373,10 +2167,7 @@ def make_script_inventory_extractor():
             rows = [
                 r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype(ints) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype=ints.get(c, "str")) for c in cols}
-            )
+            yield _typed_frame(rows, cols, ints)
 
     return extract
 
@@ -2413,33 +2204,23 @@ def make_script_inventory_extractor():
 )
 def html_script_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_script_inventory_extractor()
 
-    def template_then_parse(batches):
-        def script_page(doc_id: int) -> str:
-            # script 3: 26-char body; 'jobs' keyword only on even docs
-            body3 = 'var a = "jobs listing";;;' if doc_id % 2 == 0 else 'var a = "misc page text";'
-            assert len(body3) == 25
-            return (
-                "<html><head>"
-                f'<script src="/static/app{doc_id % 10}.js" async></script>'
-                f'<script type="application/ld+json">{{"id": {doc_id}, "x": 1}}</script>'
-                f"<script defer>{body3} </script>"
-                "<script>{not valid js}</script>"
-                "</head></html>"
-            )
+    def script_page(doc_id: int) -> str:
+        # script 3: 26-char body; 'jobs' keyword only on even docs
+        body3 = 'var a = "jobs listing";;;' if doc_id % 2 == 0 else 'var a = "misc page text";'
+        assert len(body3) == 25
+        return (
+            "<html><head>"
+            f'<script src="/static/app{doc_id % 10}.js" async></script>'
+            f'<script type="application/ld+json">{{"id": {doc_id}, "x": 1}}</script>'
+            f"<script defer>{body3} </script>"
+            "<script>{not valid js}</script>"
+            "</head></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(script_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, SCRIPTS_SCHEMA).orderBy("doc_id", "pos")
+    return templated_extract(
+        d, script_page, make_script_inventory_extractor(), SCRIPTS_SCHEMA
+    ).orderBy("doc_id", "pos")
 
 
 PRICING_SCHEMA = (
@@ -2471,7 +2252,6 @@ def make_pricing_page_parser():
     def extract(batches):
         import re as _re
 
-        import pandas as _pd
         from html.parser import HTMLParser
 
         PRICE_RE = _re.compile(r"\$\s*(\d+(?:,\d{3})*(?:\.\d{2})?)")
@@ -2486,7 +2266,7 @@ def make_pricing_page_parser():
                 self.in_heading = False
 
             def handle_starttag(self, tag, attrs):
-                cls = dict(attrs).get("class", "").lower()
+                cls = (dict(attrs).get("class") or "").lower()
                 if tag in ("div", "section"):
                     if self.card_depth:
                         # any div/section nested inside an open card
@@ -2557,10 +2337,7 @@ def make_pricing_page_parser():
             rows = [
                 r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype({"doc_id": "int64", "tier_pos": "int64"}) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype="int64" if c in ("doc_id", "tier_pos") else "str") for c in cols}
-            )
+            yield _typed_frame(rows, cols, {"doc_id": "int64", "tier_pos": "int64"})
 
     return extract
 
@@ -2574,7 +2351,7 @@ def make_pricing_page_parser():
     "'pro'-inside-'professional' quirk), $-regex price including the "
     "sign (comma/decimal form every other page), and the h2-h4 "
     "heading fallback on every 5th page (no cards). Card 1 nests a "
-    "non-matching <div> so the r7 balanced card_depth is what keeps "
+    "non-matching <div> so the balanced card_depth is what keeps "
     "its trailing text (driver-checked). Model rotates "
     "per-seat / usage-based / enterprise+contact / none by doc_id%4, "
     "decoupled from the tier rows by keyword-free card text on the "
@@ -2606,48 +2383,36 @@ def make_pricing_page_parser():
 )
 def pricing_page_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_pricing_page_parser()
 
-    def template_then_parse(batches):
-        def pricing_page(doc_id: int) -> str:
-            m = doc_id % 4
-            model_p = {
-                0: "<p>Billed per user monthly.</p>",
-                1: "<p>Pay as you go pricing.</p>",
-                2: "<p>Enterprise? contact sales.</p>",
-                3: "<p>Flexible billing options.</p>",
-            }[m]
-            if doc_id % 5 == 0:
-                return (
-                    "<html><body>"
-                    f"{model_p}<h2>Why us</h2><h3>Premium support</h3>"
-                    "</body></html>"
-                )
-            price = "$1,299.00" if doc_id % 2 == 0 else "$29"
-            card2_word = "Premium tier" if m == 3 else "Enterprise: contact sales"
-            # the nested non-matching <div> is the r7 balanced-depth
-            # shape: its close must deepen-then-pop, not end the card,
-            # or the trailing "Professional plan $..." text is lost
+    def pricing_page(doc_id: int) -> str:
+        m = doc_id % 4
+        model_p = {
+            0: "<p>Billed per user monthly.</p>",
+            1: "<p>Pay as you go pricing.</p>",
+            2: "<p>Enterprise? contact sales.</p>",
+            3: "<p>Flexible billing options.</p>",
+        }[m]
+        if doc_id % 5 == 0:
             return (
                 "<html><body>"
-                f"{model_p}"
-                f'<div class="price-card"><div class="badge">Popular</div>'
-                f"Professional plan {price}/mo</div>"
-                f'<section class="tier-list">{card2_word}</section>'
+                f"{model_p}<h2>Why us</h2><h3>Premium support</h3>"
                 "</body></html>"
             )
+        price = "$1,299.00" if doc_id % 2 == 0 else "$29"
+        card2_word = "Premium tier" if m == 3 else "Enterprise: contact sales"
+        # the nested non-matching <div> is the balanced-depth
+        # shape: its close must deepen-then-pop, not end the card,
+        # or the trailing "Professional plan $..." text is lost
+        return (
+            "<html><body>"
+            f"{model_p}"
+            f'<div class="price-card"><div class="badge">Popular</div>'
+            f"Professional plan {price}/mo</div>"
+            f'<section class="tier-list">{card2_word}</section>'
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(pricing_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, PRICING_SCHEMA).orderBy(
+    return templated_extract(d, pricing_page, make_pricing_page_parser(), PRICING_SCHEMA).orderBy(
         "doc_id", "tier_pos"
     )
 
@@ -2668,7 +2433,6 @@ def make_customer_partner_parser():
     deviation: same membership, defined order)."""
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
 
         class MentionParser(HTMLParser):
@@ -2683,7 +2447,7 @@ def make_customer_partner_parser():
                 self.part_items: list[str] = []
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 cls = a.get("class", "").lower()
                 if tag == "img" and "alt" in a:
                     self.img_alts.append(a["alt"].strip())
@@ -2729,10 +2493,7 @@ def make_customer_partner_parser():
             rows = [
                 r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype({"doc_id": "int64"}) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype="int64" if c == "doc_id" else "str") for c in cols}
-            )
+            yield _typed_frame(rows, cols, {"doc_id": "int64"})
 
     return extract
 
@@ -2769,36 +2530,24 @@ def make_customer_partner_parser():
 )
 def customer_partner_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_customer_partner_parser()
 
-    def template_then_parse(batches):
-        def mention_page(doc_id: int) -> str:
-            return (
-                "<html><body>"
-                f'<img alt="Acme Corp {doc_id % 7}"/>'
-                '<img alt="BigCo logo"/>'
-                '<img alt=""/>'
-                f'<ul class="customer-grid"><li>Client One</li>'
-                f"<li>Client {doc_id % 3}</li></ul>"
-                f'<div class="integration-list"><a>Zapier</a>'
-                f"<a>Slack {doc_id % 4}</a></div>"
-                '<div class="features"><a>Decoy Item</a></div>'
-                "</body></html>"
-            )
+    def mention_page(doc_id: int) -> str:
+        return (
+            "<html><body>"
+            f'<img alt="Acme Corp {doc_id % 7}"/>'
+            '<img alt="BigCo logo"/>'
+            '<img alt=""/>'
+            f'<ul class="customer-grid"><li>Client One</li>'
+            f"<li>Client {doc_id % 3}</li></ul>"
+            f'<div class="integration-list"><a>Zapier</a>'
+            f"<a>Slack {doc_id % 4}</a></div>"
+            '<div class="features"><a>Decoy Item</a></div>'
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(mention_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, MENTIONS_SCHEMA).orderBy(
-        "doc_id", "kind", "name"
-    )
+    return templated_extract(
+        d, mention_page, make_customer_partner_parser(), MENTIONS_SCHEMA
+    ).orderBy("doc_id", "kind", "name")
 
 
 TEAM_SCHEMA = "doc_id long, card_pos long, name string, job_title string, same_as string"
@@ -2867,7 +2616,6 @@ def make_team_extractor():
     valid = _make_team_validator()
 
     def extract(batches):
-        import pandas as _pd
         from html.parser import HTMLParser
 
         NAME_TAGS = {"h1", "h2", "h3", "h4", "h5", "strong", "span"}
@@ -2924,7 +2672,7 @@ def make_team_extractor():
                     self._pop()
 
             def handle_starttag(self, tag, attrs):
-                a = dict(attrs)
+                a = {k: v or "" for k, v in attrs}
                 cls = a.get("class", "").lower()
                 if self.card is None:
                     if tag == "div" and any(k in cls for k in ("team", "member", "person")):
@@ -3004,10 +2752,7 @@ def make_team_extractor():
             rows = [
                 r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
             ]
-            out = _pd.DataFrame(rows, columns=cols)
-            yield out.astype({"doc_id": "int64", "card_pos": "int64"}) if len(out) else _pd.DataFrame(
-                {c: _pd.Series(dtype="int64" if c in ("doc_id", "card_pos") else "str") for c in cols}
-            )
+            yield _typed_frame(rows, cols, {"doc_id": "int64", "card_pos": "int64"})
 
     return extract
 
@@ -3024,7 +2769,7 @@ def make_team_extractor():
     "hitting the 'engineering office' exclude, a lowercase 'van der "
     "Berg') must all be rejected while the three real members "
     "survive; the second card's role <p> is unclosed so the lxml "
-    "implied-close (r8) is what keeps the third card alive — both "
+    "implied-close is what keeps the third card alive — both "
     "driver-checked. Deviation from "
     "the reference documented in make_team_extractor: overlapping "
     "selectors are deduped to one pass per element.",
@@ -3050,43 +2795,33 @@ def make_team_extractor():
 )
 def team_page_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents", fan_out=True).select("doc_id")
-    inner = make_team_extractor()
 
-    def template_then_parse(batches):
-        def team_page(doc_id: int) -> str:
-            # Grace's role <p> is deliberately UNCLOSED (the r8
-            # implied-close shape: her card's </div> must end it, or
-            # every later card — including Alan's real one — is
-            # swallowed), and a 'Speak With Us' decoy exercises the r7
-            # validator prefix; Alan sits LAST so any depth unbalance
-            # above him hash-mismatches.
-            return (
-                "<html><body>"
-                '<div class="team-member">'
-                f'<h3 class="member-name">Ada Lovelace {doc_id % 9}</h3>'
-                '<p class="role-title">Chief Engineer</p>'
-                f'<a href="https://linkedin.com/in/ada{doc_id}">profile</a></div>'
-                '<div class="person-card"><h4>Grace Hopper</h4>'
-                "<p>VP of Compute</div>"
-                '<div class="team-member"><h3>Plato</h3></div>'
-                '<div class="team-member"><h3>San Francisco Office</h3></div>'
-                '<div class="team-member"><h3>Speak With Us</h3></div>'
-                '<div class="member-box"><h3>John Smith</h3>'
-                '<p class="role">Engineering Office Lead</p></div>'
-                '<div class="team-member"><h3>van der Berg</h3></div>'
-                '<div class="team-crew"><h3 class="member-name">Alan Turing</h3>'
-                '<p class="title-role">Research Lead</p></div>'
-                "</body></html>"
-            )
+    def team_page(doc_id: int) -> str:
+        # Grace's role <p> is deliberately UNCLOSED (the lxml
+        # implied-close shape: her card's </div> must end it, or
+        # every later card — including Alan's real one — is
+        # swallowed), and a 'Speak With Us' decoy exercises the
+        # validator prefix; Alan sits LAST so any depth unbalance
+        # above him hash-mismatches.
+        return (
+            "<html><body>"
+            '<div class="team-member">'
+            f'<h3 class="member-name">Ada Lovelace {doc_id % 9}</h3>'
+            '<p class="role-title">Chief Engineer</p>'
+            f'<a href="https://linkedin.com/in/ada{doc_id}">profile</a></div>'
+            '<div class="person-card"><h4>Grace Hopper</h4>'
+            "<p>VP of Compute</div>"
+            '<div class="team-member"><h3>Plato</h3></div>'
+            '<div class="team-member"><h3>San Francisco Office</h3></div>'
+            '<div class="team-member"><h3>Speak With Us</h3></div>'
+            '<div class="member-box"><h3>John Smith</h3>'
+            '<p class="role">Engineering Office Lead</p></div>'
+            '<div class="team-member"><h3>van der Berg</h3></div>'
+            '<div class="team-crew"><h3 class="member-name">Alan Turing</h3>'
+            '<p class="title-role">Research Lead</p></div>'
+            "</body></html>"
+        )
 
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {"doc_id": pdf["doc_id"], "html": pdf["doc_id"].map(team_page)}
-                )
-
-        yield from inner(paged())
-
-    return d.mapInPandas(template_then_parse, TEAM_SCHEMA).orderBy("doc_id", "card_pos")
+    return templated_extract(d, team_page, make_team_extractor(), TEAM_SCHEMA).orderBy(
+        "doc_id", "card_pos"
+    )

@@ -15,7 +15,7 @@ join key and AQE handles skew/coalescing at runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
 
 from project_orbit_spark.catalog import load, maybe_broadcast, sort_bounded
@@ -279,6 +279,18 @@ def sentiment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _with_empty_total(grouped: GroupedData, o: DataFrame, *aggs: Column) -> DataFrame:
+    """``grouped.agg(*aggs)`` for a rollup or cube over ``o``, plus the
+    grand-total row when ``o`` is empty. Spark plans grouping sets as
+    Expand and a keyed Aggregate, which emits no row over empty input;
+    SQL's ``()`` set is one row there. A global aggregate always emits
+    that row; it is kept only when it counts no rows (``n_orders``),
+    since over any other input the keyed result already holds it. The
+    grouping keys come out NULL, as in the ``()`` set."""
+    total = o.agg(*aggs).filter(F.col("n_orders") == 0)
+    return grouped.agg(*aggs).unionByName(total, allowMissingColumns=True)
+
+
 @register(
     "rollup_order_stats",
     tags=("agg", "rollup"),
@@ -300,8 +312,9 @@ def sentiment_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
+        _with_empty_total(
+            o.rollup("o_orderstatus", "o_orderpriority"),
+            o,
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
@@ -345,6 +358,11 @@ def grouping_sets_orders_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
           round(sum(o_totalprice), 2)      AS total_price
         FROM orders_v
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        UNION ALL
+        -- the () set's row over an empty input (see _with_empty_total)
+        SELECT 'ALL', 'ALL', count(*), round(sum(o_totalprice), 2)
+        FROM orders_v
+        HAVING count(*) = 0
         ORDER BY orderstatus, orderpriority
         """
     )
@@ -445,8 +463,9 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
     )
     return (
-        o.cube("o_orderstatus", "order_year")
-        .agg(
+        _with_empty_total(
+            o.cube("o_orderstatus", "order_year"),
+            o,
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.round(F.sum("o_totalprice"), 2) / F.count(F.lit(1)), 6).alias("avg_price"),
         )

@@ -415,10 +415,8 @@ _HTML_VENDOR_PREFIX = ("IC", "WD", "OR", "JV")
 
 
 def _make_ats_listing_page():
-    # factory so the template is a <locals> closure: cloudpickle
-    # serializes it BY VALUE into mapInPandas closures instead of
-    # an import reference that foreign-cwd Python workers can't
-    # resolve (caught by tools/driver_sim.py)
+    # a <locals> closure, so it pickles by value (see
+    # functions.html_extract.templated_extract)
     def _ats_listing_page(doc_id: int) -> str:
         """Deterministic vendor listing page (vendor = doc_id%4, rows =
         1+doc_id%3): a job table with Title/Location/Department headers and
@@ -477,37 +475,14 @@ _ats_listing_page = _make_ats_listing_page()
     """,
 )
 def ats_html_vendor_jobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from project_orbit_spark.functions.html_extract import (
         JOBS_SCHEMA,
         make_job_extractor,
+        templated_extract,
     )
 
     d = load(spark, sf_dir, "documents").select("doc_id")
-
-    # driver-side construction: the closure must capture the extract
-    # function by value, not the html_extract module factory by name
-    inner = make_job_extractor()
-
-    def template_then_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-
-        def paged():
-            import pandas as _pd
-
-            for pdf in batches:
-                yield _pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "html": pdf["doc_id"].map(_ats_listing_page),
-                    }
-                )
-
-        yield from inner(paged())
-
-    cards = d.mapInPandas(template_then_parse, JOBS_SCHEMA)
+    cards = templated_extract(d, _ats_listing_page, make_job_extractor(), JOBS_SCHEMA)
     return (
         cards.filter(F.col("src") == "table")
         .select(

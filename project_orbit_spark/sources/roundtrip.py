@@ -135,6 +135,9 @@ def seed_scan_company_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_scan_path_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stage_dir(spark, "corpus")
     shutil.rmtree(stage, ignore_errors=True)
+    # made before the loop: a zero-row nation table writes no file, and
+    # the scan of an empty directory reads zero rows
+    os.makedirs(stage, exist_ok=True)
     for r in load(spark, sf_dir, "nation").orderBy("n_nationkey").collect():
         cid = f"nation{r['n_nationkey']}"
         os.makedirs(os.path.join(stage, cid), exist_ok=True)

@@ -237,22 +237,46 @@ class TestTemplateEscaping:
 class TestTagSoupFuzz:
     """Hypothesis tag-soup fuzz: every extractor in the family must
     TOTAL-FUNCTION over arbitrary interleavings of broken markup —
-    never raise, always one output row per input row with the full
-    schema — because at 100 TB a parser that throws on one page kills
-    a 10^5-row Arrow batch with it (the reference leans on
-    BeautifulSoup's tolerance, src/scraper_v2.py:120-466; the stdlib
+    never raise, and every frame it yields carries exactly its face's
+    schema columns and converts to that schema's Arrow types (the
+    empty frame included) — because at 100 TB a parser that throws on
+    one page kills a 10^5-row Arrow batch with it (the reference leans
+    on BeautifulSoup's tolerance, src/scraper_v2.py:120-466; the stdlib
     state machines must earn the same property)."""
 
     def _soup(self, draw_bits: list[str]) -> str:
         return "".join(draw_bits)
 
     def test_extractors_never_raise_on_tag_soup(self):
+        import pyarrow as pa
         from hypothesis import given, settings
         from hypothesis import strategies as st
 
-        from project_orbit_spark.functions.html_extract import (
-            make_html_extractor,
-        )
+        from project_orbit_spark.functions import html_extract as hx
+
+        # (factory, schema, one row out per page in?)
+        family = [
+            (hx.make_html_extractor, hx.EXTRACT_SCHEMA, True),
+            (hx.make_meta_extractor, hx.META_SCHEMA, True),
+            (hx.make_article_extractor, hx.ARTICLE_SCHEMA, True),
+            (hx.make_job_extractor, hx.JOBS_SCHEMA, False),
+            (hx.make_block_profiler, hx.BLOCK_SCHEMA, False),
+            (hx.make_class_pattern_job_extractor, hx.CLASS_JOBS_SCHEMA, False),
+            (hx.make_nav_extractor, hx.NAV_SCHEMA, False),
+            (hx.make_link_inventory_extractor, hx.LINKS_SCHEMA, False),
+            (hx.make_table_extractor, hx.TABLES_SCHEMA, False),
+            (hx.make_form_extractor, hx.FORMS_SCHEMA, False),
+            (hx.make_image_inventory_extractor, hx.IMAGES_SCHEMA, False),
+            (hx.make_text_structure_extractor, hx.TEXT_STRUCT_SCHEMA, False),
+            (hx.make_script_inventory_extractor, hx.SCRIPTS_SCHEMA, False),
+            (hx.make_pricing_page_parser, hx.PRICING_SCHEMA, False),
+            (hx.make_customer_partner_parser, hx.MENTIONS_SCHEMA, False),
+            (hx.make_team_extractor, hx.TEAM_SCHEMA, False),
+        ]
+        arrow = {"long": pa.int64(), "string": pa.string()}
+
+        def fields(schema: str) -> list[tuple[str, pa.DataType]]:
+            return [(n, arrow[t]) for n, t in (f.split() for f in schema.split(","))]
 
         frag = st.sampled_from(
             [
@@ -262,28 +286,38 @@ class TestTagSoupFuzz:
                 "<table>", "<tr><td>", "</table>", "<script type=application/ld+json>",
                 "{not json", "</script>", "text ", "&amp;", "&bogus;", "<",
                 ">", "<!---->", "<!--", "<![CDATA[x]]>", "<br/>", "<img src>",
+                "<nav>", "</nav>", "<nav/>", "<footer>", "</footer>",
+                "<ol class='breadcrumb'>", "<ul>", "</ul>", "<li>", "</li>",
+                "<thead>", "<tbody>", "<th>", "<caption>", "</caption>",
+                "<form action='/f'>", "</form>", "<input name=q id=q required>",
+                "<label for=q>", "</label>", "<img data-src=/i.png alt='Acme logo'>",
+                "<div class='price-card'>", "<section class='tier'>", "</section>",
+                "<div class='team-member'>", "<h3 class='member-name'>", "</h3>",
+                "<li class='job-listing' data-job-id=J1>", "<span class=location>",
+                "<ul class='customer-grid'>", "<blockquote>", "<pre>", "</pre>",
+                "Pro $29 ", "Ada Lovelace ", "<script async src=/s.js>",
+                # valueless attributes: html.parser reports their value as None
+                "<div class>", "<a href>", "<img src=/v.png alt class>", "<form method>",
+                "<input type>", "<meta name=keywords content>", "<meta property content>",
+                "<html lang>", "<link rel=canonical href>", "<label for>",
             ]
         )
 
         @settings(max_examples=40, deadline=None)
         @given(st.lists(frag, min_size=0, max_size=40))
         def check(bits):
-            html = self._soup(bits)
-            # per-page extractors: exactly one row out per row in
-            for maker in (
-                make_html_extractor,
-                make_meta_extractor,
-                make_article_extractor,
-            ):
-                assert len(run(maker(), html)) == 1
-            # the job extractors FAN OUT (one page -> many jobs): zero
-            # rows on job-free soup is correct; must still not raise
-            from project_orbit_spark.functions.html_extract import (
-                make_class_pattern_job_extractor,
+            pdf = pd.DataFrame(
+                {"doc_id": [1], "base_url": ["https://co1.com/products/page"],
+                 "html": [self._soup(bits)]}
             )
-
-            run_all(make_job_extractor(), [html])
-            run_all(make_class_pattern_job_extractor(), [html])
+            for maker, schema, per_page in family:
+                out = list(maker()(iter([pdf])))
+                if per_page:
+                    assert sum(map(len, out)) == 1, maker.__name__
+                for frame in out:
+                    assert [n for n, _ in fields(schema)] == list(frame.columns), maker.__name__
+                    for name, typ in fields(schema):
+                        pa.Array.from_pandas(frame[name], type=typ)
 
         check()
 
@@ -349,3 +383,73 @@ def test_team_validation_ladder():
     assert not is_valid_team_member("Jo")                     # <3 chars
     assert not is_valid_team_member("John Smith", role="Engineering Office Lead")
     assert is_valid_team_member("John Smith", role="Staff Engineer")
+
+
+TEMPLATED_FACES = (
+    "html_meta_inventory", "html_job_cards", "html_article_extract",
+    "html_main_text", "html_class_pattern_jobs", "nav_structure_extract",
+    "html_link_inventory", "html_table_extract", "html_form_extract",
+    "html_image_inventory", "html_text_structure", "html_script_inventory",
+    "pricing_page_parse", "customer_partner_mentions", "team_page_extract",
+    "ats_html_vendor_jobs",
+)
+
+_LOAD_EACH = """
+import pickle, sys
+try:
+    import project_orbit_spark
+except ImportError:
+    print("NO_PACKAGE")
+for path in sys.argv[1:]:
+    try:
+        with open(path, "rb") as fh:
+            pickle.load(fh)
+        print("OK", path)
+    except Exception as e:
+        print("FAIL", path, type(e).__name__)
+"""
+
+
+def test_templated_faces_pickle_by_value(spark, tmp_path, monkeypatch):
+    """Python workers started from a foreign cwd cannot import this
+    package: each face's mapInPandas function must unpickle there. The
+    module-level make_html_extractor, which cloudpickle pickles by
+    reference, is the control that must not."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from project_orbit_spark import registry
+    from project_orbit_spark.functions.html_extract import make_html_extractor
+    from tests.conftest import SF_DIR
+
+    cls = type(spark.range(1))
+    real = cls.mapInPandas
+    captured: dict[str, list] = {}
+
+    def capture(self, func, schema, *args, **kwargs):
+        captured[name].append(func)
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", capture)
+    paths = []
+    for name in TEMPLATED_FACES:
+        captured[name] = []
+        registry.get_query(name).fn(spark, SF_DIR)  # builds the plan only
+        assert len(captured[name]) == 1, name
+        path = tmp_path / f"{name}.pkl"
+        path.write_bytes(cloudpickle.dumps(captured[name][0]))
+        paths.append(str(path))
+    control = tmp_path / "control.pkl"
+    control.write_bytes(cloudpickle.dumps(make_html_extractor))
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _LOAD_EACH, *paths, str(control)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    ).stdout.splitlines()
+    assert out[0] == "NO_PACKAGE", out
+    assert out[1:-1] == [f"OK {p}" for p in paths], out
+    assert out[-1] == f"FAIL {control} ModuleNotFoundError", out

@@ -150,3 +150,24 @@ def test_single_partition_only_through_sort_bounded():
             if re.search(r"\.coalesce\(\s*1\s*\)", line):
                 hits.append(f"{p.relative_to(PKG)}:{i}")
     assert len(hits) == 1 and hits[0].startswith("catalog.py:"), hits
+
+
+def test_page_templating_only_through_templated_extract():
+    """Each templated HTML face renders its pages through
+    html_extract.templated_extract, the one place that states how the
+    template→parse closure pickles by value for foreign-cwd workers."""
+    import ast
+
+    helper = next(
+        n for n in ast.parse((PKG / "functions/html_extract.py").read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "templated_extract"
+    )
+    hits = []
+    for p in _py_sources():
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if re.search(r"def paged\(|template_then_", line):
+                hits.append((str(p.relative_to(PKG)), i))
+    assert hits and all(
+        f == "functions/html_extract.py" and helper.lineno <= i <= helper.end_lineno
+        for f, i in hits
+    ), hits

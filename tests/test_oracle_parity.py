@@ -73,6 +73,10 @@ def test_rag_dashboard_gold_on_zero_documents_matches_oracle(spark, tmp_path):
         (1, "ccnet_perplexity_bands"),
         (0, "curation_training_gold"),
         (1, "curation_training_gold"),
+        (0, "corpus_scan_path_keys"),
+        (0, "rollup_order_stats"),
+        (0, "cube_order_stats"),
+        (0, "grouping_sets_orders_sql"),
     ],
 )
 def test_query_matches_oracle_on_a_sliced_catalog(spark, tmp_path, rows, name):
