@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructType
 
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 
 TABLES = (
     "region",
@@ -153,17 +153,6 @@ def sort_bounded(df: DataFrame, *cols) -> DataFrame:
     return df.coalesce(1).orderBy(*cols)
 
 
-# (session token, table path, nanosAsLong conf) -> the table's raw file
-# schema. Catalog inputs are immutable within a session — the lake-table
-# contract, where a metastore table needs a REFRESH to see rewritten
-# files — so each table's footers are read once per session and every
-# later read plans the same relation from this schema with no inference
-# job. clear_df_caches() evicts it; a caller that rewrites a table's
-# files within one session must call it (or use a new session) first.
-# nanosAsLong is in the key because it decides how events.ts is inferred.
-_SCHEMAS: dict[tuple[str, str, str], StructType] = register_df_cache({})
-
-
 def _table_path(sf_dir: str, name: str) -> str:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -171,20 +160,22 @@ def _table_path(sf_dir: str, name: str) -> str:
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
-    """The raw file schema of one catalog table, resolved once per
-    session (see ``_SCHEMAS``). This is the package's only
-    schema-inferring read of a catalog table: parquet inference reads
-    footers in a Spark job (one footer by default, every file's under
-    mergeSchema)."""
+    """The raw file schema of one catalog table, a session memo. This
+    is the package's only schema-inferring read of a catalog table:
+    parquet inference reads footers in a Spark job (one footer by
+    default, every file's under mergeSchema).
+
+    Catalog inputs are immutable within a session — the lake-table
+    contract, where a metastore table needs a REFRESH to see rewritten
+    files — so each table's footers are read once per session and
+    every later read plans the same relation from this schema with no
+    inference job. A caller that rewrites a table's files within one
+    session must call ``session.clear_df_caches()`` (or use a new
+    session) first. nanosAsLong is in the key because it decides how
+    events.ts is inferred."""
     path = _table_path(sf_dir, name)
-    key = (
-        cache_token(spark),
-        path,
-        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
-    )
-    if key not in _SCHEMAS:
-        _SCHEMAS[key] = spark.read.parquet(path).schema
-    return _SCHEMAS[key]
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return memo(spark, ("schema", path, nanos), lambda: spark.read.parquet(path).schema)
 
 
 def _events_session(spark: SparkSession) -> None:
@@ -280,26 +271,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _normalize_ts(read_stream(spark, sf_dir, "events"), raw)
 
 
-# (session token, probe-plan semantic hash, bound) -> fits verdict.
-# Holds plain bools, no Spark resources, but registered with the
-# session cache registry so clear_df_caches() evicts dead sessions'
-# entries instead of growing without bound in a long-lived driver.
-_PROBE_CACHE: dict[tuple[str, int, int], bool] = register_df_cache({})
-
-# (session token, plan semantic hash) -> row count a counted barrier
-# observed while materializing that plan. A checkpointed plan is a
-# leaf over its own RDD, so the key names exactly one materialization.
-_ROW_COUNTS: dict[tuple[str, int], int] = register_df_cache({})
-
-
-def _plan_key(df: DataFrame) -> tuple[str, int] | None:
+def _plan_hash(df: DataFrame) -> int | None:
     try:
-        return (
-            cache_token(df.sparkSession),
-            df._jdf.queryExecution().analyzed().semanticHash(),
-        )
+        return df._jdf.queryExecution().analyzed().semanticHash()
     except Exception:  # unexpected py4j surface change — no key
         return None
+
+
+def _row_counts(spark: SparkSession) -> dict[int, int]:
+    """Plan semantic hash -> the row count a counted barrier observed
+    while materializing that plan, one dict per session. A checkpointed
+    plan is a leaf over its own RDD, so a hash names exactly one
+    materialization."""
+    return memo(spark, ("row_counts",), dict)
 
 
 def checkpoint_counted(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
@@ -321,9 +305,9 @@ def checkpoint_counted(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
         *(col.alias(name) for name, col in aggs.items()),
     ).localCheckpoint(eager=True)
     got = obs.get
-    key = _plan_key(out)
-    if key is not None:
-        _ROW_COUNTS[key] = got["rows"]
+    h = _plan_hash(out)
+    if h is not None:
+        _row_counts(out.sparkSession)[h] = got["rows"]
     return out, got
 
 
@@ -387,14 +371,15 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     from pyspark.sql import functions as F
 
     src = probe if probe is not None else df
-    key = _plan_key(src)
-    if key in _ROW_COUNTS:
-        fits = _ROW_COUNTS[key] <= bound
-    elif key is None:
-        fits = src.limit(bound + 1).count() <= bound
+    h = _plan_hash(src)
+
+    def probe_fits() -> bool:
+        return src.limit(bound + 1).count() <= bound
+
+    if h is None:
+        fits = probe_fits()
+    elif h in (counts := _row_counts(src.sparkSession)):
+        fits = counts[h] <= bound
     else:
-        memo = key + (bound,)
-        if memo not in _PROBE_CACHE:
-            _PROBE_CACHE[memo] = src.limit(bound + 1).count() <= bound
-        fits = _PROBE_CACHE[memo]
+        fits = memo(src.sparkSession, ("probe", h, bound), probe_fits)
     return F.broadcast(df) if fits else df

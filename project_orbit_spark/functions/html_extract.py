@@ -1214,8 +1214,8 @@ def make_nav_extractor():
         for pdf in batches:
             rows = [
                 r
-                for _, row in pdf.iterrows()
-                for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
+                for doc_id, base_url, html in zip(pdf["doc_id"], pdf["base_url"], pdf["html"])
+                for r in walk(int(doc_id), base_url, html)
             ]
             yield _typed_frame(
                 rows,
@@ -1395,8 +1395,8 @@ def make_link_inventory_extractor():
         for pdf in batches:
             rows = [
                 r
-                for _, row in pdf.iterrows()
-                for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
+                for doc_id, base_url, html in zip(pdf["doc_id"], pdf["base_url"], pdf["html"])
+                for r in walk(int(doc_id), base_url, html)
             ]
             yield _typed_frame(rows, cols, ints)
 
@@ -1570,8 +1570,6 @@ def make_table_extractor():
 
         cols = ["doc_id", "tbl", "caption", "kind", "r", "c", "value"]
         for pdf in batches:
-            # zip over the two columns, not iterrows() — a Series is
-            # materialized per row under iterrows
             rows = [
                 r
                 for doc_id, html in zip(pdf["doc_id"], pdf["html"])
@@ -1743,8 +1741,8 @@ def make_form_extractor():
         for pdf in batches:
             rows = [
                 r
-                for _, row in pdf.iterrows()
-                for r in walk(int(row["doc_id"]), row["html"])
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             # required stays object: a field-less form's row holds None
             ints = dict.fromkeys(("doc_id", "form_pos", "field_pos"), "int64")
@@ -1870,8 +1868,8 @@ def make_image_inventory_extractor():
         for pdf in batches:
             rows = [
                 r
-                for _, row in pdf.iterrows()
-                for r in walk(int(row["doc_id"]), row["base_url"], row["html"])
+                for doc_id, base_url, html in zip(pdf["doc_id"], pdf["base_url"], pdf["html"])
+                for r in walk(int(doc_id), base_url, html)
             ]
             yield _typed_frame(rows, cols, dict.fromkeys(("doc_id", "pos", "is_logo"), "int64"))
 
@@ -2023,7 +2021,9 @@ def make_text_structure_extractor():
         cols = ["doc_id", "kind", "pos", "attr", "text"]
         for pdf in batches:
             rows = [
-                r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
+                r
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             yield _typed_frame(rows, cols, {"doc_id": "int64", "pos": "int64"})
 
@@ -2165,7 +2165,9 @@ def make_script_inventory_extractor():
         ints = {c: "int64" for c in cols if c not in ("src", "stype")}
         for pdf in batches:
             rows = [
-                r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
+                r
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             yield _typed_frame(rows, cols, ints)
 
@@ -2335,7 +2337,9 @@ def make_pricing_page_parser():
         cols = ["doc_id", "pricing_model", "tier_pos", "tier_name", "price"]
         for pdf in batches:
             rows = [
-                r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
+                r
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             yield _typed_frame(rows, cols, {"doc_id": "int64", "tier_pos": "int64"})
 
@@ -2491,7 +2495,9 @@ def make_customer_partner_parser():
         cols = ["doc_id", "kind", "name"]
         for pdf in batches:
             rows = [
-                r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
+                r
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             yield _typed_frame(rows, cols, {"doc_id": "int64"})
 
@@ -2750,7 +2756,9 @@ def make_team_extractor():
         cols = ["doc_id", "card_pos", "name", "job_title", "same_as"]
         for pdf in batches:
             rows = [
-                r for _, row in pdf.iterrows() for r in walk(int(row["doc_id"]), row["html"])
+                r
+                for doc_id, html in zip(pdf["doc_id"], pdf["html"])
+                for r in walk(int(doc_id), html)
             ]
             yield _typed_frame(rows, cols, {"doc_id": "int64", "card_pos": "int64"})
 

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from project_orbit_spark.catalog import barrier_width, checkpoint_counted, load
 from project_orbit_spark.registry import register
+from project_orbit_spark.session import memo
 
 # Stopword markers per language — the n-gram/stopword-ratio heuristic
 # family used for cheap language ID (the corpus text is synthetic, so
@@ -772,39 +773,24 @@ def vocab_coverage_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VOCAB_CACHE = None  # populated lazily via register_df_cache
-
-
 def warm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The existing corpus's top-K vocabulary, persisted once per
-    (session, sf_dir) — at 100 TB a stored artifact the offline vocab
-    job refreshes (same contract as warm_span_index /
-    warm_band_index / warm_kmeans_centroids).
+    """The existing corpus's top-K vocabulary, a session artifact
+    (``session.memo``) — at 100 TB a stored artifact the offline vocab
+    job refreshes.
     Lifecycle: merge/compact/expire transfers from refresh_segment_index +
     refresh_band_index (dt-partitioned rows, no cross-row state), proven
     by their compaction-invariance oracles."""
-    global _VOCAB_CACHE
-    from project_orbit_spark.session import cache_token, register_df_cache
-
-    if _VOCAB_CACHE is None:
-        _VOCAB_CACHE = register_df_cache({})
-    key = (cache_token(spark), sf_dir)
-    if key not in _VOCAB_CACHE:
-        d = load(spark, sf_dir, "documents")
-        vocab = (
-            d.select(
-                F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token")
-            )
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .orderBy(F.desc("cnt"), F.asc("token"))
-            .limit(VOCAB_TOP_K)
-            .select("token", F.lit(True).alias("in_vocab"))
-            .persist()
-        )
-        vocab.count()
-        _VOCAB_CACHE[key] = vocab
-    return _VOCAB_CACHE[key]
+    return memo(
+        spark,
+        ("vocab", sf_dir),
+        lambda: load(spark, sf_dir, "documents")
+        .select(F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("token"))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .orderBy(F.desc("cnt"), F.asc("token"))
+        .limit(VOCAB_TOP_K)
+        .select("token", F.lit(True).alias("in_vocab")),
+    )
 
 
 @register(
@@ -814,7 +800,7 @@ def warm_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench rotation r14 (VERDICT r13 ask #6): dropped from headline set.
     driver=True,
     tags=("text", "tokens", "quality", "incremental"),
-    prepare=lambda spark, sf_dir: warm_vocab(spark, sf_dir) and None,
+    prepare=warm_vocab,
     doc="Incremental face of vocab_coverage_oov and the FIFTH instance "
     "of the engine's incremental-index contract (minhash band index, "
     "embedding vector index, span index, k-means model — now the "
@@ -1501,34 +1487,21 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DSIR_CACHE = None
-
-
 def warm_dsir_lm(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The fitted DSIR model — the 1024-row quantized ratio table and
-    the 1-row (ts, tt, t) summary — persisted once per (session,
-    sf_dir): at 100 TB the hashed-LM fit is an offline artifact the
-    selection job refreshes (same contract as warm_vocab /
-    warm_span_index / warm_band_index / warm_kmeans_centroids).
-    Lifecycle: merge/compact/expire transfers from refresh_segment_index + refresh_band_index (dt-partitioned rows, no cross-row state), proven by their compaction-invariance oracles."""
-    global _DSIR_CACHE
-    from project_orbit_spark.session import cache_token, register_df_cache
-
-    if _DSIR_CACHE is None:
-        _DSIR_CACHE = register_df_cache({})
-    key = (cache_token(spark), sf_dir)
-    if key not in _DSIR_CACHE:
-        lm, stats, _ = _dsir_fit(spark, sf_dir)
-        lm, stats = lm.persist(), stats.persist()
-        lm.count(), stats.count()
-        _DSIR_CACHE[key] = (lm, stats)
-    return _DSIR_CACHE[key]
+    the 1-row (ts, tt, t) summary — as one session artifact
+    (``session.memo``): at 100 TB the hashed-LM fit is an offline
+    artifact the selection job refreshes.
+    Lifecycle: merge/compact/expire transfers from refresh_segment_index +
+    refresh_band_index (dt-partitioned rows, no cross-row state), proven
+    by their compaction-invariance oracles."""
+    return memo(spark, ("dsir_lm", sf_dir), lambda: _dsir_fit(spark, sf_dir)[:2])
 
 
 @register(
     "incremental_dsir_weights",
     tags=("text", "quality", "sampling", "incremental"),
-    prepare=lambda spark, sf_dir: warm_dsir_lm(spark, sf_dir) and None,
+    prepare=warm_dsir_lm,
     doc="Incremental face of dsir_importance_weights and the EIGHTH "
     "instance of the engine's incremental-index contract (minhash "
     "bands, embedding index, span index, k-means model, vocabulary, "

@@ -53,7 +53,7 @@ from pyspark.sql.window import Window
 
 from project_orbit_spark.catalog import load
 from project_orbit_spark.registry import register
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 
 K = 8
 ITERS = 3
@@ -342,22 +342,13 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMEANS_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def warm_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FINAL 3-round centroid table, persisted once per (session,
-    sf_dir) — at 100 TB the cluster model is a stored index artifact
-    refreshed offline (mirrors cosine.warm_centroids and
-    lsh.warm_embedding_index; released via clear_df_caches()). The
-    incremental face below assigns NEW vectors against it in O(new)
-    without touching the corpus the model was fit on."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _KMEANS_CACHE:
-        c = _fit_centroids(spark, sf_dir).persist()
-        c.count()
-        _KMEANS_CACHE[key] = c
-    return _KMEANS_CACHE[key]
+    """The FINAL 3-round centroid table, a session artifact
+    (``session.memo``) — at 100 TB the cluster model is a stored index
+    artifact refreshed offline. The incremental face below assigns NEW
+    vectors against it in O(new) without touching the corpus the model
+    was fit on."""
+    return memo(spark, ("kmeans_centroids", sf_dir), lambda: _fit_centroids(spark, sf_dir))
 
 
 def assign_batch(batch: DataFrame, cents: DataFrame) -> DataFrame:
@@ -414,7 +405,7 @@ def assign_batch(batch: DataFrame, cents: DataFrame) -> DataFrame:
         ) WHERE rn = 1
         ORDER BY new_id
     """,
-    prepare=lambda spark, sf_dir: warm_kmeans_centroids(spark, sf_dir) and None,
+    prepare=warm_kmeans_centroids,
 )
 def kmeans_incremental_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = (

@@ -25,6 +25,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from project_orbit_spark.catalog import checkpoint_counted, load, maybe_broadcast
 from project_orbit_spark.operators.dedup import word_shingles
 from project_orbit_spark.registry import register
+from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.lsh import _duck_auto_bucket as _lsh_duck_auto_bucket
 from project_orbit_spark.similarity.lsh import _duck_bucket as _lsh_duck_bucket
 from project_orbit_spark.similarity.lsh import lsh_bucket as _lsh_bucket
@@ -1127,39 +1128,25 @@ def dedup_segments_first_wins(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
     )
 
 
-_SEGMENT_INDEX_CACHE = None  # populated lazily via register_df_cache
-
-
 def warm_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The existing corpus's seen-segment set (distinct seg_hash),
-    persisted once per (session, sf_dir) — at 100 TB a stored artifact
-    the offline first-wins dedup job maintains (same contract as
-    warm_vocab / warm_span_index / warm_band_index).
+    """The existing corpus's seen-segment set (distinct seg_hash), a
+    session artifact (``session.memo``) — at 100 TB a stored artifact
+    the offline first-wins dedup job maintains.
     Lifecycle: exercised DIRECTLY by refresh_segment_index."""
-    global _SEGMENT_INDEX_CACHE
-    from project_orbit_spark.session import cache_token, register_df_cache
-
-    if _SEGMENT_INDEX_CACHE is None:
-        _SEGMENT_INDEX_CACHE = register_df_cache({})
-    key = (cache_token(spark), sf_dir)
-    if key not in _SEGMENT_INDEX_CACHE:
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        idx = (
-            doc_segments(d)
-            .select("seg_hash")
-            .distinct()
-            .select("seg_hash", F.lit(True).alias("seen"))
-            .persist()
-        )
-        idx.count()
-        _SEGMENT_INDEX_CACHE[key] = idx
-    return _SEGMENT_INDEX_CACHE[key]
+    return memo(
+        spark,
+        ("segment_index", sf_dir),
+        lambda: doc_segments(load(spark, sf_dir, "documents").select("doc_id", "text"))
+        .select("seg_hash")
+        .distinct()
+        .select("seg_hash", F.lit(True).alias("seen")),
+    )
 
 
 @register(
     "incremental_segment_dedup",
     tags=("corpus", "dedup", "incremental"),
-    prepare=lambda spark, sf_dir: warm_segment_index(spark, sf_dir) and None,
+    prepare=warm_segment_index,
     doc="Incremental face of segment_dedup_first_wins and the SEVENTH "
     "instance of the engine's incremental-index contract (minhash "
     "band index, embedding vector index, span index, k-means model, "
@@ -1410,27 +1397,22 @@ def _refresh_probe_stage_sql(seen_cte: str) -> str:
     """,
 )
 def refresh_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import uuid
 
-    from project_orbit_spark.session import cache_token
     from project_orbit_spark.sources.connectors import (
         compact_parquet,
         expire_partitions,
     )
+    from project_orbit_spark.sources.roundtrip import _stage_dir
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # per-invocation nonce (ADVICE r15 #3): a fixed path + rmtree
-    # would let two concurrent invocations in one session (bench +
-    # parity run) corrupt each other's staged index mid-lifecycle.
-    # uuid4 reads the OS entropy pool, not the seeded PRNG — no
-    # determinism contract touches the staging path.
-    stage = os.path.join(
-        "/tmp/orbit_spark_roundtrip",
-        cache_token(spark),
-        f"segment_index_{uuid.uuid4().hex[:12]}",
-    )
+    # per-invocation nonce: a fixed path + rmtree would let two
+    # concurrent invocations in one session (bench + parity run)
+    # corrupt each other's staged index mid-lifecycle. uuid4 reads the
+    # OS entropy pool, not the seeded PRNG — no determinism contract
+    # touches the staging path.
+    stage = _stage_dir(spark, f"segment_index_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(stage, ignore_errors=True)
     # seed: the existing corpus's segments, partitioned by synthetic
     # ingest day (doc_id % 3 -> dt 2026-01-01..03), deduped per
@@ -1964,15 +1946,9 @@ def _pack_curated(canon: DataFrame) -> DataFrame:
 # cost is O(new), never O(corpus).
 # ---------------------------------------------------------------------------
 
-from project_orbit_spark.session import cache_token, register_df_cache  # noqa: E402
-
-# (session token, sf_dir) -> dict of persisted curation artifacts
-_CURATION_ARTIFACTS_CACHE: dict[tuple[str, str], dict] = register_df_cache({})
-
-
 def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
-    """The offline curation build's persisted artifacts, derived once
-    per (session, sf_dir) by ``curation_pipeline``'s own stage
+    """The offline curation build's artifacts, one session artifact
+    (``session.memo``) derived by ``curation_pipeline``'s own stage
     functions over the BASE corpus:
 
     - ``bp``: the boilerplate segment-hash set (stage 1);
@@ -1985,8 +1961,9 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     - ``canon``: the gated base corpus's canonical labels (stage 3's
       cluster map, (doc_id, canonical_id)).
 
-    Same contract as warm_band_index / lsh.warm_embedding_index:
-    persisted on first use, released via session.clear_df_caches().
+    ``bp``, ``c2``, ``freq`` and ``banded`` are persisted mid-build:
+    later stages (the LM scores, the canonical stage's eager
+    connected-components rounds) read them before the build ends.
     Lifecycle: the LM counts and band/canon tables are dt-partitionable
     rows with no cross-row state — merge/compact/expire transfers from
     refresh_segment_index + refresh_band_index (the banded artifact is
@@ -1996,8 +1973,7 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     from project_orbit_spark.functions.textquality import lm_count_tables, tercile_cutoffs
     from project_orbit_spark.operators.dedup import _banded_signatures
 
-    key = (cache_token(spark), sf_dir)
-    if key not in _CURATION_ARTIFACTS_CACHE:
+    def build() -> dict:
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
         segs = doc_segment_arrays(d).localCheckpoint()
         bp = boilerplate_set(segs).persist()
@@ -2007,14 +1983,13 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
         cut1, cut2 = tercile_cutoffs(scored, n)
         gated = gate_stage(scored, cut1, cut2)
         banded = _banded_signatures(gated.select("doc_id", "text")).persist()
-        canon = _canonical_stage(gated).select("doc_id", "canonical_id").persist()
-        for t in (bp, c2, freq, banded, canon):
-            t.count()
-        _CURATION_ARTIFACTS_CACHE[key] = {
+        canon = _canonical_stage(gated).select("doc_id", "canonical_id")
+        return {
             "bp": bp, "c2": c2, "freq": freq, "total": total,
             "cut1": cut1, "cut2": cut2, "banded": banded, "canon": canon,
         }
-    return _CURATION_ARTIFACTS_CACHE[key]
+
+    return memo(spark, ("curation_artifacts", sf_dir), build)
 
 
 def _incremental_batch(d: DataFrame) -> DataFrame:
@@ -2057,7 +2032,7 @@ def _incremental_batch(d: DataFrame) -> DataFrame:
     driver=True,
     bench=True,
     tags=("corpus", "curation", "incremental", "dedup", "pipeline"),
-    prepare=lambda spark, sf_dir: warm_curation_artifacts(spark, sf_dir) and None,
+    prepare=warm_curation_artifacts,
     doc="The SIXTH O(new) incremental face (after the band, vector, "
     "span, model, and vocabulary indexes): a nightly crawl batch is "
     "curated end-to-end against the PERSISTED artifacts of the "

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from project_orbit_spark.catalog import barrier_width, load, maybe_broadcast
 from project_orbit_spark.registry import register
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.lsh import _duck_auto_bucket as _lsh_duck_auto_bucket
 from project_orbit_spark.similarity.lsh import _duck_bucket as _lsh_duck_bucket
 from project_orbit_spark.similarity.lsh import lsh_bucket as _lsh_bucket
@@ -751,55 +751,35 @@ def minhash_pairs(
     )
 
 
-# (session token, sf_dir) -> persisted near-dup PAIR graph over the
-# dup-injected corpus. VERDICT r11 ask #5: dup_cluster_labels,
-# dedup_canonical_corpus, dedup_quality_canonical, and (through the
-# canonical pipeline) leakage_safe_split all consume this exact pair
-# table — without the shared face each re-runs the band shuffle, the
-# engine's most shuffle-intensive stage. Pairs (not signatures) are
-# the cached artifact: the post-join output is tiny (near-dup pairs
-# only), so the persist is kilobytes at fixture scale and stays
-# bounded by corpus redundancy at 100 TB.
-_DUP_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def warm_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dup-injected corpus's near-dup pair graph (left_id,
-    right_id, est_jaccard), persisted once per (session, sf_dir) —
+    right_id, est_jaccard), a session artifact (``session.memo``) —
     at 100 TB this is the stored pair-graph artifact the offline
     dedup job maintains, not something every downstream consumer
-    re-mines from the full corpus. Same contract as warm_band_index /
-    lsh.warm_embedding_index; released via session.clear_df_caches().
-    Semantics identical to minhash_lsh_near_dups — correctness
-    sessions just materialize on first use.
+    re-mines from the full corpus. dup_cluster_labels,
+    dedup_canonical_corpus, dedup_quality_canonical and (through the
+    canonical pipeline) leakage_safe_split all consume this exact pair
+    table; without it each re-runs the band shuffle, the engine's most
+    shuffle-intensive stage. Pairs (not signatures) are the artifact:
+    the post-join output holds near-dup pairs only, so it is kilobytes
+    at fixture scale and stays bounded by corpus redundancy at 100 TB.
+    Semantics identical to minhash_lsh_near_dups.
     Lifecycle: merge/compact/expire transfers from refresh_band_index
     (pair rows are dt-partitionable with no cross-row state; expiring
     an ingest day drops exactly that day's pairs)."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _DUP_PAIRS_CACHE:
-        p = minhash_lsh_near_dups(spark, sf_dir).persist()
-        p.count()
-        _DUP_PAIRS_CACHE[key] = p
-    return _DUP_PAIRS_CACHE[key]
-
-
-_BAND_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
+    return memo(spark, ("dup_pairs", sf_dir), lambda: minhash_lsh_near_dups(spark, sf_dir))
 
 
 def warm_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The existing corpus's (doc_id, sig, band_idx, band_sig) band
-    table, persisted once per (session, sf_dir) — at 100 TB this is a
+    table, a session artifact (``session.memo``) — at 100 TB this is a
     stored index artifact the offline indexing job refreshes, not
-    something each incoming batch re-derives from the full corpus.
-    Keyed on applicationId (live-session id), released via
-    session.clear_df_caches()."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _BAND_INDEX_CACHE:
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        b = _banded_signatures(d).persist()
-        b.count()
-        _BAND_INDEX_CACHE[key] = b
-    return _BAND_INDEX_CACHE[key]
+    something each incoming batch re-derives from the full corpus."""
+    return memo(
+        spark,
+        ("band_index", sf_dir),
+        lambda: _banded_signatures(load(spark, sf_dir, "documents").select("doc_id", "text")),
+    )
 
 
 @register(
@@ -817,7 +797,7 @@ def warm_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mirroring ann_ivf_topk_warm), the new batch is small, so the "
     "band join broadcasts the batch and the per-run cost is O(new), "
     "not O(corpus).",
-    prepare=lambda spark, sf_dir: warm_band_index(spark, sf_dir) and None,
+    prepare=warm_band_index,
     oracle=f"""
         WITH {_MINHASH_PAIRS_CTE},
         inc_cand AS (
@@ -945,24 +925,19 @@ def _refresh_band_stage_sql(idx_cte: str) -> str:
     """,
 )
 def refresh_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import uuid
 
-    from project_orbit_spark.session import cache_token
     from project_orbit_spark.sources.connectors import (
         compact_parquet,
         expire_partitions,
     )
+    from project_orbit_spark.sources.roundtrip import _stage_dir
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     # per-invocation nonce + post-checkpoint reclaim, exactly as
-    # refresh_segment_index (ADVICE r15 #3)
-    stage_dir = os.path.join(
-        "/tmp/orbit_spark_roundtrip",
-        cache_token(spark),
-        f"band_index_{uuid.uuid4().hex[:12]}",
-    )
+    # refresh_segment_index
+    stage_dir = _stage_dir(spark, f"band_index_{uuid.uuid4().hex[:12]}")
     shutil.rmtree(stage_dir, ignore_errors=True)
     # seed: the corpus's band table, partitioned by synthetic ingest
     # day (doc_id % 3 -> dt 2026-01-01..03) — the layout the offline
@@ -1337,26 +1312,24 @@ def simhash64_hamming_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _simhash_pairs(_near_dup_corpus(spark, sf_dir), n_words=2, band_bits=16)
 
 
-_SIMHASH_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def warm_simhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The existing corpus's packed 64-bit simhash band table
-    (doc_id, lang, w0, w1, band_idx, band_val), persisted once per
-    (session, sf_dir) — at 100 TB the stored fingerprint index the
-    offline job refreshes nightly, same contract as warm_band_index /
-    lsh.warm_embedding_index; released via session.clear_df_caches().
+    (doc_id, lang, w0, w1, band_idx, band_val), a session artifact
+    (``session.memo``) — at 100 TB the stored fingerprint index the
+    offline job refreshes nightly.
     Lifecycle: merge/compact/expire transfers from refresh_band_index
     (dt-partitionable rows, no cross-row state) and from the vector
     index's proven on-disk lifecycle test — six longs per row, the
     cheapest index artifact the engine persists."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _SIMHASH_INDEX_CACHE:
-        d = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-        b = _packed_banded(d, n_words=2, band_bits=16).persist()
-        b.count()
-        _SIMHASH_INDEX_CACHE[key] = b
-    return _SIMHASH_INDEX_CACHE[key]
+    return memo(
+        spark,
+        ("simhash_index", sf_dir),
+        lambda: _packed_banded(
+            load(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
+            n_words=2,
+            band_bits=16,
+        ),
+    )
 
 
 @register(
@@ -1386,7 +1359,7 @@ def warm_simhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     "for the minhash tier at a fraction of its cost — the two-ruler "
     "audit (simhash_match_audit) documents exactly what the screen "
     "does and does not promise.",
-    prepare=lambda spark, sf_dir: warm_simhash_index(spark, sf_dir) and None,
+    prepare=warm_simhash_index,
     oracle="""
         WITH base AS (
           SELECT doc_id, lang, text FROM documents
@@ -1954,23 +1927,20 @@ def repeated_span_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPAN_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def warm_span_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The existing corpus's distinct span-hash set, persisted once per
-    (session, sf_dir) — at 100 TB a stored index artifact the offline
-    span-mining job refreshes (same contract as warm_band_index).
+    """The existing corpus's distinct span-hash set, a session artifact
+    (``session.memo``) — at 100 TB a stored index artifact the offline
+    span-mining job refreshes.
     Lifecycle: merge/compact/expire transfers from refresh_segment_index +
     refresh_band_index (dt-partitioned rows, no cross-row state), proven
     by their compaction-invariance oracles."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _SPAN_INDEX_CACHE:
-        d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        idx = _span_hashes(d).select("span_hash").distinct().persist()
-        idx.count()
-        _SPAN_INDEX_CACHE[key] = idx
-    return _SPAN_INDEX_CACHE[key]
+    return memo(
+        spark,
+        ("span_index", sf_dir),
+        lambda: _span_hashes(load(spark, sf_dir, "documents").select("doc_id", "text"))
+        .select("span_hash")
+        .distinct(),
+    )
 
 
 # Broadcast bound for the incremental span faces: ~50M span rows of
@@ -2018,7 +1988,7 @@ def _gated_span_batch(near: DataFrame, new_spans: DataFrame) -> DataFrame:
     "probes the exact span fan-out; past SPAN_BROADCAST_MAX_ROWS the "
     "hint is dropped and the planner takes the index shuffle); the "
     "index is scanned map-only — new×index only, never index×index.",
-    prepare=lambda spark, sf_dir: warm_span_index(spark, sf_dir) and None,
+    prepare=warm_span_index,
     oracle="""
         WITH base_tok AS (
           SELECT doc_id,
@@ -2113,23 +2083,19 @@ def _semdedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.unionByName(dups)
 
 
-_SEMDEDUP_PLANES_CACHE: dict[tuple[str, str], int] = {}
-
-
 def _semdedup_planes(spark: SparkSession, sf_dir: str) -> int:
-    """auto_planes over the dup-injected corpus size, cached per
-    (session, sf_dir) like lsh.index_planes — the width is a stat of
-    the corpus, not something to recount per invocation (ADVICE r9).
-    The registered oracle derives the identical width in SQL
-    (_duck_auto_bucket over the corpus0 CTE count)."""
+    """auto_planes over the dup-injected corpus size, a session memo
+    like lsh.index_planes — the width is a stat of the corpus, not
+    something to recount per invocation. The registered oracle derives
+    the identical width in SQL (_duck_auto_bucket over the corpus0 CTE
+    count)."""
     from project_orbit_spark.similarity.lsh import auto_planes
 
-    key = (cache_token(spark), sf_dir)
-    if key not in _SEMDEDUP_PLANES_CACHE:
-        _SEMDEDUP_PLANES_CACHE[key] = auto_planes(
-            _semdedup_corpus(spark, sf_dir).select("vec_id").count()
-        )
-    return _SEMDEDUP_PLANES_CACHE[key]
+    return memo(
+        spark,
+        ("semdedup_planes", sf_dir),
+        lambda: auto_planes(_semdedup_corpus(spark, sf_dir).select("vec_id").count()),
+    )
 
 
 def _semdedup_pairs(corpus: DataFrame, n_planes: int = 4) -> DataFrame:

@@ -311,21 +311,20 @@ def _with_empty_total(grouped: GroupedData, o: DataFrame, *aggs: Column) -> Data
 )
 def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
-    return (
-        _with_empty_total(
-            o.rollup("o_orderstatus", "o_orderpriority"),
-            o,
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
-            "n_orders",
-            "total_price",
-        )
-        .orderBy("orderstatus", "orderpriority")
+    agg = _with_empty_total(
+        o.rollup("o_orderstatus", "o_orderpriority"),
+        o,
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+    ).select(
+        F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
+        F.coalesce("o_orderpriority", F.lit("ALL")).alias("orderpriority"),
+        "n_orders",
+        "total_price",
     )
+    # bound: 3 order statuses × 5 priorities + 3 subtotals + the total
+    # (19 rows; TPC-H fixes both domains at every scale factor)
+    return sort_bounded(agg, "orderstatus", "orderpriority")
 
 
 @register(
@@ -349,7 +348,7 @@ def rollup_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_orders_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
-    return spark.sql(
+    agg = spark.sql(
         """
         SELECT
           coalesce(o_orderstatus, 'ALL')   AS orderstatus,
@@ -363,9 +362,11 @@ def grouping_sets_orders_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT 'ALL', 'ALL', count(*), round(sum(o_totalprice), 2)
         FROM orders_v
         HAVING count(*) = 0
-        ORDER BY orderstatus, orderpriority
         """
     )
+    # bound: 3 order statuses + 5 priorities + the total (9 rows; TPC-H
+    # fixes both domains at every scale factor)
+    return sort_bounded(agg, "orderstatus", "orderpriority")
 
 
 @register(
@@ -462,23 +463,20 @@ def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("long").alias("order_year"),
         "o_totalprice",
     )
-    return (
-        _with_empty_total(
-            o.cube("o_orderstatus", "order_year"),
-            o,
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.round(F.sum("o_totalprice"), 2) / F.count(F.lit(1)), 6).alias("avg_price"),
-        )
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
-            F.coalesce(F.col("order_year").cast("string"), F.lit("ALL")).alias(
-                "order_year"
-            ),
-            "n_orders",
-            "avg_price",
-        )
-        .orderBy("orderstatus", "order_year")
+    agg = _with_empty_total(
+        o.cube("o_orderstatus", "order_year"),
+        o,
+        F.count(F.lit(1)).alias("n_orders"),
+        F.round(F.round(F.sum("o_totalprice"), 2) / F.count(F.lit(1)), 6).alias("avg_price"),
+    ).select(
+        F.coalesce("o_orderstatus", F.lit("ALL")).alias("orderstatus"),
+        F.coalesce(F.col("order_year").cast("string"), F.lit("ALL")).alias("order_year"),
+        "n_orders",
+        "avg_price",
     )
+    # bound: (3 order statuses + 1) × (7 order years 1992–1998 + 1) = 32
+    # rows; TPC-H fixes both domains at every scale factor
+    return sort_bounded(agg, "orderstatus", "order_year")
 
 
 @register(

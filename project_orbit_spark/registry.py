@@ -49,9 +49,10 @@ class Query:
     driver: bool = True
     tags: tuple[str, ...] = field(default_factory=tuple)
     # Optional amortized-setup hook: bench.py runs it OUTSIDE the timer
-    # (e.g. persist precomputed centroids) to measure steady-state cost;
-    # correctness runs ignore it, so fn must be self-sufficient.
-    prepare: Callable[[SparkSession, str], None] | None = None
+    # (e.g. a warm_* artifact function; its return value is ignored) to
+    # measure steady-state cost; correctness runs ignore it, so fn must
+    # be self-sufficient.
+    prepare: Callable[[SparkSession, str], object] | None = None
 
 
 _REGISTRY: dict[str, Query] = {}
@@ -153,7 +154,7 @@ def register(
     bench: bool = False,
     driver: bool = True,
     tags: tuple[str, ...] = (),
-    prepare: Callable[[SparkSession, str], None] | None = None,
+    prepare: Callable[[SparkSession, str], object] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register a query under ``name``."""
 

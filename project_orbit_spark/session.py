@@ -10,8 +10,11 @@ the DuckDB oracle exactly.
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def get_spark(app_name: str = "project_orbit_spark", master: str | None = None) -> SparkSession:
@@ -40,53 +43,70 @@ def get_spark(app_name: str = "project_orbit_spark", master: str | None = None) 
 
 
 # ---------------------------------------------------------------------------
-# Session-scoped persisted-DataFrame caches (warm centroid index, cached
-# BM25 tokenization). Keys must start with ``cache_token(spark)`` — the
-# sparkContext.applicationId, a stable LIVE-session identifier — never
-# ``id(spark)``: a stopped session's address can be reused by a new one,
-# which would hand back DataFrames bound to a dead JVM while pinning
-# their persisted blocks for process lifetime.
+# Session artifacts: the warm indexes, models and memoized verdicts that
+# stand in for a deployment's stored index artifacts.
 
-_DF_CACHES: list[dict] = []
-
-
-def register_df_cache(cache: dict) -> dict:
-    """Register a module-level DataFrame cache so clear_df_caches()
-    can unpersist and drop its entries."""
-    _DF_CACHES.append(cache)
-    return cache
+_MEMO: dict[tuple, object] = {}
 
 
 def cache_token(spark: SparkSession) -> str:
-    """Stable live-session identifier for persisted-DataFrame cache
-    keys (a fresh session always gets a fresh applicationId)."""
+    """Stable live-session identifier (a fresh session always gets a
+    fresh applicationId)."""
     return spark.sparkContext.applicationId
 
 
-def _unpersist_value(value) -> None:
-    """Unpersist one cache value. Values are DataFrames, plain
-    verdicts (the broadcast-gate probe cache), or bundles of
-    DataFrames: dicts (the curation artifacts) and tuples or lists
-    (the DSIR model's (lm, stats)) — recurse into bundles so bundled
-    artifacts release their blocks too."""
+def _frames(value):
+    """The DataFrames in one artifact value, in order: a DataFrame, or
+    a dict, tuple or list bundle of them; plain values hold none."""
     if isinstance(value, dict):
         value = list(value.values())
     if isinstance(value, (tuple, list)):
         for v in value:
-            _unpersist_value(v)
-        return
-    try:
-        # only DataFrames pin blocks; plain verdicts have no unpersist
-        if hasattr(value, "unpersist"):
-            value.unpersist()
-    except Exception:  # session already stopped — blocks are gone
-        pass
+            yield from _frames(v)
+    elif isinstance(value, DataFrame):
+        yield value
+
+
+def memo(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()``, run once per ``(cache_token(spark), *key)``.
+
+    The artifact contract, stated once for every session artifact:
+
+    - Keyed on the applicationId, never ``id(spark)``: a stopped
+      session's address can be reused by a new one, which would hand
+      back DataFrames bound to a dead JVM while pinning their blocks
+      for the life of the process.
+    - Materialized on first use: every DataFrame in the value is
+      persisted (unless the build already did), then all are counted,
+      both passes in bundle order, so a later request only reads.
+    - Released by ``clear_df_caches()``, which unpersists and drops
+      every entry.
+
+    The first element of ``key`` names the artifact."""
+    k = (cache_token(spark), *key)
+    if k not in _MEMO:
+        value = build()
+        frames = list(_frames(value))
+        for df in frames:
+            if not df.is_cached:
+                df.persist()
+        for df in frames:
+            df.count()
+        _MEMO[k] = value
+    return _MEMO[k]
+
+
+def _unpersist_value(value) -> None:
+    for df in _frames(value):
+        try:
+            df.unpersist()
+        except Exception:  # session already stopped — blocks are gone
+            pass
 
 
 def clear_df_caches() -> None:
-    """Unpersist and drop every session-scoped cached DataFrame —
-    the explicit release hook for long-lived drivers and tests."""
-    for cache in _DF_CACHES:
-        for df in cache.values():
-            _unpersist_value(df)
-        cache.clear()
+    """Unpersist and drop every session artifact — the explicit release
+    hook for long-lived sessions and tests."""
+    for value in _MEMO.values():
+        _unpersist_value(value)
+    _MEMO.clear()

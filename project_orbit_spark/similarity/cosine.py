@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from project_orbit_spark.catalog import load, sort_bounded
 from project_orbit_spark.registry import register
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 
 # ---------------------------------------------------------------------------
 # numeric primitives (all sequential float64 — engine-portable)
@@ -485,21 +485,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(e, centroids(e))
 
 
-_CENTROID_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def warm_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precompute + persist the per-label centroid table once per
-    (session, sf_dir) — at 100 TB centroids are a stored index
+    """The per-label centroid table, a session artifact
+    (``session.memo``) — at 100 TB centroids are a stored index
     artifact refreshed offline, not something each query re-derives
-    from the full corpus (a posexplode of every vector). Keyed on
-    applicationId (live-session id), released via clear_df_caches()."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _CENTROID_CACHE:
-        c = centroids(_emb(spark, sf_dir)).persist()
-        c.count()
-        _CENTROID_CACHE[key] = c
-    return _CENTROID_CACHE[key]
+    from the full corpus (a posexplode of every vector)."""
+    return memo(spark, ("centroids", sf_dir), lambda: centroids(_emb(spark, sf_dir)))
 
 
 @register(
@@ -577,7 +568,7 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "measures the steady-state IVF probe cost alone. Same output, "
     "same oracle as the cold twin.",
     oracle=_IVF_ORACLE,
-    prepare=lambda spark, sf_dir: warm_centroids(spark, sf_dir) and None,
+    prepare=warm_centroids,
 )
 def ann_ivf_topk_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(_emb(spark, sf_dir), warm_centroids(spark, sf_dir))
@@ -836,45 +827,39 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_topk(e, centroids(e), recon=pq_reconstructions(e))
 
 
-_PQ_INDEX_CACHE: dict[tuple[str, str, str], DataFrame] = register_df_cache({})
-
-
 def warm_pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Precompute + persist the PQ index — the PACKED codes table
+    """The PQ index as one (codebook, codes) session artifact
+    (``session.memo``): the bounded codebook and the PACKED codes table
     (vec_id, label, codes: _PQ_M small ints in subspace order — the
     64×-compressed artifact, stored contiguous per vector exactly as
-    FAISS lays out PQ codes) and the bounded codebook — once per
-    (session, sf_dir). At 100 TB codebooks train offline and vectors
+    FAISS lays out PQ codes). At 100 TB codebooks train offline and vectors
     encode at ingest; the steady-state query cost is routing +
     codeword lookup + one bucket of asymmetric scoring, which is what
     the _warm twin times. Persisting materialized reconstructions
     instead would store 64 doubles per vector — twice the RAW float32
-    vectors — defeating the point of PQ. r18: the artifact went from
-    (vec_id, s, code) ROWS to one packed row per vector and gained
-    ``label`` — the decode stops paying a groupBy(vec_id) regroup per
-    query and the bucket probe stops joining back to the raw table
-    (see pq_reconstructions / ivf_topk); the encode stays the r17
-    map-only pass (_pq_chosen)."""
-    key = (cache_token(spark), sf_dir)
-    cb_key, cd_key = (*key, "codebook"), (*key, "codes")
-    if cd_key not in _PQ_INDEX_CACHE:
+    vectors — defeating the point of PQ. One packed row per vector,
+    carrying ``label``, so the decode pays no groupBy(vec_id) regroup
+    per query and the bucket probe does not join back to the raw table
+    (see pq_reconstructions / ivf_topk); the encode is the map-only
+    pass (_pq_chosen). The codebook is persisted in the build, so the
+    codes table reads it."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         cb = pq_codebook(_emb(spark, sf_dir)).persist()
-        cb.count()
         pack, chosen = _pq_chosen(cb)
-        cd = (
-            _emb(spark, sf_dir)
-            .crossJoin(F.broadcast(pack))
-            .select(
-                "vec_id",
-                "label",
-                F.transform(chosen, lambda ch: ch["code"]).alias("codes"),
-            )
-            .persist()
+        cd = _emb(spark, sf_dir).crossJoin(F.broadcast(pack)).select(
+            "vec_id", "label", F.transform(chosen, lambda ch: ch["code"]).alias("codes")
         )
-        cd.count()
-        _PQ_INDEX_CACHE[cb_key] = cb
-        _PQ_INDEX_CACHE[cd_key] = cd
-    return _PQ_INDEX_CACHE[cb_key], _PQ_INDEX_CACHE[cd_key]
+        return cb, cd
+
+    return memo(spark, ("pq_index", sf_dir), build)
+
+
+def warm_pq_face(spark: SparkSession, sf_dir: str) -> None:
+    """Prepare hook of the warm PQ face: its coarse centroids and its
+    PQ index."""
+    warm_centroids(spark, sf_dir)
+    warm_pq_index(spark, sf_dir)
 
 
 @register(
@@ -888,11 +873,7 @@ def warm_pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     "bucket of asymmetric scoring. Same output, same oracle as the "
     "cold twin.",
     oracle=_PQ_ORACLE,
-    prepare=lambda spark, sf_dir: (
-        warm_centroids(spark, sf_dir),
-        warm_pq_index(spark, sf_dir),
-    )
-    and None,
+    prepare=warm_pq_face,
 )
 def ann_ivf_pq_topk_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from project_orbit_spark.catalog import barrier_width
 from project_orbit_spark.registry import register
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.cosine import _emb, as_double, cosine
 
 # Broadcast ceiling for the incremental face's nightly BATCH of
@@ -311,62 +311,47 @@ def lsh_multitable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental vector dedup — O(new) batch vs persisted, LSH-sub-blocked index
 
-_EMB_INDEX_CACHE: dict[tuple[str, str], DataFrame] = register_df_cache({})
-_INDEX_PLANES_CACHE: dict[tuple[str, str], int] = {}
-
-
 def index_planes(spark: SparkSession, sf_dir: str) -> int:
     """Width the vector index is built at, derived from the indexed
     corpus size by the SCALE.md operating rule (auto_planes over a
-    column-pruned count). Cached per (session, sf_dir): in a real
-    deployment this is a stat persisted WITH the index — rebuilding
-    at a new width is the explicit re-index decision, so the width
-    must never silently change under a live index."""
-    key = (cache_token(spark), sf_dir)
-    if key not in _INDEX_PLANES_CACHE:
-        _INDEX_PLANES_CACHE[key] = auto_planes(
-            _emb(spark, sf_dir).select("vec_id").count()
-        )
-    return _INDEX_PLANES_CACHE[key]
+    column-pruned count). A session memo: in a real deployment this is
+    a stat persisted WITH the index — rebuilding at a new width is the
+    explicit re-index decision, so the width must never silently
+    change under a live index."""
+    return memo(
+        spark,
+        ("index_planes", sf_dir),
+        lambda: auto_planes(_emb(spark, sf_dir).select("vec_id").count()),
+    )
 
 
 def warm_embedding_index(
     spark: SparkSession, sf_dir: str, n_planes: int | None = None
 ) -> DataFrame:
     """The existing corpus's (vec_id, label, bucket, emb) vectors with
-    their precomputed n-plane LSH sub-bucket, persisted once per
-    (session, sf_dir, width) — at 100 TB this is the stored, bucketed
+    their precomputed n-plane LSH sub-bucket, a session artifact
+    (``session.memo``) per width — at 100 TB this is the stored, bucketed
     vector index the offline job maintains (bucketing computed at
     INDEX time, not per incoming batch). Width defaults to
     index_planes — self-scaled from the corpus size, 4 at fixture
     scale (the registered oracle contract); widening is an index
     REBUILD, which is exactly how a real deployment grows the block
-    count with the corpus. Mirrors dedup.warm_band_index /
-    cosine.warm_centroids; released via session.clear_df_caches().
-    Lifecycle: merge/compact/expire PROVEN against this exact layout
-    (r17, VERDICT r16 ask #7) — tests/test_connectors.py::
-    test_vector_index_lifecycle_verdict_invariance runs the connectors
-    helpers over a dt-partitioned copy of these rows and pins
-    verdict-invariance through match_new_vs_vector_index (the
-    registered O(new) plan): compaction changes zero verdicts, expiry
-    drops exactly the dropped ingest day's matches."""
+    count with the corpus.
+    Lifecycle: merge/compact/expire PROVEN against this exact layout —
+    tests/test_connectors.py::test_vector_index_lifecycle_verdict_invariance
+    runs the connectors helpers over a dt-partitioned copy of these
+    rows and pins verdict-invariance through match_new_vs_vector_index
+    (the registered O(new) plan): compaction changes zero verdicts,
+    expiry drops exactly the dropped ingest day's matches."""
     if n_planes is None:
         n_planes = index_planes(spark, sf_dir)
-    key = (cache_token(spark), f"{sf_dir}#p{n_planes}")
-    if key not in _EMB_INDEX_CACHE:
-        e = (
-            _emb(spark, sf_dir)
-            .select(
-                "vec_id",
-                "label",
-                lsh_bucket(F.col("emb"), n_planes).alias("bucket"),
-                "emb",
-            )
-            .persist()
-        )
-        e.count()
-        _EMB_INDEX_CACHE[key] = e
-    return _EMB_INDEX_CACHE[key]
+    return memo(
+        spark,
+        ("embedding_index", sf_dir, n_planes),
+        lambda: _emb(spark, sf_dir).select(
+            "vec_id", "label", lsh_bucket(F.col("emb"), n_planes).alias("bucket"), "emb"
+        ),
+    )
 
 
 @register(
@@ -416,7 +401,7 @@ def warm_embedding_index(
         WHERE round(list_cosine_similarity(n.emb, i.emb), 6) >= 0.999
         ORDER BY new_id, match_id
     """,
-    prepare=lambda spark, sf_dir: warm_embedding_index(spark, sf_dir) and None,
+    prepare=warm_embedding_index,
 )
 def incremental_embedding_dedup(
     spark: SparkSession, sf_dir: str, n_planes: int | None = None

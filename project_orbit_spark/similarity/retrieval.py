@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from project_orbit_spark.registry import register
-from project_orbit_spark.session import cache_token, register_df_cache
+from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.cosine import as_double, cosine
 
 K = 5
@@ -297,13 +297,9 @@ BM25_B = 0.75
 _BM25_TERMS = ["vector", "stream", "merge", "window", "filter"]
 
 
-# (session id, sf_dir) -> persisted BM25 impact index.
-_BM25_INDEX: dict[tuple[str, str], DataFrame] = register_df_cache({})
-
-
 def _bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The query-independent BM25 impact index (Anh & Moffat, SIGIR
-    2006), one per (session, sf_dir): rows ``(doc_id, imp)`` where
+    2006), a session artifact (``session.memo``): rows ``(doc_id, imp)`` where
     ``imp[t]`` is term t's BM25 contribution to the document, with the
     +1-inside-ln IDF so it stays positive for terms in over half the
     corpus. Impacts depend only on the corpus, so a request adds up
@@ -319,8 +315,8 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from project_orbit_spark.catalog import load
 
-    key = (cache_token(spark), sf_dir)
-    if key not in _BM25_INDEX:
+
+    def build() -> DataFrame:
         t = F.split(F.trim(F.lower("text")), r"\s+")
         docs = load(spark, sf_dir, "documents")
         toks = docs.select("doc_id", F.size(t).alias("dl"), t.alias("t"))
@@ -333,14 +329,14 @@ def _bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         idf = F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
         denom = F.col("tf") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(avgdl))
         imp = idf * F.col("tf") * (BM25_K1 + 1) / denom
-        _BM25_INDEX[key] = (
+        return (
             tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
             .select("doc_id", F.struct("term", imp.alias("imp")).alias("e"))
             .groupBy("doc_id")
             .agg(F.map_from_entries(F.collect_list("e")).alias("imp"))
-            .persist()
         )
-    return _BM25_INDEX[key]
+
+    return memo(spark, ("bm25_index", sf_dir), build)
 
 
 def _bm25_scored_cached(spark: SparkSession, sf_dir: str, terms: list[str]) -> DataFrame:

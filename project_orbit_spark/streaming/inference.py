@@ -81,7 +81,7 @@ def batch_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH {_DUCK_KMEANS}
         SELECT vec_id, cid AS cluster_id FROM a3 ORDER BY vec_id
     """,
-    prepare=lambda spark, sf_dir: warm_kmeans_centroids(spark, sf_dir) and None,
+    prepare=warm_kmeans_centroids,
 )
 def stream_cluster_assign_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return batch_cluster_assign(spark, sf_dir).orderBy("vec_id")

@@ -17,6 +17,9 @@ from pyspark.sql import types as T
 
 from project_orbit_spark import catalog
 from project_orbit_spark.catalog import load, read_events_stream, table_schema
+from project_orbit_spark.functions import textquality
+from project_orbit_spark.operators import clustering, corpus, dedup
+from project_orbit_spark.similarity import cosine, lsh, retrieval
 from tests.conftest import SF_DIR
 from tests.test_job_budget import jobs_of
 
@@ -126,37 +129,99 @@ def test_memo_served_load_normalizes_both_ts_vintages(spark, tmp_path, unit):
     assert got["s"].schema == load(spark, sf_dir, "events").schema
 
 
-def test_clear_df_caches_empties_the_schema_memo(spark, monkeypatch):
+@pytest.fixture(scope="module")
+def sf_copy(tmp_path_factory):
+    """A private copy of the fixture: artifacts built over it plan other
+    relations than the shared fixture's, so releasing them leaves the
+    rest of the suite's warm artifacts cached."""
+    import shutil
+
+    d = tmp_path_factory.mktemp("sf_copy")
+    shutil.copytree(SF_DIR, d, dirs_exist_ok=True)
+    return str(d)
+
+
+@pytest.fixture
+def fresh_memo(monkeypatch):
+    """An empty session-artifact store, so clearing it leaves the rest
+    of the suite's memos in place."""
     from project_orbit_spark import session
 
-    table_schema(spark, SF_DIR, "region")
-    assert catalog._SCHEMAS
-    # clear only the schema memo, so other tests' warm caches survive;
-    # it must be one of the registered caches for that to be the same call
-    assert any(c is catalog._SCHEMAS for c in session._DF_CACHES)
-    monkeypatch.setattr(
-        session, "_DF_CACHES", [c for c in session._DF_CACHES if c is catalog._SCHEMAS]
-    )
+    store: dict = {}
+    monkeypatch.setattr(session, "_MEMO", store)
+    return store
+
+
+def _cached(spark, df) -> bool:
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return cache_manager.lookupCachedData(df._jdf).isDefined()
+
+
+def test_clear_df_caches_empties_the_schema_memo(spark, fresh_memo):
+    from project_orbit_spark import session
+
+    raw = table_schema(spark, SF_DIR, "region")
+    assert list(fresh_memo.values()) == [raw]
     session.clear_df_caches()
-    assert catalog._SCHEMAS == {}
+    assert fresh_memo == {}
 
 
-def test_clear_df_caches_releases_tuple_bundles(spark, monkeypatch):
+def test_clear_df_caches_releases_tuple_bundles(spark, fresh_memo, sf_copy):
     """warm_dsir_lm keeps its model as an (lm, stats) tuple; clearing
     the caches must unpersist both tables, not only drop the entry."""
     from project_orbit_spark import session
-    from project_orbit_spark.functions import textquality
 
-    lm, stats = textquality.warm_dsir_lm(spark, SF_DIR)
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-
-    def cached(df):
-        return cache_manager.lookupCachedData(df._jdf).isDefined()
-
-    assert cached(lm) and cached(stats)
-    monkeypatch.setattr(session, "_DF_CACHES", [textquality._DSIR_CACHE])
+    lm, stats = textquality.warm_dsir_lm(spark, sf_copy)
+    assert _cached(spark, lm) and _cached(spark, stats)
     session.clear_df_caches()
-    assert not cached(lm) and not cached(stats)
+    assert fresh_memo == {}
+    assert not _cached(spark, lm) and not _cached(spark, stats)
+
+
+_MEMOS = {
+    "warm_dup_pairs": dedup.warm_dup_pairs,
+    "warm_band_index": dedup.warm_band_index,
+    "warm_simhash_index": dedup.warm_simhash_index,
+    "warm_span_index": dedup.warm_span_index,
+    "warm_kmeans_centroids": clustering.warm_kmeans_centroids,
+    "warm_segment_index": corpus.warm_segment_index,
+    "warm_curation_artifacts": corpus.warm_curation_artifacts,
+    "warm_embedding_index": lsh.warm_embedding_index,
+    "warm_centroids": cosine.warm_centroids,
+    "warm_pq_index": cosine.warm_pq_index,
+    "_bm25_index": retrieval._bm25_index,
+    "warm_vocab": textquality.warm_vocab,
+    "warm_dsir_lm": textquality.warm_dsir_lm,
+    "index_planes": lsh.index_planes,
+    "_semdedup_planes": dedup._semdedup_planes,
+    "table_schema": lambda spark, sf: table_schema(spark, sf, "orders"),
+    # the probe memo's value is the verdict, stored under its key
+    "maybe_broadcast": lambda spark, sf: catalog.maybe_broadcast(load(spark, sf, "orders"), 10),
+}
+
+
+@pytest.mark.parametrize("name", list(_MEMOS))
+def test_session_memo_reuses_then_releases(spark, fresh_memo, sf_copy, name):
+    """Every session memo builds once: a second call runs no job and
+    serves the stored value. clear_df_caches() then empties the store
+    and unpersists every DataFrame the artifact holds."""
+    from project_orbit_spark import session
+
+    call = _MEMOS[name]
+    first = call(spark, sf_copy)
+    stored = dict(fresh_memo)
+    assert stored
+    got = {}
+    assert jobs_of(spark, lambda: got.update(second=call(spark, sf_copy))) == 0
+    assert fresh_memo.keys() == stored.keys()
+    assert all(fresh_memo[k] is v for k, v in stored.items())
+    if name != "maybe_broadcast":
+        assert got["second"] is first
+    frames = [df for v in stored.values() for df in session._frames(v)]
+    assert all(_cached(spark, df) for df in frames)
+    session.clear_df_caches()
+    assert fresh_memo == {}
+    assert not any(_cached(spark, df) for df in frames)
 
 
 # the benchmark's rag_serve request mix (perfbench/workloads.py RAG_MIX)

@@ -171,3 +171,27 @@ def test_page_templating_only_through_templated_extract():
         f == "functions/html_extract.py" and helper.lineno <= i <= helper.end_lineno
         for f, i in hits
     ), hits
+
+
+def test_session_artifacts_only_through_memo():
+    """Session artifacts are keyed, materialized and released in one
+    place, session.memo: no module keeps its own cache dict (a
+    ``register_df_cache`` registration or a lazy ``global _X`` init), and
+    the session token appears outside session.py only in the staging
+    path helper sources/roundtrip._stage_dir."""
+    hits = []
+    for p in _py_sources():
+        rel = str(p.relative_to(PKG))
+        text = p.read_text()
+        if "register_df_cache(" in text:
+            hits.append(f"{rel}: register_df_cache(")
+        for name in re.findall(r"^\s*global\s+(\w+)", text, re.M):
+            # registry's import-once flag is the one module global
+            if (rel, name) != ("registry.py", "_loaded"):
+                hits.append(f"{rel}: global {name}")
+        n = text.count("cache_token(")
+        if rel not in ("session.py", "sources/roundtrip.py") and n:
+            hits.append(f"{rel}: cache_token( x{n}")
+    roundtrip = (PKG / "sources/roundtrip.py").read_text()
+    assert roundtrip.count("cache_token(") == 1
+    assert not hits, hits

@@ -146,6 +146,21 @@ def test_q1_after_a_warm_load_job_budget(spark):
     assert 0 < n <= 2, n
 
 
+@pytest.mark.parametrize("name", ["rollup_order_stats", "cube_order_stats", "grouping_sets_orders_sql"])
+def test_grouping_set_face_job_budget(spark, name):
+    """A grouping-set face (build plus collect, orders' schema
+    resolved) sorts its 19, 32 or 9 rows in one partition: its
+    aggregation's jobs and the final stage, no range-sampling or
+    range-shuffle job (5 with them)."""
+    from project_orbit_spark import registry
+    from project_orbit_spark.catalog import load
+
+    load(spark, SF_DIR, "orders")
+    q = registry.get_query(name)
+    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    assert 0 < n <= 3, n
+
+
 @pytest.mark.parametrize(
     "name, budget",
     [("ann_ivf_topk_warm", 5), ("cosine_topk_exact", 4), ("dashboard_report_table", 2)],
