@@ -185,10 +185,11 @@ _DASH_COMPANY_LIST = ", ".join(f"'{c}'" for c in _DASH_COMPANIES)
     "llm_extract_funding_stub — and (4) patch the 8 mandatory "
     "sections, writing 'Not disclosed.' where the context fails the "
     "quality gate (rag_pipeline.py:204-215). Scale shape: corpus "
-    "scanned once; per-company top-k is a two-phase salted rank "
-    "(per-salt partial top-k, then final rank over #salts×k "
-    "survivors) so few-company skew never funnels the corpus "
-    "through 5 window partitions.",
+    "scanned once; per-company top-k is one rank whose rank <= 8 "
+    "filter plans a partial WindowGroupLimit below the company "
+    "exchange (each map partition ships <= 8 rows per company), so "
+    "few-company skew never funnels the corpus through 5 window "
+    "partitions.",
     oracle=f"""
         WITH companies AS (SELECT unnest([{_DASH_COMPANY_LIST}]) AS company),
         sections AS (
@@ -268,20 +269,12 @@ def rag_dashboard_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(cosine(F.col("qv"), F.col("dv")), 6).alias("score"),
         )
     )
-    # two-phase salted top-k: with only a handful of companies a global
-    # per-company rank window would drag the whole corpus through 5
-    # partitions; instead rank within (company, doc_id%16) salt groups,
-    # keep k per group, then rank the ≤16k survivors per company
-    salted = scored.withColumn("salt", (F.col("doc_id") % 16).cast("int"))
-    w1 = Window.partitionBy("company", "salt").orderBy(F.desc("score"), F.asc("doc_id"))
-    partial = (
-        salted.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= _DASH_K)
-        .drop("salt", "r1")
-    )
-    w2 = Window.partitionBy("company").orderBy(F.desc("score"), F.asc("doc_id"))
+    # the rank <= k filter plans a partial WindowGroupLimit below the
+    # company exchange: each map partition ships <= k rows per company,
+    # so the corpus never funnels into |companies| reducers
+    w = Window.partitionBy("company").orderBy(F.desc("score"), F.asc("doc_id"))
     retrieved = (
-        partial.withColumn("rank", F.row_number().over(w2).cast("long"))
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= _DASH_K)
     )
     own = retrieved.groupBy("company").agg(

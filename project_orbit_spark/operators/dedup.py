@@ -734,20 +734,28 @@ def minhash_pairs(
         F.lit(0),
         lambda s, v: s + v,
     )
-    # a pair colliding in several bands repeats with the same
-    # signatures, so its estimate is a function of (left_id, right_id):
-    # score and filter each candidate row, then dedup the fixed-width
-    # triples — the dedup shuffle never carries the signature arrays
+    # a pair colliding in several bands joins once per band: keep the
+    # row of its first colliding band only (equal signature slices,
+    # read map-side off the signatures both rows carry), so each pair
+    # is emitted once with no dedup exchange
+    first_band = F.array_position(
+        F.array(
+            *[
+                F.slice("sig_a", i * rows + 1, rows) == F.slice("sig_b", i * rows + 1, rows)
+                for i in range(bands)
+            ]
+        ),
+        True,
+    ) - 1
     return (
         a.join(b, ["band_idx", "band_sig"])
-        .filter(F.col("left_id") < F.col("right_id"))
+        .filter((F.col("left_id") < F.col("right_id")) & (F.col("band_idx") == first_band))
         .select(
             "left_id",
             "right_id",
             F.round(matches.cast("double") / float(k), 4).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= 0.5)
-        .distinct()
     )
 
 
@@ -1121,6 +1129,17 @@ def simhash_bits(corpus: DataFrame, *, n_words: int) -> DataFrame:
     return hashed.select("doc_id", "lang", simhash_vote_bits(n_words).alias("bits"))
 
 
+def _band(word, b: int, band_bits: int) -> Column:
+    """Band ``b`` of a packed simhash, ``word(w)`` giving its 32-bit
+    words: bits [b*band_bits+1, (b+1)*band_bits] are the (b %
+    per_word)-th band_bits-wide slice of word b // per_word, MSB-first
+    (the packing fold makes bit 1 the MSB)."""
+    per_word = 32 // band_bits
+    return F.shiftright(word(b // per_word), 32 - band_bits * (b % per_word + 1)).bitwiseAND(
+        F.lit((1 << band_bits) - 1)
+    )
+
+
 def _packed_banded(
     corpus: DataFrame, *, n_words: int, band_bits: int
 ) -> DataFrame:
@@ -1146,21 +1165,11 @@ def _packed_banded(
         for w in range(n_words)
     ]
     packed = sh.select("doc_id", "lang", *words)
-    bands_per_word = 32 // band_bits
-    mask = (1 << band_bits) - 1
-    # band b = bits [b*band_bits+1, (b+1)*band_bits] == the (b %
-    # bands_per_word)-th band_bits-wide slice of word b //
-    # bands_per_word, MSB-first (the packing fold makes bit 1 the MSB)
     band_keys = F.array(
         *[
             F.struct(
                 F.lit(b).cast("int").alias("band_idx"),
-                F.shiftright(
-                    F.col(f"w{b // bands_per_word}"),
-                    32 - band_bits * ((b % bands_per_word) + 1),
-                )
-                .bitwiseAND(F.lit(mask))
-                .alias("band_val"),
+                _band(lambda w: F.col(f"w{w}"), b, band_bits).alias("band_val"),
             )
             for b in range(n_bands)
         ]
@@ -1243,18 +1252,23 @@ def _simhash_pairs(
         "band_val",
         *[F.col(f"w{w}").alias(f"wb{w}") for w in range(n_words)],
     )
-    hamming = sum(
-        F.bit_count(F.col(f"wa{w}").bitwiseXOR(F.col(f"wb{w}")))
-        for w in range(n_words)
-    )
-    # hamming is a function of (left_id, right_id): score and filter
-    # each band collision, then dedup the fixed-width triples
+
+    def xor(w: int) -> Column:
+        return F.col(f"wa{w}").bitwiseXOR(F.col(f"wb{w}"))
+
+    hamming = sum(F.bit_count(xor(w)) for w in range(n_words))
+    # a pair colliding in several bands joins once per band: keep the
+    # row of its first colliding band only (a zero masked band of
+    # wa ^ wb, read map-side off the words both rows carry), so each
+    # pair is emitted once with no dedup exchange
+    first_band = F.array_position(
+        F.array(*[_band(xor, i, band_bits) == 0 for i in range(n_bands)]), True
+    ) - 1
     return (
         a.join(b, ["lang", "band_idx", "band_val"])
-        .filter(F.col("left_id") < F.col("right_id"))
+        .filter((F.col("left_id") < F.col("right_id")) & (F.col("band_idx") == first_band))
         .select("left_id", "right_id", hamming.cast("long").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .distinct()
         .orderBy("left_id", "right_id")
     )
 

@@ -55,70 +55,22 @@ def euclidean(a: Column, b: Column) -> Column:
     )
 
 
-def salted_topk(
-    scored: DataFrame,
-    key_cols: list[str],
-    order_by: list[Column],
-    k: int,
-    salt_expr: Column,
-    salt_mod: int = 16,
-    rank_name: str = "rank",
-) -> DataFrame:
-    """Two-phase salted top-k per key group — the one audited
-    implementation every corpus-scale per-key rank routes through
-    (VERDICT r13 #1). A plain ``Window.partitionBy(keys)`` over a
-    corpus-sized input hash-partitions the WHOLE corpus onto
-    |distinct keys| reducers: with a handful of query keys, 5
-    reducers sort the planet at 100 TB. Instead: phase 1 ranks
-    within (keys, salt) — salt_mod× more, corpus-spread partitions —
-    and keeps k per salt group (the global top-k per key is
-    necessarily a subset of the union of per-salt top-k's, since
-    every group's candidates are totally ordered by the same key);
-    phase 2 re-ranks the <= salt_mod*k survivors per key, an O(k)
-    window. Results are rank-identical to the single-window plan as
-    long as ``order_by`` is a total order (deterministic tie-break).
-
-    ``__salt`` / ``__r1`` are reserved helper names (ADVICE r14): a
-    caller whose frame already carries either would have it silently
-    overwritten and dropped, so misuse fails loudly instead.
-    """
-    reserved = {"__salt", "__r1"} & set(scored.columns)
-    if reserved:
-        raise ValueError(
-            f"salted_topk reserves helper column names {sorted(reserved)}; "
-            "rename them on the input frame"
-        )
-    salted = scored.withColumn("__salt", (salt_expr % salt_mod).cast("int"))
-    w1 = Window.partitionBy(*key_cols, "__salt").orderBy(*order_by)
-    partial = (
-        salted.withColumn("__r1", F.row_number().over(w1))
-        .filter(F.col("__r1") <= k)
-        .drop("__salt", "__r1")
-    )
-    w2 = Window.partitionBy(*key_cols).orderBy(*order_by)
-    return (
-        partial.withColumn(rank_name, F.row_number().over(w2).cast("long"))
-        .filter(F.col(rank_name) <= k)
-    )
-
-
 def brute_force_topk(
     queries: DataFrame, corpus: DataFrame, k: int, q_vec: str = "qe", c_vec: str = "ce"
 ) -> DataFrame:
     """Exact cosine top-k: broadcast the query set, stream the corpus,
     rank per query. The W1 primitive with the reference's over-fetch
     hack made unnecessary (filters belong *below* the rank). The
-    rank itself routes through salted_topk so the exact face scales
-    the same way the ANN faces do — no per-qid corpus funnel."""
+    ``rank <= k`` filter over the per-qid ``row_number`` plans a
+    partial WindowGroupLimit below the qid exchange, so each map
+    partition ships at most k rows per query (docs/SCALE.md "Top-k
+    faces"); ``cid`` breaks score ties, so the order is total."""
     scored = F.broadcast(queries).join(corpus, F.col("qid") != F.col("cid")).select(
         "qid", "cid", cosine(F.col(q_vec), F.col(c_vec)).alias("score")
     )
-    return salted_topk(
-        scored,
-        ["qid"],
-        [F.desc("score"), F.asc("cid")],
-        k,
-        salt_expr=F.col("cid"),
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("cid"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 
@@ -390,8 +342,10 @@ _IVF_ORACLE = f"""
 
 def _packed_cents(cent: DataFrame) -> DataFrame:
     """1-row packed centroid table — sorted (bucket, cvec) structs —
-    the broadcast the map-side routing reads (bucket is unique, so the
-    sort is just packing determinism)."""
+    the route table the map-side routing broadcasts (bucket is unique,
+    so the sort is just packing determinism). Over zero centroids the
+    one row holds an empty array, which routes every query to a NULL
+    bucket and so to no rows."""
     return cent.groupBy().agg(
         F.array_sort(
             F.collect_list(
@@ -415,34 +369,26 @@ def _route_dists():
     )
 
 
-def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> DataFrame:
-    """IVF core against a caller-supplied centroid table: route each
-    query to its nearest centroid (broadcast routing), cosine within
-    that bucket only (nprobe=1). With ``recon`` — a (vec_id, label,
-    recon) frame — bucket members score against their PQ
-    reconstructions instead of raw vectors — the asymmetric-distance
+def ivf_topk(e: DataFrame, route: DataFrame, recon: DataFrame | None = None) -> DataFrame:
+    """IVF core against a caller-supplied route table (``_packed_cents``
+    over the centroids): route each query to its nearest centroid,
+    cosine within that bucket only (nprobe=1). With ``recon`` — a
+    (vec_id, label, recon) frame — bucket members score against their
+    PQ reconstructions instead of raw vectors — the asymmetric-distance
     IVF-PQ read path; the routing, tie-break, rank, and rounding
     contract stays single-source either way.
 
-    r18 (guide §2.4, VERDICT r17 ask #6): ``recon`` is now the bucket
-    CORPUS side itself, not a side table joined back by vec_id. The
-    old shape — bucket-filter ``e``, then ``bucket.join(recon,
-    "vec_id")`` — joined the corpus against a projection of the same
-    corpus on a key (vec_id) that has nothing to do with where rows
-    are needed (the §8.4 anti-pattern), paying two corpus-wide
-    exchanges + sorts per query. Both recon producers carry (vec_id,
-    label, recon) map-only (see pq_reconstructions), so the bucket
-    probe is ONE broadcast join against whichever table holds the
-    scoring vectors; same rows, same scores, zero vec_id exchanges."""
+    ``recon`` is the bucket CORPUS side itself, not a side table joined
+    back by vec_id: both recon producers carry (vec_id, label, recon)
+    map-only (see pq_reconstructions), so the bucket probe is ONE
+    broadcast join against whichever table holds the scoring vectors,
+    with no corpus-wide vec_id exchange."""
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), F.col("emb").alias("qe"))
-    # r18 (guide §2.4): routing is MAP-SIDE — array_min over the
-    # packed 1-row broadcast centroid table (the _pq_chosen /
-    # assign_clusters discipline) instead of a per-row centroid
-    # cross-join into a row_number window, whose partitionBy(qid)
-    # exchange + sort every probe paid. struct(d, bucket) compares
-    # field-lexicographically, so the (dist, bucket) tie-break is
-    # bit-identical to the old ORDER BY dist, bucket / rn=1.
-    routed = q.crossJoin(F.broadcast(_packed_cents(cent))).select(
+    # routing is map-side: array_min over the broadcast 1-row route
+    # table (the _pq_chosen / assign_clusters discipline), no per-row
+    # centroid cross join into a window. struct(d, bucket) compares
+    # field-lexicographically, so the tie-break is ORDER BY dist, bucket.
+    routed = q.crossJoin(F.broadcast(route)).select(
         "qid", "qe", F.array_min(_route_dists())["bucket"].alias("bucket")
     )
     corpus = (
@@ -477,20 +423,24 @@ def ivf_topk(e: DataFrame, cent: DataFrame, recon: DataFrame | None = None) -> D
     "so the oracle reproduces the approximation deterministically; "
     "recall vs brute force is a tested property, not hash-checked. "
     "Centroids are derived inline here (cold path); the _warm twin "
-    "measures the amortized cost with a persisted centroid table.",
+    "measures the amortized cost with a persisted route table.",
     oracle=_IVF_ORACLE,
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
-    return ivf_topk(e, centroids(e))
+    return ivf_topk(e, _packed_cents(centroids(e)))
 
 
 def warm_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-label centroid table, a session artifact
-    (``session.memo``) — at 100 TB centroids are a stored index
-    artifact refreshed offline, not something each query re-derives
-    from the full corpus (a posexplode of every vector)."""
-    return memo(spark, ("centroids", sf_dir), lambda: centroids(_emb(spark, sf_dir)))
+    """The centroid table in its serving form, the packed 1-row route
+    table (``_packed_cents``), a session artifact (``session.memo``):
+    at 100 TB centroids are a stored index artifact refreshed offline,
+    not something each query re-derives from the full corpus (a
+    posexplode of every vector) or re-packs through a single-partition
+    exchange. The one memo every warm IVF face routes off."""
+    return memo(
+        spark, ("centroids", sf_dir), lambda: _packed_cents(centroids(_emb(spark, sf_dir)))
+    )
 
 
 @register(
@@ -532,9 +482,8 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     cent = centroids(e)
     q = e.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("qid"), F.col("emb").alias("qe"))
-    # r18: map-side routing (see ivf_topk) — the two nearest buckets
-    # are the first two entries of the ascending (d, bucket) sort,
-    # exploded; bit-identical to the old rn <= 2 window filter.
+    # map-side routing (see ivf_topk): the two nearest buckets are the
+    # first two entries of the ascending (d, bucket) sort, exploded
     routed = (
         q.crossJoin(F.broadcast(_packed_cents(cent)))
         .select(
@@ -564,9 +513,9 @@ def ann_ivf_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
     tags=("similarity", "ann"),
     doc="ann_ivf_topk with the centroid table persisted ahead of time "
-    "(registry prepare hook → bench.py runs it outside the timer): "
-    "measures the steady-state IVF probe cost alone. Same output, "
-    "same oracle as the cold twin.",
+    "in its packed 1-row route form (registry prepare hook → bench.py "
+    "runs it outside the timer): measures the steady-state IVF probe "
+    "cost alone. Same output, same oracle as the cold twin.",
     oracle=_IVF_ORACLE,
     prepare=warm_centroids,
 )
@@ -824,7 +773,7 @@ _PQ_ORACLE = f"""
 )
 def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
-    return ivf_topk(e, centroids(e), recon=pq_reconstructions(e))
+    return ivf_topk(e, _packed_cents(centroids(e)), recon=pq_reconstructions(e))
 
 
 def warm_pq_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -911,11 +860,11 @@ MRL_SHORTLIST = 100  # truncated-scan shortlist size per query
     "Output carries both scores so the funnel's agreement with the "
     "exact scan is auditable per row. "
     "Plan: broadcast the 5-query set, ONE corpus pass at prefix "
-    "width, salted two-phase shortlist per query (rank within "
-    "(qid, cid%16) salt groups, re-rank the <=1600 survivors — "
-    "never a per-qid corpus funnel, see salted_topk), then "
-    "full-width scoring touches 20 rows per query — at "
-    "100 TB the full-dim read cost is O(k), not O(corpus). The "
+    "width, a per-qid shortlist rank whose trank <= 100 filter "
+    "plans a partial WindowGroupLimit below the qid exchange (each "
+    "map partition ships <= 100 rows per query — never a per-qid "
+    "corpus funnel), then full-width scoring touches 100 rows per "
+    "query — at 100 TB the full-dim read cost is O(k), not O(corpus). The "
     "truncated pass composes with the IVF router (route on prefix "
     "centroids) when a corpus scan itself is too much.",
     oracle=f"""
@@ -963,19 +912,16 @@ def matryoshka_funnel_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, F.col("qid") != F.col("cid"))
         .select("qid", "cid", "qe", "ce", tscore.alias("tscore"))
     )
-    # salted two-phase shortlist (VERDICT r13 #1): the coarse pass
-    # scores the FULL corpus, so ranking it with a plain per-qid
-    # window would drag every row through 5 partitions; salted_topk
-    # spreads phase 1 over 16 salt groups per query and re-ranks only
-    # the <=1600 survivors. Rank-identical to the single window.
-    shortlist = salted_topk(
-        coarse,
-        ["qid"],
-        [F.desc("tscore"), F.asc("cid")],
-        MRL_SHORTLIST,
-        salt_expr=F.col("cid"),
-        rank_name="trank",
-    ).drop("trank").withColumn("fscore", cosine(F.col("qe"), F.col("ce")))
+    # the coarse pass scores the FULL corpus: the trank filter's
+    # partial WindowGroupLimit keeps <= MRL_SHORTLIST rows per qid in
+    # each map partition before the qid exchange
+    wt = Window.partitionBy("qid").orderBy(F.desc("tscore"), F.asc("cid"))
+    shortlist = (
+        coarse.withColumn("trank", F.row_number().over(wt))
+        .filter(F.col("trank") <= MRL_SHORTLIST)
+        .drop("trank")
+        .withColumn("fscore", cosine(F.col("qe"), F.col("ce")))
+    )
     wf = Window.partitionBy("qid").orderBy(F.desc("fscore"), F.asc("cid"))
     return (
         shortlist.withColumn("rank", F.row_number().over(wf).cast("long"))

@@ -244,19 +244,10 @@ def context_snippets_format(spark: SparkSession, sf_dir: str) -> DataFrame:
             _embed4_expr(F.concat(F.col("source"), F.lit(" funding rounds investors"))),
         ).alias("score"),
     )
-    # two-phase salted top-k (the rag_dashboard_gold pattern): a plain
-    # per-company window would drag a mega-company's whole corpus
-    # through one partition; rank within (source, doc_id%16) first,
-    # then rank the ≤16×3 survivors per company
-    salted = scored.withColumn("salt", (F.col("doc_id") % 16).cast("int"))
-    w1 = Window.partitionBy("source", "salt").orderBy(F.desc("score"), F.asc("doc_id"))
-    partial = (
-        salted.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= 3)
-        .drop("salt", "r1")
-    )
+    # the rank <= 3 filter plans a partial WindowGroupLimit below the
+    # source exchange: each map partition ships <= 3 rows per company
     w = Window.partitionBy("source").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 3)
+    ranked = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= 3)
     millis = F.round(F.col("score") * 1000).cast("long")
     snippet = F.concat(
         F.lit("[Snippet "), F.col("rank").cast("string"),

@@ -376,17 +376,11 @@ def blog_index_article_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d0 = load(spark, sf_dir, "documents")
-    # max_articles=50 head per company, two-phase so no company's full
-    # corpus ever funnels through one partition
-    salted = d0.withColumn("salt", (F.col("doc_id") % 16).cast("int"))
-    w1 = Window.partitionBy("source", "salt").orderBy(F.asc("doc_id"))
-    partial = (
-        salted.withColumn("r1", F.row_number().over(w1))
-        .filter(F.col("r1") <= 50)
-        .drop("salt", "r1")
-    )
-    w2 = Window.partitionBy("source").orderBy(F.asc("doc_id"))
-    d = partial.withColumn("r2", F.row_number().over(w2)).filter(F.col("r2") <= 50)
+    # max_articles=50 head per company: the r <= 50 filter plans a
+    # partial WindowGroupLimit below the source exchange, so no
+    # company's full corpus ever funnels through one partition
+    w = Window.partitionBy("source").orderBy(F.asc("doc_id"))
+    d = d0.withColumn("r", F.row_number().over(w)).filter(F.col("r") <= 50)
     card = F.concat(
         F.lit('<article class="post"><h2><a href="/blog/post-'),
         F.col("doc_id").cast("string"),

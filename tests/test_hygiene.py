@@ -195,3 +195,18 @@ def test_session_artifacts_only_through_memo():
     roundtrip = (PKG / "sources/roundtrip.py").read_text()
     assert roundtrip.count("cache_token(") == 1
     assert not hits, hits
+
+
+def test_topk_ranks_without_salt_windows():
+    """A per-key top-k is one row_number window with its rank <= k
+    filter: Spark plans a partial WindowGroupLimit below the key
+    exchange, so each map partition already ships at most k rows per
+    key. A first rank within (key, salt) groups only adds an exchange
+    and a job, so no window is partitioned on a salt column and the
+    two-phase salted_topk helper stays gone."""
+    hits = []
+    for p in _py_sources():
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if re.search(r"partitionBy\([^)]*salt|salted_topk", line, re.I):
+                hits.append(f"{p.relative_to(PKG)}:{i}")
+    assert not hits, hits

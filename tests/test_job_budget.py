@@ -40,6 +40,18 @@ def jobs_of(spark, fn) -> int:
     raise AssertionError(f"jobs of {group} did not settle: {prev}")
 
 
+def warm_request_jobs(spark, name) -> int:
+    """Jobs of one warm request: the query's prepare hook run (if it
+    has one) and the query served once, then one build plus collect."""
+    from project_orbit_spark import registry
+
+    q = registry.get_query(name)
+    if q.prepare is not None:
+        q.prepare(spark, SF_DIR)
+    q.fn(spark, SF_DIR).toPandas()
+    return jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+
+
 def test_curation_training_gold_job_budget(spark):
     """The composed curation pipeline, build plus collect, with the
     documents schema resolved: one-shuffle propagation rounds, counted
@@ -169,13 +181,7 @@ def test_bounded_sort_request_job_budget(spark, name, budget):
     """A warm serving request (its prepare hook run and the query
     served once) sorts its bounded result in one partition: two jobs
     fewer than a range-partitioned sort (7, 6 and 4 with it)."""
-    from project_orbit_spark import registry
-
-    q = registry.get_query(name)
-    if q.prepare is not None:
-        q.prepare(spark, SF_DIR)
-    q.fn(spark, SF_DIR).toPandas()
-    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    n = warm_request_jobs(spark, name)
     assert 0 < n <= budget, n
 
 
@@ -189,9 +195,29 @@ def test_bm25_request_job_budget(spark, name, budget):
     Hybrid keeps its query-vector broadcast and rerank its candidate
     broadcast (9, 8 and 9 jobs when each request recomputed tf, df and
     the corpus stats)."""
-    from project_orbit_spark import registry
+    n = warm_request_jobs(spark, name)
+    assert 0 < n <= budget, n
 
-    q = registry.get_query(name)
-    q.fn(spark, SF_DIR).toPandas()
-    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("ann_ivf_topk_warm", 4),
+        ("cosine_topk_exact", 3),
+        ("matryoshka_funnel_topk", 5),
+        ("context_snippets_format", 4),
+        ("rag_dashboard_gold", 10),
+        ("simhash64_hamming_dups", 6),
+    ],
+)
+def test_one_rank_exchange_job_budget(spark, name, budget):
+    """A per-key top-k ranks behind one key exchange (its rank <= k
+    filter plans a partial WindowGroupLimit below it, no salted first
+    rank), the warm IVF request routes off the stored packed route
+    table (no single-partition packing of the centroids), and the
+    simhash pair stage emits each pair once off its first colliding
+    band (no dedup exchange). Warm, prepare hook run: 5, 4, 6, 5, 11
+    to 12 and 7 jobs with the salted ranks, the per-request packing
+    and the pair dedup."""
+    n = warm_request_jobs(spark, name)
     assert 0 < n <= budget, n

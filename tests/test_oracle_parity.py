@@ -77,6 +77,14 @@ def test_rag_dashboard_gold_on_zero_documents_matches_oracle(spark, tmp_path):
         (0, "rollup_order_stats"),
         (0, "cube_order_stats"),
         (0, "grouping_sets_orders_sql"),
+        (0, "cosine_topk_exact"),
+        (1, "cosine_topk_exact"),
+        (0, "ann_ivf_topk_warm"),
+        (1, "ann_ivf_topk_warm"),
+        (0, "rag_dashboard_gold"),
+        (1, "rag_dashboard_gold"),
+        (0, "simhash64_hamming_dups"),
+        (1, "simhash64_hamming_dups"),
     ],
 )
 def test_query_matches_oracle_on_a_sliced_catalog(spark, tmp_path, rows, name):

@@ -206,18 +206,6 @@ def test_incremental_dedup_joins_bands_not_cartesian(spark):
     assert "CartesianProduct" not in f.text
 
 
-def test_dashboard_gold_topk_is_salted_not_single_window(spark):
-    # per-company top-k over the corpus must go through the two-phase
-    # salted rank: the first window keys on (company, salt), so the
-    # corpus-wide sort spreads over 16 salt groups per company instead
-    # of funnelling through one partition per company
-    f = facts("rag_dashboard_gold", spark)
-    assert "CartesianProduct" not in f.text.replace(
-        "BroadcastNestedLoopJoin", ""
-    ), "companies must broadcast into the scoring crossJoin"
-    assert "salt" in f.text, "phase-1 rank must partition on the salt key"
-
-
 def test_probe_frontier_pattern_table_broadcasts(spark):
     # 56-row pattern table must be the broadcast side; the fan-in
     # count is the only shuffle
@@ -325,16 +313,6 @@ def test_feed_autodiscovery_grid_broadcasts(spark):
     f = facts("feed_autodiscovery", spark)
     assert f.n_broadcast_joins >= 1 or "BroadcastNestedLoopJoin" in f.text
     assert "CartesianProduct" not in f.text
-
-
-def test_context_snippets_salted_topk_no_joins(spark):
-    # embeddings are pure expressions over the scan: no joins anywhere;
-    # phase-1 rank must partition on the salt key so a mega-company
-    # never funnels through one partition
-    f = facts("context_snippets_format", spark)
-    assert "Join" not in f.text
-    assert "CartesianProduct" not in f.text
-    assert "salt" in f.text
 
 
 def test_repeated_span_mining_hash_shuffle_broadcast_exemplar(spark):
@@ -941,21 +919,50 @@ def test_matryoshka_funnel_broadcasts_queries_once(spark):
     assert "CartesianProduct" not in f.text
 
 
-def test_matryoshka_coarse_rank_is_salted_not_single_window(spark):
-    # VERDICT r13 #1: the coarse shortlist scores the FULL corpus, so
-    # its rank must go through the two-phase salted pattern — phase 1
-    # partitions on (qid, __salt) so the corpus-wide sort spreads over
-    # 16 salt groups per query instead of funnelling the planet
-    # through 5 partitions at 100 TB
-    f = facts("matryoshka_funnel_topk", spark)
-    assert "__salt" in f.text, "coarse rank must partition on the salt key"
+def test_context_snippets_embeddings_need_no_join(spark):
+    # the stub embeddings of both sides are pure expressions over the
+    # documents scan: no join anywhere in the plan
+    f = facts("context_snippets_format", spark)
+    assert "Join" not in f.text
 
 
-def test_brute_force_topk_is_salted_not_single_window(spark):
-    # the exact face routes through the same audited salted_topk
-    # helper as the funnel — one implementation, both plans pinned
-    f = facts("cosine_topk_exact", spark)
-    assert "__salt" in f.text, "exact rank must partition on the salt key"
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cosine_topk_exact",
+        "matryoshka_funnel_topk",
+        "context_snippets_format",
+        "rag_dashboard_gold",
+        "blog_index_article_links",
+    ],
+)
+def test_topk_ranks_behind_one_key_exchange_with_partial_limit(name, spark):
+    # a per-key top-k over a corpus-sized input must not funnel the
+    # corpus into |keys| reducers: below each rank window the first
+    # exchange is the one hash exchange on the rank key, and right
+    # under it a partial WindowGroupLimit keeps <= k rows per key in
+    # each map partition; no salt column, no second rank exchange
+    import re
+
+    from project_orbit_spark.plans.audit import simple_plan
+
+    text = simple_plan(registry.get_query(name).fn(spark, SF_DIR))
+    assert "salt" not in text
+    assert "CartesianProduct" not in text
+    lines = text.splitlines()
+    windows = [
+        (i, m.group(1))
+        for i, line in enumerate(lines)
+        if (m := re.search(r"Window \[row_number\(\) windowspecdefinition\((\w+#\d+L?), ", line))
+    ]
+    assert windows, "the top-k must rank with a row_number window"
+    for i, key in windows:
+        below = next(j for j in range(i + 1, len(lines)) if "Exchange" in lines[j])
+        assert f"Exchange hashpartitioning({key}, " in lines[below], lines[below]
+        assert re.search(
+            rf"WindowGroupLimit \[{re.escape(key)}\], .*, Partial$", lines[below + 1]
+        ), lines[below + 1]
+        assert len(re.findall(rf"Exchange hashpartitioning\({re.escape(key)}, ", text)) == 1
 
 
 def test_gopher_signals_single_corpus_pass(spark):
