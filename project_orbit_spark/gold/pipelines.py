@@ -589,8 +589,8 @@ def risk_report_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_curation_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_orbit_spark.functions.textquality import quality_score
-    from project_orbit_spark.operators.corpus import hash_bucket
-    from project_orbit_spark.operators.dedup import minhash_pairs
+    from project_orbit_spark.operators.corpus import hash_bucket, split_of
+    from project_orbit_spark.operators.dedup import join_clusters, minhash_pairs
     from project_orbit_spark.operators.graph import connected_components
 
     d = load(spark, sf_dir, "documents")
@@ -598,23 +598,9 @@ def corpus_curation_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "text", quality_score(F.col("text"), F.col("n_chars")).alias("q")
     )
     kept_q = scored.filter(F.col("q") >= 0.5).select("doc_id", "text")
-    pairs = minhash_pairs(kept_q)
-    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    cc = connected_components(edges, strategy="auto")
-    labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    cc = connected_components(minhash_pairs(kept_q), "left_id", "right_id")
     canonical = F.coalesce("cluster_id", F.col("doc_id"))
-    # size-GATED label join — the fifth cluster-membership site, found
-    # by the round-13 broadcast audit after VERDICT r12 #1 flagged the
-    # other four: membership scales with corpus redundancy, never
-    # force-broadcast. Probe = the checkpointed cc labels.
-    from project_orbit_spark.catalog import maybe_broadcast
-    from project_orbit_spark.operators import dedup as dedup_ops
-
-    verdict = scored.join(
-        maybe_broadcast(labels, dedup_ops.LABEL_BROADCAST_BOUND, probe=cc),
-        "doc_id",
-        "left",
-    ).select(
+    verdict = join_clusters(scored, cc).select(
         "doc_id",
         "lang",
         (F.floor(F.col("q") * 10000) / 10000).alias("quality"),
@@ -623,14 +609,11 @@ def corpus_curation_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("kept")
         .alias("status"),
     )
-    bucket = hash_bucket(F.col("doc_id"))
+    split = split_of(hash_bucket(F.col("doc_id")))
     return verdict.select(
         "doc_id",
         "lang",
         "quality",
         "status",
-        F.when(
-            F.col("status") == "kept",
-            F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"),
-        ).alias("split"),
+        F.when(F.col("status") == "kept", split).alias("split"),
     ).orderBy("doc_id")

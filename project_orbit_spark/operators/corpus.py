@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from project_orbit_spark.catalog import checkpoint_counted, load, maybe_broadcast
-from project_orbit_spark.operators.dedup import word_shingles
+from project_orbit_spark.operators.dedup import join_clusters, minhash_pairs, word_shingles
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.lsh import _duck_auto_bucket as _lsh_duck_auto_bucket
@@ -41,6 +41,11 @@ def hash_bucket(key: Column, salt: str = "", buckets: int = 100) -> Column:
     return (F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("long") % buckets).alias(
         "bucket"
     )
+
+
+def split_of(bucket: Column) -> Column:
+    """The 80/10/10 train/val/test rule over a ``hash_bucket`` in [0, 100)."""
+    return F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
 
 
 def _duck_bucket(key_sql: str, salt: str = "") -> str:
@@ -72,7 +77,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         bucket,
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test").alias("split"),
+        split_of(bucket).alias("split"),
     ).orderBy("doc_id")
 
 
@@ -295,14 +300,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("lang_tokens"),
         ).alias("rate"),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
+    bucket = hash_bucket(F.col("doc_id"), "mix|", 10000)
     return (
         toks.join(F.broadcast(rates), "lang")
         .filter(bucket < F.floor(F.col("rate") * 10000).cast("long"))
@@ -384,18 +382,7 @@ def temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_docs"),
         ).alias("rate"),
     )
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("temp|"), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
+    bucket = hash_bucket(F.col("doc_id"), "temp|", 10000)
     return (
         d.select("doc_id", "lang")
         .join(F.broadcast(rates), "lang")
@@ -1891,42 +1878,21 @@ def gate_stage(scored: DataFrame, cut1: float | None, cut2: float | None) -> Dat
 
 def _canonical_stage(gated: DataFrame) -> DataFrame:
     """Stage 3 over the gated corpus: ``gated`` plus ``canonical_id``,
-    the min doc_id of its near-dup cluster (itself when it has none).
-    The packer reads only the cc labels renamed; cluster membership
-    scales with corpus redundancy, so the label join is size-gated,
-    never forced, and cc is a counted checkpoint, so the gate runs no
-    job."""
-    from project_orbit_spark.operators import dedup as dedup_ops
+    the min doc_id of its near-dup cluster (itself when it has none)."""
     from project_orbit_spark.operators.graph import connected_components
 
-    pairs = dedup_ops.minhash_pairs(gated.select("doc_id", "text"))
-    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    cc = connected_components(edges, strategy="auto")
-    labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    return gated.join(
-        maybe_broadcast(labels, dedup_ops.LABEL_BROADCAST_BOUND, probe=cc),
-        "doc_id",
-        "left",
-    ).withColumn("canonical_id", F.coalesce("cluster_id", F.col("doc_id")).cast("long"))
+    pairs = minhash_pairs(gated.select("doc_id", "text"))
+    cc = connected_components(pairs, "left_id", "right_id")
+    return join_clusters(gated, cc).withColumn(
+        "canonical_id", F.coalesce("cluster_id", F.col("doc_id")).cast("long")
+    )
 
 
 def _pack_curated(canon: DataFrame) -> DataFrame:
     """Stage 4: the leakage-safe split — a pure function of
     canonical_id, so a near-dup cluster never straddles
     train/val/test — then next-fit packing per (split, shard)."""
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("leak|"), F.col("canonical_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
-    split = F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+    split = split_of(hash_bucket(F.col("canonical_id"), "leak|"))
     toks = canon.select(
         "doc_id",
         "band",

@@ -28,18 +28,38 @@ from project_orbit_spark.similarity.lsh import lsh_bucket as _lsh_bucket
 
 
 # Broadcast ceiling for near-dup cluster-MEMBERSHIP tables (one row
-# per doc in any duplicate cluster). Membership scales with corpus
-# REDUNDANCY — 30-50% of a raw web corpus is near-dup in CCNet-style
-# pipelines — not with business reality, so unlike the seed dims it
-# must never be force-broadcast: at 100 TB it is billions of rows,
-# past the 8 GB broadcast ceiling and into driver OOM. Every label
-# join — and every propagation round's label broadcast inside
-# operators/graph.py::connected_components — goes through
-# catalog.maybe_broadcast with this bound; the probe is the
-# connected-components output, a counted checkpoint, so the gate runs
-# no job. 1M (doc_id, cluster_id [, cluster_size]) rows ≈ 25-40 MB —
-# under the session's 64 MB autoBroadcastJoinThreshold with headroom.
+# per doc in any duplicate cluster), read by join_clusters and by every
+# propagation round of operators/graph.py::connected_components.
+# 1M (doc_id, cluster_id [, cluster_size]) rows ≈ 25-40 MB — under the
+# session's 64 MB autoBroadcastJoinThreshold with headroom.
 LABEL_BROADCAST_BOUND = 1_000_000
+
+
+def join_clusters(df: DataFrame, cc: DataFrame, sizes: bool = False) -> DataFrame:
+    """``df`` left-joined on ``doc_id`` with the ``cluster_id`` of its
+    near-dup cluster (null for a doc in no pair), plus ``cluster_size``
+    when ``sizes``. ``cc`` is ``connected_components``' (node, label)
+    output over the pair graph.
+
+    Membership scales with corpus REDUNDANCY — 30-50% of a raw web
+    corpus is near-dup in CCNet-style pipelines — not with business
+    reality, so unlike the seed dims it is never force-broadcast: at
+    100 TB it is billions of rows, past the 8 GB broadcast ceiling and
+    into driver OOM. The label table is broadcast only under
+    ``LABEL_BROADCAST_BOUND`` (read at call time, so a patched bound
+    governs), else the join is left to AQE. The probe is ``cc``, a
+    counted checkpoint whose row count bounds every label table built
+    from it (the renamed labels row for row, ``cluster_representatives``
+    a row-preserving inner join with the per-label sizes), so the gate
+    runs no job."""
+    if sizes:
+        from project_orbit_spark.operators.graph import cluster_representatives
+
+        labels = cluster_representatives(cc)
+    else:
+        labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    return df.join(maybe_broadcast(labels, LABEL_BROADCAST_BOUND, probe=cc), "doc_id", "left")
+
 
 # Broadcast ceiling for the O(new) faces' nightly-BATCH side, counted
 # in batch DOCS (the probe is the batch scan itself, so the gate is a
@@ -1555,12 +1575,8 @@ def dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    # shared pair-graph artifact (VERDICT r11 ask #5): the band
-    # shuffle runs once per session, every consumer reuses the persist
-    pairs = warm_dup_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    labels = connected_components(edges, strategy="auto")
-    return cluster_representatives(labels).orderBy("doc_id")
+    cc = connected_components(warm_dup_pairs(spark, sf_dir), "left_id", "right_id")
+    return cluster_representatives(cc).orderBy("doc_id")
 
 
 @register(
@@ -1617,11 +1633,7 @@ def dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_orbit_spark.operators.graph import connected_components
 
-    pairs = warm_dup_pairs(spark, sf_dir)
-    edges = pairs.select(
-        F.col("left_id").alias("src"), F.col("right_id").alias("dst")
-    )
-    labels = connected_components(edges, strategy="auto")
+    labels = connected_components(warm_dup_pairs(spark, sf_dir), "left_id", "right_id")
     sizes = labels.groupBy("label").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -1690,10 +1702,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from project_orbit_spark.operators.graph import (
-        cluster_representatives,
-        connected_components,
-    )
+    from project_orbit_spark.operators.graph import connected_components
 
     d = load(spark, sf_dir, "documents").select("doc_id")
     corpus = d.unionByName(
@@ -1701,20 +1710,8 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") + INJECT_OFFSET).alias("doc_id")
         )
     )
-    # shared pair-graph artifact (VERDICT r11 ask #5): the band
-    # shuffle runs once per session, every consumer reuses the persist
-    pairs = warm_dup_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    cc = connected_components(edges, strategy="auto")
-    labels = cluster_representatives(cc)
-    # size-GATED label join (VERDICT r12 #1): cluster membership scales
-    # with corpus redundancy, never force-broadcast. Probe = the cc
-    # labels, row-for-row equal to the representatives build
-    # (cluster_representatives is a row-preserving inner join with the
-    # per-label sizes) and already checkpointed by the propagation loop.
-    out = corpus.join(
-        maybe_broadcast(labels, LABEL_BROADCAST_BOUND, probe=cc), "doc_id", "left"
-    )
+    cc = connected_components(warm_dup_pairs(spark, sf_dir), "left_id", "right_id")
+    out = join_clusters(corpus, cc, sizes=True)
     canonical = F.coalesce("cluster_id", F.col("doc_id"))
     return out.select(
         "doc_id",
@@ -1798,17 +1795,11 @@ def dedup_quality_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("quality"),
     )
     # same injected corpus as minhash_lsh_near_dups -> identical pair
-    # graph; reuse the session-persisted artifact (VERDICT r11 ask #5)
-    pairs = warm_dup_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("left_id").alias("src"), F.col("right_id").alias("dst"))
-    cc = connected_components(edges, strategy="auto")
-    labels = cc.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+    # graph; reuse the session-persisted artifact
+    cc = connected_components(warm_dup_pairs(spark, sf_dir), "left_id", "right_id")
     w = Window.partitionBy("cluster_id").orderBy(F.desc("quality"), F.asc("doc_id"))
-    # size-GATED label join (VERDICT r12 #1) — see LABEL_BROADCAST_BOUND
     return (
-        scored.join(
-            maybe_broadcast(labels, LABEL_BROADCAST_BOUND, probe=cc), "doc_id", "left"
-        )
+        join_clusters(scored, cc)
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("doc_id")))
         .withColumn("rk", F.row_number().over(w))
         .select(
@@ -2407,27 +2398,12 @@ _LEAK_BUCKET_SQL = (
     """,
 )
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from project_orbit_spark.operators.corpus import hash_bucket, split_of
+
     canon = dedup_canonical_corpus(spark, sf_dir).select("doc_id", "canonical_id")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("leak|"), F.col("canonical_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
     return (
-        canon.withColumn("bucket", bucket)
-        .withColumn(
-            "split",
-            F.when(F.col("bucket") < 80, "train")
-            .when(F.col("bucket") < 90, "val")
-            .otherwise("test"),
-        )
+        canon.withColumn("bucket", hash_bucket(F.col("canonical_id"), "leak|"))
+        .withColumn("split", split_of(F.col("bucket")))
         .orderBy("doc_id")
     )
 

@@ -23,13 +23,13 @@ truncates lineage — without it the plan doubles per iteration and
 the job dies on plan size long before data size.
 
 At 100 TB: the same loop holds (state per round = one (node,label)
-table, shuffled on node). If components with large diameter are
-possible, switch the update rule to large-star/small-star
-(Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) which converges in O(log n) rounds with the same
-join+min-aggregate primitive. Label choice (min id) makes the
-fixpoint unique, so results are independent of round count or
-partitioning.
+table, shuffled on node). A component whose diameter outruns the
+round budget (a pathological chain-shaped dup graph) is finished on
+the large-star/small-star path instead (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14), which converges in
+O(log n) rounds with the same join+min-aggregate primitive. Label
+choice (min id) makes the fixpoint unique, so results are independent
+of round count, partitioning or which path finished them.
 """
 
 from __future__ import annotations
@@ -42,43 +42,28 @@ from project_orbit_spark.registry import register
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    strategy: str = "propagation",
+    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
 ) -> DataFrame:
     """Label every node with the minimum node id reachable from it.
 
-    ``edges`` is an undirected pair list (each pair listed once is
-    enough — it is symmetrized here). Returns (node, label) with one
-    row per distinct endpoint; nodes in the same component share a
-    label (the component's minimum id).
+    ``edges`` is an undirected pair list with endpoint columns ``src``
+    and ``dst`` (each pair listed once is enough — it is symmetrized
+    here). Returns (node, label) with one row per distinct endpoint;
+    nodes in the same component share a label (the component's
+    minimum id).
 
-    ``strategy`` — one API, both round complexities:
-    - ``"propagation"`` (default): min-label propagation, one shuffle
-      per round, rounds = component diameter. Optimal for near-clique
-      duplicate clusters (2-4 rounds); raises after ``max_iter``
-      rounds rather than returning a silently-wrong partial labeling.
-    - ``"two_phase"``: large-star/small-star contraction (Kiveris et
-      al., SoCC'14), O(log n) rounds on ANY diameter — the scale path
-      for chain-shaped graphs.
-    - ``"auto"``: propagation first; if the round budget is exhausted
-      (a pathological high-diameter graph) fall back to two_phase
-      instead of raising. Both strategies reach the same unique
-      fixpoint (labels are component minima), so the fallback
-      changes round complexity, never results.
+    Min-label propagation, one shuffle per round, rounds = component
+    diameter: 2-4 for the near-clique graphs duplicate clusters form.
+    When ``max_iter`` rounds do not reach the fixpoint it restarts on
+    ``connected_components_two_phase`` (O(log n) rounds on any
+    diameter); both reach the same fixpoint, so the fallback changes
+    round complexity, never results.
 
-    The returned frame is a counted checkpoint, so a size-gated join
-    of the labels (``maybe_broadcast(..., probe=<result>)``) costs no
-    probe job.
+    When propagation converges the returned frame is a counted
+    checkpoint, so a size-gated join of the labels
+    (``maybe_broadcast(..., probe=<result>)``) costs no probe job.
     """
     from project_orbit_spark.operators import dedup
-
-    if strategy == "two_phase":
-        return connected_components_two_phase(edges, src, dst, max_iter)
-    if strategy not in ("propagation", "auto"):
-        raise ValueError(f"unknown connected-components strategy {strategy!r}")
 
     half = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
@@ -142,11 +127,8 @@ def connected_components(
         if seen["label_sum"] == prev_sum:
             return labels
         prev_sum = seen["label_sum"]
-    if strategy == "auto":
-        # diameter outran the budget — restart on the O(log n) path.
-        # Same fixpoint, so results match.
-        return connected_components_two_phase(edges, src, dst, max_iter)
-    raise RuntimeError(f"connected_components: no fixpoint after {max_iter} rounds")
+    # diameter outran the budget — restart on the O(log n) path
+    return connected_components_two_phase(edges, src, dst, max_iter)
 
 
 def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
@@ -203,7 +185,8 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
 def connected_components_two_phase(edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25) -> DataFrame:
     """Large-star/small-star connected components — same (node, label)
     contract as ``connected_components``, O(log n) rounds instead of
-    O(diameter). Prefer this when components may be long chains."""
+    O(diameter). ``connected_components`` finishes here when its
+    propagation rounds run out; raises after ``max_iter`` rounds."""
     half = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )

@@ -41,9 +41,26 @@ def test_representatives_shape(spark):
 
 
 def test_max_iter_guard(spark):
+    # neither path reaches the fixpoint of a 6-edge chain in one round:
+    # propagation hands over and the two-phase budget raises
     df = spark.createDataFrame([(i, i + 1) for i in range(20, 26)], "src long, dst long")
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(df, max_iter=1)
+
+
+def _fallbacks(monkeypatch) -> list:
+    """Record each hand-over from propagation to the two-phase path."""
+    from project_orbit_spark.operators import graph
+
+    calls = []
+    real = graph.connected_components_two_phase
+
+    def spy(*args):
+        calls.append(args)
+        return real(*args)
+
+    monkeypatch.setattr(graph, "connected_components_two_phase", spy)
+    return calls
 
 
 def test_two_phase_long_chain(spark):
@@ -55,45 +72,43 @@ def test_two_phase_long_chain(spark):
     assert set(got.items()) == {(n, 30) for n in range(30, 46)} | {(100, 100), (101, 100)}
 
 
-def test_two_phase_converges_in_log_rounds_where_propagation_cannot(spark):
+def test_two_phase_converges_in_log_rounds_where_propagation_cannot(spark, monkeypatch):
     """The SCALE.md argument pinned as behavior (VERDICT r12 #5): on a
     32-edge chain (diameter 32) min-label propagation moves the min
-    one hop per round, so a 10-round budget must raise — while
-    large-star/small-star contraction converges inside it (measured: 6
-    rounds; O(log n) per Kiveris et al. SoCC'14). Same fixpoint, so
-    the labels agree with the component minimum."""
+    one hop per round, so a 10-round budget runs out and hands over —
+    while large-star/small-star contraction converges inside it
+    (measured: 6 rounds; O(log n) per Kiveris et al. SoCC'14), and
+    still raises on a budget too small for it. Same fixpoint, so the
+    labels agree with the component minimum."""
     from project_orbit_spark.operators.graph import connected_components_two_phase
 
     chain = [(i, i + 1) for i in range(200, 232)]
     df = spark.createDataFrame(chain, "src long, dst long")
-    with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, max_iter=10)
+    want = {n: 200 for n in range(200, 233)}
     got = {
         r["node"]: r["label"]
         for r in connected_components_two_phase(df, max_iter=10).collect()
     }
-    assert set(got.values()) == {200}
-    assert len(got) == 33
-
-
-def test_auto_strategy_falls_back_instead_of_raising(spark):
-    """strategy='auto': the nightly-job safety net — a chain whose
-    diameter outruns the propagation budget must return correct
-    component-minimum labels via the two-phase fallback, where the
-    default strategy raises."""
-    chain = [(i, i + 1) for i in range(300, 324)]
-    df = spark.createDataFrame(chain, "src long, dst long")
+    assert got == want
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, max_iter=8)
-    got = {
-        r["node"]: r["label"]
-        for r in connected_components(df, max_iter=8, strategy="auto").collect()
-    }
-    assert set(got.values()) == {300}
-    assert len(got) == 25
+        connected_components_two_phase(df, max_iter=2)
 
-    with pytest.raises(ValueError, match="unknown connected-components"):
-        connected_components(df, strategy="bogus")
+    calls = _fallbacks(monkeypatch)
+    got = {r["node"]: r["label"] for r in connected_components(df, max_iter=10).collect()}
+    assert len(calls) == 1
+    assert got == want
+
+
+def test_exhausted_propagation_falls_back_instead_of_raising(spark, monkeypatch):
+    """The nightly-job safety net: a chain whose diameter outruns the
+    propagation budget returns component-minimum labels through the
+    two-phase fallback instead of raising."""
+    chain = [(i, i + 1) for i in range(300, 324)] + [(400, 401)]
+    df = spark.createDataFrame(chain, "src long, dst long")
+    calls = _fallbacks(monkeypatch)
+    got = {r["node"]: r["label"] for r in connected_components(df, max_iter=8).collect()}
+    assert len(calls) == 1
+    assert got == {**{n: 300 for n in range(300, 325)}, 400: 400, 401: 400}
 
 
 def test_empty_edge_list_yields_empty_labeling(spark):

@@ -210,3 +210,41 @@ def test_topk_ranks_without_salt_windows():
             if re.search(r"partitionBy\([^)]*salt|salted_topk", line, re.I):
                 hits.append(f"{p.relative_to(PKG)}:{i}")
     assert not hits, hits
+
+
+def test_near_dup_clusters_through_one_chain():
+    """Near-dup pairs become clusters one way: connected_components
+    straight off the pair frame (no ``strategy`` knob, no src/dst
+    rename first), and the membership broadcast bound is read only by
+    dedup.join_clusters and by graph.connected_components' propagation
+    rounds. Split buckets are corpus.hash_bucket, never a hand-rolled
+    md5 prefix of a salted key."""
+    import ast
+
+    gates = {"operators/dedup.py": "join_clusters", "operators/graph.py": "connected_components"}
+    hits = []
+    for p in _py_sources():
+        rel = str(p.relative_to(PKG))
+        text = p.read_text()
+        for i, line in enumerate(text.splitlines(), 1):
+            if re.search(r"\bstrategy\s*[=:]|\"(left|right)_id\"\)\.alias\(\"(src|dst)\"\)", line):
+                hits.append(f"{rel}:{i}")
+        for m in re.finditer(
+            r"F\.conv\(\s*F\.substring\(\s*F\.md5\(\s*F\.concat\(\s*F\.lit\("
+            r"[^%]*?\.cast\(\"long\"\)\s*%",
+            text,
+        ):
+            hits.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1}: md5 bucket")
+        tree = ast.parse(text)
+        allowed = [
+            (n.lineno, n.end_lineno)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.FunctionDef) and gates.get(rel) == n.name
+        ]
+        for n in ast.walk(tree):
+            name = n.id if isinstance(n, ast.Name) else getattr(n, "attr", None)
+            if name != "LABEL_BROADCAST_BOUND" or isinstance(getattr(n, "ctx", None), ast.Store):
+                continue
+            if not any(a <= n.lineno <= b for a, b in allowed):
+                hits.append(f"{rel}:{n.lineno}: LABEL_BROADCAST_BOUND")
+    assert not hits, hits

@@ -221,3 +221,23 @@ def test_one_rank_exchange_job_budget(spark, name, budget):
     and the pair dedup."""
     n = warm_request_jobs(spark, name)
     assert 0 < n <= budget, n
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("corpus_curation_gold", 13),
+        ("dedup_canonical_corpus", 13),
+        ("dedup_quality_canonical", 12),
+        ("leakage_safe_split", 13),
+        ("dup_cluster_labels", 12),
+    ],
+)
+def test_near_dup_cluster_job_budget(spark, name, budget):
+    """A near-dup cluster consumer served warm (the session's pair graph
+    built): its pairs, the connected-components rounds and one gated
+    label join. Pinned at the counts of the one-chain fold (maximum of
+    three warm repeats at sf0.001), the ledger that finishing small
+    graphs on the driver is to lower."""
+    n = warm_request_jobs(spark, name)
+    assert 0 < n <= budget, n

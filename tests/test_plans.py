@@ -838,35 +838,28 @@ def test_label_broadcast_is_gated_not_forced(spark, monkeypatch):
     never force-broadcast. Under the bound the analyzed plan carries
     the hint; with the bound patched to 0 the gate declines (no hint —
     the strategy is left to AQE's runtime sizes) and the results are
-    IDENTICAL, proving the gate is a hint-only change."""
+    IDENTICAL, proving the gate is a hint-only change. Every consumer
+    of dedup.join_clusters is held to it, corpus_curation_gold (found
+    by the round-13 broadcast audit) included."""
+    from project_orbit_spark.gold.pipelines import corpus_curation_gold
     from project_orbit_spark.operators import dedup
 
-    hinted = dedup.dedup_canonical_corpus(spark, SF_DIR)
-    plan = hinted._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" in plan, "under the bound the label join must hint"
-    want = [tuple(r) for r in hinted.collect()]
-    assert want, "fixture corpus must be non-empty"
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    faces = (dedup.dedup_canonical_corpus, dedup.dedup_quality_canonical, corpus_curation_gold)
+    want = {}
+    for fn in faces:
+        hinted = fn(spark, SF_DIR)
+        assert "ResolvedHint" in analyzed(hinted), f"{fn.__name__}: under the bound, a hint"
+        want[fn] = [tuple(r) for r in hinted.collect()]
+        assert want[fn], "fixture corpus must be non-empty"
 
     monkeypatch.setattr(dedup, "LABEL_BROADCAST_BOUND", 0)
-    declined = dedup.dedup_canonical_corpus(spark, SF_DIR)
-    plan = declined._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in plan, "over the bound no hint — AQE decides"
-    assert [tuple(r) for r in declined.collect()] == want
-
-    # the quality-canonical consumer shares the gate
-    declined_q = dedup.dedup_quality_canonical(spark, SF_DIR)
-    assert "ResolvedHint" not in (
-        declined_q._jdf.queryExecution().analyzed().toString()
-    )
-
-    # ...and so does corpus_curation_gold's label join (the fifth
-    # membership site, found by the round-13 broadcast audit)
-    from project_orbit_spark.gold.pipelines import corpus_curation_gold
-
-    declined_g = corpus_curation_gold(spark, SF_DIR)
-    assert "ResolvedHint" not in (
-        declined_g._jdf.queryExecution().analyzed().toString()
-    )
+    for fn in faces:
+        declined = fn(spark, SF_DIR)
+        assert "ResolvedHint" not in analyzed(declined), f"{fn.__name__}: over it, AQE decides"
+        assert [tuple(r) for r in declined.collect()] == want[fn], fn.__name__
 
 
 def test_curation_gold_label_gate_follows_the_bound(spark, monkeypatch):

@@ -7,13 +7,41 @@ Writes <out_dir>/<query>_<suffix>.txt for each query. Used to commit
 the before/after plan evidence for optimization rounds (guide §1 /
 §7.2): the round judge cannot run Spark and checks plan claims
 against these files.
+
+The ids a run allocates (expression ``#N``, ``plan_id=N``, RDD ids,
+query-stage and codegen ids) are renumbered in order of first
+appearance, so two fresh dumps of one tree are byte-identical and a
+before/after comparison is a plain ``diff``.
 """
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
+
+# one pattern per id family, (prefix)(id); each family is renumbered
+# on its own
+_RUN_IDS = [
+    re.compile(r"(#)(\d+)"),
+    re.compile(r"(plan_id=)(\d+)"),
+    re.compile(r"(RDD\[)(\d+)"),
+    re.compile(r"((?:Shuffle|Broadcast)QueryStage )(\d+)"),
+    re.compile(r"(codegen id : )(\d+)"),
+]
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with each family of run-dependent ids replaced by 1, 2,
+    ... in order of first appearance."""
+    for pat in _RUN_IDS:
+        seen: dict[str, int] = {}
+        plan = pat.sub(
+            lambda m: m.group(1) + str(seen.setdefault(m.group(2), len(seen) + 1)),
+            plan,
+        )
+    return plan
 
 
 def main() -> None:
@@ -39,7 +67,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(normalize(buf.getvalue()))
         print(f"wrote {path} ({len(buf.getvalue())} bytes)")
     spark.stop()
 
