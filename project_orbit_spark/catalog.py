@@ -278,37 +278,65 @@ def _plan_hash(df: DataFrame) -> int | None:
         return None
 
 
-def _row_counts(spark: SparkSession) -> dict[int, int]:
-    """Plan semantic hash -> the row count a counted barrier observed
-    while materializing that plan, one dict per session. A checkpointed
-    plan is a leaf over its own RDD, so a hash names exactly one
+def _observed(spark: SparkSession) -> dict[int, dict]:
+    """Plan semantic hash -> what a stage barrier observed while
+    materializing that plan, one dict per session. A checkpointed plan
+    is a leaf over its own RDD, so a hash names exactly one
     materialization."""
-    return memo(spark, ("row_counts",), dict)
+    return memo(spark, ("observed",), dict)
 
 
-def checkpoint_counted(df: DataFrame, **aggs) -> tuple[DataFrame, dict]:
-    """Eagerly local-checkpoint ``df`` and return it with the aggregates
-    observed on the checkpoint job itself — no extra job. The result
-    always holds ``rows`` (the row count) plus one entry per keyword
-    aggregate (``name=Column``). Sums over zero rows are ``None``.
+def stage(df: DataFrame, name: str, *, disk: bool = False, **aggs) -> DataFrame:
+    """The stage barrier: materialize ``df`` as a local checkpoint and
+    return the checkpointed frame. Every materialization in the package
+    goes through here.
 
-    The row count is recorded against the returned frame, so
-    ``maybe_broadcast(..., probe=<returned frame>)`` answers from it
-    without a probe job."""
+    - **Why a barrier.** The frame feeds several consumers (a loop
+      round's state, a stage read by both sides of a join), so its
+      lineage runs once; or the files under its lazy plan are about to
+      be rewritten or deleted; or it truncates an iterative plan that
+      would otherwise grow per round.
+    - **Eager.** The call runs the checkpoint job now (plus the stage
+      jobs AQE submits for the shuffles below it); the returned frame
+      is a ``Scan ExistingRDD`` leaf with unknown partitioning.
+    - **Counted.** ``rows`` and one entry per keyword aggregate
+      (``name=Column``) are observed on that same job, and
+      ``observed(<returned frame>)`` reads them back. Sums over zero
+      rows are ``None``. ``maybe_broadcast(..., probe=<returned
+      frame>)`` answers from ``rows`` at no job.
+    - **Named.** Its jobs carry ``name`` as their job description; the
+      caller's description (a job group's) is restored afterwards.
+    - **Local.** Blocks live on the executors (memory and disk, or disk
+      only with ``disk=True`` for a large frame read once more); a lost
+      executor loses them.
+    """
+    from pyspark import StorageLevel
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    sc = df.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
     obs = Observation()
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        *(col.alias(name) for name, col in aggs.items()),
-    ).localCheckpoint(eager=True)
-    got = obs.get
+    sc.setJobDescription(name)
+    try:
+        out = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            *(col.alias(key) for key, col in aggs.items()),
+        ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY if disk else None)
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
     h = _plan_hash(out)
     if h is not None:
-        _row_counts(out.sparkSession)[h] = got["rows"]
-    return out, got
+        _observed(out.sparkSession)[h] = obs.get
+    return out
+
+
+def observed(df: DataFrame) -> dict:
+    """What ``stage`` observed while materializing ``df``: ``rows`` plus
+    its keyword aggregates. Raises KeyError for a frame ``stage`` did
+    not return."""
+    return _observed(df.sparkSession)[_plan_hash(df)]
 
 
 def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -> DataFrame:
@@ -326,8 +354,8 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
     PARTITION (not O(bound) total); still far from a full aggregate
     scan, and SCALE.md's round-11 table carries the measured cost
     (~1.5 s for the widest probe on the 100× corpus). A probe that
-    ``checkpoint_counted`` returned costs no job: its row count was
-    observed when it was materialized.
+    ``stage`` returned costs no job: its row count was observed when
+    it was materialized.
 
     POLICY (which broadcasts get gated): raw members and cheap
     filters of ``BROADCAST_DIMS`` (region/nation/supplier/part —
@@ -378,8 +406,8 @@ def maybe_broadcast(df: DataFrame, bound: int, probe: DataFrame | None = None) -
 
     if h is None:
         fits = probe_fits()
-    elif h in (counts := _row_counts(src.sparkSession)):
-        fits = counts[h] <= bound
+    elif h in (seen := _observed(src.sparkSession)):
+        fits = seen[h]["rows"] <= bound
     else:
         fits = memo(src.sparkSession, ("probe", h, bound), probe_fits)
     return F.broadcast(df) if fits else df

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import load, observed, stage
 from project_orbit_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -407,7 +407,7 @@ def _bpe_oracle_sql(k: int) -> str:
     "by word freq -> argmax pair with deterministic (cnt desc, l, r) "
     "tie-break -> greedy left-to-right re-segmentation) run entirely "
     "on the VOCAB-sized table — bounded iterative state with "
-    "per-round localCheckpoint, the kmeans Lloyd-loop discipline. "
+    "a per-round stage barrier, the kmeans Lloyd-loop discipline. "
     "Emits the learned merge table. The oracle unrolls all 6 stages "
     "(list_reduce string fold == F.aggregate array fold, verified by "
     "the property test vs a pure-Python BPE reference).",
@@ -415,7 +415,7 @@ def _bpe_oracle_sql(k: int) -> str:
 )
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = _bpe_fit(spark, sf_dir, final_seg=False)
-    if not merges:  # no adjacent pairs anywhere (ADVICE r14 #1)
+    if not merges:  # no adjacent pairs anywhere
         return spark.createDataFrame(
             [],
             "merge_rank long, left_sym string, right_sym string, "
@@ -436,15 +436,15 @@ def _bpe_fit(
     learn face never consumes the last re-segmentation), or after all
     BPE_MERGES with ``final_seg`` (the tokenize face's vocab map).
 
-    Degenerate-corpus guard (ADVICE r14 #1): if the corpus exhausts
+    Degenerate-corpus guard: if the corpus exhausts
     mergeable pairs before BPE_MERGES rounds (every word fully merged
     or single-symbol), the loop BREAKS keeping the merges learned so
     far and the current segmentation — mirroring the ``if not
     best_rows: break`` in the property test's pure-Python reference —
     instead of crossJoining the segmentation against an empty 1-row
     table, which would silently empty every downstream face. The
-    probe is driver-side ``take(1)`` on the already-checkpointed
-    1-row argmax — no extra job. The DuckDB oracle's unrolled stages
+    probe is the row count the argmax's stage barrier observed — no
+    extra job. The DuckDB oracle's unrolled stages
     degenerate identically (``FROM seg LEFT JOIN best b`` with empty
     best keeps seg as-is), so both engines emit the same partial
     table."""
@@ -456,14 +456,12 @@ def _bpe_fit_words(
     words: DataFrame, final_seg: bool
 ) -> tuple[list[DataFrame], DataFrame]:
     """_bpe_fit's merge loop over an explicit (word, freq) histogram —
-    split out so the degenerate-corpus break (ADVICE r14 #1) is
-    unit-testable on a hand-built vocab (tests/test_properties.py)."""
-    seg = words.select(
-        "word", "freq", F.split("word", "").alias("s")
-    ).localCheckpoint(eager=True)
+    split out so the degenerate-corpus break is unit-testable on a
+    hand-built vocab (tests/test_properties.py)."""
+    seg = stage(words.select("word", "freq", F.split("word", "").alias("s")), "bpe.seg")
     merges: list[DataFrame] = []
     for i in range(1, BPE_MERGES + 1):
-        best = (
+        best = stage(
             _bpe_pair_counts(seg)
             .orderBy(F.desc("cnt"), "l", "r")
             .limit(1)
@@ -473,16 +471,17 @@ def _bpe_fit_words(
                 F.col("r").alias("right_sym"),
                 F.concat("l", "r").alias("merged"),
                 F.col("cnt").alias("pair_count"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "bpe.best",
         )
-        if not best.take(1):  # pairs exhausted — keep partial fit
+        if not observed(best)["rows"]:  # pairs exhausted — keep partial fit
             break
         merges.append(best)
         if i < BPE_MERGES or final_seg:
-            seg = _bpe_apply_merge(
-                seg, best.select("left_sym", "right_sym", "merged")
-            ).localCheckpoint(eager=True)
+            seg = stage(
+                _bpe_apply_merge(seg, best.select("left_sym", "right_sym", "merged")),
+                "bpe.seg",
+            )
     return merges, seg
 
 
@@ -538,14 +537,11 @@ def bpe_tokenize_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("word"),
     ).filter(F.col("word") != "")
-    # probe-less gate is cheap here BY CONSTRUCTION (the documented
-    # exception in maybe_broadcast's side-effect warning): vocab is a
-    # projection of the localCheckpoint'ed fit output, so the probe
-    # job is a limit-scan of materialized vocab-sized state — never a
-    # re-run of the corpus histogram
+    # vocab is a one-row-per-word projection of the fit's final stage
+    # barrier, so the barrier's observed row count gates it at no job
     return (
         docw.join(
-            maybe_broadcast(vocab, _BPE_VOCAB_BROADCAST_BOUND),
+            maybe_broadcast(vocab, _BPE_VOCAB_BROADCAST_BOUND, probe=seg),
             "word",
         )
         .groupBy("doc_id")
@@ -970,11 +966,10 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("word"),
     ).filter(F.col("word") != "")
-    # probe-less gate: vocab projects the checkpointed fit output (see
-    # bpe_tokenize_corpus for why the probe job is a cheap limit-scan)
+    # gated on the fit's final barrier, as in bpe_tokenize_corpus
     return (
         docw.join(
-            maybe_broadcast(vocab, _BPE_VOCAB_BROADCAST_BOUND),
+            maybe_broadcast(vocab, _BPE_VOCAB_BROADCAST_BOUND, probe=seg),
             "word",
         )
         .groupBy("lang")

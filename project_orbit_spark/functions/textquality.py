@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import barrier_width, checkpoint_counted, load
+from project_orbit_spark.catalog import barrier_width, load, observed, stage
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import memo
 
@@ -418,8 +418,8 @@ def token_total() -> Column:
     """Aggregate column over a (doc_id, text) corpus: its token count
     as a double — the bigram LM's ``total``, equal to the sum of
     ``lm_count_tables``' unigram counts (a NULL text has no tokens).
-    Attach it to a counted barrier (``catalog.checkpoint_counted``)
-    to read it at zero jobs."""
+    Observe it on a stage barrier (``catalog.stage``) to read it at
+    zero jobs."""
     toks = F.coalesce(F.split(F.trim(F.lower("text")), r"\s+"), F.array())
     return F.sum(F.size(toks)).cast("double")
 
@@ -621,8 +621,8 @@ def ccnet_perplexity_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated LM subtree, so the narrow (doc_id, double) scores are
     # a barrier — the same one the curation pipeline places here. Its
     # observed row count is the cutoffs' n.
-    scores, seen = checkpoint_counted(ccnet_scores(spark, sf_dir))
-    return perplexity_bands(scores, seen["rows"])
+    scores = stage(ccnet_scores(spark, sf_dir), "ccnet.scores")
+    return perplexity_bands(scores, observed(scores)["rows"])
 
 
 def ccnet_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1982,8 +1982,8 @@ WINNOW_AUDIT_GT_MAX_DF = 50
     "side pre-filters both self-join inputs through the rare guard "
     "and rides merge-hinted (spill-safe) string joins — a "
     "shuffle_hash build of the raw gram stream OOMed the first 100x "
-    "probe; the audit reduces to one row behind localCheckpoint "
-    "barriers (the dedup_pair_audit concurrency lesson).",
+    "probe; the audit reduces to one row behind stage barriers "
+    "(the dedup_pair_audit concurrency lesson).",
     oracle=f"""
         WITH icorp AS (
           SELECT doc_id, text FROM documents
@@ -2050,6 +2050,8 @@ WINNOW_AUDIT_GT_MAX_DF = 50
     """,
 )
 def winnowing_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from project_orbit_spark.operators.dedup import overlap_counts, ratio4
+
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     injected = d.unionByName(
         d.filter(F.col("doc_id") % 9 == 0).select(
@@ -2058,11 +2060,9 @@ def winnowing_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # audited side: the REGISTERED match face, verbatim
-    wm = (
-        _winnow_match_frame(injected)
-        .select("doc_a", "doc_b")
-        .withColumn("in_wm", F.lit(1))
-        .localCheckpoint(eager=True)
+    wm = stage(
+        _winnow_match_frame(injected).select("doc_a", "doc_b").withColumn("in_wm", F.lit(1)),
+        "winnow_audit.winnow",
     )
     # ground truth: exact rare-gram overlap on gram STRINGS
     t = F.split(F.trim(F.lower("text")), r"\s+")
@@ -2104,33 +2104,19 @@ def winnowing_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = gg.join(grare.hint("merge"), "g")
     a = occ.select("g", F.col("doc_id").alias("doc_a"))
     b = occ.select("g", F.col("doc_id").alias("doc_b"))
-    gt = (
+    gt = stage(
         a.join(b.hint("merge"), "g")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= WINNOW_AUDIT_MIN_GRAMS)
         .select("doc_a", "doc_b")
-        .withColumn("in_gt", F.lit(1))
-        .localCheckpoint(eager=True)
+        .withColumn("in_gt", F.lit(1)),
+        "winnow_audit.exact",
     )
-    j = wm.hint("shuffle_hash").join(gt, ["doc_a", "doc_b"], "full_outer")
-    stats = j.agg(
-        F.coalesce(F.sum(F.coalesce("in_gt", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_exact"),
-        F.coalesce(F.sum(F.coalesce("in_wm", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_winnow"),
-        F.coalesce(
-            F.sum(
-                (F.col("in_gt").isNotNull() & F.col("in_wm").isNotNull())
-                .cast("long")
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_hits"),
+    stats = overlap_counts(
+        wm, gt, ["doc_a", "doc_b"], ("in_wm", "in_gt"), "n_hits",
+        n_exact="in_gt", n_winnow="in_wm",
     )
     zw = injected.agg(
         F.coalesce(
@@ -2140,17 +2126,11 @@ def winnowing_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_zero_window_docs")
     )
-    ratio = lambda num, den: (  # noqa: E731 — local expression builder
-        F.floor(
-            F.col(num).cast("double") / F.nullif(F.col(den), F.lit(0)) * 10000
-        )
-        / 10000
-    )
     return stats.crossJoin(F.broadcast(zw)).select(
         "n_exact",
         "n_winnow",
         "n_hits",
-        ratio("n_hits", "n_winnow").alias("precision_at_t"),
-        ratio("n_hits", "n_exact").alias("recall_at_t"),
+        ratio4("n_hits", "n_winnow").alias("precision_at_t"),
+        ratio4("n_hits", "n_exact").alias("recall_at_t"),
         "n_zero_window_docs",
     )

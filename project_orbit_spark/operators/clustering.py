@@ -51,7 +51,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from project_orbit_spark.catalog import load
+from project_orbit_spark.catalog import load, stage
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import memo
 
@@ -150,11 +150,11 @@ def update_centroids(assigned: DataFrame, prev: DataFrame) -> DataFrame:
 
 def _fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ITERS-round Lloyd fit: seed, then (assign → update) with a
-    per-round localCheckpoint — the single shared loop behind both
-    the oracled full-fit query and the warm model face, so an ITERS/K
-    or checkpoint change can't diverge the two (ADVICE r9).
+    per-round stage barrier — the single shared loop behind both the
+    oracled full-fit query and the warm model face, so an ITERS/K or
+    barrier change can't diverge the two.
 
-    Each round's centroid table (k rows) is localCheckpoint'ed — the
+    Each round's centroid table (k rows) is a stage barrier — the
     same once-per-round discipline as the CC loop in
     operators/graph.py. Iteration i's plan nests BOTH uses of
     iteration i-1's centroids (assignment and the keep-old join), a
@@ -169,13 +169,13 @@ def _fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _qvec_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantized feature table, materialized ONCE per fit at the
-    deployment's shuffle width (r18, guide §2.4/§5): the Lloyd loop
+    deployment's shuffle width: the Lloyd loop
     consumes qvec in every round plus the seed and the final
     assignment — 4+ re-derivations of scan+quantize per fit, each a
-    single map task on the one-row-group fixture. One fan-out +
-    localCheckpoint feeds every consumer parallel partitions instead
-    (A/B at sf0.1: 2.96 → 1.88 s min-of-medians, won all 3 rounds;
-    checkpoint-only arm 2.16 — the width matters). At 100 TB this is
+    single map task on the one-row-group fixture. One fan-out + stage
+    barrier feeds every consumer parallel partitions instead (A/B at
+    sf0.1: 2.96 → 1.88 s min-of-medians; barrier-only arm 2.16 — the
+    width matters). At 100 TB this is
     the quantize-at-ingest feature artifact a production fit holds
     anyway; width follows barrier_width, never a local constant.
     Value-neutral: seeding sorts on (md5, vec_id) total order and
@@ -183,22 +183,20 @@ def _qvec_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from project_orbit_spark.catalog import barrier_width
 
     q = quantized_vectors(spark, sf_dir)
-    return q.repartition(barrier_width(q)).localCheckpoint()
+    return stage(q.repartition(barrier_width(q)), "kmeans.qvec")
 
 
 def _fit_rounds(qvec: DataFrame) -> DataFrame:
-    cents = seed_centroids(qvec).localCheckpoint(eager=True)
+    cents = stage(seed_centroids(qvec), "kmeans.seed")
     for _ in range(ITERS - 1):
-        cents = update_centroids(
-            assign_clusters(qvec, cents), cents
-        ).localCheckpoint(eager=True)
+        cents = stage(update_centroids(assign_clusters(qvec, cents), cents), "kmeans.round")
     return cents
 
 
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster_id) after ITERS Lloyd rounds (see
     _fit_centroids for the loop's checkpoint discipline). The fit and
-    the final assignment share ONE materialized qvec (r18)."""
+    the final assignment share ONE materialized qvec."""
     qvec = _qvec_materialized(spark, sf_dir)
     cents = _fit_rounds(qvec)
     return assign_clusters(qvec, cents).select(

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from project_orbit_spark.catalog import checkpoint_counted, load, maybe_broadcast
+from project_orbit_spark.catalog import load, maybe_broadcast, observed, stage
 from project_orbit_spark.operators.dedup import join_clusters, minhash_pairs, word_shingles
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import memo
@@ -1001,7 +1001,7 @@ def scrub_boilerplate(
     once. The plan of the checkpointed frame is pinned by
     test_boilerplate_scrub_shuffles_hashes_not_strings
     (``doc_segment_arrays`` must stay a map-only derivation)."""
-    segs = doc_segment_arrays(d, seg_w).localCheckpoint()
+    segs = stage(doc_segment_arrays(d, seg_w), "scrub.segments")
     return apply_boilerplate_scrub(segs, boilerplate_set(segs, bp_df), ordered=ordered)
 
 
@@ -1073,14 +1073,14 @@ def dedup_segments_first_wins(d: DataFrame, seg_w: int = _SEG_W) -> DataFrame:
     (doc_id, text) row keeping only the corpus-wide FIRST occurrence
     of every ``seg_w``-token segment.
 
-    r18 (guide §2.4): same dual-consumer shape as scrub_boilerplate —
-    the segment stream feeds the first-occurrence aggregate AND the
-    flag join's probe side, and the partial agg below the build-side
-    exchange keeps the two exchanges un-reusable, so doc_segments
-    derived twice. One checkpoint, one derivation (A/B at sf0.1:
-    1.32 → 1.01 s min-of-medians, new arm won all 3 rounds). The
-    pre-barrier map-only pin in test_plans covers this site too."""
-    segs = doc_segments(d, seg_w).localCheckpoint()
+    Same dual-consumer shape as scrub_boilerplate: the segment stream
+    feeds the first-occurrence aggregate AND the flag join's probe
+    side, and the partial agg below the build-side exchange keeps the
+    two exchanges un-reusable, so without a barrier doc_segments is
+    derived twice. One barrier, one derivation (A/B at sf0.1: 1.32 →
+    1.01 s min-of-medians). The pre-barrier map-only pin in
+    test_plans covers this site too."""
+    segs = stage(doc_segments(d, seg_w), "segment_dedup.segments")
     # min(struct) aggregate, NOT row_number over seg_hash: partial
     # aggregation collapses hot segments map-side (see register doc).
     firsts = segs.groupBy("seg_hash").agg(
@@ -1323,7 +1323,7 @@ def _refresh_probe_stage_sql(seen_cte: str) -> str:
     "index). Cost shape: merge is O(batch) append; compaction "
     "rewrites O(index) but only when run; expiry is O(dropped "
     "directories); each probe is the O(new) segment_dedup_batch "
-    "plan. Each stage's verdict frame is localCheckpoint'd BEFORE "
+    "plan. Each stage's verdict frame is a stage barrier, taken BEFORE "
     "the next maintenance op rewrites the files under its lazy plan.",
     oracle=f"""
         WITH tok AS (
@@ -1384,23 +1384,9 @@ def _refresh_probe_stage_sql(seen_cte: str) -> str:
     """,
 )
 def refresh_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import uuid
-
-    from project_orbit_spark.sources.connectors import (
-        compact_parquet,
-        expire_partitions,
-    )
-    from project_orbit_spark.sources.roundtrip import _stage_dir
+    from project_orbit_spark.sources.connectors import refresh_index
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # per-invocation nonce: a fixed path + rmtree would let two
-    # concurrent invocations in one session (bench + parity run)
-    # corrupt each other's staged index mid-lifecycle. uuid4 reads the
-    # OS entropy pool, not the seeded PRNG — no determinism contract
-    # touches the staging path.
-    stage = _stage_dir(spark, f"segment_index_{uuid.uuid4().hex[:12]}")
-    shutil.rmtree(stage, ignore_errors=True)
     # seed: the existing corpus's segments, partitioned by synthetic
     # ingest day (doc_id % 3 -> dt 2026-01-01..03), deduped per
     # (seg_hash, dt) — the layout an offline first-wins dedup job
@@ -1415,16 +1401,8 @@ def refresh_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .dropDuplicates(["seg_hash", "dt"])
     )
-    seed.write.mode("overwrite").partitionBy("dt").parquet(stage)
-    # MERGE: the nightly batch's distinct segments land as dt=...-04
-    b1seg = (
-        doc_segments(_segment_dedup_arm(d))
-        .select("seg_hash")
-        .distinct()
-        .withColumn("dt", F.lit("2026-01-04"))
-    )
-    b1seg.write.mode("append").partitionBy("dt").parquet(stage)
-
+    # MERGE: the nightly batch's distinct segments
+    batch = doc_segments(_segment_dedup_arm(d)).select("seg_hash").distinct()
     probe = d.filter(F.col("doc_id") % 5 == 0).select(
         (F.col("doc_id") + 300000).alias("doc_id"),
         F.concat("text", F.lit(" pv1 pv2 pv3 pv4 pv5 pv6 pv7 pv8")).alias(
@@ -1432,34 +1410,12 @@ def refresh_segment_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    def verdicts(stage_name: str) -> DataFrame:
-        idx = (
-            spark.read.schema(seed.schema)
-            .parquet(stage)
-            .select("seg_hash")
-            .distinct()
-            .select("seg_hash", F.lit(True).alias("seen"))
-        )
-        # materialize NOW: the next maintenance op rewrites/deletes
-        # the files this lazy plan would otherwise re-read
-        return (
-            segment_dedup_batch(probe, idx)
-            .withColumn("stage", F.lit(stage_name))
-            .localCheckpoint(eager=True)
-        )
+    def verdict(index: DataFrame) -> DataFrame:
+        seen = index.select("seg_hash").distinct().select("seg_hash", F.lit(True).alias("seen"))
+        return segment_dedup_batch(probe, seen)
 
-    merged = verdicts("merged")
-    compact_parquet(spark, stage, partition_col="dt")
-    compacted = verdicts("compacted")
-    expire_partitions(spark, stage, partition_col="dt", keep_latest=3)
-    expired = verdicts("expired")
-    # all three verdict frames are EAGERLY checkpointed above, so the
-    # nonce'd staging tree is dead weight the moment we get here —
-    # reclaim it (the fixed path used to self-clean via overwrite).
-    shutil.rmtree(stage, ignore_errors=True)
     return (
-        merged.unionByName(compacted)
-        .unionByName(expired)
+        refresh_index(spark, "segment_index", seed, batch, verdict)
         .select(
             "stage",
             "new_id",
@@ -1817,7 +1773,7 @@ def curation_pipeline(d: DataFrame) -> DataFrame:
     runs the same stage functions over the base corpus."""
     from project_orbit_spark.functions.textquality import lm_count_tables, tercile_cutoffs
 
-    segs = doc_segment_arrays(d).localCheckpoint()
+    segs = stage(doc_segment_arrays(d), "curation.segments")
     scrubbed, total = scrub_stage(segs, boilerplate_set(segs))
     scored, n = score_stage(scrubbed, *lm_count_tables(scrubbed), total)
     gated = gate_stage(scored, *tercile_cutoffs(scored, n))
@@ -1830,13 +1786,14 @@ def scrub_stage(segs: DataFrame, bp: DataFrame) -> tuple[DataFrame, float | None
     count — the bigram LM's ``total`` — read off the barrier job."""
     from project_orbit_spark.functions.textquality import token_total
 
-    scrubbed, seen = checkpoint_counted(
+    scrubbed = stage(
         apply_boilerplate_scrub(segs, bp, ordered=False).select(
             "doc_id", F.col("clean_text").alias("text")
         ),
+        "curation.scrubbed",
         tokens=token_total(),
     )
-    return scrubbed, seen["tokens"]
+    return scrubbed, observed(scrubbed)["tokens"]
 
 
 def score_stage(
@@ -1856,8 +1813,8 @@ def score_stage(
     scores = score_with_lm(
         doc_bigrams(scrubbed), c2, freq, F.lit(total), pin_vocab=pin_vocab, ordered=False
     ).select("doc_id", "avg_logprob")
-    scored, seen = checkpoint_counted(scores.join(scrubbed, "doc_id"))
-    return scored, seen["rows"]
+    scored = stage(scores.join(scrubbed, "doc_id"), "curation.scored")
+    return scored, observed(scored)["rows"]
 
 
 def gate_stage(scored: DataFrame, cut1: float | None, cut2: float | None) -> DataFrame:
@@ -1941,7 +1898,7 @@ def warm_curation_artifacts(spark: SparkSession, sf_dir: str) -> dict:
 
     def build() -> dict:
         d = load(spark, sf_dir, "documents").select("doc_id", "text")
-        segs = doc_segment_arrays(d).localCheckpoint()
+        segs = stage(doc_segment_arrays(d), "curation.segments")
         bp = boilerplate_set(segs).persist()
         scrubbed, total = scrub_stage(segs, bp)
         c2, freq = (t.persist() for t in lm_count_tables(scrubbed))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import barrier_width, load, maybe_broadcast
+from project_orbit_spark.catalog import barrier_width, load, maybe_broadcast, observed, stage
 from project_orbit_spark.registry import register
 from project_orbit_spark.session import memo
 from project_orbit_spark.similarity.lsh import _duck_auto_bucket as _lsh_duck_auto_bucket
@@ -48,7 +48,7 @@ def join_clusters(df: DataFrame, cc: DataFrame, sizes: bool = False) -> DataFram
     into driver OOM. The label table is broadcast only under
     ``LABEL_BROADCAST_BOUND`` (read at call time, so a patched bound
     governs), else the join is left to AQE. The probe is ``cc``, a
-    counted checkpoint whose row count bounds every label table built
+    stage barrier whose observed row count bounds every label table built
     from it (the renamed labels row for row, ``cluster_representatives``
     a row-preserving inner join with the per-label sizes), so the gate
     runs no job."""
@@ -953,20 +953,9 @@ def _refresh_band_stage_sql(idx_cte: str) -> str:
     """,
 )
 def refresh_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import uuid
-
-    from project_orbit_spark.sources.connectors import (
-        compact_parquet,
-        expire_partitions,
-    )
-    from project_orbit_spark.sources.roundtrip import _stage_dir
+    from project_orbit_spark.sources.connectors import refresh_index
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    # per-invocation nonce + post-checkpoint reclaim, exactly as
-    # refresh_segment_index
-    stage_dir = _stage_dir(spark, f"band_index_{uuid.uuid4().hex[:12]}")
-    shutil.rmtree(stage_dir, ignore_errors=True)
     # seed: the corpus's band table, partitioned by synthetic ingest
     # day (doc_id % 3 -> dt 2026-01-01..03) — the layout the offline
     # indexing job maintains day by day
@@ -976,44 +965,25 @@ def refresh_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2026-01-0"), ((F.col("doc_id") % 3) + 1).cast("string")
         ),
     )
-    seed.write.mode("overwrite").partitionBy("dt").parquet(stage_dir)
-    # MERGE: the nightly batch's band rows land as dt=...-04
+    # MERGE: the nightly batch's band rows
     batch = d.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + _BAND_MERGE_OFFSET).alias("doc_id"),
         F.concat("text", F.lit(" band refresh tail")).alias("text"),
     )
-    _banded_signatures(batch).withColumn(
-        "dt", F.lit("2026-01-04")
-    ).write.mode("append").partitionBy("dt").parquet(stage_dir)
-
     probe = d.filter(F.col("doc_id") % 11 == 0).select(
         (F.col("doc_id") + _BAND_PROBE_OFFSET).alias("doc_id"),
         F.concat("text", F.lit(" band probe tail")).alias("text"),
     )
-    probe_banded = _banded_signatures(probe).localCheckpoint(eager=True)
+    probe_banded = stage(_banded_signatures(probe), "band_index.probe")
 
-    def verdicts(stage_name: str) -> DataFrame:
-        idx = spark.read.schema(seed.schema).parquet(stage_dir).select(
-            "doc_id", "sig", "band_idx", "band_sig"
-        )
-        # materialize NOW: the next maintenance op rewrites/deletes
-        # the files this lazy plan would otherwise re-read. probe=None:
-        # the batch side is already checkpointed, AQE sees exact sizes.
-        return (
-            match_new_vs_index(probe_banded, idx)
-            .withColumn("stage", F.lit(stage_name))
-            .localCheckpoint(eager=True)
+    def verdict(index: DataFrame) -> DataFrame:
+        # probe=None: the batch side is a barrier, AQE sees exact sizes
+        return match_new_vs_index(
+            probe_banded, index.select("doc_id", "sig", "band_idx", "band_sig")
         )
 
-    merged = verdicts("merged")
-    compact_parquet(spark, stage_dir, partition_col="dt")
-    compacted = verdicts("compacted")
-    expire_partitions(spark, stage_dir, partition_col="dt", keep_latest=3)
-    expired = verdicts("expired")
-    shutil.rmtree(stage_dir, ignore_errors=True)
     return (
-        merged.unionByName(compacted)
-        .unionByName(expired)
+        refresh_index(spark, "band_index", seed, _banded_signatures(batch), verdict)
         .select("stage", "new_id", "match_id", "est_jaccard")
         .orderBy("stage", "new_id", "match_id")
     )
@@ -1237,7 +1207,7 @@ def _simhash_pairs(
     assert n_bands >= max_hamming + 1, (
         "pigeonhole needs >= max_hamming + 1 bands for losslessness"
     )
-    # r17 representation change (value-identical, plan-asserted in
+    # Representation (value-identical, plan-asserted in
     # tests/test_plans.py): each 32-bit word of the hash is PACKED to
     # one long immediately after the vote stage and the bits array is
     # dropped before any shuffle. The band-explode previously carried
@@ -1248,16 +1218,15 @@ def _simhash_pairs(
     # join sides. Packed words shrink the shuffled row to n_words
     # longs, band values become shift-and-mask reads, and hamming is
     # sum(bit_count(xor)) — one codegen'd instruction pair per word.
-    # r17 (guide §2.4/§5): the banded rows feed BOTH self-join sides,
-    # and exchange reuse does not reliably dedup the duplicated sig
-    # derivation (md5 word hashes + n_bits vote filters — the
-    # expensive map side) across them. The checkpoint materializes
-    # the compact post-explode rows (n_words + 2 longs per band row)
-    # once; measured 3.86 -> 2.35 s at sf0.1 on the 64-bit tier
-    # (interleaved A/B). Same sym-edges discipline as the CC loop.
-    banded = _packed_banded(
-        corpus, n_words=n_words, band_bits=band_bits
-    ).localCheckpoint()
+    # The banded rows feed BOTH self-join sides, and exchange reuse
+    # does not reliably dedup the duplicated sig derivation (md5 word
+    # hashes + n_bits vote filters — the expensive map side) across
+    # them, so the compact post-explode rows (n_words + 2 longs per
+    # band row) are a barrier: derived once (3.86 -> 2.35 s at sf0.1
+    # on the 64-bit tier, interleaved A/B).
+    banded = stage(
+        _packed_banded(corpus, n_words=n_words, band_bits=band_bits), "simhash.banded"
+    )
     a = banded.select(
         F.col("doc_id").alias("left_id"),
         "lang",
@@ -1589,10 +1558,12 @@ def dup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clusters and documents, with size-1 = corpus docs in NO pair "
     "(counted by difference against the corpus spine, one count "
     "aggregate — never an anti-join materializing singletons). "
-    "Reuses the session-persisted pair graph (warm_dup_pairs), so "
-    "after any dedup consumer has run, the histogram costs one "
-    "count-by-label aggregate over the (tiny) label table; output is "
-    "bounded by the largest cluster size.",
+    "Reuses the session-persisted pair graph (warm_dup_pairs), but "
+    "runs the connected-components rounds on every call (the labels "
+    "are not a session artifact), then two aggregates over the label "
+    "table; the labeled-doc count is the row count the rounds' last "
+    "barrier observed, a literal. Output is bounded by the largest "
+    "cluster size.",
     oracle=f"""
         WITH RECURSIVE {_MINHASH_PAIRS_CTE},
         edges AS (
@@ -1641,17 +1612,11 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_clusters"),
         (F.col("cluster_size") * F.count(F.lit(1))).alias("n_docs"),
     )
-    n_corpus = load(spark, sf_dir, "documents").select(
-        F.count(F.lit(1)).alias("n")
-    )
-    n_labeled = labels.select(F.count(F.lit(1)).alias("m"))
-    singles = (
-        n_corpus.crossJoin(F.broadcast(n_labeled))
-        .select(
-            F.lit(1).cast("long").alias("cluster_size"),
-            (F.col("n") - F.col("m")).alias("n_clusters"),
-            (F.col("n") - F.col("m")).alias("n_docs"),
-        )
+    n_single = F.count(F.lit(1)) - F.lit(observed(labels)["rows"])
+    singles = load(spark, sf_dir, "documents").select(
+        F.lit(1).cast("long").alias("cluster_size"),
+        n_single.alias("n_clusters"),
+        n_single.alias("n_docs"),
     )
     return hist.unionByName(singles).orderBy("cluster_size")
 
@@ -2106,7 +2071,7 @@ def _semdedup_planes(spark: SparkSession, sf_dir: str) -> int:
 def _semdedup_pairs(corpus: DataFrame, n_planes: int = 4) -> DataFrame:
     """SemDeDup's candidate-pair stage, exposed so its plan is
     auditable on its own: the registered query feeds it to the eager
-    two-phase CC (localCheckpoint), after which the pair join is no
+    two-phase CC (stage barriers), after which the pair join is no
     longer visible in the final query's plan. tests/test_plans.py
     asserts the (label, bucket) blocking here."""
     # (label, LSH-sub-bucket) blocking with the bucket materialized
@@ -2429,6 +2394,44 @@ def _own_oracle(name: str) -> str:
     return oracle
 
 
+def overlap_counts(
+    audited: DataFrame,
+    truth: DataFrame,
+    keys: list[str],
+    markers: tuple[str, str],
+    hits: str,
+    **sums: str,
+) -> DataFrame:
+    """The one-row verdict of a pair-set quality audit: ``audited`` and
+    ``truth`` are stage barriers of key sets, each with a marker column
+    that is 1 on every row (``markers``, audited side first). One
+    full-outer join, so each set is read exactly once; it is hinted
+    shuffle_hash because pair sets grow with the corpus and must never
+    be broadcast. ``sums`` maps each output count to the column it
+    sums, in output order (a marker counts its side; a truth-side 0/1
+    column such as ``same_lang`` counts its subset); ``hits`` counts
+    the keys on both sides. Every count is 0, never NULL, over zero
+    rows: the oracles' scalar ``count(*)`` subqueries yield 0 there."""
+    in_audited, in_truth = markers
+
+    def total(c: Column) -> Column:
+        return F.coalesce(F.sum(c), F.lit(0)).cast("long")
+
+    j = audited.hint("shuffle_hash").join(truth, keys, "full_outer")
+    both = F.col(in_truth).isNotNull() & F.col(in_audited).isNotNull()
+    return j.agg(
+        *(total(F.coalesce(col, F.lit(0))).alias(out) for out, col in sums.items()),
+        total(both.cast("long")).alias(hits),
+    )
+
+
+def ratio4(num: str, den: str) -> Column:
+    """``num / den`` floored to 4 decimals, NULL when ``den`` is 0 —
+    the audits' precision and recall, matching the oracles'
+    ``floor(x / nullif(d, 0) * 10000) / 10000``."""
+    return F.floor(F.col(num).cast("double") / F.nullif(F.col(den), F.lit(0)) * 10000) / 10000
+
+
 @register(
     "dedup_pair_audit",
     tags=("dedup", "lsh", "observability"),
@@ -2508,26 +2511,18 @@ def _own_oracle(name: str) -> str:
     """,
 )
 def dedup_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE pass over each source: full-outer join with membership
-    # markers, then a single global aggregate — each pair set
-    # executes exactly once (the crossJoin-of-counts formulation ran
-    # lsh/ex twice each AND let AQE broadcast a pair set, which OOMed
-    # the 100x probe: pair sets GROW with the corpus, so the join is
-    # hinted shuffle_hash, never broadcast).
-    #
-    # localCheckpoint barriers (r15, found by this round's own 100x
-    # re-probe of the REDESIGNED audit): without them Spark executes
-    # the minhash subtree and the exact-Jaccard subtree CONCURRENTLY
-    # inside one job, so peak memory is the SUM of the two heaviest
-    # pair stages in the repo — the 8 GiB default heap OOMed at 100x
-    # where each stage standalone fits comfortably. Each pair SET is
-    # kilobytes (near-dups only), so checkpointing serializes the
-    # heavy stages and the final full-outer joins two tiny frames.
-    lsh = (
+    # Each pair set is a barrier: without them Spark runs the minhash
+    # subtree and the exact-Jaccard subtree CONCURRENTLY inside one
+    # job, so peak memory is the SUM of the two heaviest pair stages
+    # in the repo (the 8 GiB default heap OOMed at 100x where each
+    # stage alone fits). Each pair SET is kilobytes (near-dups only),
+    # so the barriers serialize the heavy stages and the verdict joins
+    # two tiny frames.
+    lsh = stage(
         minhash_lsh_near_dups(spark, sf_dir)
         .select("left_id", "right_id")
-        .withColumn("in_lsh", F.lit(1))
-        .localCheckpoint(eager=True)
+        .withColumn("in_lsh", F.lit(1)),
+        "pair_audit.lsh",
     )
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     injected = d.unionByName(
@@ -2538,48 +2533,22 @@ def dedup_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    ex = (
+    ex = stage(
         exact_jaccard_pairs(injected.withColumn("lang", F.lit("all")))
         .select("left_id", "right_id")
-        .withColumn("in_ex", F.lit(1))
-        .localCheckpoint(eager=True)
+        .withColumn("in_ex", F.lit(1)),
+        "pair_audit.exact",
     )
-    j = lsh.hint("shuffle_hash").join(
-        ex, ["left_id", "right_id"], "full_outer"
-    )
-    # The outer coalesce (ADVICE r14 #2): sum() over ZERO rows is NULL
-    # in Spark, while the oracle's scalar count(*) subqueries yield 0 —
-    # on a fixture with no qualifying pairs the engines must agree on 0.
-    stats = j.agg(
-        F.coalesce(F.sum(F.coalesce("in_ex", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_exact"),
-        F.coalesce(F.sum(F.coalesce("in_lsh", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_lsh"),
-        F.coalesce(
-            F.sum(
-                (F.col("in_ex").isNotNull() & F.col("in_lsh").isNotNull()).cast(
-                    "long"
-                )
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_hits"),
-    )
-    ratio = lambda num, den: (  # noqa: E731 — local expression builder
-        F.floor(
-            F.col(num).cast("double") / F.nullif(F.col(den), F.lit(0)) * 10000
-        )
-        / 10000
+    stats = overlap_counts(
+        lsh, ex, ["left_id", "right_id"], ("in_lsh", "in_ex"), "n_hits",
+        n_exact="in_ex", n_lsh="in_lsh",
     )
     return stats.select(
         "n_exact",
         "n_lsh",
         "n_hits",
-        ratio("n_hits", "n_lsh").alias("precision_at_t"),
-        ratio("n_hits", "n_exact").alias("recall_at_t"),
+        ratio4("n_hits", "n_lsh").alias("precision_at_t"),
+        ratio4("n_hits", "n_exact").alias("recall_at_t"),
     )
 
 
@@ -2724,123 +2693,41 @@ def dedup_pair_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def simhash_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    # DISK_ONLY checkpoint (found by this audit's own 100x probe):
-    # the simhash tier emits ~7.7M pairs at the 100x corpus (r9
-    # table), and holding them in MEMORY_AND_DISK while the exact-
-    # Jaccard ground truth runs its heavy verify stages pushed the
-    # combined session over the default heap — each half runs clean
-    # alone. The pair set is read exactly once more (the final tiny
-    # full_outer), so disk residency costs nothing measurable.
-    sh = (
-        simhash64_hamming_dups(spark, sf_dir)
-        .select("left_id", "right_id")
-        .withColumn("in_sh", F.lit(1))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    # Every pair set is a DISK_ONLY barrier: the simhash tier emits
+    # ~7.7M pairs at the 100x corpus, and holding them in memory while
+    # the ground truths run their heavy verify stages pushed the
+    # session over the default heap (each half runs clean alone). Each
+    # set is read exactly once more (the tiny full_outer), so disk
+    # residency costs nothing measurable.
+    keys = ["left_id", "right_id"]
+    sh = stage(
+        simhash64_hamming_dups(spark, sf_dir).select(*keys).withColumn("in_sh", F.lit(1)),
+        "simhash_audit.simhash",
+        disk=True,
     )
     corpus = _near_dup_corpus(spark, sf_dir)
     langs = corpus.select("doc_id", "lang")
-    ex = exact_jaccard_pairs(
-        corpus.select("doc_id", "text").withColumn("lang", F.lit("all"))
-    ).select("left_id", "right_id")
-    exl = (
-        ex.join(
-            langs.select(
-                F.col("doc_id").alias("left_id"), F.col("lang").alias("la")
-            ),
-            "left_id",
+    unblocked = corpus.select("doc_id", "text").withColumn("lang", F.lit("all"))
+
+    def lang_tagged(pairs: DataFrame) -> DataFrame:
+        """Ground-truth pairs with their same-lang flag and marker."""
+        return (
+            pairs.select(*keys)
+            .join(langs.select(F.col("doc_id").alias("left_id"), F.col("lang").alias("la")), "left_id")
+            .join(langs.select(F.col("doc_id").alias("right_id"), F.col("lang").alias("lb")), "right_id")
+            .select(*keys, (F.col("la") == F.col("lb")).cast("long").alias("same_lang"))
+            .withColumn("in_ex", F.lit(1))
         )
-        .join(
-            langs.select(
-                F.col("doc_id").alias("right_id"), F.col("lang").alias("lb")
-            ),
-            "right_id",
-        )
-        .select(
-            "left_id",
-            "right_id",
-            (F.col("la") == F.col("lb")).cast("long").alias("same_lang"),
-        )
-        .withColumn("in_ex", F.lit(1))
-        # DISK_ONLY like sh (r17): the ground-truth pair sets are each
-        # read exactly once more, and with TWO ground-truth jobs in
-        # this audit every avoidable resident block matters at 100x
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+    exl = stage(lang_tagged(exact_jaccard_pairs(unblocked)), "simhash_audit.exact", disk=True)
+    cosl = stage(lang_tagged(exact_token_cosine_pairs(unblocked)), "simhash_audit.cosine", disk=True)
+    stats = overlap_counts(
+        sh, exl, keys, ("in_sh", "in_ex"), "n_hits",
+        n_exact="in_ex", n_exact_same_lang="same_lang", n_simhash="in_sh",
     )
-    cosl = (
-        exact_token_cosine_pairs(
-            corpus.select("doc_id", "text").withColumn("lang", F.lit("all"))
-        )
-        .select("left_id", "right_id")
-        .join(
-            langs.select(
-                F.col("doc_id").alias("left_id"), F.col("lang").alias("la")
-            ),
-            "left_id",
-        )
-        .join(
-            langs.select(
-                F.col("doc_id").alias("right_id"), F.col("lang").alias("lb")
-            ),
-            "right_id",
-        )
-        .select(
-            "left_id",
-            "right_id",
-            (F.col("la") == F.col("lb")).cast("long").alias("same_lang"),
-        )
-        .withColumn("in_ex", F.lit(1))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
-    j = sh.hint("shuffle_hash").join(
-        exl, ["left_id", "right_id"], "full_outer"
-    )
-    stats = j.agg(
-        F.coalesce(F.sum(F.coalesce("in_ex", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_exact"),
-        F.coalesce(F.sum(F.coalesce("same_lang", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_exact_same_lang"),
-        F.coalesce(F.sum(F.coalesce("in_sh", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_simhash"),
-        F.coalesce(
-            F.sum(
-                (F.col("in_ex").isNotNull() & F.col("in_sh").isNotNull())
-                .cast("long")
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_hits"),
-    )
-    jc = sh.hint("shuffle_hash").join(
-        cosl, ["left_id", "right_id"], "full_outer"
-    )
-    stats_c = jc.agg(
-        F.coalesce(F.sum(F.coalesce("in_ex", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_cos"),
-        F.coalesce(F.sum(F.coalesce("same_lang", F.lit(0))), F.lit(0))
-        .cast("long")
-        .alias("n_cos_same_lang"),
-        F.coalesce(
-            F.sum(
-                (F.col("in_ex").isNotNull() & F.col("in_sh").isNotNull())
-                .cast("long")
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("n_cos_hits"),
-    )
-    ratio = lambda num, den: (  # noqa: E731 — local expression builder
-        F.floor(
-            F.col(num).cast("double") / F.nullif(F.col(den), F.lit(0)) * 10000
-        )
-        / 10000
+    stats_c = overlap_counts(
+        sh, cosl, keys, ("in_sh", "in_ex"), "n_cos_hits",
+        n_cos="in_ex", n_cos_same_lang="same_lang",
     )
     # two 1-row verdict frames; the cross join is 1x1 by construction
     return stats.crossJoin(stats_c).select(
@@ -2848,13 +2735,13 @@ def simhash_match_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_exact_same_lang",
         "n_simhash",
         "n_hits",
-        ratio("n_hits", "n_simhash").alias("precision_at_h"),
-        ratio("n_hits", "n_exact").alias("recall_at_h"),
-        ratio("n_hits", "n_exact_same_lang").alias("recall_same_lang_at_h"),
+        ratio4("n_hits", "n_simhash").alias("precision_at_h"),
+        ratio4("n_hits", "n_exact").alias("recall_at_h"),
+        ratio4("n_hits", "n_exact_same_lang").alias("recall_same_lang_at_h"),
         "n_cos",
         "n_cos_same_lang",
         "n_cos_hits",
-        ratio("n_cos_hits", "n_simhash").alias("precision_at_cos"),
-        ratio("n_cos_hits", "n_cos").alias("recall_at_cos"),
-        ratio("n_cos_hits", "n_cos_same_lang").alias("recall_cos_same_lang"),
+        ratio4("n_cos_hits", "n_simhash").alias("precision_at_cos"),
+        ratio4("n_cos_hits", "n_cos").alias("recall_at_cos"),
+        ratio4("n_cos_hits", "n_cos_same_lang").alias("recall_cos_same_lang"),
     )

@@ -18,9 +18,10 @@ table fits ``dedup.LABEL_BROADCAST_BOUND`` it is broadcast into the
 edge join and the edge list is never moved after its first
 materialization; past the bound the join is left to AQE. Rounds
 needed = graph diameter, and duplicate clusters are near-cliques, so
-2-4 rounds in practice. Every round ends in a checkpoint that
-truncates lineage — without it the plan doubles per iteration and
-the job dies on plan size long before data size.
+2-4 rounds in practice. Every round ends in an eager stage barrier
+(``catalog.stage``) that truncates lineage — without it the plan
+doubles per iteration and the job dies on plan size long before data
+size.
 
 At 100 TB: the same loop holds (state per round = one (node,label)
 table, shuffled on node). A component whose diameter outruns the
@@ -37,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from project_orbit_spark.catalog import checkpoint_counted, maybe_broadcast
+from project_orbit_spark.catalog import maybe_broadcast, observed, stage
 from project_orbit_spark.registry import register
 
 
@@ -59,9 +60,9 @@ def connected_components(
     diameter); both reach the same fixpoint, so the fallback changes
     round complexity, never results.
 
-    When propagation converges the returned frame is a counted
-    checkpoint, so a size-gated join of the labels
-    (``maybe_broadcast(..., probe=<result>)``) costs no probe job.
+    The returned frame is a stage barrier on either path, so a
+    size-gated join of the labels (``maybe_broadcast(...,
+    probe=<result>)``) costs no probe job.
     """
     from project_orbit_spark.operators import dedup
 
@@ -78,12 +79,7 @@ def connected_components(
             F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
         )
     ).alias("e")
-    sym = (
-        half.select(both)
-        .select("e.src", "e.dst")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = stage(half.select(both).select("e.src", "e.dst").distinct(), "cc.edges")
     # Convergence: min-label propagation only ever DECREASES a label,
     # so sum(label) is strictly monotone until the fixpoint, and equal
     # sums ⟺ no label changed. decimal(38,0) keeps the sum exact far
@@ -95,13 +91,15 @@ def connected_components(
     # 1 is min(node, min neighbor) straight off sym (every node of sym
     # appears as src). Round 1 changed nothing ⟺ sum(label) equals
     # sum(node): no edges at all (both None), or self-loops only.
-    labels, seen = checkpoint_counted(
+    labels = stage(
         sym.groupBy("src")
         .agg(F.min("dst").alias("nmin"))
         .select(F.col("src").alias("node"), F.least("src", "nmin").alias("label")),
+        "cc.round",
         label_sum=exact_sum("label"),
         node_sum=exact_sum("node"),
     )
+    seen = observed(labels)
     prev_sum = seen["label_sum"]
     if prev_sum == seen["node_sum"]:
         return labels
@@ -120,10 +118,12 @@ def connected_components(
         msgs = sym.join(nbr, "dst").select(
             F.col("src").alias("node"), F.col("nbr").alias("label")
         )
-        labels, seen = checkpoint_counted(
+        labels = stage(
             labels.unionByName(msgs).groupBy("node").agg(F.min("label").alias("label")),
+            "cc.round",
             label_sum=exact_sum("label"),
         )
+        seen = observed(labels)
         if seen["label_sum"] == prev_sum:
             return labels
         prev_sum = seen["label_sum"]
@@ -168,14 +168,17 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> DataFrame:
     # (row count, xor of edge hashes) is unchanged ⟺ the set is
     # (up to a 64-bit hash collision)
     h = F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0))
-    e, prev = checkpoint_counted(
+    e = stage(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
+        "cc.star_edges",
         h=h,
     )
+    prev = observed(e)
     for _ in range(max_iter):
-        e, seen = checkpoint_counted(small_star(large_star(e)), h=h)
+        e = stage(small_star(large_star(e)), "cc.star_round", h=h)
+        seen = observed(e)
         if (seen["rows"], seen["h"]) == (prev["rows"], prev["h"]):
             return e
         prev = seen
@@ -186,7 +189,9 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src", dst: str 
     """Large-star/small-star connected components — same (node, label)
     contract as ``connected_components``, O(log n) rounds instead of
     O(diameter). ``connected_components`` finishes here when its
-    propagation rounds run out; raises after ``max_iter`` rounds."""
+    propagation rounds run out; raises after ``max_iter`` rounds. The
+    result is a stage barrier, so the label join after it probes no
+    size."""
     half = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     )
@@ -195,7 +200,7 @@ def connected_components_two_phase(edges: DataFrame, src: str = "src", dst: str 
     roots = star.select(F.col("v").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
-    return members.union(roots).distinct()
+    return stage(members.union(roots).distinct(), "cc.two_phase")
 
 
 def cluster_representatives(labels: DataFrame) -> DataFrame:
@@ -271,8 +276,9 @@ def _pr_oracle_sql() -> str:
     "discipline as the md5 hash families, and the honest way to "
     "oracle-check iterative numerics. Per iteration: one join "
     "edges⋈ranks, one sum per dst, one left join back onto the node "
-    "spine; lineage truncated with localCheckpoint (the CC lesson — "
-    "plan growth kills iterative jobs before data does).",
+    "spine; every iteration ends in an eager stage barrier that "
+    "truncates lineage (the CC lesson — plan growth kills iterative "
+    "jobs before data does).",
     oracle=_pr_oracle_sql(),
 )
 def pagerank_link_graph(spark, sf_dir: str):
@@ -286,17 +292,17 @@ def pagerank_link_graph(spark, sf_dir: str):
         )
     nodes = d.select(F.col("doc_id").alias("node"))
     fan = F.explode(F.array(*[F.lit(j + 1) for j in range(PR_EDGE_FANOUT)])).alias("j")
-    edges = (
+    edges = stage(
         d.select(F.col("doc_id").alias("src"), fan)
         .select("src", ((F.col("src") * 31 + F.col("j") * 17) % n).alias("dst"))
         .filter(F.col("dst") != F.col("src"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "pagerank.edges",
     )
     # out-degree is a static per-src property of the static graph:
-    # joined onto the checkpointed edge list once, never per iteration
+    # joined onto the edge barrier once, never per iteration
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    edges_od = edges.join(outdeg, "src").localCheckpoint()
+    edges_od = stage(edges.join(outdeg, "src"), "pagerank.edges_od")
     teleport = (PR_SCALE * 15) // (100 * n)
     ranks = nodes.select("node", F.lit(PR_SCALE // n).cast("long").alias("rank"))
     for _ in range(PR_ITERS):
@@ -306,15 +312,14 @@ def pagerank_link_graph(spark, sf_dir: str):
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .select(
+        ranks = stage(
+            nodes.join(contrib, nodes.node == contrib.dst, "left").select(
                 "node",
                 (
                     F.lit(teleport)
                     + F.expr("(85 * coalesce(contrib, 0)) DIV 100")
                 ).cast("long").alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            "pagerank.round",
         )
     return ranks.select("node", F.col("rank").alias("rank_fp")).orderBy("node")

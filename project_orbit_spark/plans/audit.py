@@ -61,16 +61,3 @@ def audit(df: DataFrame) -> PlanFacts:
         text=text,
     )
 
-
-def observed(df: DataFrame, name: str, *exprs):
-    """Attach a named Observation to ``df`` (A10 metrics counters as
-    Spark-native observable metrics, ref src/metrics.py counter dict):
-    returns (df, observation). Metrics are collected as a side effect
-    of the FIRST action on the returned frame — zero extra jobs,
-    unlike a separate .count()/.agg() pass over the same data (which
-    at 100 TB is a second full scan). Read via ``observation.get``
-    after the action completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *exprs), obs

@@ -15,8 +15,12 @@ not fixture tables, so they carry no DuckDB oracles).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from project_orbit_spark.catalog import stage
 
 SEED_SCHEMA = (
     "company_name string, website string, linkedin string, "
@@ -584,3 +588,50 @@ def expire_partitions(
     for v in drop:
         shutil.rmtree(os.path.join(path, prefix + v))
     return drop
+
+
+def refresh_index(
+    spark: SparkSession,
+    name: str,
+    seed: DataFrame,
+    batch: DataFrame,
+    verdict: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """One maintenance cycle of a ``dt``-partitioned index, with a
+    probe's verdict against the index after each op: ``seed`` (which
+    carries its own ``dt`` days) is written, ``batch`` is appended as
+    ``dt=2026-01-04``, then ``verdict(<index read>)`` runs after that
+    merge, after ``compact_parquet`` and after ``expire_partitions(
+    keep_latest=3)``. Returns the three verdicts, tagged ``stage`` =
+    merged / compacted / expired, as one frame.
+
+    Each verdict is a stage barrier because the next op rewrites or
+    deletes the files its lazy plan reads. The staging dir carries a
+    per-invocation nonce: a fixed path would let two concurrent
+    invocations in one session (a bench run and a parity run) corrupt
+    each other's index mid-cycle. uuid4 reads the OS entropy pool, not
+    a seeded PRNG, and no result depends on the path. Once the three
+    barriers hold the verdicts the dir is dead weight; it is removed
+    then, or when the cycle fails."""
+    import shutil
+    import uuid
+
+    from project_orbit_spark.sources.roundtrip import _stage_dir
+
+    path = _stage_dir(spark, f"{name}_{uuid.uuid4().hex[:12]}")
+
+    def after(op: str) -> DataFrame:
+        index = spark.read.schema(seed.schema).parquet(path)
+        return stage(verdict(index).withColumn("stage", F.lit(op)), f"{name}.{op}")
+
+    try:
+        seed.write.mode("overwrite").partitionBy("dt").parquet(path)
+        batch.withColumn("dt", F.lit("2026-01-04")).write.mode("append").partitionBy("dt").parquet(path)
+        merged = after("merged")
+        compact_parquet(spark, path, partition_col="dt")
+        compacted = after("compacted")
+        expire_partitions(spark, path, partition_col="dt", keep_latest=3)
+        expired = after("expired")
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+    return merged.unionByName(compacted).unionByName(expired)

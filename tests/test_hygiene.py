@@ -248,3 +248,32 @@ def test_near_dup_clusters_through_one_chain():
             if not any(a <= n.lineno <= b for a, b in allowed):
                 hits.append(f"{rel}:{n.lineno}: LABEL_BROADCAST_BOUND")
     assert not hits, hits
+
+
+def test_one_stage_barrier():
+    """Every materialization goes through catalog.stage: the package
+    calls ``localCheckpoint(``, builds an ``Observation(`` or names a
+    ``StorageLevel`` only inside that function, and the old counted
+    helper is gone."""
+    import ast
+
+    tree = ast.parse((PKG / "catalog.py").read_text())
+    first, last = next(
+        (
+            (n.lineno, n.end_lineno)
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name == "stage"
+        ),
+        (0, -1),
+    )
+    hits = []
+    for p in _py_sources():
+        rel = str(p.relative_to(PKG))
+        for i, line in enumerate(p.read_text().splitlines(), 1):
+            if "checkpoint_counted" in line:
+                hits.append(f"{rel}:{i}: checkpoint_counted")
+            if re.search(r"localCheckpoint\(|Observation\(|StorageLevel", line) and not (
+                rel == "catalog.py" and first <= i <= last
+            ):
+                hits.append(f"{rel}:{i}")
+    assert not hits, hits

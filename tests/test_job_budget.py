@@ -111,13 +111,12 @@ def test_propagation_round_job_budget(spark):
 
 
 def test_counted_frame_gates_broadcast_without_a_job(spark):
-    """A frame from checkpoint_counted carries its row count, so the
-    broadcast gate answers from it on both sides of the bound and runs
-    no probe job."""
-    from project_orbit_spark.catalog import checkpoint_counted, maybe_broadcast
+    """A stage barrier carries its row count, so the broadcast gate
+    answers from it on both sides of the bound and runs no probe job."""
+    from project_orbit_spark.catalog import maybe_broadcast, observed, stage
 
-    side, seen = checkpoint_counted(spark.range(0, 40).select(F.col("id").alias("k")))
-    assert seen["rows"] == 40
+    side = stage(spark.range(0, 40).select(F.col("id").alias("k")), "side")
+    assert observed(side)["rows"] == 40
     got = {}
     n = jobs_of(
         spark,
@@ -129,6 +128,41 @@ def test_counted_frame_gates_broadcast_without_a_job(spark):
     assert n == 0
     assert "ResolvedHint" in got["under"]._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in got["over"]._jdf.queryExecution().analyzed().toString()
+
+
+def test_cc_fallback_gates_the_label_join_without_a_job(spark):
+    """When propagation runs out of rounds on a long chain, the
+    large-star/small-star result is a stage barrier too, so the
+    size-gated label join reads its observed row count: building it
+    runs no job (4 probe jobs when the fallback's result was an
+    uncounted union)."""
+    from project_orbit_spark.operators.dedup import join_clusters
+    from project_orbit_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "left_id long, right_id long"
+    )
+    cc = connected_components(edges, "left_id", "right_id", max_iter=6)
+    docs = spark.range(0, 20).select(F.col("id").alias("doc_id"))
+    got = {}
+    assert jobs_of(spark, lambda: got.update(j=join_clusters(docs, cc))) == 0
+    assert {r.cluster_id for r in got["j"].filter("doc_id <= 16").collect()} == {0}
+
+
+@pytest.mark.parametrize("name, budget", [("bpe_learn_merges", 27), ("bpe_tokenize_corpus", 31)])
+def test_bpe_fit_job_budget(spark, name, budget):
+    """The BPE merge loop reads pair exhaustion off each argmax
+    barrier's observed row count, and the tokenize face gates its vocab
+    broadcast on the fit's last barrier: no ``take(1)`` job per round
+    and no probe job (33 and 39 jobs with them, documents' schema
+    resolved)."""
+    from project_orbit_spark import registry
+    from project_orbit_spark.catalog import load
+
+    load(spark, SF_DIR, "documents")
+    q = registry.get_query(name)
+    n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    assert 0 < n <= budget, n
 
 
 def test_second_load_of_a_table_runs_no_job(spark, tmp_path):
@@ -231,6 +265,7 @@ def test_one_rank_exchange_job_budget(spark, name, budget):
         ("dedup_quality_canonical", 12),
         ("leakage_safe_split", 13),
         ("dup_cluster_labels", 12),
+        ("dup_cluster_size_histogram", 13),
     ],
 )
 def test_near_dup_cluster_job_budget(spark, name, budget):
@@ -238,6 +273,8 @@ def test_near_dup_cluster_job_budget(spark, name, budget):
     built): its pairs, the connected-components rounds and one gated
     label join. Pinned at the counts of the one-chain fold (maximum of
     three warm repeats at sf0.001), the ledger that finishing small
-    graphs on the driver is to lower."""
+    graphs on the driver is to lower. The histogram reads its labeled
+    count off the last round's barrier (15 jobs with a count aggregate
+    of the labels and its broadcast)."""
     n = warm_request_jobs(spark, name)
     assert 0 < n <= budget, n
