@@ -88,8 +88,6 @@ def _fan_out_scan(
     to feed the cores. Derived from input size (``_scan_bytes``), never
     a constant — on a real lake table the branch is dead code. A
     ``path`` that ``df`` does not scan leaves ``df`` as it is.
-    ``SPARK_GRAFT_FAN_OUT=0`` disables it globally (A/B measurement +
-    emergency off-switch).
 
     ``cols``: when the consumer's shuffles are all keyed by a prefix
     of these columns (e.g. per-doc aggregate chains keyed doc_id),
@@ -100,8 +98,6 @@ def _fan_out_scan(
     explicit numPartitions pins the width (an N-less keyed repartition
     would be AQE-coalesced back to one partition on this tiny
     substrate)."""
-    if os.environ.get("SPARK_GRAFT_FAN_OUT", "1") == "0":
-        return df
     size = _scan_bytes(df, path)
     if size is None:
         return df

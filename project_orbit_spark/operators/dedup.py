@@ -136,9 +136,8 @@ MINHASH_PAIRS = [
 # passes ~1 in 4 of them at est>=0.5. 24 = 6 bands × 4 rows halves the
 # estimator's σ (≈0.10 at s=0.4) and cuts per-band sub-threshold
 # collisions by ~s×, while 6 bands keep the banding recall curve at
-# ≥0.999 for true near-dups (s≥0.9: 1-(1-0.9⁴)⁶). Measured on the
-# knob probe (tools/minhash_knob_probe.py, table in docs/SCALE.md)
-# before flipping the default.
+# ≥0.999 for true near-dups (s≥0.9: 1-(1-0.9⁴)⁶). Measured on a
+# knob probe (table in docs/SCALE.md) before flipping the default.
 MINHASH_SIG_K = 24
 MINHASH_BANDS = 6
 MINHASH_ROWS = 4
@@ -590,27 +589,21 @@ _MINHASH_PAIRS_CTE = f"""corpus AS (
         {_MINHASH_PAIRS_BODY}"""
 
 
-def _banded_signatures(
-    corpus: DataFrame,
-    k: int = MINHASH_SIG_K,
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-) -> DataFrame:
+def _banded_signatures(corpus: DataFrame) -> DataFrame:
     """(doc_id, text) → (doc_id, sig, band_idx, band_sig): shingle →
-    hash-once md5-prefix ints → k affine MinHash rows → ``bands``
-    bands of ``rows`` (defaults = the tuned MINHASH_* geometry; the
-    knob probe passes explicit values to measure alternatives on the
-    REAL code path). The two repartitions are parallelism barriers:
-    the fixture scan is one row group, so without them shingling and
-    the k affine hashes run in one task; with them they follow shuffle
-    partitioning instead of scan splits. They are not what keeps the
-    md5 from re-inlining into the k hash lambdas — the optimizer keeps
-    one md5 per shingle without them (pinned in tests/test_plans.py)."""
+    hash-once md5-prefix ints → MINHASH_SIG_K affine MinHash rows →
+    MINHASH_BANDS bands of MINHASH_ROWS. The two repartitions are
+    parallelism barriers: the fixture scan is one row group, so
+    without them shingling and the k affine hashes run in one task;
+    with them they follow shuffle partitioning instead of scan splits.
+    They are not what keeps the md5 from re-inlining into the k hash
+    lambdas — the optimizer keeps one md5 per shingle without them
+    (pinned in tests/test_plans.py)."""
     hashed = corpus.repartition(barrier_width(corpus), "doc_id").select(
         "doc_id", shingle_hashes(word_shingles("text", 3)).alias("hs")
     )
     signed = hashed.repartition(barrier_width(hashed), "doc_id").select(
-        "doc_id", minhash_signature_int(F.col("hs"), k=k).alias("sig")
+        "doc_id", minhash_signature_int(F.col("hs"), k=MINHASH_SIG_K).alias("sig")
     )
     return signed.select(
         "doc_id",
@@ -620,9 +613,9 @@ def _banded_signatures(
                 *[
                     F.struct(
                         F.lit(b).alias("band_idx"),
-                        F.slice("sig", b * rows + 1, rows).alias("band_sig"),
+                        F.slice("sig", b * MINHASH_ROWS + 1, MINHASH_ROWS).alias("band_sig"),
                     )
-                    for b in range(bands)
+                    for b in range(MINHASH_BANDS)
                 ]
             )
         ).alias("bk"),
@@ -722,20 +715,13 @@ def minhash_lsh_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs(d.unionByName(near)).orderBy("left_id", "right_id")
 
 
-def minhash_pairs(
-    corpus: DataFrame,
-    k: int = MINHASH_SIG_K,
-    bands: int = MINHASH_BANDS,
-    rows: int = MINHASH_ROWS,
-) -> DataFrame:
+def minhash_pairs(corpus: DataFrame) -> DataFrame:
     """(doc_id, text) → near-dup pairs (left_id, right_id,
     est_jaccard ≥ 0.5) via the banded MinHash family — the reusable
     pair stage the standalone query, the cluster pipeline, and the
     curation pipeline all share (mirrors the oracle's
-    _MINHASH_PAIRS_BODY). Geometry params exist for the knob probe
-    (tools/minhash_knob_probe.py) — every production consumer uses
-    the tuned defaults."""
-    banded = _banded_signatures(corpus, k=k, bands=bands, rows=rows)
+    _MINHASH_PAIRS_BODY)."""
+    banded = _banded_signatures(corpus)
 
     a = banded.select(
         F.col("doc_id").alias("left_id"),
@@ -761,8 +747,9 @@ def minhash_pairs(
     first_band = F.array_position(
         F.array(
             *[
-                F.slice("sig_a", i * rows + 1, rows) == F.slice("sig_b", i * rows + 1, rows)
-                for i in range(bands)
+                F.slice("sig_a", i * MINHASH_ROWS + 1, MINHASH_ROWS)
+                == F.slice("sig_b", i * MINHASH_ROWS + 1, MINHASH_ROWS)
+                for i in range(MINHASH_BANDS)
             ]
         ),
         True,
@@ -773,7 +760,7 @@ def minhash_pairs(
         .select(
             "left_id",
             "right_id",
-            F.round(matches.cast("double") / float(k), 4).alias("est_jaccard"),
+            F.round(matches.cast("double") / float(MINHASH_SIG_K), 4).alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= 0.5)
     )
@@ -1197,7 +1184,7 @@ def _simhash_pairs(
     (docs/SCALE.md round 9, re-confirmed r17 on the packed plan:
     agreement 0.4448). The r9 cost argument is now moot — packing cut
     the ladder's 100× premium from 5–6× to 1.42× (47.4 → 67.3 s,
-    tools/simhash_knob_probe.py r17) — which makes the point sharper,
+    a knob probe, r17) — which makes the point sharper,
     not weaker: widening is affordable but it is a RE-CALIBRATION of
     the near-dup definition, never a drop-in cost/quality knob. The
     64b/4×16/h≤3 tier is the contract; parameters keep a future
@@ -2447,7 +2434,7 @@ def ratio4(num: str, den: str) -> Column:
     "lang-BLOCKED (so 23 true cross-lang near-dups — the fixture "
     "generator reuses text across langs — scored as FPs too). "
     "Decomposition + per-geometry gray-zone admission curves: "
-    "tools/minhash_knob_probe.py, table in docs/SCALE.md. With the "
+    "a knob probe, table in docs/SCALE.md. With the "
     "corrected ground truth the tier measures precision 1.0 / "
     "recall 1.0 at sf0.01 — the fixture has no pairs in the "
     "estimator's gray band; the probe's constructed gray-zone "

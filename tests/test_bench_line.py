@@ -115,43 +115,3 @@ def test_failed_list_survives_fallback():
     parsed = json.loads(bench.build_payload_line(payload))
     assert parsed["failed"] == ["some_query"]
 
-
-def test_bench_compare_separates_blips_from_regressions(tmp_path):
-    """tools/bench_compare.py: a run1 excursion that run2 recovers is
-    a BLIP (exit 0); one that persists in run2 is a REGRESSION
-    (exit 1); driver-record and detail-record shapes both load."""
-    import json
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parents[1]
-    old = tmp_path / "old.json"
-    old.write_text(json.dumps(
-        {"parsed": {"queries": {"a": 1.0, "b": 1.0, "c": 0.1}}}
-    ))
-    new = tmp_path / "new.json"
-    new.write_text(json.dumps({
-        "queries": {"a": 2.0, "b": 1.05, "c": 0.2},
-        "queries_run2": {"a": 1.1, "b": 1.0, "c": 0.1},
-    }))
-    r = subprocess.run(
-        [sys.executable, str(repo / "tools/bench_compare.py"),
-         str(old), str(new)],
-        capture_output=True, text=True,
-    )
-    assert r.returncode == 0, r.stdout + r.stderr
-    assert "BLIP a" in r.stdout          # run1 2x, run2 1.1x
-    assert "REGRESSION" not in r.stdout  # c is below the noise floor
-
-    new.write_text(json.dumps({
-        "queries": {"a": 2.0, "b": 1.0, "c": 0.1},
-        "queries_run2": {"a": 1.9, "b": 1.0, "c": 0.1},
-    }))
-    r = subprocess.run(
-        [sys.executable, str(repo / "tools/bench_compare.py"),
-         str(old), str(new)],
-        capture_output=True, text=True,
-    )
-    assert r.returncode == 1
-    assert "REGRESSION a" in r.stdout

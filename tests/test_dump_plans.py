@@ -41,3 +41,12 @@ def test_distinct_ids_stay_distinct():
     two = normalize("Project [doc_id#5L, doc_id#6L]")
     assert one == "Project [doc_id#1L, doc_id#1L]"
     assert two == "Project [doc_id#1L, doc_id#2L]"
+
+
+def test_rdd_scan_call_site_is_renumbered():
+    # one plan dumped first in a process and after many others: the
+    # JVM frame named as the RDD's call site differs, the plan does not
+    first = "Arguments: [a#3L], MapPartitionsRDD[7] at localCheckpoint at NativeMethodAccessorImpl.java:0"
+    later = "Arguments: [a#9L], MapPartitionsRDD[40] at localCheckpoint at <unknown>:0"
+    assert normalize(first) == normalize(later)
+    assert normalize(first) == "Arguments: [a#1L], MapPartitionsRDD[1] at localCheckpoint at 1"

@@ -71,9 +71,3 @@ def test_gate_fans_out_single_rowgroup_fixture(spark):
         == spark.sparkContext.defaultParallelism
     )
 
-
-def test_gate_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_FAN_OUT", "0")
-    path = os.path.join(SF_DIR, "documents.parquet")
-    df = _docs(spark)
-    assert _fan_out_scan(spark, df, path) is df

@@ -1,55 +1,25 @@
 """Job budgets: the Spark jobs a call runs, counted in its own
 status-tracker job group. sf0.1 is bound by per-job latency, so these
-pin the job counts of the paths that were cut, not their timings."""
+pin the job counts of the paths that were cut, not their timings.
+These are cold calls and engine-level gates; the per-query counts of
+warm requests are in tests/test_job_ledger.py."""
 
-import time
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+import bench
+from perfbench.layers import Recorder
 from tests.conftest import SF_DIR
 
 
 def jobs_of(spark, fn) -> int:
-    """Run ``fn`` under a fresh job group and return how many jobs it
-    ran. The status tracker is fed by the listener bus, so the count is
-    read once every job of the group has finished and the set has
-    stopped growing."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    st = sc.statusTracker()
-    prev = None
-    deadline = time.time() + 30
-    while time.time() < deadline:
-        ids = sorted(st.getJobIdsForGroup(group))
-        done = all(
-            (info := st.getJobInfo(j)) is not None and info.status != "RUNNING"
-            for j in ids
-        )
-        if done and ids == prev:
-            return len(ids)
-        prev = ids
-        time.sleep(0.25)
-    raise AssertionError(f"jobs of {group} did not settle: {prev}")
-
-
-def warm_request_jobs(spark, name) -> int:
-    """Jobs of one warm request: the query's prepare hook run (if it
-    has one) and the query served once, then one build plus collect."""
-    from project_orbit_spark import registry
-
-    q = registry.get_query(name)
-    if q.prepare is not None:
-        q.prepare(spark, SF_DIR)
-    q.fn(spark, SF_DIR).toPandas()
-    return jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
+    """Run ``fn`` in a job group of its own and return how many jobs it
+    ran, counted by ``bench.counts``."""
+    rec = Recorder(spark.sparkContext, f"budget-{uuid.uuid4().hex}")
+    rec.run("tests", "fn", 0, fn)
+    return bench.counts(spark.sparkContext, rec.calls[-1].group)["jobs"]
 
 
 def test_curation_training_gold_job_budget(spark):
@@ -205,76 +175,3 @@ def test_grouping_set_face_job_budget(spark, name):
     q = registry.get_query(name)
     n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
     assert 0 < n <= 3, n
-
-
-@pytest.mark.parametrize(
-    "name, budget",
-    [("ann_ivf_topk_warm", 5), ("cosine_topk_exact", 4), ("dashboard_report_table", 2)],
-)
-def test_bounded_sort_request_job_budget(spark, name, budget):
-    """A warm serving request (its prepare hook run and the query
-    served once) sorts its bounded result in one partition: two jobs
-    fewer than a range-partitioned sort (7, 6 and 4 with it)."""
-    n = warm_request_jobs(spark, name)
-    assert 0 < n <= budget, n
-
-
-@pytest.mark.parametrize(
-    "name, budget",
-    [("hybrid_rrf_topk", 2), ("bm25_keyword_topk", 1), ("rerank_crossencoder_topk", 2)],
-)
-def test_bm25_request_job_budget(spark, name, budget):
-    """After a warm call a BM25 request sums stored impacts off the
-    session's impact index: no term-statistics shuffles or broadcasts.
-    Hybrid keeps its query-vector broadcast and rerank its candidate
-    broadcast (9, 8 and 9 jobs when each request recomputed tf, df and
-    the corpus stats)."""
-    n = warm_request_jobs(spark, name)
-    assert 0 < n <= budget, n
-
-
-@pytest.mark.parametrize(
-    "name, budget",
-    [
-        ("ann_ivf_topk_warm", 4),
-        ("cosine_topk_exact", 3),
-        ("matryoshka_funnel_topk", 5),
-        ("context_snippets_format", 4),
-        ("rag_dashboard_gold", 10),
-        ("simhash64_hamming_dups", 6),
-    ],
-)
-def test_one_rank_exchange_job_budget(spark, name, budget):
-    """A per-key top-k ranks behind one key exchange (its rank <= k
-    filter plans a partial WindowGroupLimit below it, no salted first
-    rank), the warm IVF request routes off the stored packed route
-    table (no single-partition packing of the centroids), and the
-    simhash pair stage emits each pair once off its first colliding
-    band (no dedup exchange). Warm, prepare hook run: 5, 4, 6, 5, 11
-    to 12 and 7 jobs with the salted ranks, the per-request packing
-    and the pair dedup."""
-    n = warm_request_jobs(spark, name)
-    assert 0 < n <= budget, n
-
-
-@pytest.mark.parametrize(
-    "name, budget",
-    [
-        ("corpus_curation_gold", 13),
-        ("dedup_canonical_corpus", 13),
-        ("dedup_quality_canonical", 12),
-        ("leakage_safe_split", 13),
-        ("dup_cluster_labels", 12),
-        ("dup_cluster_size_histogram", 13),
-    ],
-)
-def test_near_dup_cluster_job_budget(spark, name, budget):
-    """A near-dup cluster consumer served warm (the session's pair graph
-    built): its pairs, the connected-components rounds and one gated
-    label join. Pinned at the counts of the one-chain fold (maximum of
-    three warm repeats at sf0.001), the ledger that finishing small
-    graphs on the driver is to lower. The histogram reads its labeled
-    count off the last round's barrier (15 jobs with a count aggregate
-    of the labels and its broadcast)."""
-    n = warm_request_jobs(spark, name)
-    assert 0 < n <= budget, n

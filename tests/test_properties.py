@@ -1611,7 +1611,7 @@ def test_exact_near_dup_face_refuses_oversized_labels(spark):
     assert got == {(0, 1)}
 
 
-def test_minhash_retune_preserves_fixture_pair_sets(spark):
+def test_minhash_retune_preserves_fixture_pair_sets(spark, monkeypatch):
     # r15 geometry retune (12=4x3 -> 24=6x4): the cluster/curation
     # family's r13 driver records stay valid WITHOUT a same-round
     # re-pin because their outputs are pure functions of the pair SET
@@ -1631,18 +1631,22 @@ def test_minhash_retune_preserves_fixture_pair_sets(spark):
     # record SF rather than assumed).
     from project_orbit_spark.catalog import load
     from project_orbit_spark.functions.textquality import quality_score
-    from project_orbit_spark.operators.dedup import minhash_pairs
+    from project_orbit_spark.operators import dedup
     from tests.conftest import RECORD_SF_DIR
 
     SF_DIR = RECORD_SF_DIR
 
     def pairset(corpus, **geo):
-        return {
-            (r["left_id"], r["right_id"])
-            for r in minhash_pairs(corpus, **geo)
-            .select("left_id", "right_id")
-            .collect()
-        }
+        # the pair stage reads its geometry off the module constants
+        with monkeypatch.context() as m:
+            for name, value in geo.items():
+                m.setattr(dedup, f"MINHASH_{name}", value)
+            return {
+                (r["left_id"], r["right_id"])
+                for r in dedup.minhash_pairs(corpus)
+                .select("left_id", "right_id")
+                .collect()
+            }
 
     d = load(spark, SF_DIR, "documents").select("doc_id", "text")
     near = d.filter(F.col("doc_id") % 9 == 0).select(
@@ -1650,7 +1654,7 @@ def test_minhash_retune_preserves_fixture_pair_sets(spark):
         F.concat("text", F.lit(" near duplicate suffix tail")).alias("text"),
     )
     injected = d.unionByName(near)
-    assert pairset(injected, k=12, bands=4, rows=3) == pairset(injected)
+    assert pairset(injected, SIG_K=12, BANDS=4, ROWS=3) == pairset(injected)
 
     docs = load(spark, SF_DIR, "documents")
     kept = (
@@ -1662,7 +1666,7 @@ def test_minhash_retune_preserves_fixture_pair_sets(spark):
         .filter(F.col("q") >= 0.5)
         .select("doc_id", "text")
     )
-    assert pairset(kept, k=12, bands=4, rows=3) == pairset(kept)
+    assert pairset(kept, SIG_K=12, BANDS=4, ROWS=3) == pairset(kept)
 
 
 def test_span_batch_broadcast_gate_demotes_past_bound(spark):

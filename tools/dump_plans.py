@@ -9,9 +9,10 @@ the before/after plan evidence for optimization rounds (guide §1 /
 against these files.
 
 The ids a run allocates (expression ``#N``, ``plan_id=N``, RDD ids,
-query-stage and codegen ids) are renumbered in order of first
-appearance, so two fresh dumps of one tree are byte-identical and a
-before/after comparison is a plain ``diff``.
+query-stage and codegen ids) and the call-site label of an RDD scan
+are renumbered in order of first appearance, so two dumps of one tree
+are byte-identical whatever else the process ran, and a before/after
+comparison is a plain ``diff``.
 """
 from __future__ import annotations
 
@@ -29,6 +30,11 @@ _RUN_IDS = [
     re.compile(r"(RDD\[)(\d+)"),
     re.compile(r"((?:Shuffle|Broadcast)QueryStage )(\d+)"),
     re.compile(r"(codegen id : )(\d+)"),
+    # ``MapPartitionsRDD[1] at localCheckpoint at <site>``: the JVM
+    # reports the py4j caller as ``NativeMethodAccessorImpl.java:0``
+    # until it swaps in a generated accessor (``<unknown>:0``) after
+    # enough reflective calls, so the label depends on the process's past
+    re.compile(r"(RDD\[\d+\] at \w+ at )([^\s,\]]+:\d+)"),
 ]
 
 

@@ -20,8 +20,10 @@ Prints one JSON line per query: {"query": ..., "t_1x": s, "t_kx": s,
 "ratio": r}, then a markdown table ready for docs/SCALE.md. The
 synthesized corpus in .scale_probe/ is REUSED across invocations when
 present (delete the directory to force re-synthesis), so the probe can
-run family-by-family within a CI step's time budget. Reps per timing
-via SPARK_GRAFT_SCALE_REPS (default 3, best-of reported).
+run family-by-family within a CI step's time budget. Each timing is
+one ``bench.measure`` of the query (clean session state, prepare hook,
+one untimed serve) with SPARK_GRAFT_SCALE_REPS timed runs (default 3,
+best-of reported).
 """
 
 from __future__ import annotations
@@ -29,7 +31,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -37,7 +38,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from project_orbit_spark import registry  # noqa: E402
+from bench import measure  # noqa: E402
 from project_orbit_spark.catalog import load  # noqa: E402
 from project_orbit_spark.session import get_spark  # noqa: E402
 
@@ -287,16 +288,10 @@ def synthesize(spark, sf_dir: str, out_dir: Path, k: int) -> None:
 
 
 def time_query(spark, name: str, sf_dir: str) -> float:
-    """Best-of-REPS: the min is the steady-state cost — the first rep
-    carries JVM/JIT/footer warm-up that a long-lived cluster never
-    re-pays, and a cold-rep median would corrupt the 1x/Kx ratio."""
-    q = registry.get_query(name)
-    samples = []
-    for _ in range(REPS):
-        t0 = time.time()
-        q.fn(spark, sf_dir).collect()
-        samples.append(time.time() - t0)
-    return min(samples)
+    """Best-of-REPS ``bench.measure`` runs: the min is the steady-state
+    cost, which a one-off stall would otherwise put into the 1x/Kx
+    ratio."""
+    return min(measure(spark, sf_dir, [name], REPS)[name]["samples"])
 
 
 def main() -> None:
@@ -310,19 +305,13 @@ def main() -> None:
     print(f"# synthesizing {k}x corpus from {sf_dir}", file=sys.stderr)
     synthesize(spark, sf_dir, out_dir, k)
 
-    from project_orbit_spark.session import clear_df_caches
-
     rows = []
     for name in names:
-        # Hermetic per-query probes (r17): warm_* indexes persisted by
-        # one probed query otherwise stay resident for every LATER
-        # query in the list — at 100× the span/band/segment indexes
-        # are GBs, and a long batch ending in a heavy query OOMs on
-        # ACCUMULATED warms, not its own footprint (observed: the
-        # simhash audit died at heap after three index-warming faces
-        # ran first). Each query still reuses its own warms across
-        # its REPS and its 1×/K× pair — cleared only at the boundary.
-        clear_df_caches()
+        # measure() starts each query from a clean session state: warm_*
+        # indexes persisted by one probed query would otherwise stay
+        # resident for every later one, and at 100× a long batch OOMs on
+        # accumulated warms, not its own footprint (the simhash audit
+        # died at heap after three index-warming faces ran first)
         t1 = time_query(spark, name, sf_dir)
         tk = time_query(spark, name, str(out_dir))
         ratio = tk / t1 if t1 > 0 else float("nan")
