@@ -175,3 +175,35 @@ def test_grouping_set_face_job_budget(spark, name):
     q = registry.get_query(name)
     n = jobs_of(spark, lambda: q.fn(spark, SF_DIR).toPandas())
     assert 0 < n <= 3, n
+
+
+def warm_request_jobs(spark, name) -> int:
+    """Jobs of one warm request under the ledger's protocol
+    (``bench.measure``: clean session state, prepare hook, one untimed
+    serve, then one counted build plus collect)."""
+    return bench.measure(spark, SF_DIR, [name], reps=1)[name]["counts"]["jobs"]
+
+
+# ann_ivf_topk_warm and cosine_topk_exact each sit in two budget families,
+# so one ledger row cannot carry both: the looser bounded-sort budget and
+# the one-rank-exchange budget keep their cases here. Every other case of
+# these families is a row of tests/test_job_ledger.py.
+@pytest.mark.parametrize("name, budget", [("ann_ivf_topk_warm", 5), ("cosine_topk_exact", 4)])
+def test_bounded_sort_request_job_budget(spark, name, budget):
+    """A warm serving request (its prepare hook run and the query
+    served once) sorts its bounded result in one partition: two jobs
+    fewer than a range-partitioned sort (7 and 6 with it)."""
+    n = warm_request_jobs(spark, name)
+    assert 0 < n <= budget, n
+
+
+@pytest.mark.parametrize("name, budget", [("ann_ivf_topk_warm", 4), ("cosine_topk_exact", 3)])
+def test_one_rank_exchange_job_budget(spark, name, budget):
+    """A per-key top-k ranks behind one key exchange (its rank <= k
+    filter plans a partial WindowGroupLimit below it, no salted first
+    rank), and the warm IVF request routes off the stored packed route
+    table (no single-partition packing of the centroids). Warm, prepare
+    hook run: 5 and 4 jobs with the salted ranks and the per-request
+    packing."""
+    n = warm_request_jobs(spark, name)
+    assert 0 < n <= budget, n
